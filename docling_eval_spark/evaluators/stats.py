@@ -10,18 +10,39 @@ Semantics matched exactly:
   bins over [0,1], right-exclusive except the last bin which includes
   1.0; out-of-range values count toward total but not the histogram.
 
-Executed as ONE hash aggregation (partial + final, map-side combine);
-the 20-bin histogram rides along as a pivoted conditional count so no
-second shuffle is needed. The cumulative to_table (reference
-`stats.py:28-50`) is a window cum-sum over the 20-row bins frame.
+Two paths produce the same row shape:
+
+- :func:`compute_stats` — lazy and exact over raw values: ONE hash
+  aggregation (partial + final, map-side combine); the 20-bin
+  histogram rides along as a pivoted conditional count. Its
+  ``percentile`` buffers every value of a group in one task, so it is
+  for report-sized inputs.
+- :func:`collect_stats` — the scale path that ``evaluate`` and
+  ``visualize`` use. Values are rounded to 3 decimals, so Spark runs
+  ONE grouped counting aggregation ``(column, value) → count`` with
+  map-side combine, whose result is bounded at ≤ 2,001 rows per column
+  within [0, 1] whatever the corpus size. The driver collects that
+  table and folds each column into the stats row (:func:`fold_counts`);
+  a column with no values gets the sentinel row.
+
+The cumulative to_table (reference `stats.py:28-50`) is a window
+cum-sum over the 20-row bins frame.
 """
 
 from __future__ import annotations
+
+import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 N_BINS = 20
+BINS = [b / N_BINS for b in range(N_BINS + 1)]
+# column types of a stats row, in the order fold_counts emits them
+STATS_SCHEMA = (
+    "total bigint, mean double, median double, std double,"
+    " hist array<bigint>, bins array<double>"
+)
 
 
 def _bin_expr(value_col: str):
@@ -37,27 +58,17 @@ def _bin_expr(value_col: str):
 
 
 def compute_stats(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    scale_mode: bool = False,
+    df: DataFrame, value_col: str, group_cols: list[str] | None = None
 ) -> DataFrame:
     """→ one row (per group): total, mean, median, std, hist[20], bins[21].
 
-    ``scale_mode=True`` switches the exact median from
-    ``percentile(col, 0.5)`` (which buffers the whole per-group value
-    list in one task — fine at report scale, a single-node sort at
-    10^12 rows) to a counting-histogram median: metric values are
-    3-decimal-rounded, so a (value → count) hash aggregation has at
-    most ~2001 distinct rows per group and the exact interpolated
-    median falls out of the cumulative counts. Everything (mean, std,
-    hist, total) is derived from the same bounded count table, so the
-    whole rollup is two hash aggregations with map-side combine and no
-    unbounded group anywhere. Median is exact-identical to the default
-    path; mean/std agree to float associativity."""
+    Lazy and exact over the raw values (no rounding). The median is
+    ``percentile(col, 0.5)``, which buffers a group's whole value list
+    in one task: fine at report scale; at corpus scale use
+    :func:`collect_stats`, which counts 3-decimal values in one
+    aggregation (≤ ~2,001 rows per column) and folds them on the
+    driver."""
     group_cols = group_cols or []
-    if scale_mode:
-        return _compute_stats_counting(df, value_col, group_cols)
     binned = df.withColumn("__bin", _bin_expr(value_col))
     hist_aggs = [
         F.sum(F.when(F.col("__bin") == b, 1).otherwise(0)).alias(f"__h{b}")
@@ -78,114 +89,78 @@ def compute_stats(
         F.coalesce("median", F.lit(-1.0)).alias("median"),
         F.coalesce("std", F.lit(-1.0)).alias("std"),
         F.array(*[F.col(f"__h{b}") for b in range(N_BINS)]).alias("hist"),
-        F.array(*[F.lit(b / N_BINS) for b in range(N_BINS + 1)]).alias("bins"),
+        F.array(*[F.lit(b) for b in BINS]).alias("bins"),
     )
     return agg
 
 
-def _compute_stats_counting(
-    df: DataFrame, value_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Counting-histogram stats (see compute_stats scale_mode).
+def stack_columns(df: DataFrame, value_cols: list[str], key: str) -> DataFrame:
+    """Unpivot ``value_cols`` into (``key``, value double) rows — a
+    narrow reshape, one output row per input row and column."""
+    stack = ", ".join(f"'{c}', cast(`{c}` as double)" for c in value_cols)
+    return df.selectExpr(f"stack({len(value_cols)}, {stack}) as (`{key}`, value)")
 
-    Agg 1: (group, value) → count — bounded by the value quantization.
-    Agg 2: per group, sorted (value, count) pairs → all stats via SQL
-    higher-order functions over the ≤~2001-element array. Note: unlike
-    the default path, a group with zero non-null values yields no row
-    (there is nothing to anchor it); callers needing sentinel rows for
-    empty groups join them in (pipelines._ensure_groups)."""
-    v = F.col(value_col)
+
+def collect_stats(df: DataFrame, value_cols: list[str]) -> dict[str, dict]:
+    """{column: stats row} for every column of ``value_cols``, from ONE
+    Spark pass: the columns are stacked, their non-null values rounded
+    to 3 decimals, and a grouped ``(column, value) → count`` hash
+    aggregation with map-side combine runs. Its result holds at most
+    ~2,001 rows per column (the 3-decimal grid over [0, 1]; values
+    outside it add a row per distinct value), whatever the row count of
+    ``df``, so the driver collects it and folds each column with
+    :func:`fold_counts`. A column with no non-null value gets the
+    sentinel row. The rows equal :func:`compute_stats` over the rounded
+    values: total, median and hist exactly, mean and std to float
+    summation order."""
+    long = stack_columns(df, value_cols, "__col")
+    value = F.round("value", 3)
     counted = (
-        df.filter(v.isNotNull())
-        .groupBy(*group_cols, v.alias("__v"))
-        .agg(F.count("*").alias("__c"))
+        long.where(value.isNotNull())
+        .groupBy("__col", value.alias("value"))
+        .count()
+        .collect()
     )
-    g = counted.groupBy(*group_cols).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("__v").alias("v"), F.col("__c").alias("c")))
-        ).alias("__pairs")
-    )
-    pairs = F.col("__pairs")
-    g = g.withColumn(
-        "total",
-        F.aggregate(pairs, F.lit(0).cast("long"), lambda a, x: a + x["c"]),
-    )
-    # interpolated median == percentile(col, 0.5) == statistics.median:
-    # mean of the values at 1-based positions ceil(n/2) and n/2 + 1
-    # capped into range (equal for odd n)
-    p1 = ((F.col("total") + 1) / 2).cast("long")
-    p2 = (F.col("total") / 2 + 1).cast("long")
-    acc0 = F.struct(
-        F.lit(0).cast("long").alias("seen"),
-        F.lit(None).cast("double").alias("m1"),
-        F.lit(None).cast("double").alias("m2"),
-    )
-    med = F.aggregate(
-        pairs,
-        acc0,
-        lambda a, x: F.struct(
-            (a["seen"] + x["c"]).alias("seen"),
-            F.when(a["m1"].isNull() & (a["seen"] + x["c"] >= p1), x["v"])
-            .otherwise(a["m1"])
-            .alias("m1"),
-            F.when(a["m2"].isNull() & (a["seen"] + x["c"] >= p2), x["v"])
-            .otherwise(a["m2"])
-            .alias("m2"),
-        ),
-    )
-    g = g.withColumn("__med", med)
-    sum_v = F.aggregate(
-        pairs, F.lit(0.0), lambda a, x: a + x["v"] * x["c"]
-    )
-    sum_v2 = F.aggregate(
-        pairs, F.lit(0.0), lambda a, x: a + x["v"] * x["v"] * x["c"]
-    )
-    g = g.withColumn("__sum", sum_v).withColumn("__sum2", sum_v2)
-    # guarded division: an UNGROUPED aggregation over empty/all-null
-    # input yields one row with total=0, and ANSI mode turns a bare
-    # __sum/total into a DIVIDE_BY_ZERO task failure
-    mean = F.when(F.col("total") > 0, F.col("__sum") / F.col("total"))
-    # constant groups (one distinct value) are exactly 0 — the
-    # uncentered formula lands epsilon-off-zero either way: negative
-    # rounding would make sqrt NaN (and coalesce does NOT replace NaN),
-    # positive rounding would leak a ~1e-9 std; clamp the rest at 0
-    var = F.when(
-        F.col("total") > 1,
-        F.when(F.size(pairs) == 1, F.lit(0.0)).otherwise(
-            F.greatest(
-                (F.col("__sum2") - F.col("total") * mean * mean)
-                / (F.col("total") - 1),
-                F.lit(0.0),
-            )
-        ),
-    )
-    hist_bin = lambda x: (  # noqa: E731  — np.histogram bin of a pair value
-        F.when((x["v"] < 0) | (x["v"] > 1), F.lit(-1))
-        .when(F.floor(x["v"] * N_BINS) >= N_BINS, F.lit(N_BINS - 1))
-        .otherwise(F.floor(x["v"] * N_BINS).cast("int"))
-    )
-    def _bin_sum(b: int):
-        # factory (not a default-arg closure): PySpark counts the
-        # lambda's parameters to bind HOF variables, so the merge
-        # lambda must take exactly (acc, x)
-        return F.aggregate(
-            pairs,
-            F.lit(0).cast("long"),
-            lambda a, x: a + F.when(hist_bin(x) == b, x["c"]).otherwise(0),
-        )
+    pairs: dict[str, list] = {c: [] for c in value_cols}
+    for col, v, n in counted:
+        pairs[col].append((v, n))
+    return {c: fold_counts(p) for c, p in pairs.items()}
 
-    hist = F.array(*[_bin_sum(b) for b in range(N_BINS)])
-    return g.select(
-        *group_cols,
-        "total",
-        F.coalesce(mean, F.lit(-1.0)).alias("mean"),
-        F.coalesce(
-            (F.col("__med.m1") + F.col("__med.m2")) / 2, F.lit(-1.0)
-        ).alias("median"),
-        F.coalesce(F.sqrt(var), F.lit(-1.0)).alias("std"),
-        hist.alias("hist"),
-        F.array(*[F.lit(b / N_BINS) for b in range(N_BINS + 1)]).alias("bins"),
-    )
+
+def fold_counts(pairs: list[tuple[float, int]]) -> dict:
+    """Stats row (STATS_SCHEMA order) of the multiset given as distinct
+    (value, count) pairs. Sums run in ascending-value order; the median
+    is the mean of the values at 1-based positions ``(n+1)//2`` and
+    ``n//2 + 1`` (= ``percentile(col, 0.5)`` = ``statistics.median``)."""
+    n = sum(c for _, c in pairs)
+    if n == 0:
+        return {"total": 0, "mean": -1.0, "median": -1.0, "std": -1.0,
+                "hist": [0] * N_BINS, "bins": list(BINS)}
+    p1, p2 = (n + 1) // 2, n // 2 + 1
+    s = s2 = 0.0
+    seen, m1, m2 = 0, None, None
+    hist = [0] * N_BINS
+    for v, c in sorted(pairs):
+        s += v * float(c)
+        s2 += v * v * float(c)
+        seen += c
+        if m1 is None and seen >= p1:
+            m1 = v
+        if m2 is None and seen >= p2:
+            m2 = v
+        if 0 <= v <= 1:
+            hist[min(math.floor(v * N_BINS), N_BINS - 1)] += c
+    mean = s / n
+    if n == 1:
+        std = -1.0
+    elif len(pairs) == 1:
+        # a constant column: the uncentered formula lands epsilon off
+        # zero either way, so pin it
+        std = 0.0
+    else:
+        std = math.sqrt(max((s2 - n * mean * mean) / (n - 1), 0.0))
+    return {"total": n, "mean": mean, "median": (m1 + m2) / 2, "std": std,
+            "hist": hist, "bins": list(BINS)}
 
 
 def histogram_table(stats_row_df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:

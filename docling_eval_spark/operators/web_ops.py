@@ -1177,7 +1177,8 @@ def trust_rank(
     output is identical to the fixed-count run — the oracle, which
     unrolls all ``iterations`` CTEs, gates that. Costs one extra
     scalar action + an every-iteration (rather than every
-    ``checkpoint_every``) lineage checkpoint per executed iteration;
+    ``checkpoint_every``) lineage checkpoint per executed iteration,
+    an ACTION, so only set ``tol`` when early stopping is plausible;
     the default ``None`` keeps the fixed-count plan.
     """
     nodes = (

@@ -21,7 +21,7 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from docling_eval_spark.evaluators.stats import N_BINS, compute_stats
+from docling_eval_spark.evaluators.stats import N_BINS, collect_stats
 
 
 def stats_to_table_text(stats_row: dict[str, Any], metric_name: str) -> str:
@@ -181,21 +181,29 @@ def histogram_png(stats_row: dict[str, Any], title: str = "") -> bytes:
 def write_metric_report(
     df: DataFrame, value_col: str, out_dir: str, metric_name: str
 ) -> dict[str, Any]:
-    """compute_stats → {name}.json + {name}.md + {name}.svg +
+    """Stats of ``value_col`` → {name}.json + {name}.md + {name}.svg +
     {name}.png (the reference's evaluate/visualize sink pair,
     `cli/main.py:252-310` + `70-112`; the .png matches the
     reference's matplotlib figure format via the in-repo rasterizer).
-    Stats run in scale_mode over 3-decimal-quantized values (same
-    contract as evaluate()'s rollups): the report path must not
-    buffer every per-doc value in one percentile() task at corpus
-    scale."""
-    quantized = df.select(F.round(F.col(value_col), 3).alias(value_col))
-    # ungrouped global aggregation: always exactly one row (total=0
-    # with -1 sentinels for empty input)
-    row = compute_stats(quantized, value_col, scale_mode=True).collect()[0].asDict()
+    Stats come from ``collect_stats`` (same contract as evaluate()'s
+    rollups): values rounded to 3 decimals are counted in one Spark
+    aggregation, bounded at ~2,001 rows whatever the row count, and
+    folded on the driver, so the report never buffers every per-doc
+    value in one task. To report several columns of one table, call
+    ``collect_stats`` once and :func:`render_metric_report` per row."""
+    return render_metric_report(
+        collect_stats(df, [value_col])[value_col], out_dir, metric_name
+    )
+
+
+def render_metric_report(
+    row: dict[str, Any], out_dir: str, metric_name: str
+) -> dict[str, Any]:
+    """Write the report files of one stats row (see
+    :func:`write_metric_report`); no Spark job runs."""
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    (out / f"{metric_name}.json").write_text(json.dumps(row, default=list))
+    (out / f"{metric_name}.json").write_text(json.dumps(row))
     (out / f"{metric_name}.md").write_text(stats_to_table_text(row, metric_name))
     (out / f"{metric_name}.svg").write_text(histogram_svg(row, metric_name))
     (out / f"{metric_name}.png").write_bytes(histogram_png(row, metric_name))

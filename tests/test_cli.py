@@ -357,3 +357,30 @@ def test_cli_ingest_roundtrip(spark, tmp_path, monkeypatch):
                  "--blocklist", str(bl), "--format", "jsonl"]) == 0
     man = json.load(open(f"{outj}/_manifest.json"))
     assert man["total_rows"] == 1
+
+
+def test_comparison_html_shows_scored_prediction(spark, tmp_path):
+    """visualize(markdown_text) must render the prediction evaluate()
+    scored: on a perturbed dataset that is pred_text, not the raw
+    extracted_text."""
+    import html
+
+    import pyspark.sql.functions as F
+
+    pages = str(tmp_path / "pages")
+    dataset = str(tmp_path / "ds")
+    eval_dir = str(tmp_path / "ev")
+    reports = tmp_path / "rep"
+    write_pages_parquet(spark, pages, 30, partitions=2)
+    pipelines.create_dataset(spark, pages, dataset, buckets=None, perturb=0.3)
+    pipelines.evaluate(spark, dataset, "markdown_text", eval_dir)
+    pipelines.visualize(spark, dataset, eval_dir, "markdown_text", str(reports))
+    changed = (
+        pipelines.read_dataset(spark, dataset)
+        .filter(F.col("pred_text") != F.col("extracted_text"))
+        .select("pred_text")
+        .collect()
+    )
+    assert changed, "perturbation changed no text"
+    page = (reports / "comparison.html").read_text()
+    assert all(f"<pre>{html.escape(r['pred_text'])}</pre>" in page for r in changed)

@@ -7,13 +7,23 @@ import statistics
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from docling_eval_spark.datagen.pages import gen_page, pages_dataframe
 from docling_eval_spark.evaluators.layout import corpus_map, image_map, layout_image_stage
 from docling_eval_spark.evaluators.reading_order import ard_norm_py, ard_stage
-from docling_eval_spark.evaluators.stats import compute_stats, histogram_table
+from docling_eval_spark.evaluators.stats import (
+    collect_stats,
+    compute_stats,
+    histogram_table,
+)
 from docling_eval_spark.evaluators.teds import teds_score, teds_stage
-from docling_eval_spark.evaluators.text_metrics import text_metrics, text_metrics_stage
+from docling_eval_spark.evaluators.text_metrics import (
+    METRIC_COLS,
+    text_metrics,
+    text_metrics_stage,
+)
 from docling_eval_spark.extraction.stage import extract_stage
 
 import numpy as np
@@ -32,10 +42,20 @@ def test_stats_stage_matches_statistics_module(spark):
     assert len(row["bins"]) == 21
 
 
-def test_stats_scale_mode_matches_default(spark):
-    """Counting-histogram stats (scale_mode) == default path: exact
-    median (odd/even/duplicate cases), mean/std to float tolerance,
-    identical histogram — grouped and ungrouped."""
+def _collect_grouped(spark, rows, groups):
+    """collect_stats over (group, value) rows: one column per group,
+    NULL where a row belongs to another group."""
+    wide = spark.createDataFrame(
+        [tuple(v if g == k else None for k in groups) for g, v in rows],
+        ", ".join(f"{k} double" for k in groups),
+    )
+    return collect_stats(wide, groups)
+
+
+def test_collect_stats_matches_exact(spark):
+    """Count-then-fold stats (collect_stats) == exact compute_stats:
+    exact median (odd/even/duplicate cases), mean/std to float
+    tolerance, identical histogram — grouped and ungrouped."""
     rng = np.random.RandomState(5)
     rows = [
         (["g1", "g2", "g3"][i % 3], round(float(v), 3))
@@ -47,10 +67,11 @@ def test_stats_scale_mode_matches_default(spark):
             tuple(r[c] for c in groups): r
             for r in compute_stats(df, "v", groups or None).collect()
         }
-        scale = {
-            tuple(r[c] for c in groups): r
-            for r in compute_stats(df, "v", groups or None, scale_mode=True).collect()
-        }
+        if groups:
+            folded = _collect_grouped(spark, rows, ["g1", "g2", "g3"])
+            scale = {(g,): r for g, r in folded.items()}
+        else:
+            scale = {(): collect_stats(df, ["v"])["v"]}
         assert base.keys() == scale.keys()
         for k in base:
             assert scale[k]["total"] == base[k]["total"]
@@ -60,27 +81,100 @@ def test_stats_scale_mode_matches_default(spark):
             assert scale[k]["hist"] == base[k]["hist"]
 
 
-def test_stats_scale_mode_empty_input_sentinels(spark):
-    """Ungrouped counting stats over EMPTY input must return the one
-    sentinel row (-1 stats, zero hist), not an ANSI DIVIDE_BY_ZERO
-    task failure (mean was an unguarded __sum/total)."""
-    from docling_eval_spark.evaluators.stats import compute_stats
-
+def test_collect_stats_empty_input_sentinels(spark):
+    """Count-then-fold stats over EMPTY input must return the sentinel
+    row (-1 stats, zero hist), not a division by zero."""
     df = spark.createDataFrame([], "v double")
-    r = compute_stats(df, "v", scale_mode=True).collect()[0]
+    r = collect_stats(df, ["v"])["v"]
     assert r["total"] == 0
     assert r["mean"] == -1.0 and r["median"] == -1.0 and r["std"] == -1.0
     assert list(r["hist"]) == [0] * 20
 
 
-def test_stats_scale_mode_constant_group_std_zero(spark):
+def test_collect_stats_constant_group_std_zero(spark):
     """Regression: a constant-valued group's uncentered variance dips
-    epsilon-negative under float rounding → sqrt gave NaN (and coalesce
-    does not replace NaN). Must be exactly 0.0 like the default path."""
-    df = spark.createDataFrame([("g", 0.001)] * 5 + [("h", 0.3)] * 3, "g string, v double")
-    rows = {r["g"]: r for r in compute_stats(df, "v", ["g"], scale_mode=True).collect()}
+    epsilon-negative under float rounding → sqrt gave NaN. Must be
+    exactly 0.0 like the exact path."""
+    rows = _collect_grouped(
+        spark, [("g", 0.001)] * 5 + [("h", 0.3)] * 3, ["g", "h"]
+    )
     assert rows["g"]["std"] == 0.0
     assert rows["h"]["std"] == 0.0
+
+
+STATS_GROUPS = ["a", "b", "c"]
+SENTINEL = {"total": 0, "mean": -1.0, "median": -1.0, "std": -1.0, "hist": [0] * 20}
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(STATS_GROUPS),
+            # 3-decimal values, some outside [0, 1], some NULL
+            st.one_of(st.none(), st.integers(-200, 1200).map(lambda i: i / 1000)),
+        ),
+        max_size=40,
+    )
+)
+def test_collect_stats_property_matches_exact(spark, rows):
+    """For any grouped 3-decimal input (empty groups, single values,
+    odd and even counts, NULLs, values outside [0, 1]) the driver fold
+    equals the exact path: total, median and hist exactly, mean and
+    std within 1e-12. A group the exact path has no row for (no input
+    row at all) must get the sentinel row."""
+    df = spark.createDataFrame(rows, "g string, v double")
+    exact = {r["g"]: r.asDict() for r in compute_stats(df, "v", ["g"]).collect()}
+    got = _collect_grouped(spark, rows, STATS_GROUPS)
+    for g in STATS_GROUPS:
+        want, row = exact.get(g, SENTINEL), got[g]
+        assert row["total"] == want["total"]
+        assert row["median"] == want["median"]
+        assert row["hist"] == want["hist"]
+        assert row["mean"] == pytest.approx(want["mean"], abs=1e-12)
+        assert row["std"] == pytest.approx(want["std"], abs=1e-12)
+
+
+def test_collect_stats_jobs_do_not_grow_with_columns(spark):
+    """All metric columns share ONE counting pass: stats over 6
+    columns run no more Spark jobs than over 1, so a per-column job
+    cannot creep back in."""
+    df = spark.createDataFrame(
+        [tuple(((i * (k + 3)) % 101) / 100 for k in range(6)) for i in range(200)],
+        ", ".join(f"{c} double" for c in METRIC_COLS),
+    )
+    sc = spark.sparkContext
+
+    def jobs(cols, group):
+        sc.setJobGroup(group, group)
+        try:
+            collect_stats(df, cols)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = jobs(METRIC_COLS[:1], "collect_stats_1_col")
+    six = jobs(METRIC_COLS, "collect_stats_6_cols")
+    assert 0 < six <= one
+
+
+def test_lazy_rollup_has_a_row_per_split(spark):
+    """The lazy exact rollup keeps the reference's per-split rows: an
+    empty split (or an empty table) yields the sentinel row."""
+    from docling_eval_spark.pipelines import rollup_table_structure
+
+    schema = "teds double, teds_struct double, is_complex boolean"
+    per_table = spark.createDataFrame([(0.5, 0.6, False), (0.9, 1.0, None)], schema)
+    rows = {r["split"]: r for r in rollup_table_structure(per_table).collect()}
+    assert set(rows) == {"all", "simple", "complex", "struct"}
+    assert rows["simple"]["total"] == 2
+    assert rows["all"]["median"] == pytest.approx(0.7)
+    empty = spark.createDataFrame([], schema)
+    for r in [rows["complex"], *rollup_table_structure(empty).collect()]:
+        assert (r["total"], r["mean"], r["median"], r["std"]) == (0, -1.0, -1.0, -1.0)
+        assert r["hist"] == [0] * 20
+    assert rollup_table_structure(empty).count() == 4
 
 
 def test_histogram_table_cumsum(spark):
