@@ -22,7 +22,8 @@ import sys
 import pyspark.sql.functions as F
 
 from docling_eval_spark import pipelines
-from docling_eval_spark.session import get_spark
+from docling_eval_spark.pipelines import counted
+from docling_eval_spark.session import get_spark, local_frame
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -144,15 +145,14 @@ def main(argv: list[str] | None = None) -> int:
                         "dataset's ground-truth text is NULL; evaluate "
                         "will score extraction against empty GT"
                     )
+                ingested, n = counted(ingested)
                 ingested.write.mode("overwrite").parquet(pages_path)
-                n = spark.read.parquet(pages_path).count()
-                print(f"ingested {n} WARC pages at {pages_path}")
-            pipelines.create_dataset(
+                print(f"ingested {n.get['rows']} WARC pages at {pages_path}")
+            n = pipelines.create_dataset(
                 spark, pages_path, args.output,
                 buckets=args.buckets, records_per_shard=args.records_per_shard,
                 perturb=args.perturb,
             )
-            n = spark.read.parquet(args.output).count()
             print(f"dataset written: {args.output} ({n} documents)")
         elif args.task == "clean":
             pages = spark.read.parquet(args.pages)
@@ -163,9 +163,12 @@ def main(argv: list[str] | None = None) -> int:
                 quality_min=args.quality_min,
                 annotate=not args.no_annotate,
             )
+            cleaned, n_out = counted(cleaned)
             cleaned.write.mode("overwrite").parquet(args.output)
-            n_out = spark.read.parquet(args.output).count()
-            print(f"cleaned corpus: {n_in} pages -> {n_out} kept at {args.output}")
+            print(
+                f"cleaned corpus: {n_in} pages -> {n_out.get['rows']} kept "
+                f"at {args.output}"
+            )
         elif args.task == "ingest":
             fetches = spark.read.parquet(args.fetches)
             doms: list[str] = []
@@ -176,9 +179,7 @@ def main(argv: list[str] | None = None) -> int:
                         for ln in fh
                         if ln.strip() and not ln.lstrip().startswith("#")
                     ]
-            blocked = spark.createDataFrame(
-                [(d,) for d in doms], "domain string"
-            )
+            blocked = local_frame(spark, [(d,) for d in doms], "domain string")
             n_in = fetches.count()
             out = pipelines.web_ingest(
                 fetches,
@@ -202,10 +203,10 @@ def main(argv: list[str] | None = None) -> int:
                     f"{args.output}"
                 )
             else:
+                out, n_out = counted(out)
                 out.write.mode("error").parquet(args.output)
-                n_out = spark.read.parquet(args.output).count()
                 print(
-                    f"ingested {n_in} fetches -> {n_out} pages at "
+                    f"ingested {n_in} fetches -> {n_out.get['rows']} pages at "
                     f"{args.output}"
                 )
         elif args.task == "evaluate":

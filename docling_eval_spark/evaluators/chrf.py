@@ -71,10 +71,12 @@ def chrf_py(
         r = sum(rg.values())
         if h > 0 or r > 0:
             n_eff += 1
+        # exact integer round-half-up of 1e6·tp/h, as Spark's HALF_UP
+        # F.round in chrf_pairs (builtin round() is half-to-even)
         if h > 0:
-            sp += int(round(1_000_000.0 * tp / h))
+            sp += (2_000_000 * tp + h) // (2 * h)
         if r > 0:
-            sr += int(round(1_000_000.0 * tp / r))
+            sr += (2_000_000 * tp + r) // (2 * r)
     denom = n_eff * (b2 * sp + sr)
     if denom <= 0:
         return 0

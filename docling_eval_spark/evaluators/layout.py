@@ -11,17 +11,23 @@ Reference parallels:
 - per-image mAP: fresh COCO-style metric per image
   (`layout_evaluator.py:192-238`);
 - corpus mAP: one metric updated over the whole dataset
-  (`layout_evaluator.py:163-190`), rebuilt here as the two-stage
-  distributed algorithm of SURVEY §4.2: stage 1 emits per-detection
-  match rows from a grouped kernel, stage 2 builds global per-class
-  PR curves.
+  (`layout_evaluator.py:163-190`), rebuilt here as the distributed
+  algorithm of SURVEY §4.2: per-image detection match rows, then
+  global per-class PR curves.
+
+One matching pass serves both: ``layout_match_stage`` matches each
+image's boxes once per IoU threshold and emits the per-image metric
+columns together with that image's detection rows (label, iou_thr,
+score, tp); the per-image mAP reuses the same tp flags.
+``layout_image_stage`` and ``corpus_detections_stage`` are
+projections of it, so there is one matching implementation.
 
 AP semantics are standard COCO (pycocotools/torchmetrics defaults):
 IoU thresholds 0.50:0.05:0.95, 101-point interpolated precision,
 greedy score-descending matching, classes without ground truth
 excluded from the mean.
 
-Scale: stage-1 matching is embarrassingly parallel per page. Stage 2
+Scale: matching is embarrassingly parallel per page. The AP table
 reduces detections to a per-(label, iou_thr, score-bin) TP/FP
 histogram in one map-side-combining hash aggregation — no per-class
 detection list is ever collected or sorted, so no group grows with
@@ -38,6 +44,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from docling_eval_spark.session import local_frame
 
 IOU_THRESHOLDS = [0.5 + 0.05 * i for i in range(10)]
 # i/100.0 exactly (np.linspace accumulates a half-ulp drift on some
@@ -103,31 +111,33 @@ def greedy_label_matched_iou(
     }
 
 
-def _match_detections(
+def _match_all(
     pred_boxes: np.ndarray,
     pred_labels: np.ndarray,
     pred_scores: np.ndarray,
     gt_boxes: np.ndarray,
     gt_labels: np.ndarray,
-    iou_thr: float,
 ) -> np.ndarray:
-    """COCO greedy matching at one threshold → tp flag per detection
-    (detections ordered score-descending within each class)."""
-    tp = np.zeros(len(pred_boxes), dtype=bool)
+    """COCO greedy matching at every IOU_THRESHOLDS entry → tp flags,
+    one row per threshold, one column per detection (detections ordered
+    score-descending within each class). The IoU matrix and the
+    per-class score order are computed once for all thresholds."""
+    tp = np.zeros((len(IOU_THRESHOLDS), len(pred_boxes)), dtype=bool)
     ious = iou_matrix(pred_boxes, gt_boxes)
     for label in np.unique(pred_labels):
         p_idx = np.where(pred_labels == label)[0]
         p_idx = p_idx[np.argsort(-pred_scores[p_idx], kind="stable")]
         g_idx = np.where(gt_labels == label)[0]
-        taken = np.zeros(len(g_idx), dtype=bool)
-        for p in p_idx:
-            best, best_iou = -1, iou_thr
-            for k, g in enumerate(g_idx):
-                if not taken[k] and ious[p, g] >= best_iou:
-                    best, best_iou = k, ious[p, g]
-            if best >= 0:
-                taken[best] = True
-                tp[p] = True
+        for t, iou_thr in enumerate(IOU_THRESHOLDS):
+            taken = np.zeros(len(g_idx), dtype=bool)
+            for p in p_idx:
+                best, best_iou = -1, iou_thr
+                for k, g in enumerate(g_idx):
+                    if not taken[k] and ious[p, g] >= best_iou:
+                        best, best_iou = k, ious[p, g]
+                if best >= 0:
+                    taken[best] = True
+                    tp[t, p] = True
     return tp
 
 
@@ -179,18 +189,23 @@ def image_map(
 ) -> dict:
     """Per-image mAP / mAP@50 / mAP@75 (fresh metric per image, like
     `layout_evaluator.py:192-238`). Classes = union of GT classes."""
+    tp = _match_all(pred_boxes, pred_labels, pred_scores, gt_boxes, gt_labels)
+    return _map_of_matches(tp, pred_labels, pred_scores, gt_labels)
+
+
+def _map_of_matches(
+    tp: np.ndarray, pred_labels: np.ndarray, pred_scores: np.ndarray, gt_labels: np.ndarray
+) -> dict:
+    """image_map from the tp flags of ``_match_all``."""
     classes = np.unique(gt_labels)
     if len(classes) == 0:
         return {"map": -1.0, "map_50": -1.0, "map_75": -1.0}
     per_thr: dict[float, list[float]] = {t: [] for t in IOU_THRESHOLDS}
-    for thr in IOU_THRESHOLDS:
-        tp = _match_detections(
-            pred_boxes, pred_labels, pred_scores, gt_boxes, gt_labels, thr
-        )
+    for thr, tp_thr in zip(IOU_THRESHOLDS, tp):
         for label in classes:
             sel = pred_labels == label
             ap = average_precision(
-                pred_scores[sel], tp[sel], int(np.sum(gt_labels == label))
+                pred_scores[sel], tp_thr[sel], int(np.sum(gt_labels == label))
             )
             if not np.isnan(ap):
                 per_thr[thr].append(ap)
@@ -204,17 +219,24 @@ def image_map(
 
 # ---------------------------------------------------------------- Spark stages
 
-_LAYOUT_EVAL_SCHEMA = T.StructType(
+_DET = T.StructType(
     [
-        T.StructField("url", T.StringType()),
-        T.StructField("map_val", T.DoubleType()),
-        T.StructField("map_50", T.DoubleType()),
-        T.StructField("map_75", T.DoubleType()),
-        T.StructField("avg_iou_50", T.DoubleType()),
-        T.StructField("avg_iou_75", T.DoubleType()),
-        T.StructField("avg_iou_90", T.DoubleType()),
-        T.StructField("avg_iou_95", T.DoubleType()),
+        T.StructField("label", T.StringType()),
+        T.StructField("iou_thr", T.DoubleType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("tp", T.BooleanType()),
     ]
+)
+# per-image metric columns: what layout_image_stage returns and
+# evaluate(layout) writes
+LAYOUT_IMAGE_COLS = [
+    "url", "map_val", "map_50", "map_75",
+    "avg_iou_50", "avg_iou_75", "avg_iou_90", "avg_iou_95",
+]
+_MATCH_SCHEMA = T.StructType(
+    [T.StructField("url", T.StringType())]
+    + [T.StructField(c, T.DoubleType()) for c in LAYOUT_IMAGE_COLS[1:]]
+    + [T.StructField("dets", T.ArrayType(_DET))]
 )
 
 
@@ -232,12 +254,20 @@ def _boxes_of(arr, with_scores: bool) -> tuple[np.ndarray, np.ndarray, np.ndarra
     return boxes, labels, scores
 
 
-def layout_image_stage(
+def layout_match_stage(
     df: DataFrame, gt_col: str = "gt_layout", pred_col: str = "pred_layout"
 ) -> DataFrame:
-    """Per-document layout metrics; embarrassingly parallel map over
-    array columns (no shuffle — both box sets ride in the row)."""
-    src = df.select(F.col("url"), F.col(gt_col).alias("gt"), F.col(pred_col).alias("pred"))
+    """The one layout matching pass: per image, the boxes are matched
+    once per IoU threshold, and the image's row carries both the
+    per-image metric columns (LAYOUT_IMAGE_COLS) and its detection rows
+    ``dets`` (label, iou_thr, score, tp) for the corpus AP table; the
+    per-image mAP reuses the same tp flags. Embarrassingly parallel map
+    over array columns (no shuffle — both box sets ride in the row).
+    ``url`` is NULL when ``df`` has no such column."""
+    url = F.col("url") if "url" in df.columns else F.lit(None).cast("string")
+    src = df.select(
+        url.alias("url"), F.col(gt_col).alias("gt"), F.col(pred_col).alias("pred")
+    )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -245,24 +275,35 @@ def layout_image_stage(
             for url, gt, pred in zip(pdf["url"], pdf["gt"], pdf["pred"]):
                 gb, gl, _ = _boxes_of(gt, with_scores=False)
                 pb, pl, ps = _boxes_of(pred, with_scores=True)
-                m = image_map(pb, pl, ps, gb, gl)
+                tp = _match_all(pb, pl, ps, gb, gl)
+                m = _map_of_matches(tp, pl, ps, gl)
                 row = {"url": url, "map_val": m["map"], "map_50": m["map_50"], "map_75": m["map_75"]}
                 for thr, name in [(0.5, "avg_iou_50"), (0.75, "avg_iou_75"), (0.9, "avg_iou_90"), (0.95, "avg_iou_95")]:
                     row[name] = greedy_label_matched_iou(pb, pl, gb, gl, thr)["average_iou"]
+                labels, scores = pl.tolist(), ps.tolist()
+                row["dets"] = [
+                    (label, thr, score, flag)
+                    for thr, flags in zip(IOU_THRESHOLDS, tp.tolist())
+                    for label, score, flag in zip(labels, scores, flags)
+                ]
                 rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in _LAYOUT_EVAL_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=_MATCH_SCHEMA.fieldNames())
 
-    return src.mapInPandas(kernel, schema=_LAYOUT_EVAL_SCHEMA)
+    return src.mapInPandas(kernel, schema=_MATCH_SCHEMA)
 
 
-_DET_SCHEMA = T.StructType(
-    [
-        T.StructField("label", T.StringType()),
-        T.StructField("iou_thr", T.DoubleType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("tp", T.BooleanType()),
-    ]
-)
+def layout_image_stage(
+    df: DataFrame, gt_col: str = "gt_layout", pred_col: str = "pred_layout"
+) -> DataFrame:
+    """Per-document layout metrics: the per-image columns of
+    ``layout_match_stage``."""
+    return layout_match_stage(df, gt_col, pred_col).select(*LAYOUT_IMAGE_COLS)
+
+
+def detections_of(matched: DataFrame) -> DataFrame:
+    """Detection rows (label, iou_thr, score, tp) of a
+    ``layout_match_stage`` frame — a narrow explode."""
+    return matched.select(F.inline("dets"))
 
 
 def corpus_detections_stage(
@@ -270,23 +311,7 @@ def corpus_detections_stage(
 ) -> DataFrame:
     """Stage 1 of corpus mAP: per-image matching → detection rows
     (label, iou_thr, score, tp). Narrow map, no shuffle."""
-    src = df.select(F.col(gt_col).alias("gt"), F.col(pred_col).alias("pred"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"label": [], "iou_thr": [], "score": [], "tp": []}
-            for gt, pred in zip(pdf["gt"], pdf["pred"]):
-                gb, gl, _ = _boxes_of(gt, with_scores=False)
-                pb, pl, ps = _boxes_of(pred, with_scores=True)
-                for thr in IOU_THRESHOLDS:
-                    tp = _match_detections(pb, pl, ps, gb, gl, thr)
-                    out["label"].extend(pl.tolist())
-                    out["iou_thr"].extend([thr] * len(pl))
-                    out["score"].extend(ps.tolist())
-                    out["tp"].extend(tp.tolist())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(kernel, schema=_DET_SCHEMA)
+    return detections_of(layout_match_stage(df, gt_col, pred_col))
 
 
 def corpus_gt_counts(df: DataFrame, gt_col: str = "gt_layout") -> DataFrame:
@@ -334,9 +359,18 @@ def corpus_ap_table(
     detection list sorted in one kernel) as the small-data oracle the
     sketch is tested against.
     """
-    dets = corpus_detections_stage(df, gt_col, pred_col)
-    gt_counts = corpus_gt_counts(df, gt_col)
+    return ap_table_from_detections(
+        corpus_detections_stage(df, gt_col, pred_col),
+        corpus_gt_counts(df, gt_col),
+        exact=exact,
+    )
 
+
+def ap_table_from_detections(
+    dets: DataFrame, gt_counts: DataFrame, exact: bool = False
+) -> DataFrame:
+    """corpus_ap_table from detection rows (label, iou_thr, score, tp)
+    and per-class GT counts (label, n_gt)."""
     if exact:
 
         def ap_kernel(key, pdf):  # no hints: PySpark's eval-type
@@ -387,9 +421,8 @@ def corpus_ap_table(
 
     # classes with GT but zero detections must contribute AP=0 at every
     # threshold (no detection row → no group above)
-    spark = df.sparkSession
-    thr_df = spark.createDataFrame(
-        [(t,) for t in IOU_THRESHOLDS], schema="iou_thr double"
+    thr_df = local_frame(
+        dets.sparkSession, [(t,) for t in IOU_THRESHOLDS], "iou_thr double"
     )
     return (
         gt_counts.crossJoin(F.broadcast(thr_df))

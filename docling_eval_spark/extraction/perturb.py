@@ -24,9 +24,14 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from docling_eval_spark.extraction.stage import (
+    EXTRACTED_DOC_SCHEMA,
+    _docs_frame,
+    _extract_docs,
+)
 
 
 def _rng01(*keys: Any) -> float:
@@ -88,62 +93,105 @@ _LAYOUT_PRED = T.ArrayType(
         ]
     )
 )
+_BOX_FIELDS = _LAYOUT_PRED.elementType.fieldNames()
+
+
+def _pred_schema(schema: T.StructType) -> T.StructType:
+    """``schema`` + the pred_text, pred_tables, pred_layout columns."""
+    return T.StructType(
+        list(schema.fields)
+        + [
+            T.StructField("pred_text", T.StringType()),
+            T.StructField("pred_tables", schema["tables"].dataType),
+            T.StructField("pred_layout", _LAYOUT_PRED),
+        ]
+    )
+
+
+def _predict(
+    urls, texts, tables, layouts, p: float, cell_fields: list[str]
+) -> dict[str, list]:
+    """pred_text, pred_tables and pred_layout columns of one batch.
+    Documents come in as mappings (the extraction kernel's dicts, or
+    Arrow structs as pandas hands them over); the predictions go out
+    as struct tuples in field order."""
+    pred_text = [
+        perturb_text(u, t if t is not None else "", p) for u, t in zip(urls, texts)
+    ]
+    pred_tables = []
+    for u, doc_tables in zip(urls, tables):
+        rows = []
+        for ti, g in enumerate(doc_tables if doc_tables is not None else []):
+            pt = perturb_table(
+                u,
+                ti,
+                {"num_rows": g["num_rows"], "num_cols": g["num_cols"], "cells": list(g["cells"])},
+                p,
+            )
+            rows.append(
+                (
+                    pt["num_rows"],
+                    pt["num_cols"],
+                    [tuple(c[k] for k in cell_fields) for c in pt["cells"]],
+                )
+            )
+        pred_tables.append(rows)
+    pred_layout = [
+        [
+            tuple(perturb_box(u, bi, b, p)[k] for k in _BOX_FIELDS)
+            for bi, b in enumerate(layout if layout is not None else [])
+        ]
+        for u, layout in zip(urls, layouts)
+    ]
+    return {"pred_text": pred_text, "pred_tables": pred_tables, "pred_layout": pred_layout}
+
+
+def _cell_fields(schema: T.StructType) -> list[str]:
+    return schema["tables"].dataType.elementType["cells"].dataType.elementType.fieldNames()
 
 
 def perturb_stage(ds: DataFrame, p: float = 0.2) -> DataFrame:
     """Dataset (extract_stage output ⋈ GT) → + pred_text, pred_tables,
     pred_layout columns. Narrow Arrow-batched map."""
     fields = [f.name for f in ds.schema.fields]
-    tables_type = ds.schema["tables"].dataType
-    out_schema = T.StructType(
-        list(ds.schema.fields)
-        + [
-            T.StructField("pred_text", T.StringType()),
-            T.StructField("pred_tables", tables_type),
-            T.StructField("pred_layout", _LAYOUT_PRED),
-        ]
-    )
+    cell_fields = _cell_fields(ds.schema)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf[fields].copy()
-            out["pred_text"] = [
-                perturb_text(u, t if t is not None else "", p)
-                for u, t in zip(pdf["url"], pdf["extracted_text"])
-            ]
-            def _pred_tables(u, tables):
-                rows = []
-                for ti, g in enumerate(tables if tables is not None else []):
-                    pt = perturb_table(
-                        u,
-                        ti,
-                        {
-                            "num_rows": g["num_rows"],
-                            "num_cols": g["num_cols"],
-                            "cells": [dict(c) for c in g["cells"]],
-                        },
-                        p,
-                    )
-                    rows.append(
-                        (
-                            pt["num_rows"],
-                            pt["num_cols"],
-                            [tuple(c.values()) for c in pt["cells"]],
-                        )
-                    )
-                return rows
-
-            out["pred_tables"] = [
-                _pred_tables(u, tables)
-                for u, tables in zip(pdf["url"], pdf["tables"])
-            ]
-            out["pred_layout"] = [
-                [
-                    tuple(perturb_box(u, bi, dict(b), p).values())
-                    for bi, b in enumerate(layout if layout is not None else [])
-                ]
-                for u, layout in zip(pdf["url"], pdf["layout"])
-            ]
+            preds = _predict(
+                pdf["url"], pdf["extracted_text"], pdf["tables"], pdf["layout"], p, cell_fields
+            )
+            for name, col in preds.items():
+                out[name] = col
             yield out
 
-    return ds.mapInPandas(kernel, schema=out_schema)
+    return ds.mapInPandas(kernel, schema=_pred_schema(ds.schema))
+
+
+def extract_perturb_stage(pages_df: DataFrame, p: float = 0.2) -> DataFrame:
+    """``perturb_stage(extract_stage(pages_df), p)`` as ONE Arrow map:
+    each batch is extracted and perturbed in the same Python call, the
+    perturbation reading the kernel's document dicts directly, so each
+    task starts one Python runner and ships the pages JVM→Python once."""
+    cell_fields = _cell_fields(EXTRACTED_DOC_SCHEMA)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            docs = _extract_docs(pdf)
+            out = _docs_frame(pdf["url"], docs)
+            preds = _predict(
+                pdf["url"],
+                [d["text"] for d in docs],
+                [d["tables"] for d in docs],
+                [d["layout"] for d in docs],
+                p,
+                cell_fields,
+            )
+            for name, col in preds.items():
+                out[name] = col
+            yield out
+
+    return pages_df.select("url", "html").mapInPandas(
+        kernel, schema=_pred_schema(EXTRACTED_DOC_SCHEMA)
+    )

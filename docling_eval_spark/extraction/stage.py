@@ -74,6 +74,9 @@ _PAGE = T.StructType(
     ]
 )
 
+_CELL_FIELDS = _CELL.fieldNames()
+_LAYOUT_FIELDS = _LAYOUT.fieldNames()
+
 # Output schema of the full extraction stage — the Spark analog of the
 # reference's benchmark-record schema (`benchmarks/utils.py:48-65`).
 EXTRACTED_DOC_SCHEMA = T.StructType(
@@ -95,76 +98,63 @@ EXTRACTED_DOC_SCHEMA = T.StructType(
 )
 
 
+def _extract_docs(pdf: pd.DataFrame, charset_col: str | None = None) -> list[dict]:
+    """Kernel output (document dicts) for one batch of (url, html[,
+    charset]) rows."""
+    if charset_col is not None and charset_col in pdf.columns:
+        return [
+            extract_document(b, charset_hint=h)
+            for b, h in zip(pdf["html"], pdf[charset_col])
+        ]
+    return [extract_document(b) for b in pdf["html"]]
+
+
+def _docs_frame(urls: pd.Series, docs: list[dict]) -> pd.DataFrame:
+    """Document dicts → the EXTRACTED_DOC_SCHEMA batch (structs as
+    tuples in field order)."""
+    return pd.DataFrame(
+        {
+            "url": urls.to_numpy(),
+            "status": [d["status"] for d in docs],
+            "mimetype": [d["mimetype"] for d in docs],
+            "encoding": [d["encoding"] for d in docs],
+            "content_hash": [d["content_hash"] for d in docs],
+            "title": [d["title"] for d in docs],
+            "extracted_text": [d["text"] for d in docs],
+            "text_md5": [d["text_md5"] for d in docs],
+            "items": [
+                [(it["label"], it["text"], it.get("charspan")) for it in d["items"]]
+                for d in docs
+            ],
+            "tables": [
+                [
+                    (
+                        t["num_rows"],
+                        t["num_cols"],
+                        [tuple(c[k] for k in _CELL_FIELDS) for c in t["cells"]],
+                    )
+                    for t in d["tables"]
+                ]
+                for d in docs
+            ],
+            "layout": [
+                [tuple(b[k] for k in _LAYOUT_FIELDS) for b in d["layout"]]
+                for d in docs
+            ],
+            "pages": [
+                [(p["page_no"], p["width"], p["height"]) for p in d["pages"]]
+                for d in docs
+            ],
+            "error": [d["error"] for d in docs],
+        }
+    )
+
+
 def _extract_batches(
     batches: Iterator[pd.DataFrame], charset_col: str | None = None
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        if charset_col is not None and charset_col in pdf.columns:
-            docs = [
-                extract_document(b, charset_hint=h)
-                for b, h in zip(pdf["html"], pdf[charset_col])
-            ]
-        else:
-            docs = [extract_document(b) for b in pdf["html"]]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "status": [d["status"] for d in docs],
-                "mimetype": [d["mimetype"] for d in docs],
-                "encoding": [d["encoding"] for d in docs],
-                "content_hash": [d["content_hash"] for d in docs],
-                "title": [d["title"] for d in docs],
-                "extracted_text": [d["text"] for d in docs],
-                "text_md5": [d["text_md5"] for d in docs],
-                "items": [
-                    [(it["label"], it["text"], it.get("charspan")) for it in d["items"]]
-                    for d in docs
-                ],
-                "tables": [
-                    [
-                        (
-                            t["num_rows"],
-                            t["num_cols"],
-                            [
-                                (
-                                    c["text"],
-                                    c["row_span"],
-                                    c["col_span"],
-                                    c["start_row_offset_idx"],
-                                    c["end_row_offset_idx"],
-                                    c["start_col_offset_idx"],
-                                    c["end_col_offset_idx"],
-                                    c["col_header"],
-                                    c["row_header"],
-                                )
-                                for c in t["cells"]
-                            ],
-                        )
-                        for t in d["tables"]
-                    ]
-                    for d in docs
-                ],
-                "layout": [
-                    [
-                        (
-                            b["label"],
-                            b["page_no"],
-                            b["l"],
-                            b["t"],
-                            b["r"],
-                            b["b"],
-                        )
-                        for b in d["layout"]
-                    ]
-                    for d in docs
-                ],
-                "pages": [
-                    [(p["page_no"], p["width"], p["height"]) for p in d["pages"]]
-                    for d in docs
-                ],
-                "error": [d["error"] for d in docs],
-            }
-        )
+        yield _docs_frame(pdf["url"], _extract_docs(pdf, charset_col))
 
 
 def extract_stage(

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from docling_eval_spark.operators.text_analysis import tokens_col
+from docling_eval_spark.session import local_frame
 
 SEP = "\x1f"
 EOW = "</w>"
@@ -269,7 +270,8 @@ def bpe_train(
     finally:
         for fr in chain:
             fr.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         learned,
         "rank int, left string, right string, merged string, freq long",
     )

@@ -20,10 +20,20 @@ from __future__ import annotations
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from docling_eval_spark.evaluators.bbox_text import bbox_text_stage
-from docling_eval_spark.evaluators.layout import corpus_map, layout_image_stage
+from docling_eval_spark.evaluators.layout import (
+    LAYOUT_IMAGE_COLS,
+    ap_table_from_detections,
+    corpus_gt_counts,
+    corpus_map,
+    detections_of,
+    layout_image_stage,
+    layout_match_stage,
+    map_from_ap_table,
+)
 from docling_eval_spark.evaluators.reading_order import ard_stage
 from docling_eval_spark.evaluators.stats import (
     STATS_SCHEMA,
@@ -33,12 +43,14 @@ from docling_eval_spark.evaluators.stats import (
 )
 from docling_eval_spark.evaluators.teds import teds_stage
 from docling_eval_spark.evaluators.text_metrics import METRIC_COLS, text_metrics_stage
+from docling_eval_spark.extraction.perturb import extract_perturb_stage
 from docling_eval_spark.extraction.stage import extract_stage
 from docling_eval_spark.reporting.reports import (
     delta_row_col_report,
     render_metric_report,
     save_comparison_html,
 )
+from docling_eval_spark.session import local_frame
 from docling_eval_spark.sources.pages_source import read_pages, write_sharded
 
 MODALITIES = ["markdown_text", "table_structure", "layout", "reading_order", "bbox_text"]
@@ -95,6 +107,33 @@ def clean_corpus(
 # ------------------------------------------------------------------ create
 
 
+def dataset_frame(pages: DataFrame, perturb: float | None = None) -> DataFrame:
+    """pages (url, warc_ts, html, text, lang) → the benchmark dataset
+    ``create_dataset`` writes: one narrow extraction map + one
+    equi-join with the GT columns. ``perturb`` plugs the K10 model
+    slot: the same map also runs the seeded noise model on each batch
+    (``extract_perturb_stage``), adding pred_text/pred_tables/
+    pred_layout prediction columns so evaluators measure a
+    non-trivial model instead of identity."""
+    ex = (
+        extract_stage(pages)
+        if perturb is None
+        else extract_perturb_stage(pages, p=perturb)
+    )
+    return ex.join(
+        pages.select("url", F.col("text").alias("gt_text"), "lang", "warc_ts"),
+        "url",
+    )
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count (``obs.get["rows"]``) observed by
+    whatever action runs it: the count of a write, without a job that
+    reads the output back."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def create_dataset(
     spark: SparkSession,
     pages_path: str,
@@ -102,31 +141,19 @@ def create_dataset(
     buckets: int | None = 16,
     records_per_shard: int = 1000,
     perturb: float | None = None,
-) -> None:
-    """pages (url, warc_ts, html, text, lang) → benchmark dataset.
-
-    One narrow extraction map + one equi-join with the GT columns;
-    output sharded like the reference's SHARD_SIZE=1000 writer
-    (`benchmarks/utils.py:377-403`). ``perturb`` plugs the K10 model
-    slot: a seeded noise stage produces pred_text/pred_tables/
-    pred_layout prediction columns so evaluators measure a non-trivial
-    model instead of identity."""
-    pages = read_pages(spark, pages_path)
-    ex = extract_stage(pages)
-    if perturb is not None:
-        from docling_eval_spark.extraction.perturb import perturb_stage
-
-        ex = perturb_stage(ex, p=perturb)
-    dataset = ex.join(
-        pages.select("url", F.col("text").alias("gt_text"), "lang", "warc_ts"),
-        "url",
-    )
+) -> int:
+    """pages → benchmark dataset (``dataset_frame``), output sharded
+    like the reference's SHARD_SIZE=1000 writer
+    (`benchmarks/utils.py:377-403`). Returns the number of documents
+    written, observed on the write itself (no read-back job)."""
+    dataset, rows = counted(dataset_frame(read_pages(spark, pages_path), perturb))
     write_sharded(
         dataset,
         output_dir,
         records_per_shard=records_per_shard,
         bucket_by_url=buckets,
     )
+    return rows.get["rows"]
 
 
 def read_dataset(spark: SparkSession, dataset_dir: str) -> DataFrame:
@@ -187,9 +214,7 @@ def _multi_metric_rollup(per_row: DataFrame, modality: str) -> DataFrame:
     metric's values in one task."""
     to_cols, key, metrics = _ROLLUPS[modality]
     long = stack_columns(to_cols(per_row), metrics, key)
-    anchors = long.sparkSession.createDataFrame(
-        [(m, None) for m in metrics], long.schema
-    )
+    anchors = local_frame(long.sparkSession, [(m, None) for m in metrics], long.schema)
     return compute_stats(long.unionByName(anchors), "value", [key])
 
 
@@ -304,6 +329,20 @@ def rollup_bbox_text(per_match: DataFrame) -> DataFrame:
     return _multi_metric_rollup(per_match, "bbox_text")
 
 
+def rollup_frame(spark: SparkSession, per_row: DataFrame, modality: str) -> DataFrame:
+    """Stats rows of a non-layout modality's per-row table by
+    count-then-fold: one bounded counting pass, folded on the driver,
+    so the rollup never buffers a metric's values in one task whatever
+    the corpus size. The folded rows enter Spark as a local frame."""
+    to_cols, key, metrics = _ROLLUPS[modality]
+    stats = collect_stats(to_cols(per_row), metrics)
+    return local_frame(
+        spark,
+        [(m, *row.values()) for m, row in stats.items()],
+        f"{key} string, {STATS_SCHEMA}",
+    )
+
+
 def evaluate(
     spark: SparkSession, dataset_dir: str, modality: str, output_dir: str
 ) -> None:
@@ -317,30 +356,31 @@ def evaluate(
     per_row_path = str(out / f"evaluation_{modality}")
 
     if modality == "layout":
-        # per-image stage and corpus AP table are *different* kernels
-        # over the same source (per-image COCO AP vs corpus-level PR
-        # curve); each runs exactly once. The ≤(labels × 10)-row AP
-        # table is WRITTEN next to the per-image parquet so the mAP
-        # stats row here and the per-class report in visualize() both
-        # derive from the written rows — visualize never re-runs the
+        # ONE matching pass (layout_match_stage) yields both outputs:
+        # each image row carries its per-image metrics and its
+        # detection rows. The frame is persisted, so the kernel runs
+        # once: the per-image columns are written, and the ≤(labels ×
+        # 10)-row corpus AP table is built from the exploded
+        # detections and WRITTEN next to them, so the mAP stats row
+        # here and the per-class report in visualize() both derive
+        # from the written rows — visualize never re-runs the
         # detection kernel (VERDICT r2 'What's wrong' #1).
-        from docling_eval_spark.evaluators.layout import (
-            corpus_ap_table,
-            map_from_ap_table,
-        )
-
         src = ds.select(
             "url",
             F.col("layout").alias("gt_layout"),
             F.col(_pred_col(ds, "pred_layout", "layout")).alias("pred_layout"),
         ).filter(F.size("gt_layout") > 0)
-        layout_image_stage(src, "gt_layout", "pred_layout").write.mode(
-            "overwrite"
-        ).parquet(per_row_path)
         ap_path = str(out / f"evaluation_{modality}_ap_table")
-        corpus_ap_table(src, "gt_layout", "pred_layout").write.mode(
-            "overwrite"
-        ).parquet(ap_path)
+        matched = layout_match_stage(src).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            matched.select(*LAYOUT_IMAGE_COLS).write.mode("overwrite").parquet(
+                per_row_path
+            )
+            ap_table_from_detections(
+                detections_of(matched), corpus_gt_counts(src)
+            ).write.mode("overwrite").parquet(ap_path)
+        finally:
+            matched.unpersist(blocking=True)
         rollup = map_from_ap_table(spark.read.parquet(ap_path))
     else:
         rows_fn = {
@@ -352,15 +392,7 @@ def evaluate(
             "bbox_text": lambda d: evaluate_bbox_text(d)[0],
         }[modality]
         rows_fn(ds).write.mode("overwrite").parquet(per_row_path)
-        # count-then-fold: one bounded counting pass over the written
-        # rows, folded on the driver, so the rollup never buffers a
-        # metric's values in one task whatever the corpus size
-        to_cols, key, metrics = _ROLLUPS[modality]
-        stats = collect_stats(to_cols(spark.read.parquet(per_row_path)), metrics)
-        rollup = spark.createDataFrame(
-            [(m, *row.values()) for m, row in stats.items()],
-            f"{key} string, {STATS_SCHEMA}",
-        )
+        rollup = rollup_frame(spark, spark.read.parquet(per_row_path), modality)
 
     rollup.coalesce(1).write.mode("overwrite").json(
         str(out / f"evaluation_{modality}_stats")

@@ -33,6 +33,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from docling_eval_spark.session import local_frame
+
 LINEAGE_COLS = [
     "bucket",
     "status",
@@ -231,7 +233,8 @@ def run_resumable(
             )
             wall_ms = int((time.monotonic() - t0) * 1000)
             seq += 1
-            lineage_row = spark.createDataFrame(
+            lineage_row = local_frame(
+                spark,
                 [
                     (
                         b,
@@ -246,7 +249,7 @@ def run_resumable(
                         metrics_json,
                     )
                 ],
-                schema=_LINEAGE_SCHEMA,
+                _LINEAGE_SCHEMA,
             )
             lineage_row.write.mode("append").parquet(lineage_dir)
             processed.append(b)

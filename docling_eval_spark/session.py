@@ -15,8 +15,12 @@ ones that matter identically on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # Columns carrying whole HTML pages make the default 10k-row Arrow batch
 # too large; 1k keeps executor-side pandas frames ~tens of MB.
@@ -65,3 +69,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Small driver-side rows (tuples in ``schema`` order) as a
+    DataFrame whose plan is a ``LocalTableScan``.
+
+    The rows travel as one ``pyarrow.Table``, so no Python worker runs
+    for them; ``spark.createDataFrame(list, schema)`` instead plans a
+    PythonRDD scan whose tasks each start a Python worker. Built
+    column by column with the Arrow type of each field, so NULL and NaN
+    stay distinct (a pandas hop would turn NaN into NULL)."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -1,8 +1,34 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from docling_eval_spark.session import get_spark
+
+# physical plan nodes whose tasks run Python workers
+PYTHON_NODES = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "Scan ExistingRDD",
+)
+_TREE_PREFIX = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s+)?")
+
+
+def plan_string(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def python_nodes(df) -> list[str]:
+    """The Python-executing nodes of ``df``'s executed plan, one entry
+    per node, in plan order."""
+    found = []
+    for line in plan_string(df).splitlines():
+        node = _TREE_PREFIX.sub("", line)
+        found += [n for n in PYTHON_NODES if node.startswith(n)]
+    return found
 
 
 @pytest.fixture(scope="session")

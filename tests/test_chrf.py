@@ -134,3 +134,13 @@ def test_chrf_arrow_engine_matches_sql_engine(spark):
             tuple(r) for r in chrf_pairs(pairs, engine="arrow").collect()
         )
         assert arrow_rows == sql_rows
+
+
+def test_chrf_py_rounds_half_up_like_spark(spark):
+    """1e6 · tp/h = 1e6 · 1/128 = 7812.5 exactly at order 1: Spark's
+    HALF_UP F.round (and the oracle's half-away-from-zero) give 7813
+    where builtin round() gives 7812."""
+    hyp, ref = "a" + "b" * 127, "a"
+    pairs = spark.createDataFrame([(1, hyp, ref)], "id_l long, t_l string, t_r string")
+    got = chrf_pairs(pairs).collect()[0]["chrf_micro"]
+    assert chrf_py(hyp, ref) == got == 6313

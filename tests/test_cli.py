@@ -384,3 +384,28 @@ def test_comparison_html_shows_scored_prediction(spark, tmp_path):
     assert changed, "perturbation changed no text"
     page = (reports / "comparison.html").read_text()
     assert all(f"<pre>{html.escape(r['pred_text'])}</pre>" in page for r in changed)
+
+
+def test_cli_printed_counts_match_written_rows(spark, tmp_path, monkeypatch, capsys):
+    """create and clean print the row counts observed on their writes
+    (no read-back job); each must equal the rows actually written."""
+    import re
+
+    from docling_eval_spark import cli
+
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    ds = str(tmp_path / "ds")
+    assert cli.main([
+        "create", "--pages", "synthetic:30", "--output", ds,
+        "--buckets", "2", "--perturb", "0.2",
+    ]) == 0
+    out = capsys.readouterr().out
+    n = int(re.search(r"dataset written: .* \((\d+) documents\)", out).group(1))
+    assert n == spark.read.parquet(ds).count() == 30
+
+    cleaned = str(tmp_path / "cleaned")
+    assert cli.main(["clean", "--pages", f"{ds}_pages", "--output", cleaned]) == 0
+    out = capsys.readouterr().out
+    n_in, n_out = map(int, re.search(r"(\d+) pages -> (\d+) kept", out).groups())
+    assert n_in == 30
+    assert n_out == spark.read.parquet(cleaned).count()
