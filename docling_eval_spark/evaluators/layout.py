@@ -43,7 +43,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from docling_eval_spark.session import local_frame
 
@@ -237,6 +237,7 @@ _MATCH_SCHEMA = T.StructType(
     [T.StructField("url", T.StringType())]
     + [T.StructField(c, T.DoubleType()) for c in LAYOUT_IMAGE_COLS[1:]]
     + [T.StructField("dets", T.ArrayType(_DET))]
+    + [T.StructField("gt_labels", T.ArrayType(T.StringType()))]
 )
 
 
@@ -259,10 +260,11 @@ def layout_match_stage(
 ) -> DataFrame:
     """The one layout matching pass: per image, the boxes are matched
     once per IoU threshold, and the image's row carries both the
-    per-image metric columns (LAYOUT_IMAGE_COLS) and its detection rows
-    ``dets`` (label, iou_thr, score, tp) for the corpus AP table; the
-    per-image mAP reuses the same tp flags. Embarrassingly parallel map
-    over array columns (no shuffle — both box sets ride in the row).
+    per-image metric columns (LAYOUT_IMAGE_COLS), its detection rows
+    ``dets`` (label, iou_thr, score, tp) and its GT labels
+    ``gt_labels`` for the corpus AP table; the per-image mAP reuses the
+    same tp flags. Embarrassingly parallel map over array columns (no
+    shuffle — both box sets ride in the row).
     ``url`` is NULL when ``df`` has no such column."""
     url = F.col("url") if "url" in df.columns else F.lit(None).cast("string")
     src = df.select(
@@ -286,6 +288,7 @@ def layout_match_stage(
                     for thr, flags in zip(IOU_THRESHOLDS, tp.tolist())
                     for label, score, flag in zip(labels, scores, flags)
                 ]
+                row["gt_labels"] = gl.tolist()
                 rows.append(row)
             yield pd.DataFrame(rows, columns=_MATCH_SCHEMA.fieldNames())
 
@@ -306,6 +309,17 @@ def detections_of(matched: DataFrame) -> DataFrame:
     return matched.select(F.inline("dets"))
 
 
+def gt_counts_of(matched: DataFrame) -> DataFrame:
+    """GT box count per class (label, n_gt) of a ``layout_match_stage``
+    frame — the ``corpus_gt_counts`` of its input, without a second
+    read of the GT column."""
+    return (
+        matched.select(F.explode("gt_labels").alias("label"))
+        .groupBy("label")
+        .agg(F.count("*").alias("n_gt"))
+    )
+
+
 def corpus_detections_stage(
     df: DataFrame, gt_col: str = "gt_layout", pred_col: str = "pred_layout"
 ) -> DataFrame:
@@ -323,7 +337,7 @@ def corpus_gt_counts(df: DataFrame, gt_col: str = "gt_layout") -> DataFrame:
     )
 
 
-_AP_SCHEMA = T.StructType(
+AP_SCHEMA = T.StructType(
     [
         T.StructField("label", T.StringType()),
         T.StructField("iou_thr", T.DoubleType()),
@@ -384,7 +398,7 @@ def ap_table_from_detections(
 
         joined = dets.join(F.broadcast(gt_counts), "label", "inner")
         aps = joined.groupBy("label", "iou_thr").applyInPandas(
-            ap_kernel, schema=_AP_SCHEMA
+            ap_kernel, schema=AP_SCHEMA
         )
     else:
         hist = (
@@ -416,7 +430,7 @@ def ap_table_from_detections(
             return pd.DataFrame({"label": [label], "iou_thr": [thr], "ap": [ap]})
 
         aps = hist.groupBy("label", "iou_thr").applyInPandas(
-            hist_ap_kernel, schema=_AP_SCHEMA
+            hist_ap_kernel, schema=AP_SCHEMA
         )
 
     # classes with GT but zero detections must contribute AP=0 at every
@@ -455,13 +469,24 @@ def corpus_map(
     return map_from_ap_table(aps)
 
 
+def _sorted_mean(col: Column) -> Column:
+    """Mean of the non-null values of ``col``, summed in ascending
+    order: the float sum, and so the mean, does not depend on the order
+    in which the rows arrive (partitioning, shuffle). NULL when there
+    is no value."""
+    vals = F.array_sort(F.collect_list(col))
+    total = F.aggregate(vals, F.lit(0.0), lambda acc, v: acc + v)
+    return F.try_divide(total, F.size(vals))
+
+
 def map_from_ap_table(aps: DataFrame) -> DataFrame:
     """(mAP, mAP@50, mAP@75) from an already-computed (label, iou_thr,
     ap) table — lets evaluate() persist the tiny AP table once and
     derive every downstream consumer (stats JSON, per-class report)
-    from the written rows instead of re-running the detection kernel."""
+    from the written rows instead of re-running the detection kernel.
+    Bit-identical for any row order of ``aps`` (≤ labels × 10 rows)."""
     return aps.agg(
-        F.avg("ap").alias("map"),
-        F.avg(F.when(F.col("iou_thr") == 0.5, F.col("ap"))).alias("map_50"),
-        F.avg(F.when(F.col("iou_thr") == 0.75, F.col("ap"))).alias("map_75"),
+        _sorted_mean(F.col("ap")).alias("map"),
+        _sorted_mean(F.when(F.col("iou_thr") == 0.5, F.col("ap"))).alias("map_50"),
+        _sorted_mean(F.when(F.col("iou_thr") == 0.75, F.col("ap"))).alias("map_75"),
     )

@@ -95,30 +95,60 @@ def tokenize_13a(text: str) -> list[str]:
 
 
 def levenshtein(a: list[str] | str, b: list[str] | str) -> int:
-    """Classic DP edit distance (substitution cost 1), NLTK-compatible."""
-    if not a:
-        return len(b)
+    """Edit distance (unit insert/delete/substitute cost), NLTK-compatible.
+
+    Bit-parallel (Myers 1999, JACM 46(3); Hyyrö 2003 for the global
+    distance): the column of the DP over the longer sequence is two bit
+    vectors of +1/-1 vertical deltas held in Python ints, so each
+    element of the shorter sequence costs a few whole-int operations
+    instead of a row of cells. Exact: the same value as the O(n·m) DP
+    for any lengths and any hashable elements."""
+    if len(a) < len(b):
+        a, b = b, a
     if not b:
         return len(a)
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-        prev = cur
-    return prev[-1]
+    peq: dict = {}
+    for i, x in enumerate(a):
+        peq[x] = peq.get(x, 0) | (1 << i)
+    mask = (1 << len(a)) - 1
+    top = 1 << (len(a) - 1)
+    pv, mv, dist = mask, 0, len(a)
+    for y in b:
+        eq = peq.get(y, 0)
+        xv = eq | mv
+        xh = (((eq & pv) + pv) ^ pv) | eq
+        ph = mv | ~(xh | pv)
+        mh = pv & xh
+        if ph & top:
+            dist += 1
+        elif mh & top:
+            dist -= 1
+        ph = (ph << 1) | 1
+        mh <<= 1
+        pv = (mh | ~(xv | ph)) & mask
+        mv = ph & xv & mask
+    return dist
 
 
 def token_edit_distance(true_txt: str, pred_txt: str) -> float:
-    tt, pt = tokenize(true_txt), tokenize(pred_txt)
-    m = max(len(tt), len(pt))
-    return levenshtein(pt, tt) / m if m else 0.0
+    return _edit_ratio(tokenize(true_txt), tokenize(pred_txt))
+
+
+def _edit_ratio(true_tokens: list[str], pred_tokens: list[str]) -> float:
+    m = max(len(true_tokens), len(pred_tokens))
+    return levenshtein(pred_tokens, true_tokens) / m if m else 0.0
 
 
 def set_f1(true_txt: str, pred_txt: str) -> tuple[float, float, float]:
     """(f1, precision, recall) on token sets; None-free (0.0 when a
     side is empty, vs NLTK's None)."""
-    ts, ps = set(tokenize(true_txt)), set(tokenize(pred_txt))
+    return _set_f1_tokens(tokenize(true_txt), tokenize(pred_txt))
+
+
+def _set_f1_tokens(
+    true_tokens: list[str], pred_tokens: list[str]
+) -> tuple[float, float, float]:
+    ts, ps = set(true_tokens), set(pred_tokens)
     inter = len(ts & ps)
     p = inter / len(ps) if ps else 0.0
     r = inter / len(ts) if ts else 0.0
@@ -222,27 +252,31 @@ def meteor_tokens(
     return float((1 - penalty) * fmean)
 
 
-def token_metrics(true_tokens: list[str], pred_tokens: list[str]) -> dict[str, float]:
+def token_metrics(
+    true_tokens: list[str], pred_tokens: list[str], bleu_score: float | None = None
+) -> dict[str, float]:
     """All six metrics over pre-tokenized input (the bbox-matched text
-    path, `bbox_text_evaluator.py:256-290`; None-metrics become 0)."""
-    ts, ps = set(true_tokens), set(pred_tokens)
-    inter = len(ts & ps)
-    p = inter / len(ps) if ps else 0.0
-    r = inter / len(ts) if ts else 0.0
-    m = max(len(true_tokens), len(pred_tokens))
+    path, `bbox_text_evaluator.py:256-290`; None-metrics become 0).
+    ``bleu_score`` replaces BLEU over these tokens (``text_metrics``
+    passes BLEU over tokenizer_13a tokens)."""
+    if bleu_score is None:
+        bleu_score = bleu_tokens(true_tokens, pred_tokens)
+    f1, p, r = _set_f1_tokens(true_tokens, pred_tokens)
     return {
-        "bleu": bleu_tokens(true_tokens, pred_tokens),
-        "f1_score": 2 * p * r / (p + r) if (p + r) > 0 else 0.0,
+        "bleu": bleu_score,
+        "f1_score": f1,
         "precision": p,
         "recall": r,
-        "edit_distance": levenshtein(pred_tokens, true_tokens) / m if m else 0.0,
+        "edit_distance": _edit_ratio(true_tokens, pred_tokens),
         "meteor": meteor_tokens(true_tokens, pred_tokens),
     }
 
 
 def text_metrics(true_txt: str, pred_txt: str) -> dict[str, float]:
     """All six metrics, guarded like the reference's empty-text check
-    (`markdown_text_evaluator.py:154-157`)."""
+    (`markdown_text_evaluator.py:154-157`). Each side is tokenized
+    once for the set, edit-distance and METEOR metrics, and once more
+    by tokenizer_13a for BLEU."""
     if not true_txt or not pred_txt:
         return {
             "bleu": 0.0,
@@ -252,15 +286,9 @@ def text_metrics(true_txt: str, pred_txt: str) -> dict[str, float]:
             "edit_distance": 1.0 if (true_txt or pred_txt) else 0.0,
             "meteor": 0.0,
         }
-    f1, p, r = set_f1(true_txt, pred_txt)
-    return {
-        "bleu": bleu(true_txt, pred_txt),
-        "f1_score": f1,
-        "precision": p,
-        "recall": r,
-        "edit_distance": token_edit_distance(true_txt, pred_txt),
-        "meteor": meteor_exact(true_txt, pred_txt),
-    }
+    return token_metrics(
+        tokenize(true_txt), tokenize(pred_txt), bleu(true_txt, pred_txt)
+    )
 
 
 # ---------------------------------------------------------------- Spark stage

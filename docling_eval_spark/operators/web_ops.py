@@ -26,6 +26,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from docling_eval_spark.session import release_checkpoint
+
 
 def canonical_url_col(url: Column | str) -> Column:
     """Canonical crawl key for a URL column."""
@@ -889,6 +891,9 @@ def page_rank(
     ed = edges.join(out_deg, "src").persist()
     base = (1.0 - damping) / n_nodes
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
+    # the loop's live checkpoint: released as soon as a newer one
+    # replaces it, so only the returned frame's blocks outlive the call
+    ckpt = None
     for it in range(iterations):
         # in tol mode every iteration already checkpoints below — a
         # second checkpoint here would re-materialize for nothing
@@ -899,6 +904,8 @@ def page_rank(
             and it % checkpoint_every == 0
         ):
             ranks = ranks.localCheckpoint(eager=True)
+            release_checkpoint(ckpt)
+            ckpt = ranks
         prev = ranks
         contribs = (
             ed.join(ranks, ed["src"] == ranks["node"])
@@ -931,16 +938,17 @@ def page_rank(
             # prev (last iteration's checkpoint) is dead after the
             # probe — release its blocks instead of waiting for GC,
             # bounding executor storage at two rank-frame copies
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass
+            release_checkpoint(ckpt)
+            ckpt = ranks
             if delta is not None and delta <= tol:
                 break
-    out = ranks.localCheckpoint(eager=True)
+    # a tol run ends on a checkpoint already: return it as it is
+    if ranks is not ckpt:
+        ranks = ranks.localCheckpoint(eager=True)
+        release_checkpoint(ckpt)
     nodes.unpersist()
     ed.unpersist()
-    return out
+    return ranks
 
 
 def cap_per_key_budget(
@@ -1205,6 +1213,7 @@ def trust_rank(
     ed = edges.join(out_deg, "src").persist()
     ranks = seeds_in.select("node", F.lit(t_val).alias("rank"))
     seed_zero = seeds_in.select("node", F.lit(0.0).alias("c"))
+    ckpt = None  # the loop's live checkpoint (see page_rank)
     for it in range(iterations):
         # in tol mode every iteration already checkpoints below — a
         # second checkpoint here would re-materialize for nothing
@@ -1215,6 +1224,8 @@ def trust_rank(
             and it % checkpoint_every == 0
         ):
             ranks = ranks.localCheckpoint(eager=True)
+            release_checkpoint(ckpt)
+            ckpt = ranks
         prev = ranks
         contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
             F.col("dst").alias("node"),
@@ -1259,14 +1270,10 @@ def trust_rank(
                 )
                 .collect()[0][0]
             )
-            if it > 0:
-                # prev (last iteration's checkpoint) is dead after
-                # the probe — release its blocks instead of waiting
-                # for GC (it == 0 skipped: prev is the seed frame)
-                try:
-                    prev.unpersist(blocking=False)
-                except Exception:
-                    pass
+            # prev (last iteration's checkpoint; none at it == 0,
+            # where prev is the seed frame) is dead after the probe
+            release_checkpoint(ckpt)
+            ckpt = ranks
             if delta is not None and delta <= tol:
                 break
     out = (
@@ -1276,6 +1283,7 @@ def trust_rank(
         )
         .localCheckpoint(eager=True)
     )
+    release_checkpoint(ckpt)
     nodes.unpersist()
     seeds_in.unpersist()
     ed.unpersist()

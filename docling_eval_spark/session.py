@@ -91,3 +91,13 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def release_checkpoint(df: DataFrame | None) -> None:
+    """Drop the blocks of an eager ``localCheckpoint`` frame (no-op for
+    ``None``). ``DataFrame.unpersist`` does not do it: it uncaches
+    ``persist``-ed plans only, while a local checkpoint's blocks belong
+    to the RDD under the frame's ``LogicalRDD`` plan. The frame must not
+    be read afterwards."""
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)

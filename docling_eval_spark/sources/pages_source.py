@@ -48,12 +48,19 @@ def write_sharded(
     bucket_by_url: int | None = None,
     mode: str = "overwrite",
 ) -> None:
+    """Write ``df`` as parquet shards of at most ``records_per_shard``
+    rows. With ``bucket_by_url``, rows are partitioned into that many
+    url-hash buckets (a ``bucket=<n>`` directory each) and clustered by
+    bucket first, so each bucket's rows reach one writer task: a bucket
+    gets one file per ``records_per_shard`` rows, not one per input
+    partition. The clustering is a rebalance, so adaptive execution
+    coalesces small buckets into one task and splits oversized ones."""
     writer = df
     if bucket_by_url is not None:
         writer = df.withColumn(
             "bucket",
             F.pmod(F.xxhash64("url"), F.lit(bucket_by_url)).cast("int"),
-        )
+        ).hint("rebalance", "bucket")
     (
         writer.write.mode(mode)
         .option("maxRecordsPerFile", records_per_shard)

@@ -143,8 +143,9 @@ def test_perturbed_pipeline_metric_sensitivity(spark, tmp_path):
 
 def test_evaluate_runs_kernel_exactly_once(spark, tmp_path, monkeypatch):
     """VERDICT-r1 #2 regression guard: evaluate() must execute the
-    per-row metric kernel ONCE (write per-row parquet, roll up from
-    the re-read file) — round 1 re-ran it per metric column (7x)."""
+    per-row metric kernel ONCE (persist the per-row frame, write it,
+    and roll up from the persisted rows) — round 1 re-ran it per
+    metric column (7x)."""
     import pyspark.sql.functions as F
 
     import docling_eval_spark.pipelines as P

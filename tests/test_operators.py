@@ -1392,6 +1392,32 @@ def test_page_rank_tolerance_stop(spark):
     assert set(loose) == set(fixed)
 
 
+@pytest.mark.parametrize("tol", [None, 1e-12])
+def test_rank_loops_release_their_checkpoints(spark, tol):
+    """After page_rank / trust_rank return, the only new persistent RDD
+    is the returned frame's checkpoint: every loop checkpoint and every
+    cached input is released."""
+    from docling_eval_spark.operators.web_ops import page_rank, trust_rank
+    from docling_eval_spark.session import release_checkpoint
+
+    edges = spark.createDataFrame(
+        [("a", "hub"), ("b", "hub"), ("c", "hub"), ("hub", "a")],
+        "src string, dst string",
+    )
+    seeds = spark.createDataFrame([("a",)], "node string")
+    jsc = spark.sparkContext._jsc
+    for run in (
+        lambda: page_rank(edges, 7, tol=tol),
+        lambda: trust_rank(edges, seeds, 7, tol=tol),
+    ):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = run()
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        assert new == {out._jdf.queryExecution().analyzed().rdd().id()}
+        assert out.count() == 4
+        release_checkpoint(out)
+
+
 def test_ngram_lm_score_hand_computed(spark):
     """Char-trigram LM score vs a hand-rolled Python twin on a tiny
     corpus (model self-trained on the same docs)."""

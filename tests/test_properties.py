@@ -52,6 +52,41 @@ def test_levenshtein_triangle(a, b, c):
     assert ab == levenshtein(b, a)
 
 
+def _dp_levenshtein(a, b) -> int:
+    prev = list(range(len(b) + 1))
+    for i, x in enumerate(a, 1):
+        cur = [i]
+        for j, y in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (x != y)))
+        prev = cur
+    return prev[-1]
+
+
+# few distinct tokens, so long sequences share many matches
+TOKENS = st.lists(st.sampled_from(["a", "b", "c", "the", "of"]), max_size=150)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.one_of(
+        st.tuples(TOKENS, TOKENS),
+        st.tuples(
+            st.lists(st.sampled_from("ab"), min_size=65, max_size=150),
+            st.lists(st.sampled_from("ab"), min_size=65, max_size=150),
+        ),
+        st.tuples(st.text("abcd", max_size=80), st.text("abcd", max_size=80)),
+        st.tuples(st.just([]), TOKENS),
+        st.integers(0, 150).map(lambda n: (["x"] * n, ["x"] * n)),
+    )
+)
+def test_levenshtein_equals_dp(pair):
+    """The bit-parallel distance equals the O(n·m) DP, also past one
+    64-bit word, on strings, on empty inputs and on all-equal inputs."""
+    a, b = pair
+    assert levenshtein(a, b) == _dp_levenshtein(a, b)
+    assert levenshtein(b, a) == _dp_levenshtein(b, a)
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.permutations(list(range(8))))
 def test_ard_bounds_and_identity(perm):

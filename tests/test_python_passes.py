@@ -102,11 +102,12 @@ def test_evaluate_layout_matches_projections(spark, perturbed_dataset, tmp_path)
         assert stats[k] == pytest.approx(ex_map[k], abs=1e-12)
 
 
-def test_evaluate_layout_leaves_nothing_cached(spark, perturbed_dataset, tmp_path):
+@pytest.mark.parametrize("modality", pipelines.MODALITIES)
+def test_evaluate_leaves_nothing_cached(spark, perturbed_dataset, tmp_path, modality):
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-    pipelines.evaluate(spark, perturbed_dataset, "layout", str(tmp_path / "ev"))
+    pipelines.evaluate(spark, perturbed_dataset, modality, str(tmp_path / "ev"))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
