@@ -22,6 +22,20 @@ Spark pipeline:
   table ``(url, warc_ts, html, text, lang)`` for tests and benchmarks.
 
 Nothing here imports from or depends on the reference repo.
+
+Imported inside a Spark task (a PySpark Python worker), the package
+first runs ``worker.prepare_worker`` once for the worker process; in
+the driver the import does nothing else.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+# pyspark.worker imports pyspark.taskcontext and sets the task's context
+# before it unpickles the task's functions, which import this package
+_taskcontext = _sys.modules.get("pyspark.taskcontext")
+if _taskcontext is not None and _taskcontext.TaskContext.get() is not None:
+    from docling_eval_spark.worker import prepare_worker
+
+    prepare_worker()

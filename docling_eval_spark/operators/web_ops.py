@@ -791,7 +791,7 @@ def connected_components(
     :func:`page_rank`'s tol mode applies to its double-referenced
     rank frame)."""
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = und.union(
+    cached = und = und.union(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
     # near-dup pair graphs are tiny next to the corpus that produced
@@ -827,11 +827,8 @@ def connected_components(
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=True)
         )
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    und.unpersist()
+        release_checkpoint(prev)
+    cached.unpersist()  # not ``und``: a coalesce is a new, uncached frame
     return comps
 
 
@@ -1570,9 +1567,12 @@ def hits(
         .limit(0)
         .withColumn("auth", F.lit(0.0))
     )
+    ckpt = None  # the live cadence checkpoint, released once superseded
     for it in range(iterations):
         if it > 0 and checkpoint_every and it % checkpoint_every == 0:
             hubs = hubs.localCheckpoint(eager=True)
+            release_checkpoint(ckpt)
+            ckpt = hubs
         auths = (
             ed.join(hubs, ed["src"] == hubs["node"])
             .groupBy("dst")
@@ -1605,6 +1605,7 @@ def hits(
     # whole remaining iteration lineage re-executes per reference
     hubs = hubs.localCheckpoint(eager=True)
     auths = auths.localCheckpoint(eager=True)
+    release_checkpoint(ckpt)
     # max over the sparse frame equals max over the zero-filled full
     # frame: every sparse score is > 0 by induction (integer sums
     # >= 1 in "final" mode, positive fractions in "l1" mode — both
@@ -1634,6 +1635,8 @@ def hits(
         )
         .localCheckpoint(eager=True)
     )
+    release_checkpoint(hubs)
+    release_checkpoint(auths)
     nodes.unpersist()
     ed.unpersist()
     return out
@@ -1779,10 +1782,7 @@ def crawl_depth(
         # scans the just-checkpointed frame lazily inside the next
         # round's join
         frontier = dist.filter(F.col("depth") == F.lit(hop))
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
+        release_checkpoint(prev)
     e.unpersist()
     return dist
 

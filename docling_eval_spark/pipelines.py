@@ -17,11 +17,13 @@ cli.py provides the argv surface.
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from docling_eval_spark.evaluators.bbox_text import bbox_text_stage
 from docling_eval_spark.evaluators.layout import (
@@ -135,6 +137,10 @@ def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+# Spark and pyarrow skip ``_``-prefixed files when they read a dataset
+SCHEMA_FILE = "_schema.json"
+
+
 def create_dataset(
     spark: SparkSession,
     pages_path: str,
@@ -145,8 +151,10 @@ def create_dataset(
 ) -> int:
     """pages → benchmark dataset (``dataset_frame``), output sharded
     like the reference's SHARD_SIZE=1000 writer
-    (`benchmarks/utils.py:377-403`). Returns the number of documents
-    written, observed on the write itself (no read-back job)."""
+    (`benchmarks/utils.py:377-403`), with its schema in
+    ``<output_dir>/_schema.json`` for ``read_dataset``. Returns the
+    number of documents written, observed on the write itself (no
+    read-back job)."""
     dataset, rows = counted(dataset_frame(read_pages(spark, pages_path), perturb))
     write_sharded(
         dataset,
@@ -154,11 +162,53 @@ def create_dataset(
         records_per_shard=records_per_shard,
         bucket_by_url=buckets,
     )
+    # the schema a read infers: the data columns, then the partition
+    # column (write_sharded's int ``bucket``)
+    fields = dataset.schema.fields
+    if buckets is not None:
+        fields = [*fields, StructField("bucket", IntegerType())]
+    _write_text(spark, f"{output_dir}/{SCHEMA_FILE}", StructType(fields).json())
     return rows.get["rows"]
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the session's Hadoop
+    configuration, so a remote URI (hdfs, s3a) works like a local one."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, p = _hadoop_path(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(text.encode())
+    finally:
+        out.close()
+
+
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """The file's UTF-8 text, or None when there is no such file."""
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
 def read_dataset(spark: SparkSession, dataset_dir: str) -> DataFrame:
-    return spark.read.parquet(dataset_dir)
+    """The dataset ``create_dataset`` wrote, read with the schema it
+    recorded; schema inference, a job of its own, runs only for a
+    directory without one."""
+    schema = _read_text(spark, f"{dataset_dir}/{SCHEMA_FILE}")
+    if schema is None:
+        return spark.read.parquet(dataset_dir)
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(
+        dataset_dir
+    )
 
 
 # ---------------------------------------------------------------- evaluate

@@ -31,6 +31,23 @@ def python_nodes(df) -> list[str]:
     return found
 
 
+def in_workers(spark, fn) -> dict:
+    """``fn()`` run once in each of ``spark``'s Python workers: one task
+    per core, started together as a barrier stage, so each task holds a
+    worker process of its own. Returns ``{worker pid: fn()}``. ``fn``
+    must be picklable by value (a lambda or a nested function) or
+    importable in the worker."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+
+    def run(_):
+        import os
+
+        yield os.getpid(), fn()
+
+    return dict(sc.parallelize(range(n), n).barrier().mapPartitions(run).collect())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cores=4, shuffle_partitions=4)

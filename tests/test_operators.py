@@ -1394,10 +1394,17 @@ def test_page_rank_tolerance_stop(spark):
 
 @pytest.mark.parametrize("tol", [None, 1e-12])
 def test_rank_loops_release_their_checkpoints(spark, tol):
-    """After page_rank / trust_rank return, the only new persistent RDD
-    is the returned frame's checkpoint: every loop checkpoint and every
-    cached input is released."""
-    from docling_eval_spark.operators.web_ops import page_rank, trust_rank
+    """After an iterative loop (page_rank, trust_rank, and without a
+    tolerance stop connected_components, hits and crawl_depth) returns,
+    the only new persistent RDD is the returned frame's checkpoint:
+    every loop checkpoint and every cached input is released."""
+    from docling_eval_spark.operators.web_ops import (
+        connected_components,
+        crawl_depth,
+        hits,
+        page_rank,
+        trust_rank,
+    )
     from docling_eval_spark.session import release_checkpoint
 
     edges = spark.createDataFrame(
@@ -1406,15 +1413,22 @@ def test_rank_loops_release_their_checkpoints(spark, tol):
     )
     seeds = spark.createDataFrame([("a",)], "node string")
     jsc = spark.sparkContext._jsc
-    for run in (
-        lambda: page_rank(edges, 7, tol=tol),
-        lambda: trust_rank(edges, seeds, 7, tol=tol),
-    ):
+    runs = [
+        (lambda: page_rank(edges, 7, tol=tol), 4),
+        (lambda: trust_rank(edges, seeds, 7, tol=tol), 4),
+    ]
+    if tol is None:
+        runs += [
+            (lambda: connected_components(edges), 4),
+            (lambda: hits(edges), 4),
+            (lambda: crawl_depth(edges, seeds), 2),  # a, hub
+        ]
+    for run, rows in runs:
         before = set(jsc.getPersistentRDDs().keySet())
         out = run()
         new = set(jsc.getPersistentRDDs().keySet()) - before
         assert new == {out._jdf.queryExecution().analyzed().rdd().id()}
-        assert out.count() == 4
+        assert out.count() == rows
         release_checkpoint(out)
 
 

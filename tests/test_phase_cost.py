@@ -81,13 +81,30 @@ def _jobs(spark, fn) -> int:
 
 def test_phase_calls_run_few_jobs(spark, dataset, tmp_path):
     """No job re-derives what the call already had: evaluate reads the
-    dataset once and never reads its own output back; visualize reads
-    the written stats with their schema."""
+    dataset once, with its recorded schema, and never reads its own
+    output back; visualize reads the written stats with their schema."""
     ev = str(tmp_path / "ev")
     pipelines.evaluate(spark, dataset, "markdown_text", ev)
-    assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 5
+    assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 4
     rep = str(tmp_path / "rep")
-    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 3
+    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 2
+
+
+@pytest.mark.parametrize("perturb", [0.2, None])
+@pytest.mark.parametrize("buckets", [16, None])
+def test_read_dataset_schema_equals_inferred(spark, pages100, tmp_path, buckets, perturb):
+    """The schema ``create_dataset`` records is the one a read infers,
+    column order and partition column included, and reads the same
+    rows; the read runs no job."""
+    path = str(tmp_path / "ds")
+    pipelines.create_dataset(spark, pages100, path, buckets=buckets, perturb=perturb)
+    assert (Path(path) / pipelines.SCHEMA_FILE).is_file()
+    reads = []
+    assert _jobs(spark, lambda: reads.append(pipelines.read_dataset(spark, path))) == 0
+    recorded, inferred = reads[0], spark.read.parquet(path)
+    assert recorded.schema == inferred.schema
+    assert ("bucket" in recorded.columns) == (buckets is not None)
+    assert sorted(map(repr, recorded.collect())) == sorted(map(repr, inferred.collect()))
 
 
 @pytest.mark.parametrize("modality", NON_LAYOUT)
