@@ -18,9 +18,9 @@ Reference parallels:
 One matching pass serves both: ``layout_match_stage`` matches each
 image's boxes once per IoU threshold and emits the per-image metric
 columns together with that image's detection rows (label, iou_thr,
-score, tp); the per-image mAP reuses the same tp flags.
-``layout_image_stage`` and ``corpus_detections_stage`` are
-projections of it, so there is one matching implementation.
+score, tp) and GT labels; the per-image mAP reuses the same tp flags.
+``layout_image_stage`` and ``ap_rows_of`` are projections of it, so
+there is one matching implementation.
 
 AP semantics are standard COCO (pycocotools/torchmetrics defaults):
 IoU thresholds 0.50:0.05:0.95, 101-point interpolated precision,
@@ -29,9 +29,10 @@ excluded from the mean.
 
 Scale: matching is embarrassingly parallel per page. The AP table
 reduces detections to a per-(label, iou_thr, score-bin) TP/FP
-histogram in one map-side-combining hash aggregation — no per-class
-detection list is ever collected or sorted, so no group grows with
-corpus size (see corpus_ap_table). The exact full-sort kernel is kept
+histogram, with the GT counts folded into the same map-side-combining
+hash aggregation — no per-class detection list is ever collected or
+sorted, so no group grows with corpus size, and no join is needed
+(see ap_table_from_detections). The exact full-sort kernel is kept
 behind ``exact=True`` as the small-data oracle.
 """
 
@@ -44,8 +45,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
-
-from docling_eval_spark.session import local_frame
 
 IOU_THRESHOLDS = [0.5 + 0.05 * i for i in range(10)]
 # i/100.0 exactly (np.linspace accumulates a half-ulp drift on some
@@ -303,38 +302,28 @@ def layout_image_stage(
     return layout_match_stage(df, gt_col, pred_col).select(*LAYOUT_IMAGE_COLS)
 
 
-def detections_of(matched: DataFrame) -> DataFrame:
-    """Detection rows (label, iou_thr, score, tp) of a
-    ``layout_match_stage`` frame — a narrow explode."""
-    return matched.select(F.inline("dets"))
-
-
-def gt_counts_of(matched: DataFrame) -> DataFrame:
-    """GT box count per class (label, n_gt) of a ``layout_match_stage``
-    frame — the ``corpus_gt_counts`` of its input, without a second
-    read of the GT column."""
-    return (
-        matched.select(F.explode("gt_labels").alias("label"))
-        .groupBy("label")
-        .agg(F.count("*").alias("n_gt"))
+def ap_rows_of(matched: DataFrame) -> DataFrame:
+    """The rows of the corpus AP aggregation, from a
+    ``layout_match_stage`` frame, in ONE narrow explode: each detection
+    row (label, iou_thr, score, tp), then one row per GT box and IoU
+    threshold (label, iou_thr, NULL, NULL) — a NULL score marks a GT
+    row."""
+    thresholds = F.array(*[F.lit(t) for t in IOU_THRESHOLDS])
+    gt = F.flatten(
+        F.transform(
+            "gt_labels",
+            lambda label: F.transform(
+                thresholds,
+                lambda thr: F.struct(
+                    label.alias("label"),
+                    thr.alias("iou_thr"),
+                    F.lit(None).cast("double").alias("score"),
+                    F.lit(None).cast("boolean").alias("tp"),
+                ),
+            ),
+        )
     )
-
-
-def corpus_detections_stage(
-    df: DataFrame, gt_col: str = "gt_layout", pred_col: str = "pred_layout"
-) -> DataFrame:
-    """Stage 1 of corpus mAP: per-image matching → detection rows
-    (label, iou_thr, score, tp). Narrow map, no shuffle."""
-    return detections_of(layout_match_stage(df, gt_col, pred_col))
-
-
-def corpus_gt_counts(df: DataFrame, gt_col: str = "gt_layout") -> DataFrame:
-    """GT box count per class — one explode + hash agg."""
-    return (
-        df.select(F.explode(F.col(gt_col)).alias("it"))
-        .groupBy(F.col("it.label").alias("label"))
-        .agg(F.count("*").alias("n_gt"))
-    )
+    return matched.select(F.inline(F.concat("dets", gt)))
 
 
 AP_SCHEMA = T.StructType(
@@ -374,76 +363,77 @@ def corpus_ap_table(
     sketch is tested against.
     """
     return ap_table_from_detections(
-        corpus_detections_stage(df, gt_col, pred_col),
-        corpus_gt_counts(df, gt_col),
-        exact=exact,
+        ap_rows_of(layout_match_stage(df, gt_col, pred_col)), exact=exact
     )
 
 
-def ap_table_from_detections(
-    dets: DataFrame, gt_counts: DataFrame, exact: bool = False
-) -> DataFrame:
-    """corpus_ap_table from detection rows (label, iou_thr, score, tp)
-    and per-class GT counts (label, n_gt)."""
+def _ap_row(key, ap: float) -> pd.DataFrame:
+    label, thr = key
+    return pd.DataFrame({"label": [label], "iou_thr": [thr], "ap": [ap]})
+
+
+_NO_AP = pd.DataFrame(
+    {"label": pd.Series([], dtype=object), "iou_thr": [], "ap": []},
+    columns=AP_SCHEMA.fieldNames(),
+)
+
+
+def ap_table_from_detections(rows: DataFrame, exact: bool = False) -> DataFrame:
+    """corpus_ap_table from the rows of ``ap_rows_of``: detection rows
+    (label, iou_thr, score, tp) and GT rows (label, iou_thr, NULL,
+    NULL).
+
+    ONE aggregation over both kinds of rows, grouped by (label,
+    iou_thr, score bin), counts each bin's detections and true
+    positives; the GT rows have a NULL bin, so they fold into one row
+    per (label, iou_thr) that holds its GT count — the counts need no
+    join. The grouped AP kernel then runs over each (label, iou_thr)
+    group of that bounded table: a group with GT but no detection has
+    AP 0.0, a group without GT gives no row (classes without ground
+    truth are left out of the mean). ``exact=True`` runs the kernel
+    over the unbinned rows instead."""
     if exact:
 
-        def ap_kernel(key, pdf):  # no hints: PySpark's eval-type
+        def kernel(key, pdf):  # no hints: PySpark's eval-type
             # inference warns on partially-inferable grouped-map hints
-            label, thr = key
-            n_gt = int(pdf["n_gt"].iloc[0]) if len(pdf) else 0
-            ap = average_precision(
-                pdf["score"].to_numpy(), pdf["tp"].to_numpy(), n_gt
+            det = pdf["score"].notna()
+            n_gt = int((~det).sum())
+            if n_gt == 0:
+                return _NO_AP
+            d = pdf[det]
+            return _ap_row(
+                key,
+                average_precision(
+                    d["score"].to_numpy(dtype=float), d["tp"].to_numpy(dtype=bool), n_gt
+                ),
             )
-            return pd.DataFrame({"label": [label], "iou_thr": [thr], "ap": [ap]})
 
-        joined = dets.join(F.broadcast(gt_counts), "label", "inner")
-        aps = joined.groupBy("label", "iou_thr").applyInPandas(
-            ap_kernel, schema=AP_SCHEMA
-        )
+        grouped = rows
     else:
-        hist = (
-            dets.withColumn(
-                "bin",
-                F.least(
-                    F.floor(F.col("score") * SCORE_BINS), F.lit(SCORE_BINS - 1)
-                ).cast("int"),
-            )
-            .groupBy("label", "iou_thr", "bin")
-            .agg(
-                F.sum(F.when(F.col("tp"), 1).otherwise(0)).alias("tp_n"),
-                F.count("*").alias("n"),
-            )
-            .join(F.broadcast(gt_counts), "label", "inner")
+        grouped = rows.groupBy(
+            "label",
+            "iou_thr",
+            F.least(F.floor(F.col("score") * SCORE_BINS), F.lit(SCORE_BINS - 1))
+            .cast("int")
+            .alias("bin"),
+        ).agg(
+            F.count_if(F.col("tp")).alias("tp_n"),
+            F.count("score").alias("n"),
+            F.count_if(F.col("score").isNull()).alias("n_gt"),
         )
 
-        def hist_ap_kernel(key, pdf):  # no hints (see ap_kernel)
-            label, thr = key
-            n_gt = int(pdf["n_gt"].iloc[0]) if len(pdf) else 0
-            p = pdf.sort_values("bin", ascending=False)
+        def kernel(key, pdf):  # no hints (see above)
+            n_gt = int(pdf["n_gt"].sum())
+            if n_gt == 0:
+                return _NO_AP
+            p = pdf[pdf["n"] > 0].sort_values("bin", ascending=False)
             tp_c = p["tp_n"].to_numpy().cumsum()
             all_c = p["n"].to_numpy().cumsum()
-            ap = (
-                float("nan")
-                if n_gt == 0
-                else (_ap_from_curve(tp_c, all_c - tp_c, n_gt) if len(p) else 0.0)
+            return _ap_row(
+                key, _ap_from_curve(tp_c, all_c - tp_c, n_gt) if len(p) else 0.0
             )
-            return pd.DataFrame({"label": [label], "iou_thr": [thr], "ap": [ap]})
 
-        aps = hist.groupBy("label", "iou_thr").applyInPandas(
-            hist_ap_kernel, schema=AP_SCHEMA
-        )
-
-    # classes with GT but zero detections must contribute AP=0 at every
-    # threshold (no detection row → no group above)
-    thr_df = local_frame(
-        dets.sparkSession, [(t,) for t in IOU_THRESHOLDS], "iou_thr double"
-    )
-    return (
-        gt_counts.crossJoin(F.broadcast(thr_df))
-        .join(aps, ["label", "iou_thr"], "left")
-        .withColumn("ap", F.coalesce("ap", F.lit(0.0)))
-        .select("label", "iou_thr", "ap")
-    )
+    return grouped.groupBy("label", "iou_thr").applyInPandas(kernel, schema=AP_SCHEMA)
 
 
 def per_class_ap(ap_table: DataFrame) -> DataFrame:
@@ -481,9 +471,8 @@ def _sorted_mean(col: Column) -> Column:
 
 def map_from_ap_table(aps: DataFrame) -> DataFrame:
     """(mAP, mAP@50, mAP@75) from an already-computed (label, iou_thr,
-    ap) table — lets evaluate() persist the tiny AP table once and
-    derive every downstream consumer (stats JSON, per-class report)
-    from the written rows instead of re-running the detection kernel.
+    ap) table — evaluate() runs it over the AP rows it collected, so
+    the stats row and the written table come from one computation.
     Bit-identical for any row order of ``aps`` (≤ labels × 10 rows)."""
     return aps.agg(
         _sorted_mean(F.col("ap")).alias("map"),

@@ -20,7 +20,7 @@ deterministic at any parallelism):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from typing import Any
 
 import pandas as pd
@@ -31,6 +31,8 @@ from docling_eval_spark.extraction.stage import (
     EXTRACTED_DOC_SCHEMA,
     _docs_frame,
     _extract_docs,
+    carried_schema,
+    with_carried,
 )
 
 
@@ -169,11 +171,15 @@ def perturb_stage(ds: DataFrame, p: float = 0.2) -> DataFrame:
     return ds.mapInPandas(kernel, schema=_pred_schema(ds.schema))
 
 
-def extract_perturb_stage(pages_df: DataFrame, p: float = 0.2) -> DataFrame:
+def extract_perturb_stage(
+    pages_df: DataFrame, p: float = 0.2, carry: Sequence[str] = ()
+) -> DataFrame:
     """``perturb_stage(extract_stage(pages_df), p)`` as ONE Arrow map:
     each batch is extracted and perturbed in the same Python call, the
     perturbation reading the kernel's document dicts directly, so each
-    task starts one Python runner and ships the pages JVM→Python once."""
+    task starts one Python runner and ships the pages JVM→Python once.
+    ``carry`` columns ride through unchanged, after the prediction
+    columns (as in ``extract_stage``)."""
     cell_fields = _cell_fields(EXTRACTED_DOC_SCHEMA)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -190,8 +196,9 @@ def extract_perturb_stage(pages_df: DataFrame, p: float = 0.2) -> DataFrame:
             )
             for name, col in preds.items():
                 out[name] = col
-            yield out
+            yield with_carried(out, pdf, carry)
 
-    return pages_df.select("url", "html").mapInPandas(
-        kernel, schema=_pred_schema(EXTRACTED_DOC_SCHEMA)
+    return pages_df.select("url", "html", *carry).mapInPandas(
+        kernel,
+        schema=carried_schema(_pred_schema(EXTRACTED_DOC_SCHEMA), pages_df, carry),
     )

@@ -19,7 +19,7 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -151,14 +151,33 @@ def _docs_frame(urls: pd.Series, docs: list[dict]) -> pd.DataFrame:
 
 
 def _extract_batches(
-    batches: Iterator[pd.DataFrame], charset_col: str | None = None
+    batches: Iterator[pd.DataFrame],
+    charset_col: str | None = None,
+    carry: Sequence[str] = (),
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        yield _docs_frame(pdf["url"], _extract_docs(pdf, charset_col))
+        yield with_carried(
+            _docs_frame(pdf["url"], _extract_docs(pdf, charset_col)), pdf, carry
+        )
+
+
+def with_carried(out: pd.DataFrame, pdf: pd.DataFrame, carry: Sequence[str]) -> pd.DataFrame:
+    """``out`` with the ``carry`` columns of its input batch ``pdf``
+    appended unchanged."""
+    for c in carry:
+        out[c] = pdf[c].to_numpy()
+    return out
+
+
+def carried_schema(
+    schema: T.StructType, pages_df: DataFrame, carry: Sequence[str]
+) -> T.StructType:
+    """``schema`` + the fields of ``pages_df``'s ``carry`` columns."""
+    return T.StructType(list(schema.fields) + [pages_df.schema[c] for c in carry])
 
 
 def extract_stage(
-    pages_df: DataFrame, charset_col: str | None = None
+    pages_df: DataFrame, charset_col: str | None = None, carry: Sequence[str] = ()
 ) -> DataFrame:
     """Full extraction over a pages DataFrame with (url, html) columns.
 
@@ -170,10 +189,15 @@ def extract_stage(
     (e.g. the WARC source's ``http_charset``) fed to the WHATWG sniff
     as the transport layer; without it, BOM/meta/UTF-8/windows-1252
     precedence still applies per row.
+
+    ``carry`` names columns of ``pages_df`` that ride through the map
+    unchanged, after the extraction columns: each output row keeps its
+    own page's values, with no join back to the pages.
     """
-    cols = ["url", "html"] + ([charset_col] if charset_col else [])
+    cols = ["url", "html"] + ([charset_col] if charset_col else []) + list(carry)
     return pages_df.select(*cols).mapInPandas(
-        lambda it: _extract_batches(it, charset_col), schema=EXTRACTED_DOC_SCHEMA
+        lambda it: _extract_batches(it, charset_col, carry),
+        schema=carried_schema(EXTRACTED_DOC_SCHEMA, pages_df, carry),
     )
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 import html as _html
 import json
 from pathlib import Path
-from typing import Any
+from typing import Any, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -291,6 +291,83 @@ _OVERLAY_CSS = (
 )
 
 
+class LayoutSample(NamedTuple):
+    """Documents the layout HTML reports draw, collected once: the
+    first ``max_docs`` rows with GT boxes, ordered by key."""
+
+    rows: list
+    gt_col: str
+    pred_col: str
+    pages_col: str
+    key_col: str
+    has_pages: bool
+
+    def pages(self):
+        """Per document: ``(row, gt boxes, pred boxes, [(page_no,
+        gt boxes on it, pred boxes on it, (width, height) or None)])``."""
+        for r in self.rows:
+            gt = [x.asDict() for x in (r[self.gt_col] or [])]
+            pred = [x.asDict() for x in (r[self.pred_col] or [])]
+            page_dims: dict[int, tuple[float, float]] = {}
+            if self.has_pages and r[self.pages_col]:
+                for p in r[self.pages_col]:
+                    page_dims[p["page_no"]] = (float(p["width"]), float(p["height"]))
+            pages = sorted({b.get("page_no") or 1 for b in gt + pred} | set(page_dims))
+            yield r, gt, pred, [
+                (
+                    pg,
+                    [b for b in gt if (b.get("page_no") or 1) == pg],
+                    [b for b in pred if (b.get("page_no") or 1) == pg],
+                    page_dims.get(pg),
+                )
+                for pg in pages
+            ]
+
+
+def layout_sample(
+    ds: DataFrame,
+    gt_col: str = "layout",
+    pred_col: str | None = None,
+    pages_col: str = "pages",
+    key_col: str = "url",
+    max_docs: int = 12,
+) -> LayoutSample:
+    """The bounded driver-side sample of ``ds`` that the layout HTML
+    reports draw (ONE collect of ≤ ``max_docs`` rows); ``pred_col``
+    defaults to pred_layout when ``ds`` has it, else ``gt_col``."""
+    pred_col = pred_col or ("pred_layout" if "pred_layout" in ds.columns else gt_col)
+    cols = [key_col, gt_col, pred_col]
+    has_pages = pages_col in ds.columns
+    if has_pages:
+        cols.append(pages_col)
+    rows = (
+        ds.filter(F.size(gt_col) > 0)
+        .select(*cols)
+        .orderBy(key_col)
+        .limit(max_docs)
+        .collect()
+    )
+    return LayoutSample(rows, gt_col, pred_col, pages_col, key_col, has_pages)
+
+
+def _page_extent(gt_p: list[dict], pr_p: list[dict], dims) -> tuple[float, float]:
+    """A page's (width, height): its recorded size, else the content
+    extents + margin."""
+    if dims is not None:
+        return dims
+    ext = gt_p + pr_p
+    return (
+        max((b["r"] for b in ext), default=1.0) + 10,
+        max((b["b"] for b in ext), default=1.0) + 10,
+    )
+
+
+def _write_html(out_path: str, doc: str) -> None:
+    p = Path(out_path)
+    p.parent.mkdir(parents=True, exist_ok=True)
+    p.write_text(doc)
+
+
 def save_overlay_html(
     ds: DataFrame,
     out_path: str,
@@ -307,39 +384,17 @@ def save_overlay_html(
     MiniPDF page geometry instead of rendered page images, since no
     raster codecs exist in this container). GT boxes: translucent blue;
     predictions: dashed red. Bounded driver-side sample."""
-    pred_col = pred_col or ("pred_layout" if "pred_layout" in ds.columns else gt_col)
-    cols = [key_col, gt_col, pred_col]
-    has_pages = pages_col in ds.columns
-    if has_pages:
-        cols.append(pages_col)
-    rows = (
-        ds.filter(F.size(gt_col) > 0)
-        .select(*cols)
-        .orderBy(key_col)
-        .limit(max_docs)
-        .collect()
-    )
+    sample = layout_sample(ds, gt_col, pred_col, pages_col, key_col, max_docs)
+    return render_overlay_html(sample, out_path, view_w)
+
+
+def render_overlay_html(sample: LayoutSample, out_path: str, view_w: float = 400.0) -> int:
+    """``save_overlay_html`` of an already-collected sample."""
     sections = []
-    for r in rows:
-        gt = [x.asDict() for x in (r[gt_col] or [])]
-        pred = [x.asDict() for x in (r[pred_col] or [])]
-        page_dims: dict[int, tuple[float, float]] = {}
-        if has_pages and r[pages_col]:
-            for p in r[pages_col]:
-                page_dims[p["page_no"]] = (float(p["width"]), float(p["height"]))
-        pages = sorted(
-            {b.get("page_no") or 1 for b in gt + pred} | set(page_dims)
-        )
+    for r, gt, pred, pages in sample.pages():
         panels = []
-        for pg in pages:
-            gt_p = [b for b in gt if (b.get("page_no") or 1) == pg]
-            pr_p = [b for b in pred if (b.get("page_no") or 1) == pg]
-            if pg in page_dims:
-                pw, ph = page_dims[pg]
-            else:  # fall back to content extents + margin
-                ext = gt_p + pr_p
-                pw = max((b["r"] for b in ext), default=1.0) + 10
-                ph = max((b["b"] for b in ext), default=1.0) + 10
+        for _pg, gt_p, pr_p, dims in pages:
+            pw, ph = _page_extent(gt_p, pr_p, dims)
             s = view_w / max(pw, 1e-9)
             shapes = []
             for b in gt_p:
@@ -358,20 +413,18 @@ def save_overlay_html(
                 f'<svg width="{view_w:.0f}" height="{ph*s:.0f}">' + "".join(shapes) + "</svg>"
             )
         sections.append(
-            f"<h3>{_html.escape(str(r[key_col]))}</h3>"
+            f"<h3>{_html.escape(str(r[sample.key_col]))}</h3>"
             f"<p>{len(gt)} GT boxes (blue), {len(pred)} predicted (dashed red)</p>"
             + "".join(panels)
         )
-    doc = (
+    _write_html(
+        out_path,
         "<html><head><meta charset='utf-8'>" + _OVERLAY_CSS + "</head><body>"
         "<h2>Layout overlay: ground truth vs prediction</h2>"
         + "".join(sections)
-        + "</body></html>"
+        + "</body></html>",
     )
-    p = Path(out_path)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(doc)
-    return len(rows)
+    return len(sample.rows)
 
 
 def render_page_image(
@@ -441,39 +494,19 @@ def save_inspection_html(
     (`visualisation/visualisations.py:369-399`; base64 embedding as in
     `benchmarks/utils.py:97-102`). Bounded driver-side sample — the
     dataset scan stays distributed; only ≤max_docs rows are collected."""
+    sample = layout_sample(ds, gt_col, pred_col, pages_col, key_col, max_docs)
+    return render_inspection_html(sample, out_path, view_w)
+
+
+def render_inspection_html(sample: LayoutSample, out_path: str, view_w: int = 400) -> int:
+    """``save_inspection_html`` of an already-collected sample."""
     import base64
 
-    pred_col = pred_col or ("pred_layout" if "pred_layout" in ds.columns else gt_col)
-    cols = [key_col, gt_col, pred_col]
-    has_pages = pages_col in ds.columns
-    if has_pages:
-        cols.append(pages_col)
-    rows = (
-        ds.filter(F.size(gt_col) > 0)
-        .select(*cols)
-        .orderBy(key_col)
-        .limit(max_docs)
-        .collect()
-    )
     sections = []
-    for r in rows:
-        gt = [x.asDict() for x in (r[gt_col] or [])]
-        pred = [x.asDict() for x in (r[pred_col] or [])]
-        page_dims: dict[int, tuple[float, float]] = {}
-        if has_pages and r[pages_col]:
-            for p in r[pages_col]:
-                page_dims[p["page_no"]] = (float(p["width"]), float(p["height"]))
-        pages = sorted({b.get("page_no") or 1 for b in gt + pred} | set(page_dims))
+    for r, gt, pred, pages in sample.pages():
         imgs = []
-        for pg in pages:
-            gt_p = [b for b in gt if (b.get("page_no") or 1) == pg]
-            pr_p = [b for b in pred if (b.get("page_no") or 1) == pg]
-            if pg in page_dims:
-                pw, ph = page_dims[pg]
-            else:
-                ext = gt_p + pr_p
-                pw = max((b["r"] for b in ext), default=1.0) + 10
-                ph = max((b["b"] for b in ext), default=1.0) + 10
+        for pg, gt_p, pr_p, dims in pages:
+            pw, ph = _page_extent(gt_p, pr_p, dims)
             png = render_page_image(gt_p, pr_p, pw, ph, view_w=view_w)
             b64 = base64.b64encode(png).decode("ascii")
             imgs.append(
@@ -482,22 +515,31 @@ def save_inspection_html(
                 f"<figcaption>page {pg}</figcaption></figure>"
             )
         sections.append(
-            f"<h3>{_html.escape(str(r[key_col]))}</h3>"
+            f"<h3>{_html.escape(str(r[sample.key_col]))}</h3>"
             f"<p>{len(gt)} GT boxes (blue fill), {len(pred)} predicted "
             "(red border)</p>" + "".join(imgs)
         )
-    doc = (
+    _write_html(
+        out_path,
         "<html><head><meta charset='utf-8'><style>"
         "body{font-family:sans-serif}figure{display:inline-block;margin:4px}"
         "img{border:1px solid #999}</style></head><body>"
         "<h2>Inspection: rendered pages (ground truth vs prediction)</h2>"
         + "".join(sections)
-        + "</body></html>"
+        + "</body></html>",
     )
-    p = Path(out_path)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(doc)
-    return len(rows)
+    return len(sample.rows)
+
+
+def save_layout_html(ds: DataFrame, out_dir: str) -> None:
+    """``layout_overlay.html`` (12 documents) and ``inspection.html``
+    (the first 8 of them) in ``out_dir``, from ONE collect of the
+    sample — the same files the two ``save_*`` calls write."""
+    sample = layout_sample(ds, max_docs=12)
+    render_overlay_html(sample, f"{out_dir}/layout_overlay.html")
+    render_inspection_html(
+        sample._replace(rows=sample.rows[:8]), f"{out_dir}/inspection.html"
+    )
 
 
 def delta_row_col_report(teds_df: DataFrame) -> DataFrame:

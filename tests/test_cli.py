@@ -98,7 +98,7 @@ def test_layout_visualize_reads_persisted_ap_table(spark, tmp_path, monkeypatch)
         raise AssertionError("detection kernel re-ran in visualize phase")
 
     monkeypatch.setattr(L, "corpus_ap_table", boom)
-    monkeypatch.setattr(L, "corpus_detections_stage", boom)
+    monkeypatch.setattr(L, "layout_match_stage", boom)
     pipelines.visualize(spark, dataset, eval_dir, "layout", str(reports))
     got = (reports / "per_class_ap.md").read_text()
     per_class_ap_report(

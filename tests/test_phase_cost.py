@@ -1,7 +1,7 @@
 """Each phase call pays its fixed cost once: one file per dataset
-shard, one pass per ``evaluate`` call, ``visualize`` rendering from the
-stats ``evaluate`` wrote, and a corpus mAP that does not depend on the
-order of the AP rows."""
+shard, one pass per ``evaluate`` call that builds only the plans it
+writes, ``visualize`` rendering from the stats ``evaluate`` wrote, and
+a corpus mAP that does not depend on the order of the AP rows."""
 
 from __future__ import annotations
 
@@ -13,13 +13,25 @@ from pathlib import Path
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import StructField, StructType
 
 from docling_eval_spark import pipelines
-from docling_eval_spark.datagen.pages import write_pages_parquet
-from docling_eval_spark.evaluators.layout import AP_SCHEMA, map_from_ap_table
+from docling_eval_spark.datagen.pages import PAGES_SCHEMA, write_pages_parquet
+from docling_eval_spark.evaluators.layout import (
+    AP_SCHEMA,
+    IOU_THRESHOLDS,
+    corpus_ap_table,
+    map_from_ap_table,
+)
 from docling_eval_spark.evaluators.stats import collect_stats
-from docling_eval_spark.reporting.reports import render_metric_report
+from docling_eval_spark.reporting.reports import (
+    render_metric_report,
+    save_inspection_html,
+    save_layout_html,
+    save_overlay_html,
+)
 from docling_eval_spark.session import local_frame
+from docling_eval_spark.sources.pages_source import read_pages
 
 NON_LAYOUT = ["markdown_text", "table_structure", "reading_order", "bbox_text"]
 
@@ -79,15 +91,66 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_phase_calls_run_few_jobs(spark, dataset, tmp_path):
-    """No job re-derives what the call already had: evaluate reads the
-    dataset once, with its recorded schema, and never reads its own
-    output back; visualize reads the written stats with their schema."""
+def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
+    """No job re-derives what the call already had: create scans the
+    pages once, with no join back to them; evaluate reads the dataset
+    once, with its recorded schema, and never reads its own output
+    back (layout: one AP aggregation, collected once); visualize reads
+    the written stats with their schema and collects the layout HTML
+    sample once."""
+    ds2 = str(tmp_path / "ds2")
+    assert _jobs(spark, lambda: pipelines.create_dataset(spark, pages100, ds2, perturb=0.2)) <= 2
     ev = str(tmp_path / "ev")
     pipelines.evaluate(spark, dataset, "markdown_text", ev)
     assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 4
+    assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "layout", ev)) <= 6
     rep = str(tmp_path / "rep")
     assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 2
+    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "layout", rep)) <= 4
+
+
+def test_evaluate_builds_no_exact_rollup(spark, dataset, tmp_path, monkeypatch):
+    """evaluate writes the count-then-fold stats; the lazy exact
+    rollup (``compute_stats``) of the ``evaluate_<modality>`` helpers
+    is never built."""
+
+    def boom(*a, **k):
+        raise AssertionError("evaluate built a compute_stats rollup")
+
+    monkeypatch.setattr(pipelines, "compute_stats", boom)
+    for modality in NON_LAYOUT:
+        pipelines.evaluate(spark, dataset, modality, str(tmp_path / "ev"))
+        assert (tmp_path / "ev" / f"evaluation_{modality}_stats").is_dir()
+
+
+def _pages_with_urls(spark, src: str, dst: str, urls: dict) -> str:
+    """The pages at ``src`` with the url of page i replaced by
+    ``urls[i]`` (None → NULL), written to ``dst``."""
+    rows = sorted(read_pages(spark, src).collect(), key=lambda r: r["url"])
+    out = [r.asDict() | {"url": urls.get(i, r["url"])} for i, r in enumerate(rows)]
+    schema = StructType([StructField(f.name, f.dataType) for f in PAGES_SCHEMA])
+    spark.createDataFrame(out, schema).write.mode("overwrite").parquet(dst)
+    return dst
+
+
+@pytest.mark.parametrize("perturb", [0.2, None])
+def test_create_writes_one_row_per_page(spark, tmp_path, perturb):
+    """Each page gives one dataset row with its own GT, a repeated url
+    included (a join back to the pages on url gave 2 × 2 rows for a
+    url seen twice); pages with a NULL url are dropped."""
+    base = str(tmp_path / "pages")
+    write_pages_parquet(spark, base, 11, seed=4, partitions=2)
+    urls = sorted(r["url"] for r in read_pages(spark, base).select("url").collect())
+    dup = _pages_with_urls(spark, base, str(tmp_path / "dup"), {1: urls[0]})
+    n = pipelines.create_dataset(spark, dup, str(tmp_path / "ds"), perturb=perturb)
+    rows = pipelines.read_dataset(spark, str(tmp_path / "ds")).collect()
+    assert n == len(rows) == 11
+    want = sorted((r["url"], r["text"], r["warc_ts"]) for r in read_pages(spark, dup).collect())
+    assert sorted((r["url"], r["gt_text"], r["warc_ts"]) for r in rows) == want
+
+    nulls = _pages_with_urls(spark, base, str(tmp_path / "null"), {2: None, 5: None})
+    n = pipelines.create_dataset(spark, nulls, str(tmp_path / "ds_null"), perturb=perturb)
+    assert n == 9
 
 
 @pytest.mark.parametrize("perturb", [0.2, None])
@@ -142,3 +205,74 @@ def test_corpus_map_is_row_order_independent(spark):
     assert maps(rows) == maps(rows[::-1])
     empty = map_from_ap_table(local_frame(spark, [], AP_SCHEMA)).collect()[0]
     assert list(empty) == [None, None, None]
+
+
+_BOX = "label string, l double, t double, r double, b double"
+_LAYOUT_DF = f"url string, gt_layout array<struct<{_BOX}>>, pred_layout array<struct<{_BOX}, score double>>"
+
+
+def _ap_tables(spark, images):
+    df = spark.createDataFrame(images, _LAYOUT_DF)
+    sketch, exact = (
+        {(r["label"], r["iou_thr"]): r["ap"] for r in corpus_ap_table(df, exact=e).collect()}
+        for e in (False, True)
+    )
+    return sketch, exact
+
+
+def test_ap_table_matches_exact_oracle(spark):
+    """The one-aggregation AP table equals the exact full-sort kernel:
+    a class with GT but no detection gets AP 0.0 at every threshold, a
+    class with detections but no GT gets no row, and detections with
+    tied scores form one PR point."""
+    text = [("text", 0.0, 0.0, 10.0, 10.0), ("text", 20.0, 0.0, 30.0, 10.0)]
+    images = [
+        (
+            "a",
+            text + [("table", 0.0, 20.0, 40.0, 40.0)],
+            [
+                ("text", 0.0, 0.0, 10.0, 10.0, 0.9),  # exact hit
+                ("text", 21.0, 0.0, 31.0, 10.0, 0.9),  # IoU 0.82, tied score
+                ("text", 50.0, 50.0, 60.0, 60.0, 0.7),  # miss
+                ("picture", 0.0, 20.0, 40.0, 40.0, 0.8),  # no GT picture
+            ],
+        ),
+        ("b", text, [("text", 20.0, 0.0, 30.0, 10.0, 0.9), ("text", 0.0, 1.0, 10.0, 11.0, 0.6)]),
+    ]
+    sketch, exact = _ap_tables(spark, images)
+    assert sketch == exact
+    assert set(sketch) == {(c, t) for c in ("text", "table") for t in IOU_THRESHOLDS}
+    assert all(sketch[("table", t)] == 0.0 for t in IOU_THRESHOLDS)
+    assert 0.0 < sketch[("text", 0.5)] < 1.0
+    assert sketch[("text", 0.95)] < sketch[("text", 0.5)]
+
+    assert _ap_tables(spark, []) == ({}, {})
+
+
+def test_evaluate_layout_without_boxes_writes_empty_table(spark, tmp_path):
+    """A dataset without layout boxes (HTML pages only) gives an empty
+    AP table and a stats row with no value: ``{}``."""
+    pages, ds, ev = (str(tmp_path / n) for n in ("pages", "ds", "ev"))
+    write_pages_parquet(spark, pages, 3, seed=1, partitions=1)
+    pipelines.create_dataset(spark, pages, ds, perturb=0.2)
+    pipelines.evaluate(spark, ds, "layout", ev)
+    assert spark.read.parquet(f"{ev}/evaluation_layout_ap_table").count() == 0
+    stats = [
+        line
+        for f in sorted(Path(ev, "evaluation_layout_stats").glob("part-*"))
+        for line in f.read_text().splitlines()
+    ]
+    assert stats == ["{}"]
+
+
+def test_layout_html_from_one_collect(spark, dataset, tmp_path):
+    """save_layout_html writes the files the two save_* calls write,
+    byte for byte, from one job."""
+    ds = pipelines.read_dataset(spark, dataset)
+    one, two = tmp_path / "one", tmp_path / "two"
+    assert _jobs(spark, lambda: save_layout_html(ds, str(one))) == 1
+    save_overlay_html(ds, str(two / "layout_overlay.html"))
+    save_inspection_html(ds, str(two / "inspection.html"))
+    for name in ("layout_overlay.html", "inspection.html"):
+        assert (one / name).read_bytes() == (two / name).read_bytes(), name
+    assert (one / "inspection.html").read_text().count("<h3>") == 8
