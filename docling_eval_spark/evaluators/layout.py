@@ -38,6 +38,7 @@ behind ``exact=True`` as the small-data oracle.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -459,23 +460,48 @@ def corpus_map(
     return map_from_ap_table(aps)
 
 
-def _sorted_mean(col: Column) -> Column:
-    """Mean of the non-null values of ``col``, summed in ascending
-    order: the float sum, and so the mean, does not depend on the order
-    in which the rows arrive (partitioning, shuffle). NULL when there
-    is no value."""
-    vals = F.array_sort(F.collect_list(col))
-    total = F.aggregate(vals, F.lit(0.0), lambda acc, v: acc + v)
-    return F.try_divide(total, F.size(vals))
+def _sorted_mean(sql: str) -> Column:
+    """Mean of the non-null values of the SQL expression ``sql``,
+    summed in ascending order: the float sum, and so the mean, does not
+    depend on the order in which the rows arrive (partitioning,
+    shuffle). NULL when there is no value. Built from SQL text: a
+    Python lambda in ``F.aggregate`` costs py4j lookups of its lambda
+    variables each time the column is built."""
+    vals = f"array_sort(collect_list({sql}))"
+    return F.expr(f"try_divide(aggregate({vals}, 0.0D, (acc, v) -> acc + v), size({vals}))")
+
+
+# the corpus mAP stats row, as map_from_ap_table and map_of_ap_rows give it
+MAP_SCHEMA = "map double, map_50 double, map_75 double"
 
 
 def map_from_ap_table(aps: DataFrame) -> DataFrame:
     """(mAP, mAP@50, mAP@75) from an already-computed (label, iou_thr,
-    ap) table — evaluate() runs it over the AP rows it collected, so
-    the stats row and the written table come from one computation.
-    Bit-identical for any row order of ``aps`` (≤ labels × 10 rows)."""
+    ap) table. Bit-identical for any row order of ``aps`` (≤ labels ×
+    10 rows)."""
     return aps.agg(
-        _sorted_mean(F.col("ap")).alias("map"),
-        _sorted_mean(F.when(F.col("iou_thr") == 0.5, F.col("ap"))).alias("map_50"),
-        _sorted_mean(F.when(F.col("iou_thr") == 0.75, F.col("ap"))).alias("map_75"),
+        _sorted_mean("ap").alias("map"),
+        _sorted_mean("CASE WHEN iou_thr = 0.5D THEN ap END").alias("map_50"),
+        _sorted_mean("CASE WHEN iou_thr = 0.75D THEN ap END").alias("map_75"),
+    )
+
+
+def map_of_ap_rows(rows) -> tuple[float | None, float | None, float | None]:
+    """``map_from_ap_table``'s row, bit for bit, from collected AP rows
+    (``label, iou_thr, ap``): evaluate() averages the rows it already
+    holds instead of running an aggregation job. Each mean adds the
+    non-null values to 0.0 one at a time in Spark's ascending order
+    (NaN last) and is None when there is no value."""
+
+    def sorted_mean(vals):
+        vals = sorted((v for v in vals if v is not None), key=lambda v: (math.isnan(v), v))
+        total = 0.0
+        for v in vals:
+            total += v
+        return total / len(vals) if vals else None
+
+    return (
+        sorted_mean(r["ap"] for r in rows),
+        sorted_mean(r["ap"] for r in rows if r["iou_thr"] == 0.5),
+        sorted_mean(r["ap"] for r in rows if r["iou_thr"] == 0.75),
     )

@@ -34,36 +34,38 @@ def ard_norm_py(pred_order: list[int], areas: list[float] | None = None) -> tupl
     return 1 - ard / (n * n), 1 - w_ard / (n * n)
 
 
-def ard_norm_col(pred_order: Column | str) -> Column:
-    po = F.col(pred_order) if isinstance(pred_order, str) else pred_order
-    n = F.size(po)
-    ard = F.aggregate(
-        F.transform(po, lambda x, i: F.abs(x.cast("double") - i)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(n == 0, F.lit(0.0)).otherwise(1.0 - ard / (n * n).cast("double"))
+# The columns are built from SQL text: a Python lambda in F.transform /
+# F.aggregate costs py4j lookups of its lambda variables (~12 ms a
+# column) each time the column is built, F.expr ~0.4 ms.
 
 
-def weighted_ard_norm_col(pred_order: Column | str, areas: Column | str) -> Column:
-    po = F.col(pred_order) if isinstance(pred_order, str) else pred_order
-    ar = F.col(areas) if isinstance(areas, str) else areas
-    n = F.size(po)
-    total = F.aggregate(ar, F.lit(0.0), lambda acc, x: acc + x)
-    w_ard = F.aggregate(
-        F.zip_with(po, ar, lambda p, a: F.struct(p.alias("p"), a.alias("a"))),
-        F.struct(F.lit(0.0).alias("acc"), F.lit(0).alias("i")),
-        lambda st, x: F.struct(
-            (
-                st["acc"]
-                + F.abs(x["p"].cast("double") - st["i"]) * (x["a"] / total)
-            ).alias("acc"),
-            (st["i"] + 1).alias("i"),
-        ),
-        lambda st: st["acc"],
+def _norm(po: str, ard: str) -> Column:
+    """1 − ard / n² over the n items of array ``po``, 0.0 for none."""
+    return F.expr(
+        f"CASE WHEN size({po}) = 0 THEN 0.0D"
+        f" ELSE 1.0D - ({ard}) / CAST(size({po}) * size({po}) AS DOUBLE) END"
     )
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        1.0 - w_ard / (n * n).cast("double")
+
+
+def ard_norm_col(pred_order: str) -> Column:
+    po = f"`{pred_order}`"
+    return _norm(
+        po,
+        f"aggregate(transform({po}, (x, i) -> abs(CAST(x AS DOUBLE) - i)),"
+        " 0.0D, (acc, x) -> acc + x)",
+    )
+
+
+def weighted_ard_norm_col(pred_order: str, areas: str) -> Column:
+    po, ar = f"`{pred_order}`", f"`{areas}`"
+    total = f"aggregate({ar}, 0.0D, (acc, x) -> acc + x)"
+    return _norm(
+        po,
+        f"aggregate(zip_with({po}, {ar}, (p, a) -> struct(p AS p, a AS a)),"
+        " struct(0.0D AS acc, 0 AS i),"
+        f" (st, x) -> struct(st.acc + abs(CAST(x.p AS DOUBLE) - st.i) * (x.a / {total}) AS acc,"
+        " st.i + 1 AS i),"
+        " st -> st.acc)",
     )
 
 

@@ -6,6 +6,8 @@ a corpus mAP that does not depend on the order of the AP rows."""
 from __future__ import annotations
 
 import json
+import math
+import random
 import struct
 import uuid
 from pathlib import Path
@@ -15,15 +17,17 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.types import StructField, StructType
 
-from docling_eval_spark import pipelines
+from docling_eval_spark import hadoop_fs, pipelines
 from docling_eval_spark.datagen.pages import PAGES_SCHEMA, write_pages_parquet
 from docling_eval_spark.evaluators.layout import (
     AP_SCHEMA,
     IOU_THRESHOLDS,
+    MAP_SCHEMA,
     corpus_ap_table,
     map_from_ap_table,
+    map_of_ap_rows,
 )
-from docling_eval_spark.evaluators.stats import collect_stats
+from docling_eval_spark.evaluators.stats import BINS, STATS_SCHEMA, collect_stats, fold_counts
 from docling_eval_spark.reporting.reports import (
     render_metric_report,
     save_inspection_html,
@@ -50,10 +54,9 @@ def dataset(spark, pages100, tmp_path_factory):
     return path
 
 
-def _rows_per_file(path) -> dict[Path, int]:
+def _rows_per_file(path, pattern: str = "bucket=*/*.parquet") -> dict[Path, int]:
     return {
-        f: pq.ParquetFile(f).metadata.num_rows
-        for f in Path(path).glob("bucket=*/*.parquet")
+        f: pq.ParquetFile(f).metadata.num_rows for f in Path(path).glob(pattern)
     }
 
 
@@ -104,9 +107,89 @@ def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
     pipelines.evaluate(spark, dataset, "markdown_text", ev)
     assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 4
     assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "layout", ev)) <= 6
+    pipelines.evaluate(spark, dataset, "table_structure", ev)
     rep = str(tmp_path / "rep")
-    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 2
+    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 1
+    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "table_structure", rep)) <= 2
     assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "layout", rep)) <= 4
+
+
+def test_evaluate_writes_row_sized_files(spark, dataset, tmp_path, monkeypatch):
+    """The per-row table is ceil(rows / ROWS_PER_FILE) parquet files,
+    not one per input partition; the stats directory is one part file
+    and ``_SUCCESS``."""
+    one, capped = tmp_path / "one", tmp_path / "capped"
+    pipelines.evaluate(spark, dataset, "markdown_text", str(one))
+    files = _rows_per_file(one / "evaluation_markdown_text", "*.parquet")
+    assert list(files.values()) == [100]
+    stats = sorted(
+        p.name[:10] for p in (one / "evaluation_markdown_text_stats").iterdir()
+        if not p.name.startswith(".")
+    )
+    assert stats == ["_SUCCESS", "part-00000"]
+
+    monkeypatch.setattr(pipelines, "ROWS_PER_FILE", 40)
+    pipelines.evaluate(spark, dataset, "markdown_text", str(capped))
+    files = _rows_per_file(capped / "evaluation_markdown_text", "*.parquet")
+    assert len(files) == 3 and sum(files.values()) == 100
+    assert _row_set(capped / "evaluation_markdown_text") == _row_set(
+        one / "evaluation_markdown_text"
+    )
+
+
+_STATS_DDL = f"metric string, {STATS_SCHEMA}"
+_EDGE_STATS = [
+    ("empty", *fold_counts([]).values()),
+    ("nan_inf", 1, math.nan, math.inf, -math.inf, [1] * 20, BINS),
+    ("tiny_huge", 2, 1e-05, 1e20, -0.0, [], BINS),
+    ("null", 3, 0.5, None, 0.1, [0] * 20, None),
+]
+
+
+def _lines(path) -> bytes:
+    (part,) = Path(path).glob("part-*")
+    return part.read_bytes()
+
+
+def test_driver_json_rows_equal_spark_json(spark, tmp_path):
+    """Stats rows written and read on the driver, with no job, are the
+    bytes ``DataFrame.write.json`` writes and the rows
+    ``spark.read.json`` reads back: NaN, ±Infinity, 1e-05, 1e20, -0.0,
+    a NULL field and an empty array included."""
+    rows = local_frame(spark, _EDGE_STATS, _STATS_DDL)
+    spark_dir, driver_dir = str(tmp_path / "spark"), str(tmp_path / "driver")
+    rows.coalesce(1).write.mode("overwrite").json(spark_dir)
+    assert _jobs(spark, lambda: pipelines.write_json_rows(rows, driver_dir)) == 0
+    assert _lines(driver_dir) == _lines(spark_dir)
+    assert (Path(driver_dir) / "_SUCCESS").read_bytes() == b""
+
+    read = []
+    assert _jobs(spark, lambda: read.append(pipelines.read_json_rows(spark, driver_dir, _STATS_DDL))) == 0
+    want = spark.read.schema(_STATS_DDL).json(spark_dir).collect()
+    assert list(map(repr, read[0])) == list(map(repr, want))
+
+
+def test_visualize_reads_stats_without_a_job(spark, dataset, tmp_path):
+    ev = str(tmp_path / "ev")
+    pipelines.evaluate(spark, dataset, "reading_order", ev)
+    stats = []
+    assert _jobs(spark, lambda: stats.append(pipelines._written_stats(spark, ev, "reading_order"))) == 0
+    assert set(stats[0]) == {"ard_norm", "w_ard_norm"}
+
+
+def test_hadoop_fs_on_file_uri(spark, tmp_path):
+    root = f"file://{tmp_path}/h"
+    assert hadoop_fs.read_text(spark, f"{root}/a.txt") is None
+    assert hadoop_fs.list_names(spark, root) is None
+    hadoop_fs.write_text(spark, f"{root}/a.txt", "é\n")
+    assert hadoop_fs.read_text(spark, f"{root}/a.txt") == "é\n"
+    hadoop_fs.write_json_lines(spark, f"{root}/j", ['{"a":1}', '{"a":2}'])
+    assert hadoop_fs.read_json_lines(spark, f"{root}/j") == ['{"a":1}', '{"a":2}']
+    assert [n for n in hadoop_fs.list_names(spark, f"{root}/j") if not n.startswith(".")][0] == "_SUCCESS"
+    hadoop_fs.delete(spark, root)
+    assert not (tmp_path / "h").exists()
+    with pytest.raises(FileNotFoundError):
+        hadoop_fs.read_json_lines(spark, f"{root}/j")
 
 
 def test_evaluate_builds_no_exact_rollup(spark, dataset, tmp_path, monkeypatch):
@@ -205,6 +288,24 @@ def test_corpus_map_is_row_order_independent(spark):
     assert maps(rows) == maps(rows[::-1])
     empty = map_from_ap_table(local_frame(spark, [], AP_SCHEMA)).collect()[0]
     assert list(empty) == [None, None, None]
+    assert MAP_SCHEMA.split(", ") == [f"{k} double" for k in empty.asDict()]
+
+
+@pytest.mark.parametrize("n", [0, 1, 3, 37])
+def test_map_of_ap_rows_equals_map_from_ap_table(spark, n):
+    """evaluate's driver-side mAP row is map_from_ap_table's, bit for
+    bit, NULL and NaN APs included."""
+    rng = random.Random(n)
+    rows = [
+        (f"c{i % 5}", IOU_THRESHOLDS[i % 10], rng.choice([rng.random(), 0.0, -0.0, 0.1, 0.2, None]))
+        for i in range(n)
+    ] + ([("nan", 0.75, math.nan)] if n == 3 else [])
+    frame = local_frame(spark, rows, AP_SCHEMA).repartition(3)
+    want = map_from_ap_table(frame).collect()[0]
+    got = map_of_ap_rows([dict(zip(("label", "iou_thr", "ap"), r)) for r in rows])
+    assert [None if v is None else struct.pack("<d", v) for v in got] == [
+        None if v is None else struct.pack("<d", v) for v in want
+    ]
 
 
 _BOX = "label string, l double, t double, r double, b double"
