@@ -24,6 +24,8 @@ Two paths produce the same row shape:
   within [0, 1] whatever the corpus size. The driver collects that
   table and folds each column into the stats row (:func:`fold_counts`);
   a column with no values gets the sentinel row.
+  :func:`collect_counted_stats` also counts the rows in that same
+  aggregation.
 
 The cumulative to_table (reference `stats.py:28-50`) is a window
 cum-sum over the 20-row bins frame.
@@ -113,7 +115,24 @@ def collect_stats(df: DataFrame, value_cols: list[str]) -> dict[str, dict]:
     sentinel row. The rows equal :func:`compute_stats` over the rounded
     values: total, median and hist exactly, mean and std to float
     summation order."""
-    long = stack_columns(df, value_cols, "__col")
+    return _collect_stats(df, value_cols, False)[0]
+
+
+def collect_counted_stats(
+    df: DataFrame, value_cols: list[str]
+) -> tuple[dict[str, dict], int]:
+    """:func:`collect_stats`, plus the row count of ``df``, from the
+    SAME aggregation: each row stacks one more (``__rows``, 0.0) pair,
+    and that group's count is the row count. A stats row's ``total``
+    cannot stand in for it: it counts non-null values only."""
+    return _collect_stats(df, value_cols, True)
+
+
+def _collect_stats(df: DataFrame, value_cols: list[str], count_rows: bool):
+    stacked = [f"'{c}', cast(`{c}` as double)" for c in value_cols]
+    if count_rows:
+        stacked.append("'__rows', 0.0D")
+    long = df.selectExpr(f"stack({len(stacked)}, {', '.join(stacked)}) as (__col, value)")
     value = F.round("value", 3)
     counted = (
         long.where(value.isNotNull())
@@ -122,9 +141,13 @@ def collect_stats(df: DataFrame, value_cols: list[str]) -> dict[str, dict]:
         .collect()
     )
     pairs: dict[str, list] = {c: [] for c in value_cols}
+    rows = 0
     for col, v, n in counted:
-        pairs[col].append((v, n))
-    return {c: fold_counts(p) for c, p in pairs.items()}
+        if col == "__rows":
+            rows = n
+        else:
+            pairs[col].append((v, n))
+    return {c: fold_counts(p) for c, p in pairs.items()}, rows
 
 
 def fold_counts(pairs: list[tuple[float, int]]) -> dict:

@@ -19,14 +19,10 @@ import uuid
 from pyspark.sql import SparkSession
 
 
-def _jclass(spark: SparkSession, name: str):
-    return getattr(spark._jvm, name)
-
-
 def _fs_path(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` of ``path`` through the session's Hadoop
     configuration."""
-    p = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
+    p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
@@ -51,7 +47,7 @@ def read_text(spark: SparkSession, path: str) -> str | None:
         return None
     stream = fs.open(p)
     try:
-        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
+        return getattr(spark._jvm, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -65,12 +61,6 @@ def list_names(spark: SparkSession, path: str) -> list[str] | None:
     return sorted(st.getPath().getName() for st in fs.listStatus(p))
 
 
-def delete(spark: SparkSession, path: str) -> None:
-    """Delete ``path`` and everything under it; no-op when missing."""
-    fs, p = _fs_path(spark, path)
-    fs.delete(p, True)
-
-
 def write_json_lines(spark: SparkSession, path: str, lines: list[str]) -> None:
     """The directory ``df.coalesce(1).write.mode("overwrite").json(path)``
     leaves, for the JSON ``lines`` of ``df``'s rows: ``path`` is
@@ -79,7 +69,7 @@ def write_json_lines(spark: SparkSession, path: str, lines: list[str]) -> None:
     writer task leaves it) and an empty ``_SUCCESS`` marker."""
     fs, p = _fs_path(spark, path)
     fs.delete(p, True)
-    Path = _jclass(spark, "org.apache.hadoop.fs.Path")
+    Path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     _create(fs, Path(p, f"part-00000-{uuid.uuid4()}-c000.json"),
             "".join(f"{line}\n" for line in lines).encode())
     _create(fs, Path(p, "_SUCCESS"), b"")

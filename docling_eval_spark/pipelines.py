@@ -41,6 +41,7 @@ from docling_eval_spark.evaluators.layout import (
 from docling_eval_spark.evaluators.reading_order import ard_stage
 from docling_eval_spark.evaluators.stats import (
     STATS_SCHEMA,
+    collect_counted_stats,
     collect_stats,
     compute_stats,
     stack_columns,
@@ -150,15 +151,6 @@ def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     reads the output back."""
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
-def observed_rows(obs: Observation) -> int:
-    """The row count ``counted`` observed. An action whose plan reads
-    the observed frame from a cache that AQE finds empty prunes the
-    observed node: it then reports an empty metrics row (which
-    ``obs.get`` fails on), meaning 0 rows."""
-    row = obs._jo.getRow()
-    return row.getLong(0) if row.size() else 0
 
 
 # Spark and pyarrow skip ``_``-prefixed files when they read a dataset
@@ -386,31 +378,47 @@ def rollup_bbox_text(per_match: DataFrame) -> DataFrame:
     return _multi_metric_rollup(per_match, "bbox_text")
 
 
-def rollup_frame(spark: SparkSession, per_row: DataFrame, modality: str) -> DataFrame:
+def rollup_frame(
+    spark: SparkSession, per_row: DataFrame, modality: str
+) -> tuple[DataFrame, int]:
     """Stats rows of a non-layout modality's per-row table by
     count-then-fold: one bounded counting pass, folded on the driver,
     so the rollup never buffers a metric's values in one task whatever
-    the corpus size. The folded rows enter Spark as a local frame."""
+    the corpus size. The folded rows enter Spark as a local frame,
+    returned with the row count of ``per_row`` that the same pass
+    counts."""
     to_cols, key, metrics = _ROLLUPS[modality]
-    stats = collect_stats(to_cols(per_row), metrics)
-    return local_frame(
+    stats, rows = collect_counted_stats(to_cols(per_row), metrics)
+    frame = local_frame(
         spark,
         [(m, *row.values()) for m, row in stats.items()],
         f"{key} string, {STATS_SCHEMA}",
     )
+    return frame, rows
 
 
-# rows per file of a written per-row table: one file at benchmark
-# sizes, files of tens of MB at corpus scale
-ROWS_PER_FILE = 100_000
+# rows per file of each written per-row table, from the parquet bytes
+# per row measured on a 2,000-page seeded corpus (markdown_text 534,
+# table_structure 11, layout 51, reading_order 15, bbox_text 5): files
+# of ~110-130 MB, one file at benchmark sizes. A markdown_text row
+# holds two page texts (~710 B each there), so its files grow with the
+# corpus' page length: ~27 MB there, ~190 MB at 5 KB pages.
+ROWS_PER_FILE = {
+    "markdown_text": 50_000,
+    "table_structure": 10_000_000,
+    "layout": 2_500_000,
+    "reading_order": 8_000_000,
+    "bbox_text": 25_000_000,
+}
 
 
-def _write_rows(per_row: DataFrame, path: str, rows: int) -> None:
+def _write_rows(per_row: DataFrame, path: str, rows: int, modality: str) -> None:
     """Write the persisted per-row frame ``per_row`` of ``rows`` rows
-    as ``ceil(rows / ROWS_PER_FILE)`` parquet files, not one per input
+    as ``ceil(rows / ROWS_PER_FILE[modality])`` parquet files (at least
+    one; at most one per persisted partition), not one per input
     partition: ``coalesce`` merges the persisted partitions without a
     shuffle, so the write costs one task per file."""
-    files = max(1, -(-rows // ROWS_PER_FILE))
+    files = max(1, -(-rows // ROWS_PER_FILE[modality]))
     per_row.coalesce(files).write.mode("overwrite").parquet(path)
 
 
@@ -449,9 +457,9 @@ def evaluate(
     are written. The per-row metric frame is persisted; the stats pass
     runs first, filling the cache and counting the rows, and the
     per-row table ``evaluation_<modality>`` is then written from the
-    cached rows as ``ceil(rows / ROWS_PER_FILE)`` files — it is never
-    read back. The frame is unpersisted before the call returns. The
-    stats rows (``evaluation_<modality>_stats``) are driver-sized, so
+    cached rows as ``ceil(rows / ROWS_PER_FILE[modality])`` files — it
+    is never read back. The frame is unpersisted before the call
+    returns. The stats rows (``evaluation_<modality>_stats``) are driver-sized, so
     the driver writes them (``write_json_rows``, no job). Round 1
     re-ran the kernel 2-7× per modality (VERDICT r1 'What's wrong' #2).
 
@@ -481,9 +489,11 @@ def evaluate(
         try:
             observed, images = counted(matched)
             ap_rows = ap_table_from_detections(ap_rows_of(observed)).collect()
-            _write_rows(
-                matched.select(*LAYOUT_IMAGE_COLS), per_row_path, observed_rows(images)
-            )
+            # each image has a GT box, so no AP row means no image: the
+            # pass then ran over an empty cache, which AQE prunes along
+            # with the observation
+            rows = images.get["rows"] if ap_rows else 0
+            _write_rows(matched.select(*LAYOUT_IMAGE_COLS), per_row_path, rows, modality)
         finally:
             matched.unpersist(blocking=True)
         local_frame(spark, ap_rows, AP_SCHEMA).coalesce(1).write.mode(
@@ -501,9 +511,8 @@ def evaluate(
         }[modality]
         per_row = rows_fn(ds).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            observed, rows = counted(per_row)
-            rollup = rollup_frame(spark, observed, modality)
-            _write_rows(per_row, per_row_path, observed_rows(rows))
+            rollup, rows = rollup_frame(spark, per_row, modality)
+            _write_rows(per_row, per_row_path, rows, modality)
         finally:
             per_row.unpersist(blocking=True)
 

@@ -47,8 +47,6 @@ import pyspark.sql.types as T
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from docling_eval_spark import hadoop_fs
-
 _CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
 
@@ -828,17 +826,19 @@ def clean_orphan_parts(
     DIFFERENT part digest, so the partial dir would otherwise sit in
     ``out_dir`` forever and double-count rows for raw scans). Runs at
     the start of every ingest; returns the deleted part names."""
-    names = hadoop_fs.list_names(spark, out_dir)
-    if names is None:
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    path = jvm.org.apache.hadoop.fs.Path(out_dir)
+    fs = path.getFileSystem(conf)
+    if not fs.exists(path):
         return []
     keep = _manifest_parts(spark, manifest_dir)
-    removed = [
-        name
-        for name in names
-        if name.startswith("part=") and name[len("part="):] not in keep
-    ]
-    for name in removed:
-        hadoop_fs.delete(spark, f"{out_dir}/{name}")
+    removed: list[str] = []
+    for st in fs.listStatus(path):
+        name = st.getPath().getName()
+        if name.startswith("part=") and name[len("part="):] not in keep:
+            fs.delete(st.getPath(), True)
+            removed.append(name)
     return removed
 
 

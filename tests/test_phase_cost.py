@@ -114,27 +114,45 @@ def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
     assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "layout", rep)) <= 4
 
 
-def test_evaluate_writes_row_sized_files(spark, dataset, tmp_path, monkeypatch):
-    """The per-row table is ceil(rows / ROWS_PER_FILE) parquet files,
-    not one per input partition; the stats directory is one part file
-    and ``_SUCCESS``."""
+@pytest.mark.parametrize("modality", ["markdown_text", "layout"])
+def test_evaluate_writes_row_sized_files(spark, dataset, tmp_path, monkeypatch, modality):
+    """The per-row table is ceil(rows / ROWS_PER_FILE[modality]) parquet
+    files, not one per input partition, where the row count comes from
+    the stats pass; the stats directory is one part file and
+    ``_SUCCESS``."""
     one, capped = tmp_path / "one", tmp_path / "capped"
-    pipelines.evaluate(spark, dataset, "markdown_text", str(one))
-    files = _rows_per_file(one / "evaluation_markdown_text", "*.parquet")
-    assert list(files.values()) == [100]
+    table = f"evaluation_{modality}"
+    pipelines.evaluate(spark, dataset, modality, str(one))
+    files = _rows_per_file(one / table, "*.parquet")
+    assert len(files) == 1
     stats = sorted(
-        p.name[:10] for p in (one / "evaluation_markdown_text_stats").iterdir()
+        p.name[:10] for p in (one / f"{table}_stats").iterdir()
         if not p.name.startswith(".")
     )
     assert stats == ["_SUCCESS", "part-00000"]
 
-    monkeypatch.setattr(pipelines, "ROWS_PER_FILE", 40)
-    pipelines.evaluate(spark, dataset, "markdown_text", str(capped))
-    files = _rows_per_file(capped / "evaluation_markdown_text", "*.parquet")
-    assert len(files) == 3 and sum(files.values()) == 100
-    assert _row_set(capped / "evaluation_markdown_text") == _row_set(
-        one / "evaluation_markdown_text"
-    )
+    rows = sum(files.values())
+    if modality != "layout":
+        written = spark.read.parquet(str(one / table))
+        assert pipelines.rollup_frame(spark, written, modality)[1] == rows
+    monkeypatch.setitem(pipelines.ROWS_PER_FILE, modality, -(-rows // 2))
+    pipelines.evaluate(spark, dataset, modality, str(capped))
+    files = _rows_per_file(capped / table, "*.parquet")
+    assert len(files) == 2 and sum(files.values()) == rows
+    assert _row_set(capped / table) == _row_set(one / table)
+
+
+def test_evaluate_without_rows_writes_one_empty_file(spark, tmp_path):
+    """A non-layout modality with no rows (HTML pages have no layout
+    boxes, so no bbox_text matches) writes its per-row table as one
+    empty parquet file: the stats pass over the empty cache counts 0
+    rows."""
+    pages, ds, ev = (str(tmp_path / n) for n in ("pages", "ds", "ev"))
+    write_pages_parquet(spark, pages, 3, seed=1, partitions=1)
+    pipelines.create_dataset(spark, pages, ds, perturb=0.2)
+    pipelines.evaluate(spark, ds, "bbox_text", ev)
+    files = _rows_per_file(f"{ev}/evaluation_bbox_text", "*.parquet")
+    assert list(files.values()) == [0]
 
 
 _STATS_DDL = f"metric string, {STATS_SCHEMA}"
@@ -183,13 +201,13 @@ def test_hadoop_fs_on_file_uri(spark, tmp_path):
     assert hadoop_fs.list_names(spark, root) is None
     hadoop_fs.write_text(spark, f"{root}/a.txt", "é\n")
     assert hadoop_fs.read_text(spark, f"{root}/a.txt") == "é\n"
-    hadoop_fs.write_json_lines(spark, f"{root}/j", ['{"a":1}', '{"a":2}'])
-    assert hadoop_fs.read_json_lines(spark, f"{root}/j") == ['{"a":1}', '{"a":2}']
-    assert [n for n in hadoop_fs.list_names(spark, f"{root}/j") if not n.startswith(".")][0] == "_SUCCESS"
-    hadoop_fs.delete(spark, root)
-    assert not (tmp_path / "h").exists()
     with pytest.raises(FileNotFoundError):
         hadoop_fs.read_json_lines(spark, f"{root}/j")
+    for lines in (['{"a":0}'], ['{"a":1}', '{"a":2}']):
+        hadoop_fs.write_json_lines(spark, f"{root}/j", lines)
+    assert hadoop_fs.read_json_lines(spark, f"{root}/j") == ['{"a":1}', '{"a":2}']
+    names = [n for n in hadoop_fs.list_names(spark, f"{root}/j") if not n.startswith(".")]
+    assert names[0] == "_SUCCESS" and len(names) == 2
 
 
 def test_evaluate_builds_no_exact_rollup(spark, dataset, tmp_path, monkeypatch):
@@ -358,6 +376,8 @@ def test_evaluate_layout_without_boxes_writes_empty_table(spark, tmp_path):
     pipelines.create_dataset(spark, pages, ds, perturb=0.2)
     pipelines.evaluate(spark, ds, "layout", ev)
     assert spark.read.parquet(f"{ev}/evaluation_layout_ap_table").count() == 0
+    files = _rows_per_file(f"{ev}/evaluation_layout", "*.parquet")
+    assert list(files.values()) == [0]
     stats = [
         line
         for f in sorted(Path(ev, "evaluation_layout_stats").glob("part-*"))

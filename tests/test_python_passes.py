@@ -118,7 +118,7 @@ def test_evaluate_leaves_nothing_cached(spark, perturbed_dataset, tmp_path, moda
 def test_rollup_plans_as_local_table_scan(spark, perturbed_dataset, tmp_path, modality):
     ev = tmp_path / "ev"
     pipelines.evaluate(spark, perturbed_dataset, modality, str(ev))
-    rollup = pipelines.rollup_frame(
+    rollup, _ = pipelines.rollup_frame(
         spark, spark.read.parquet(str(ev / f"evaluation_{modality}")), modality
     )
     assert "LocalTableScan" in plan_string(rollup)

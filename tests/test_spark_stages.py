@@ -14,6 +14,7 @@ from docling_eval_spark.datagen.pages import gen_page, pages_dataframe
 from docling_eval_spark.evaluators.layout import corpus_map, image_map, layout_image_stage
 from docling_eval_spark.evaluators.reading_order import ard_norm_py, ard_stage
 from docling_eval_spark.evaluators.stats import (
+    collect_counted_stats,
     collect_stats,
     compute_stats,
     histogram_table,
@@ -89,6 +90,21 @@ def test_collect_stats_empty_input_sentinels(spark):
     assert r["total"] == 0
     assert r["mean"] == -1.0 and r["median"] == -1.0 and r["std"] == -1.0
     assert list(r["hist"]) == [0] * 20
+
+
+def test_collect_counted_stats_counts_every_row(spark):
+    """The row count covers every row, a row whose values are all NULL
+    included, and the stats equal collect_stats'; an empty frame
+    counts 0."""
+    df = spark.createDataFrame(
+        [(0.5, None), (None, None), (0.25, 1.0)], "a double, b double"
+    )
+    stats, rows = collect_counted_stats(df, ["a", "b"])
+    assert rows == 3
+    assert stats == collect_stats(df, ["a", "b"])
+    assert stats["a"]["total"] == 2 and stats["b"]["total"] == 1
+    empty = spark.createDataFrame([], "a double")
+    assert collect_counted_stats(empty, ["a"])[1] == 0
 
 
 def test_collect_stats_constant_group_std_zero(spark):
