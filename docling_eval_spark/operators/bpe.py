@@ -39,7 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from docling_eval_spark.operators.text_analysis import tokens_col
-from docling_eval_spark.session import local_frame
+from docling_eval_spark.session import coalesce_to_rows, local_frame
 
 SEP = "\x1f"
 EOW = "</w>"
@@ -227,32 +227,21 @@ def bpe_train(
     if merges < 1:
         raise ValueError("merges must be >= 1")
     spark = df.sparkSession
-    words = word_symbol_table(df, text_col, lowercase, min_freq).persist()
-    # The corpus-scale count leaves the vocab-sized word table spread
-    # over corpus-scale shuffle partitions; every one of the `merges`
-    # iterations then pays that task count twice (pair-count kernel +
-    # merge kernel) on a table that is orders of magnitude smaller
-    # (Heaps' law). Derive the iteration parallelism from the MEASURED
-    # vocabulary size (~64k words per task), never a constant — the
-    # count also warms the cache the first iteration would have paid.
-    n_words = words.count()
-    parts = max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            (n_words + 65_535) // 65_536,
-        ),
-    )
-    if parts < words.rdd.getNumPartitions():
-        words = words.coalesce(parts)
-    learned: list[tuple[int, str, str, str, int]] = []
     # the per-iteration frames stay persisted until the END: each
     # nxt's lineage is one _apply_merge over its cached parent, so the
     # parent must outlive nxt's first materialization — which happens
     # inside the NEXT iteration's pair-count collect (ONE job per
     # merge; the old eager count-then-unpersist spent two). The chain
     # holds `merges` vocab-sized frames — small next to any corpus.
-    chain = [words]
+    chain = [word_symbol_table(df, text_col, lowercase, min_freq).persist()]
+    # The corpus-scale count leaves the vocab-sized word table spread
+    # over corpus-scale shuffle partitions; every one of the `merges`
+    # iterations then pays that task count twice (pair-count kernel +
+    # merge kernel) on a table that is orders of magnitude smaller
+    # (Heaps' law). Size the iteration parallelism from the MEASURED
+    # vocabulary.
+    words = coalesce_to_rows(chain[0])
+    learned: list[tuple[int, str, str, str, int]] = []
     try:
         for rank in range(1, merges + 1):
             top = (

@@ -33,8 +33,12 @@ running value (no growing buffers).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from docling_eval_spark.session import local_frame, release_checkpoint
 
 
 def _usec(col: Column) -> Column:
@@ -521,52 +525,53 @@ def funnel_steps(
 
     The probe frame is filtered ONCE to ``et IN steps``, projected to
     the slim (u, et, t) triple and eagerly localCheckpoint-ed: the
-    chain references it per step and each count branch references the
-    whole chain again, so the unpinned plan re-scanned the events
-    table once per reference (measured 9 scans / 14 shuffles for a
-    3-step funnel). Each per-step reach frame (≤ distinct users,
-    2 slim columns) is pinned the same way so the k count branches
-    read materialized rows instead of re-deriving their whole prefix
-    chain — at warehouse scale both are the materialized intermediate
-    tables a real funnel job would stage.
+    chain references it per step, so the unpinned plan re-scanned the
+    events table once per reference (measured 9 scans / 14 shuffles
+    for a 3-step funnel). Each per-step reach frame (≤ distinct users,
+    2 slim columns) is pinned the same way so the next step and its
+    count read materialized rows instead of re-deriving the whole
+    prefix chain. The k counts are collected in one job and returned
+    as a driver-side frame, and every checkpoint is released before
+    the call returns.
     """
-    ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("et"),
-        F.col(ts_col).alias("t"),
-    ).filter(F.col("et").isin(list(steps))).localCheckpoint(eager=True)
-    reach = (
-        ev.filter(F.col("et") == steps[0])
-        .groupBy("u")
-        .agg(F.min("t").alias("prev_t"))
-        .localCheckpoint(eager=True)
-    )
-    counts = [reach.agg(F.count(F.lit(1)).cast("bigint").alias("n"))]
-    for s in steps[1:]:
-        reach = (
-            ev.filter(F.col("et") == s)
-            .join(reach, "u")
-            .filter(F.col("t") >= F.col("prev_t"))
+    pins: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pins.append(df.localCheckpoint(eager=True))
+        return pins[-1]
+
+    try:
+        ev = pin(
+            events.select(
+                F.col(user_col).alias("u"),
+                F.col(type_col).alias("et"),
+                F.col(ts_col).alias("t"),
+            ).filter(F.col("et").isin(list(steps)))
+        )
+        reach = pin(
+            ev.filter(F.col("et") == steps[0])
             .groupBy("u")
             .agg(F.min("t").alias("prev_t"))
-            .localCheckpoint(eager=True)
         )
-        counts.append(reach.agg(F.count(F.lit(1)).cast("bigint").alias("n")))
-
-    base = counts[0].select(F.col("n").alias("n1"))
-    rows = None
-    for i, (s, c) in enumerate(zip(steps, counts)):
-        r = (
-            c.crossJoin(F.broadcast(base))
-            .select(
-                F.lit(i + 1).cast("bigint").alias("step_no"),
-                F.lit(s).alias("step"),
-                F.col("n").alias("n_users"),
-                F.expr(
-                    "CASE WHEN n1 > 0 THEN (n * 1000000) DIV n1 "
-                    "ELSE CAST(0 AS BIGINT) END"
-                ).alias("conv_ppm"),
+        counts = [reach.agg(F.count(F.lit(1)))]
+        for s in steps[1:]:
+            reach = pin(
+                ev.filter(F.col("et") == s)
+                .join(reach, "u")
+                .filter(F.col("t") >= F.col("prev_t"))
+                .groupBy("u")
+                .agg(F.min("t").alias("prev_t"))
             )
-        )
-        rows = r if rows is None else rows.unionAll(r)
-    return rows
+            counts.append(reach.agg(F.count(F.lit(1))))
+        n = [r[0] for r in reduce(DataFrame.unionAll, counts).collect()]
+    finally:
+        for df in pins:
+            release_checkpoint(df)
+    return local_frame(
+        events.sparkSession,
+        [
+            (i + 1, s, c, c * 1_000_000 // n[0] if n[0] > 0 else 0)
+            for i, (s, c) in enumerate(zip(steps, n))
+        ],
+        "step_no bigint, step string, n_users bigint, conv_ppm bigint",
+    )

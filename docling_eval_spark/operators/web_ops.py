@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from docling_eval_spark.session import release_checkpoint
+from docling_eval_spark.session import coalesce_to_rows, release_checkpoint
 
 
 def canonical_url_col(url: Column | str) -> Column:
@@ -760,6 +760,85 @@ def stratified_sample(
     return df.filter(u < frac)
 
 
+def _iterate(
+    state: DataFrame,
+    step,
+    iterations: int,
+    *,
+    every: int,
+    tol: float | None = None,
+    delta=None,
+    finish=None,
+    pin_state: bool = False,
+    cached: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """The fixpoint driver of the graph loops: ``state = step(state, it)``
+    for it = 1 … ``iterations``, returning ``finish(state)`` (default:
+    the final state) as a live eager local checkpoint. The inputs the
+    loop persisted (``cached``) are unpersisted on return, so only the
+    returned frame's blocks outlive the call.
+
+    Checkpoint policy. A lazy loop state deepens its plan by a join and
+    an aggregation per step, and analysis/optimization time grows
+    superlinearly with that depth (the classic iterative-algorithm
+    lineage blowup), so the state is eagerly ``localCheckpoint``-ed
+    after step k when k % ``every`` == 0, and the returned frame is
+    pinned after the last step. A step that reads its state twice (join
+    probe + self-union) needs ``every=1``: a lazy state would double
+    the plan per step. The rank loops use 2: their state is a SLIM
+    (node, rank) frame, so the materialization is cheap next to the
+    plan cost it removes — measured for page_rank on the 167k-node
+    sf0.1 graph over 10 iterations: every-8 21.3 s, every-4 13.1 s,
+    every-2 10.5 s, every-1 12.2 s (checkpoints never change values;
+    the oracles gate that). ``pin_state`` also checkpoints the last
+    step's state, for a ``finish`` that reads it more than once. Each
+    checkpoint is released with
+    :func:`~docling_eval_spark.session.release_checkpoint` as soon as a
+    newer one supersedes it (``unpersist`` is a no-op on a local
+    checkpoint), bounding executor storage at two state copies.
+
+    ``tol``: optional convergence stop. Every step is then checkpointed
+    (so the probe and the next step share one computed frame), the
+    scalar ``delta(new, prev)`` — an ACTION — is probed, and the loop
+    ends once delta <= tol (``None``, from an empty state, never stops
+    it). ``tol=0.0`` stops only on an exact fixpoint, whose skipped
+    steps would reproduce the same state, so the output equals the
+    fixed-count run; ``None`` (the default) keeps the fixed-count plan
+    with no per-step action."""
+    ckpt = out = None  # the live checkpoint; the returned frame
+    try:
+        for it in range(1, iterations + 1):
+            prev, state = state, step(state, it)
+            pin = pin_state if it == iterations else it % every == 0
+            if tol is None and not pin:
+                continue
+            state = state.localCheckpoint(eager=True)
+            d = None if tol is None else delta(state, prev)
+            release_checkpoint(ckpt)
+            ckpt = state
+            if d is not None and d <= tol:
+                break
+        out = state if finish is None else finish(state)
+        if out is not ckpt:
+            out = out.localCheckpoint(eager=True)
+        return out
+    finally:
+        if out is not ckpt:
+            release_checkpoint(ckpt)
+        for df in cached:
+            df.unpersist()
+
+
+def _node_frame(edges: DataFrame) -> DataFrame:
+    """Every node on either side of the (src, dst) edges, persisted."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .persist()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -781,74 +860,48 @@ def connected_components(
     MapReduce"): ONE equi-join of labels against the symmetrized edge
     list + ONE map-side-combining min aggregation; no collect, no
     driver state. Duplicate edges are harmless (min is idempotent),
-    so no distinct pass is spent on the edge list.
-
-    The label frame is DOUBLE-referenced each iteration (join probe +
-    self-union), which would double the logical plan per iteration if
-    left lazy — so every iteration eagerly localCheckpoints the slim
-    (node, component) frame and releases the previous one, bounding
-    both plan depth and executor storage at O(1) (the same fix
-    :func:`page_rank`'s tol mode applies to its double-referenced
-    rank frame)."""
+    so no distinct pass is spent on the edge list."""
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    cached = und = und.union(
+    cached = und.union(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
     # near-dup pair graphs are tiny next to the corpus that produced
-    # them, but inherit its shuffle partitioning — size the iteration
-    # parallelism from the MEASURED edge count (~64k rows per task,
-    # floor 1, cap at the cluster's cores) so each of the
-    # ``iterations`` join+agg rounds schedules tasks proportional to
-    # the graph, not to the corpus. The count also warms the cache.
-    n_edges = und.count()
-    parts = max(
-        1,
-        min(
-            edges.sparkSession.sparkContext.defaultParallelism,
-            (n_edges + 65_535) // 65_536,
-        ),
-    )
-    if parts < und.rdd.getNumPartitions():
-        und = und.coalesce(parts)
+    # them, but inherit its shuffle partitioning: each join+agg round
+    # schedules tasks proportional to the graph, not to the corpus
+    und = coalesce_to_rows(cached)
+
+    def step(comps: DataFrame, it: int) -> DataFrame:
+        contrib = und.join(comps, und["a"] == comps["node"]).select(
+            F.col("b").alias("node"), "component"
+        )
+        return (
+            contrib.unionByName(comps.select("node", "component"))
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+        )
+
     comps = (
         und.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
     )
-    for _ in range(iterations):
-        contrib = und.join(comps, und["a"] == comps["node"]).select(
-            F.col("b").alias("node"), "component"
-        )
-        prev = comps
-        comps = (
-            contrib.unionByName(comps.select("node", "component"))
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        release_checkpoint(prev)
-    cached.unpersist()  # not ``und``: a coalesce is a new, uncached frame
-    return comps
+    return _iterate(comps, step, iterations, every=1, cached=(cached,))
 
 
 def page_rank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
     tol: float | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over (src, dst) edges — the classic
     crawl-quality signal (Page et al. 1999, public). Returns
     (node, rank) for every node appearing as src or dst.
 
-    ``tol``: optional convergence stop — after each iteration the L1
-    delta Σ|rank−prev| is computed (one extra id-equi join + scalar
-    agg per iteration, an ACTION, so only pay it when early stopping
-    is plausible) and iteration ends once delta <= tol. The default
-    ``None`` keeps the fixed-count plan (no per-iteration action; the
-    oracle-matched mode).
+    ``tol``: optional convergence stop on the L1 delta Σ|rank−prev|
+    (one extra id-equi join + scalar agg per iteration; see
+    :func:`_iterate`). The default ``None`` keeps the fixed-count plan
+    (the oracle-matched mode).
 
     Simple-sum formulation: rank = (1-d)/N + d * Σ rank(in)/deg(in);
     dangling mass is NOT redistributed (deterministic, cheaper — one
@@ -856,96 +909,43 @@ def page_rank(
     matrix form, fine for ranking use).
 
     Scale shape per iteration: ONE equi-join of ranks against the
-    out-degree-annotated edge list (both shuffled on the same key —
-    the exchange is reused across iterations since the edge side is
-    cached by the optimizer's reuse, or persist it yourself for many
-    iterations) + one map-side-combining sum. No collect, no driver
-    state. Every ``checkpoint_every`` iterations the rank frame is
-    localCheckpoint-ed — without truncation the lazy plan deepens by
-    two joins per iteration and analysis/optimization time grows
-    superlinearly (the classic iterative-algorithm lineage blowup).
-    Default 2: the checkpointed frame is SLIM (node, rank) so the
-    materialization is cheap next to the driver-side plan cost it
-    removes — measured on the 167k-node sf0.1 graph over 10
-    iterations: every-8 21.3s, every-4 13.1s, every-2 10.5s, every-1
-    12.2s (checkpoint values never affect ranks; the oracle gates
-    that). On a cluster the same trade holds until the rank frame's
-    write cost rivals two joins' plan analysis — then raise it."""
-    # persist the two frames every iteration re-reads (slim: node ids
-    # + degree-annotated edges) — without this each of the 2 joins per
-    # iteration re-scans the SOURCE, 20+ scans for 5 iterations; the
-    # final eager checkpoint materializes the result so both can be
-    # unpersisted before returning (no cache accumulation across
-    # repeated calls)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    out-degree-annotated edge list + one map-side-combining sum, then
+    one left join back onto the node frame. No collect, no driver
+    state. The node ids and the degree-annotated edges are persisted:
+    without this each of the 2 joins per iteration re-scans the
+    source."""
+    nodes = _node_frame(edges)
     n_nodes = nodes.count()
     out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ed = edges.join(out_deg, "src").persist()
     base = (1.0 - damping) / n_nodes
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    # the loop's live checkpoint: released as soon as a newer one
-    # replaces it, so only the returned frame's blocks outlive the call
-    ckpt = None
-    for it in range(iterations):
-        # in tol mode every iteration already checkpoints below — a
-        # second checkpoint here would re-materialize for nothing
-        if (
-            tol is None
-            and it > 0
-            and checkpoint_every
-            and it % checkpoint_every == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
-            release_checkpoint(ckpt)
-            ckpt = ranks
-        prev = ranks
+
+    def step(ranks: DataFrame, it: int) -> DataFrame:
         contribs = (
             ed.join(ranks, ed["src"] == ranks["node"])
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
+        return nodes.join(contribs, nodes["node"] == contribs["dst"], "left").select(
+            "node",
+            (
+                F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+            ).alias("rank"),
         )
-        if tol is not None:
-            # materialize once so the delta probe and the next
-            # iteration share the computed frame instead of doubling
-            # the join tree (this also covers the checkpoint_every
-            # lineage guard — every tol iteration checkpoints)
-            ranks = ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.alias("a")
-                .join(prev.alias("b"), F.col("a.node") == F.col("b.node"))
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                .collect()[0][0]
-            )
-            # prev (last iteration's checkpoint) is dead after the
-            # probe — release its blocks instead of waiting for GC,
-            # bounding executor storage at two rank-frame copies
-            release_checkpoint(ckpt)
-            ckpt = ranks
-            if delta is not None and delta <= tol:
-                break
-    # a tol run ends on a checkpoint already: return it as it is
-    if ranks is not ckpt:
-        ranks = ranks.localCheckpoint(eager=True)
-        release_checkpoint(ckpt)
-    nodes.unpersist()
-    ed.unpersist()
-    return ranks
+
+    def delta(a: DataFrame, b: DataFrame) -> float | None:
+        return (
+            a.alias("a")
+            .join(b.alias("b"), F.col("a.node") == F.col("b.node"))
+            .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
+            .collect()[0][0]
+        )
+
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
+    return _iterate(
+        ranks, step, iterations, every=2, tol=tol, delta=delta, cached=(nodes, ed)
+    )
 
 
 def cap_per_key_budget(
@@ -1130,7 +1130,6 @@ def trust_rank(
     seeds: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
     tol: float | None = None,
 ) -> DataFrame:
     """TrustRank (Gyongyi, Garcia-Molina & Pedersen, VLDB 2004):
@@ -1149,9 +1148,8 @@ def trust_rank(
 
     Same per-iteration scale shape as :func:`page_rank` — ONE
     rank-vs-degree-annotated-edge equi-join + one map-side-combining
-    sum, lineage truncated every ``checkpoint_every`` iterations.
-    Dangling mass is not redistributed (same documented deviation as
-    :func:`page_rank`; the oracle unrolls the identical formulation).
+    sum. Dangling mass is not redistributed (same documented deviation
+    as :func:`page_rank`; the oracle unrolls the identical formulation).
 
     Unlike :func:`page_rank` (whose uniform teleport pays EVERY node
     a per-iteration floor), the trust vector is nonzero only on
@@ -1171,27 +1169,15 @@ def trust_rank(
     set; in the worst case (everything reachable) the shape equals
     the dense loop minus its per-iteration node-frame fold.
 
-    ``tol``: optional convergence stop, mirroring :func:`page_rank` —
-    after each iteration the L1 delta of the SPARSE trust vectors
-    (full-outer join on node, absent rows counted as 0.0 — exactly
-    the value the final output fold gives them) is computed and the
-    loop ends once delta <= tol. ``tol=0.0`` stops only on an EXACT
-    fixpoint (every |Δ| summand is 0.0, so the sum is 0.0 iff the
-    vectors are value-identical including membership-as-zero); the
-    skipped iterations would have reproduced the same vector, so the
-    output is identical to the fixed-count run — the oracle, which
-    unrolls all ``iterations`` CTEs, gates that. Costs one extra
-    scalar action + an every-iteration (rather than every
-    ``checkpoint_every``) lineage checkpoint per executed iteration,
-    an ACTION, so only set ``tol`` when early stopping is plausible;
-    the default ``None`` keeps the fixed-count plan.
+    ``tol``: optional convergence stop (see :func:`_iterate`) on the
+    L1 delta of the SPARSE trust vectors: a full-outer join on node,
+    absent rows counted as 0.0 — exactly the value the final output
+    fold gives them. ``tol=0.0`` therefore stops only when the vectors
+    are value-identical including membership-as-zero, and the output
+    equals the fixed-count run (the oracle, which unrolls all
+    ``iterations`` CTEs, gates that).
     """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _node_frame(edges)
     seeds_in = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
@@ -1208,22 +1194,9 @@ def trust_rank(
     base_val = (1.0 - damping) * t_val
     out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ed = edges.join(out_deg, "src").persist()
-    ranks = seeds_in.select("node", F.lit(t_val).alias("rank"))
     seed_zero = seeds_in.select("node", F.lit(0.0).alias("c"))
-    ckpt = None  # the loop's live checkpoint (see page_rank)
-    for it in range(iterations):
-        # in tol mode every iteration already checkpoints below — a
-        # second checkpoint here would re-materialize for nothing
-        if (
-            tol is None
-            and it > 0
-            and checkpoint_every
-            and it % checkpoint_every == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
-            release_checkpoint(ckpt)
-            ckpt = ranks
-        prev = ranks
+
+    def step(ranks: DataFrame, it: int) -> DataFrame:
         contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
             F.col("dst").alias("node"),
             (F.col("rank") / F.col("deg")).alias("c"),
@@ -1233,58 +1206,46 @@ def trust_rank(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = sums.join(
+        return sums.join(
             F.broadcast(seeds_in.select("node", "__seed")), "node", "left"
         ).select(
             "node",
             (
-                F.when(F.col("__seed"), F.lit(base_val)).otherwise(
-                    F.lit(0.0)
-                )
+                F.when(F.col("__seed"), F.lit(base_val)).otherwise(F.lit(0.0))
                 + F.lit(damping) * F.col("s")
             ).alias("rank"),
         )
-        if tol is not None:
-            # materialize once so the delta probe and the next
-            # iteration share the computed frame (this also covers
-            # the checkpoint_every lineage guard — every tol
-            # iteration checkpoints)
-            ranks = ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.select("node", F.col("rank").alias("__ra"))
-                .join(
-                    prev.select("node", F.col("rank").alias("__rb")),
-                    "node",
-                    "full_outer",
-                )
-                .agg(
-                    F.sum(
-                        F.abs(
-                            F.coalesce(F.col("__ra"), F.lit(0.0))
-                            - F.coalesce(F.col("__rb"), F.lit(0.0))
-                        )
+
+    def delta(a: DataFrame, b: DataFrame) -> float | None:
+        return (
+            a.select("node", F.col("rank").alias("__ra"))
+            .join(b.select("node", F.col("rank").alias("__rb")), "node", "full_outer")
+            .agg(
+                F.sum(
+                    F.abs(
+                        F.coalesce(F.col("__ra"), F.lit(0.0))
+                        - F.coalesce(F.col("__rb"), F.lit(0.0))
                     )
                 )
-                .collect()[0][0]
             )
-            # prev (last iteration's checkpoint; none at it == 0,
-            # where prev is the seed frame) is dead after the probe
-            release_checkpoint(ckpt)
-            ckpt = ranks
-            if delta is not None and delta <= tol:
-                break
-    out = (
-        nodes.join(ranks, "node", "left")
-        .select(
+            .collect()[0][0]
+        )
+
+    def fold(ranks: DataFrame) -> DataFrame:
+        return nodes.join(ranks, "node", "left").select(
             "node", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")
         )
-        .localCheckpoint(eager=True)
+
+    return _iterate(
+        seeds_in.select("node", F.lit(t_val).alias("rank")),
+        step,
+        iterations,
+        every=2,
+        tol=tol,
+        delta=delta,
+        finish=fold,
+        cached=(nodes, seeds_in, ed),
     )
-    release_checkpoint(ckpt)
-    nodes.unpersist()
-    seeds_in.unpersist()
-    ed.unpersist()
-    return out
 
 
 def host_boilerplate_strip(
@@ -1504,7 +1465,6 @@ def template_rollup(
 def hits(
     edges: DataFrame,
     iterations: int = 4,
-    checkpoint_every: int = 2,
     normalize: str = "final",
 ) -> DataFrame:
     """Fixed-iteration HITS hubs/authorities (Kleinberg 1999, public)
@@ -1532,10 +1492,10 @@ def hits(
 
     Scale shape per iteration: TWO keyed equi-joins (edges⋈hubs on
     src, edges⋈auths on dst) + two map-side-combining sums — same
-    shape family as :func:`page_rank`, no collect, no driver state;
-    the edge and node frames are persisted once and the hub state is
-    localCheckpoint-ed every ``checkpoint_every`` iterations against
-    lineage blowup.
+    shape family as :func:`page_rank`, no collect, no driver state.
+    The loop state is the UNSCALED authority vector auth_k: hub_k and
+    the scaled auth_k both derive from it, so one frame carries the
+    whole iteration (hub_0 = 1 is the first step's input).
 
     The loop keeps its state SPARSE: after the first update, hubs
     holds only nodes with >=1 out-edge and auths only nodes with >=1
@@ -1552,94 +1512,83 @@ def hits(
     removed)."""
     if normalize not in ("final", "l1"):
         raise ValueError("normalize must be 'final' or 'l1'")
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _node_frame(edges)
     ed = edges.select("src", "dst").persist()
-    hubs = nodes.withColumn("hub", F.lit(1.0))
-    # read only when iterations == 0 (the loop overwrites it before
-    # any read): the empty sparse frame = "every auth is 0"
-    auths = (
-        ed.select(F.col("dst").alias("node"))
-        .limit(0)
-        .withColumn("auth", F.lit(0.0))
-    )
-    ckpt = None  # the live cadence checkpoint, released once superseded
-    for it in range(iterations):
-        if it > 0 and checkpoint_every and it % checkpoint_every == 0:
-            hubs = hubs.localCheckpoint(eager=True)
-            release_checkpoint(ckpt)
-            ckpt = hubs
-        auths = (
+    hubs0 = nodes.withColumn("hub", F.lit(1.0))
+
+    def scaled(v: DataFrame, col: str) -> DataFrame:
+        if normalize == "final":
+            return v
+        tot = v.agg(F.sum(col).alias("__tot"))
+        return v.crossJoin(F.broadcast(tot)).select(
+            "node",
+            F.when(F.col("__tot") > 0, F.col(col) / F.col("__tot"))
+            .otherwise(F.lit(0.0))
+            .alias(col),
+        )
+
+    def hubs_of(auths: DataFrame) -> DataFrame:
+        return scaled(
+            ed.join(auths, ed["dst"] == auths["node"])
+            .groupBy("src")
+            .agg(F.sum("auth").alias("hub"))
+            .withColumnRenamed("src", "node"),
+            "hub",
+        )
+
+    def step(auths: DataFrame, it: int) -> DataFrame:
+        hubs = hubs0 if it == 1 else hubs_of(auths)
+        return (
             ed.join(hubs, ed["src"] == hubs["node"])
             .groupBy("dst")
             .agg(F.sum("hub").alias("auth"))
             .withColumnRenamed("dst", "node")
         )
-        hubs = (
-            ed.join(auths, ed["dst"] == auths["node"])
-            .groupBy("src")
-            .agg(F.sum("auth").alias("hub"))
-            .withColumnRenamed("src", "node")
+
+    def fold(auths: DataFrame) -> DataFrame:
+        hubs = hubs_of(auths) if iterations else hubs0
+        auths = scaled(auths, "auth")
+        # max over the sparse frame equals max over the zero-filled full
+        # frame: every sparse score is > 0 by induction (integer sums
+        # >= 1 in "final" mode, positive fractions in "l1" mode — both
+        # over nonempty in/out-edge sets), so the fold's 0.0 rows can
+        # never be the max; an all-zero vector only happens with zero
+        # edges, where both frames are empty either way
+        maxes = hubs.agg(F.max("hub").alias("mh")).crossJoin(
+            auths.agg(F.max("auth").alias("ma"))
         )
-        if normalize == "l1":
-            a_tot = auths.agg(F.sum("auth").alias("ta"))
-            h_tot = hubs.agg(F.sum("hub").alias("th"))
-            auths = auths.crossJoin(F.broadcast(a_tot)).select(
+        return (
+            nodes.join(hubs, "node", "left")
+            .join(auths, "node", "left")
+            .select(
                 "node",
-                F.when(F.col("ta") > 0, F.col("auth") / F.col("ta"))
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+            )
+            .crossJoin(F.broadcast(maxes))
+            .select(
+                "node",
+                F.when(F.col("mh") > 0, F.col("hub") / F.col("mh"))
+                .otherwise(F.lit(0.0))
+                .alias("hub"),
+                F.when(F.col("ma") > 0, F.col("auth") / F.col("ma"))
                 .otherwise(F.lit(0.0))
                 .alias("auth"),
             )
-            hubs = hubs.crossJoin(F.broadcast(h_tot)).select(
-                "node",
-                F.when(F.col("th") > 0, F.col("hub") / F.col("th"))
-                .otherwise(F.lit(0.0))
-                .alias("hub"),
-            )
-    # the final scaling references each vector TWICE (max census +
-    # output join): pin ONE evaluation of the converged state, or the
-    # whole remaining iteration lineage re-executes per reference
-    hubs = hubs.localCheckpoint(eager=True)
-    auths = auths.localCheckpoint(eager=True)
-    release_checkpoint(ckpt)
-    # max over the sparse frame equals max over the zero-filled full
-    # frame: every sparse score is > 0 by induction (integer sums
-    # >= 1 in "final" mode, positive fractions in "l1" mode — both
-    # over nonempty in/out-edge sets), so the fold's 0.0 rows can
-    # never be the max; an all-zero vector only happens with zero
-    # edges, where both frames are empty either way
-    maxes = hubs.agg(F.max("hub").alias("mh")).crossJoin(
-        auths.agg(F.max("auth").alias("ma"))
-    )
-    out = (
-        nodes.join(hubs, "node", "left")
-        .join(auths, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
         )
-        .crossJoin(F.broadcast(maxes))
-        .select(
-            "node",
-            F.when(F.col("mh") > 0, F.col("hub") / F.col("mh"))
-            .otherwise(F.lit(0.0))
-            .alias("hub"),
-            F.when(F.col("ma") > 0, F.col("auth") / F.col("ma"))
-            .otherwise(F.lit(0.0))
-            .alias("auth"),
-        )
-        .localCheckpoint(eager=True)
+
+    # the empty sparse frame = "every auth is 0" (read only when
+    # iterations == 0)
+    auths = ed.select(F.col("dst").alias("node"), F.lit(0.0).alias("auth")).limit(0)
+    return _iterate(
+        auths,
+        step,
+        iterations,
+        every=2,
+        finish=fold,
+        pin_state=True,
+        cached=(nodes, ed),
     )
-    release_checkpoint(hubs)
-    release_checkpoint(auths)
-    nodes.unpersist()
-    ed.unpersist()
-    return out
 
 
 def temperature_mix_sample(
@@ -1732,11 +1681,10 @@ def crawl_depth(
 
     Scale shape per round — identical to :func:`connected_components`:
     ONE equi-join of the current FRONTIER against the edge list + ONE
-    map-side-combining min aggregation; no collect, no driver state;
-    the slim (node, depth) frame localCheckpoints eagerly each round
-    so plan depth and storage stay O(1). min is idempotent, so
-    duplicate edges cost nothing and already-settled nodes never
-    regress (depth can only stay or shrink).
+    map-side-combining min aggregation; no collect, no driver state.
+    min is idempotent, so duplicate edges cost nothing and
+    already-settled nodes never regress (depth can only stay or
+    shrink).
 
     Frontier discipline (textbook BFS, value-identical to joining the
     full distance frame): with unit weights a node's depth is FINAL
@@ -1759,32 +1707,25 @@ def crawl_depth(
         .repartition("a")
         .persist()
     )
-    dist = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("depth", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for hop in range(1, max_hops + 1):
+
+    def step(dist: DataFrame, hop: int) -> DataFrame:
+        frontier = dist.filter(F.col("depth") == F.lit(hop - 1))
         contrib = e.join(frontier, e["a"] == frontier["node"]).select(
             F.col("b").alias("node"),
             (F.col("depth") + F.lit(1)).cast("bigint").alias("depth"),
         )
-        prev = dist
-        dist = (
+        return (
             contrib.unionByName(dist.select("node", "depth"))
             .groupBy("node")
             .agg(F.min("depth").alias("depth"))
-            .localCheckpoint(eager=True)
         )
-        # newly settled nodes carry depth == hop exactly; the filter
-        # scans the just-checkpointed frame lazily inside the next
-        # round's join
-        frontier = dist.filter(F.col("depth") == F.lit(hop))
-        release_checkpoint(prev)
-    e.unpersist()
-    return dist
+
+    dist = (
+        seeds.select(F.col(seed_col).alias("node"))
+        .distinct()
+        .withColumn("depth", F.lit(0).cast("bigint"))
+    )
+    return _iterate(dist, step, max_hops, every=1, cached=(e,))
 
 
 def weighted_sample_topk(

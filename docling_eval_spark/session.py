@@ -93,6 +93,22 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def coalesce_to_rows(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to one partition per 65,536 rows of its
+    MEASURED row count, at least 1 and at most the cluster's
+    ``defaultParallelism``; ``df`` itself when it has no more partitions
+    than that. For a small frame that inherited a corpus-sized shuffle
+    partitioning, so each later pass over it schedules tasks in
+    proportion to its rows. The count is one job; on a persisted frame
+    it also fills the cache. Unpersist ``df``, not the result: a
+    coalesce is a new, uncached frame."""
+    parts = max(
+        1,
+        min(df.sparkSession.sparkContext.defaultParallelism, -(-df.count() // 65_536)),
+    )
+    return df.coalesce(parts) if parts < df.rdd.getNumPartitions() else df
+
+
 def release_checkpoint(df: DataFrame | None) -> None:
     """Drop the blocks of an eager ``localCheckpoint`` frame (no-op for
     ``None``). ``DataFrame.unpersist`` does not do it: it uncaches

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 
@@ -29,6 +30,19 @@ def python_nodes(df) -> list[str]:
         node = _TREE_PREFIX.sub("", line)
         found += [n for n in PYTHON_NODES if node.startswith(n)]
     return found
+
+
+def jobs_in(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def in_workers(spark, fn) -> dict:

@@ -1395,9 +1395,14 @@ def test_page_rank_tolerance_stop(spark):
 @pytest.mark.parametrize("tol", [None, 1e-12])
 def test_rank_loops_release_their_checkpoints(spark, tol):
     """After an iterative loop (page_rank, trust_rank, and without a
-    tolerance stop connected_components, hits and crawl_depth) returns,
-    the only new persistent RDD is the returned frame's checkpoint:
-    every loop checkpoint and every cached input is released."""
+    tolerance stop connected_components, hits, crawl_depth,
+    funnel_steps and bpe_train) returns, the only new persistent RDD is
+    the returned frame's own checkpoint, if it is one: every loop
+    checkpoint and every cached input is released."""
+    from datetime import datetime
+
+    from docling_eval_spark.operators.bpe import bpe_train
+    from docling_eval_spark.operators.temporal import funnel_steps
     from docling_eval_spark.operators.web_ops import (
         connected_components,
         crawl_depth,
@@ -1412,6 +1417,15 @@ def test_rank_loops_release_their_checkpoints(spark, tol):
         "src string, dst string",
     )
     seeds = spark.createDataFrame([("a",)], "node string")
+    events = spark.createDataFrame(
+        [(1, "view", datetime(2026, 1, 1)), (1, "click", datetime(2026, 1, 2))],
+        "user_id long, event_type string, ts timestamp",
+    )
+    # a word table spread over more partitions than its rows need, so
+    # bpe_train coalesces it
+    docs = spark.createDataFrame(
+        [(f"low lower newest {i % 7}",) for i in range(300)], "text string"
+    ).repartition(6)
     jsc = spark.sparkContext._jsc
     runs = [
         (lambda: page_rank(edges, 7, tol=tol), 4),
@@ -1422,14 +1436,69 @@ def test_rank_loops_release_their_checkpoints(spark, tol):
             (lambda: connected_components(edges), 4),
             (lambda: hits(edges), 4),
             (lambda: crawl_depth(edges, seeds), 2),  # a, hub
+            (lambda: funnel_steps(events, ["view", "click"]), 2),
+            (lambda: bpe_train(docs, merges=2), 2),
         ]
     for run, rows in runs:
         before = set(jsc.getPersistentRDDs().keySet())
         out = run()
         new = set(jsc.getPersistentRDDs().keySet()) - before
-        assert new == {out._jdf.queryExecution().analyzed().rdd().id()}
+        plan = out._jdf.queryExecution().analyzed()
+        own = {plan.rdd().id()} if plan.nodeName() == "LogicalRDD" else set()
+        assert new <= own
         assert out.count() == rows
-        release_checkpoint(out)
+        if own:
+            release_checkpoint(out)
+
+
+def test_loop_calls_run_few_jobs(spark):
+    """Jobs per graph-loop call, and per funnel_steps call with its
+    collect, on a 6-edge graph: each bound is the count measured before
+    the loops shared one fixpoint driver, so the driver adds no job."""
+    from datetime import datetime
+
+    from conftest import jobs_in
+
+    from docling_eval_spark.operators.temporal import funnel_steps
+    from docling_eval_spark.operators.web_ops import (
+        connected_components,
+        crawl_depth,
+        hits,
+        page_rank,
+        trust_rank,
+    )
+    from docling_eval_spark.session import release_checkpoint
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"), ("d", "e"), ("e", "f")],
+        "src string, dst string",
+    )
+    seeds = spark.createDataFrame([("a",)], "node string")
+    runs = [
+        (lambda: page_rank(edges, 5), 27),
+        (lambda: page_rank(edges, 10, tol=0.0), 96),
+        (lambda: trust_rank(edges, seeds, 5), 30),
+        (lambda: trust_rank(edges, seeds, 8, tol=0.0), 77),
+        (lambda: hits(edges, 4), 40),
+        (lambda: connected_components(edges, iterations=8), 28),
+        (lambda: crawl_depth(edges, seeds, max_hops=6), 23),
+    ]
+    for run, bound in runs:
+        out = []
+        assert jobs_in(spark, lambda: out.append(run())) <= bound
+        release_checkpoint(out[0])
+    events = spark.createDataFrame(
+        [
+            (u, t, datetime(2026, 1, 1, 0, 0, s))
+            for u, t, s in [
+                (1, "view", 1), (1, "click", 2), (1, "purchase", 3),
+                (2, "view", 2), (2, "click", 1), (3, "view", 1), (3, "click", 5),
+            ]
+        ],
+        "user_id long, event_type string, ts timestamp",
+    )
+    steps = ["view", "click", "purchase"]
+    assert jobs_in(spark, lambda: funnel_steps(events, steps).collect()) <= 16
 
 
 def test_ngram_lm_score_hand_computed(spark):
@@ -3905,7 +3974,7 @@ def test_trust_rank_sparse_loop_matches_dense_reference(spark):
 
     df = spark.createDataFrame(edge_list, "src string, dst string")
     sdf = spark.createDataFrame([(x,) for x in seed_list], "node string")
-    for iters in (1, 3, 8):  # 8 > checkpoint_every exercises lineage cut
+    for iters in (1, 3, 8):  # 8 > the checkpoint interval: exercises the lineage cut
         got = {r.node: r.rank for r in trust_rank(df, sdf, iters).collect()}
         want = dense_trust(edge_list, seed_list, iters)
         assert set(got) == set(want)

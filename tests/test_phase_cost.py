@@ -9,7 +9,6 @@ import json
 import math
 import random
 import struct
-import uuid
 from pathlib import Path
 
 import pyarrow.dataset as pads
@@ -17,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.types import StructField, StructType
 
+from conftest import jobs_in
 from docling_eval_spark import hadoop_fs, pipelines
 from docling_eval_spark.datagen.pages import PAGES_SCHEMA, write_pages_parquet
 from docling_eval_spark.evaluators.layout import (
@@ -82,19 +82,7 @@ def test_create_caps_rows_per_file(spark, pages100, dataset, tmp_path):
     assert _row_set(capped) == _row_set(dataset)
 
 
-def _jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"phase-cost-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
+def test_phase_calls_run_fewjobs_in(spark, pages100, dataset, tmp_path):
     """No job re-derives what the call already had: create scans the
     pages once, with no join back to them; evaluate reads the dataset
     once, with its recorded schema, and never reads its own output
@@ -102,16 +90,16 @@ def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
     the written stats with their schema and collects the layout HTML
     sample once."""
     ds2 = str(tmp_path / "ds2")
-    assert _jobs(spark, lambda: pipelines.create_dataset(spark, pages100, ds2, perturb=0.2)) <= 2
+    assert jobs_in(spark, lambda: pipelines.create_dataset(spark, pages100, ds2, perturb=0.2)) <= 2
     ev = str(tmp_path / "ev")
     pipelines.evaluate(spark, dataset, "markdown_text", ev)
-    assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 4
-    assert _jobs(spark, lambda: pipelines.evaluate(spark, dataset, "layout", ev)) <= 6
+    assert jobs_in(spark, lambda: pipelines.evaluate(spark, dataset, "reading_order", ev)) <= 4
+    assert jobs_in(spark, lambda: pipelines.evaluate(spark, dataset, "layout", ev)) <= 6
     pipelines.evaluate(spark, dataset, "table_structure", ev)
     rep = str(tmp_path / "rep")
-    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 1
-    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "table_structure", rep)) <= 2
-    assert _jobs(spark, lambda: pipelines.visualize(spark, dataset, ev, "layout", rep)) <= 4
+    assert jobs_in(spark, lambda: pipelines.visualize(spark, dataset, ev, "markdown_text", rep)) <= 1
+    assert jobs_in(spark, lambda: pipelines.visualize(spark, dataset, ev, "table_structure", rep)) <= 2
+    assert jobs_in(spark, lambda: pipelines.visualize(spark, dataset, ev, "layout", rep)) <= 4
 
 
 @pytest.mark.parametrize("modality", ["markdown_text", "layout"])
@@ -177,12 +165,12 @@ def test_driver_json_rows_equal_spark_json(spark, tmp_path):
     rows = local_frame(spark, _EDGE_STATS, _STATS_DDL)
     spark_dir, driver_dir = str(tmp_path / "spark"), str(tmp_path / "driver")
     rows.coalesce(1).write.mode("overwrite").json(spark_dir)
-    assert _jobs(spark, lambda: pipelines.write_json_rows(rows, driver_dir)) == 0
+    assert jobs_in(spark, lambda: pipelines.write_json_rows(rows, driver_dir)) == 0
     assert _lines(driver_dir) == _lines(spark_dir)
     assert (Path(driver_dir) / "_SUCCESS").read_bytes() == b""
 
     read = []
-    assert _jobs(spark, lambda: read.append(pipelines.read_json_rows(spark, driver_dir, _STATS_DDL))) == 0
+    assert jobs_in(spark, lambda: read.append(pipelines.read_json_rows(spark, driver_dir, _STATS_DDL))) == 0
     want = spark.read.schema(_STATS_DDL).json(spark_dir).collect()
     assert list(map(repr, read[0])) == list(map(repr, want))
 
@@ -191,7 +179,7 @@ def test_visualize_reads_stats_without_a_job(spark, dataset, tmp_path):
     ev = str(tmp_path / "ev")
     pipelines.evaluate(spark, dataset, "reading_order", ev)
     stats = []
-    assert _jobs(spark, lambda: stats.append(pipelines._written_stats(spark, ev, "reading_order"))) == 0
+    assert jobs_in(spark, lambda: stats.append(pipelines._written_stats(spark, ev, "reading_order"))) == 0
     assert set(stats[0]) == {"ard_norm", "w_ard_norm"}
 
 
@@ -264,7 +252,7 @@ def test_read_dataset_schema_equals_inferred(spark, pages100, tmp_path, buckets,
     pipelines.create_dataset(spark, pages100, path, buckets=buckets, perturb=perturb)
     assert (Path(path) / pipelines.SCHEMA_FILE).is_file()
     reads = []
-    assert _jobs(spark, lambda: reads.append(pipelines.read_dataset(spark, path))) == 0
+    assert jobs_in(spark, lambda: reads.append(pipelines.read_dataset(spark, path))) == 0
     recorded, inferred = reads[0], spark.read.parquet(path)
     assert recorded.schema == inferred.schema
     assert ("bucket" in recorded.columns) == (buckets is not None)
@@ -391,7 +379,7 @@ def test_layout_html_from_one_collect(spark, dataset, tmp_path):
     byte for byte, from one job."""
     ds = pipelines.read_dataset(spark, dataset)
     one, two = tmp_path / "one", tmp_path / "two"
-    assert _jobs(spark, lambda: save_layout_html(ds, str(one))) == 1
+    assert jobs_in(spark, lambda: save_layout_html(ds, str(one))) == 1
     save_overlay_html(ds, str(two / "layout_overlay.html"))
     save_inspection_html(ds, str(two / "inspection.html"))
     for name in ("layout_overlay.html", "inspection.html"):
