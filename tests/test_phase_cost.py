@@ -82,7 +82,7 @@ def test_create_caps_rows_per_file(spark, pages100, dataset, tmp_path):
     assert _row_set(capped) == _row_set(dataset)
 
 
-def test_phase_calls_run_fewjobs_in(spark, pages100, dataset, tmp_path):
+def test_phase_calls_run_few_jobs(spark, pages100, dataset, tmp_path):
     """No job re-derives what the call already had: create scans the
     pages once, with no join back to them; evaluate reads the dataset
     once, with its recorded schema, and never reads its own output
