@@ -13,7 +13,11 @@ make value-hashes comparable across engines:
 - every computed integer is cast to bigint on both sides;
 - deterministic tie-breaks (id columns) on every rank/top-k;
 - DuckDB ``regexp_replace`` gets the ``'g'`` flag to match Spark's
-  replace-all semantics.
+  replace-all semantics;
+- ``trim(x, ' ')`` where the Spark side trims: Spark's ``trim`` strips
+  U+0020 only, DuckDB's bare ``trim(x)`` also strips Unicode space
+  separators (NBSP, U+2000-U+200A, U+3000). The oracles of the kernels
+  checked on edge rows in tier-1 spell it out.
 
 Every query has a DuckDB oracle: the dedup family uses engine-portable
 polynomial hashes, TEDS/OTSL queries run over grids with closed-form
@@ -65,6 +69,14 @@ N_BINS = 20
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned over the session's default
+    parallelism. A single-file table scans as one partition, so a
+    CPU-bound kernel downstream would run on one core; the shuffle
+    this adds is tiny next to the kernel."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _dec_sum(col: str):
@@ -984,12 +996,9 @@ def _render_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.datagen.pages import render_documents_stage
     from docling_eval_spark.extraction.stage import extract_stage
 
-    # documents.parquet is one small file → one scan partition; the
-    # render+extract kernels are CPU-bound Python, so spread rows
+    # the render+extract kernels are CPU-bound Python, so spread rows
     # across cores first (tiny shuffle, large Python win)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_t(spark, sf_dir, "documents"))
     pages = render_documents_stage(d)
     ex = extract_stage(pages.select(F.col("doc_id").cast("string").alias("url"), "html"))
     return ex.withColumn("doc_id", F.col("url").cast("long"))
@@ -1024,9 +1033,7 @@ def _q_extract_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.datagen.pages import render_documents_stage
     from docling_eval_spark.extraction.stage import extract_match_stage
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_t(spark, sf_dir, "documents"))
     matched = extract_match_stage(render_documents_stage(d))
     return matched.groupBy("lang").agg(
         F.count("*").alias("docs"),
@@ -2354,12 +2361,9 @@ def _q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization, and the BIGINT score sum bit-for-bit."""
     from docling_eval_spark.operators.training import dsir_topk
 
-    # spread the token-hash pipeline across cores (single-file scan →
-    # 1 partition otherwise)
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang")
-        .repartition(spark.sparkContext.defaultParallelism)
+    # spread the token-hash pipeline across cores
+    d = _spread(
+        _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     )
     return dsir_topk(
         d, "doc_id", "text", F.col("lang") == "en", k=50, buckets=512
@@ -2417,7 +2421,7 @@ def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes both Horner hash levels bit-for-bit; production
     defaults to the xxhash64 token hash in a ~2^43 field (measured
     time-equal on this corpus — window fold dominates — so it gets no
-    separate bench entry; see token_ngram_hash_col's docstring)."""
+    separate bench entry; see token_ngram_hash_table's docstring)."""
     from docling_eval_spark.operators.text_analysis import contamination_check
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2443,7 +2447,7 @@ _SQL_DUP_NGRAM_FRAC = r"""
 WITH toks AS (
   SELECT doc_id,
          list_transform(list_filter(
-           string_split_regex(trim(text), '[ \t\n\r\f\v]+'), x -> x <> ''
+           string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'), x -> x <> ''
          ), x -> lower(x)) AS tk
   FROM documents
 ),
@@ -2491,7 +2495,7 @@ _SQL_CONTAMINATION = r"""
 WITH toks AS (
   SELECT doc_id,
          list_transform(list_filter(
-           string_split_regex(trim(text), '[ \t\n\r\f\v]+'), x -> x <> ''
+           string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'), x -> x <> ''
          ), x -> lower(x)) AS tk
   FROM documents
 ),
@@ -3220,7 +3224,7 @@ def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CDC_CHUNKS = r"""
 WITH norm AS (
-  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g')) AS t
+  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 hs AS (
@@ -3273,11 +3277,8 @@ def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.text_analysis import duplicate_spans
 
     # spread the k-gram hashing kernel + postings write across cores
-    # (single-file scan → 1 partition otherwise)
     return duplicate_spans(
-        _t(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        ),
+        _spread(_t(spark, sf_dir, "documents")),
         "doc_id",
         "text",
         k=20,
@@ -3286,7 +3287,7 @@ def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DUP_SPANS = r"""
 WITH norm AS (
-  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g')) AS t
+  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 hs AS (
@@ -3596,7 +3597,7 @@ def _sql_bpe(k: int = 8) -> str:
              j -> substring(word, CAST(j AS INTEGER), 1)), chr(31))
            || chr(31) || '</w>' AS s
   FROM (SELECT lower(unnest(list_filter(
-          string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+          string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
           x -> x <> ''))) AS word FROM documents)
   GROUP BY word
 )"""
@@ -3667,14 +3668,14 @@ WITH vocab AS (
   FROM (
     SELECT word, count(*) AS cnt
     FROM (SELECT unnest(list_filter(
-            string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+            string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
             x -> x <> '')) AS word FROM documents)
     GROUP BY word ORDER BY cnt DESC, word LIMIT 8
   )
 ),
 docs AS (
   SELECT doc_id AS id,
-         list_filter(string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+         list_filter(string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
                      x -> x <> '') AS tk
   FROM documents
 ),
@@ -3832,7 +3833,7 @@ def _sql_bpe_fertility(k: int = 4) -> str:
         learn_ctes,
         r""", dw AS (
   SELECT lang, lower(unnest(list_filter(
-           string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+           string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
            x -> x <> ''))) AS w
   FROM documents
 ), e0 AS (
@@ -4371,12 +4372,9 @@ def _q_extractor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.datagen.pages import render_documents_stage
     from docling_eval_spark.extraction.stage import extract_ab_stage
 
-    # spread the dual-parse kernels across cores (single-file scan →
-    # 1 partition otherwise; same pattern as extract_match_stats)
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang")
-        .repartition(spark.sparkContext.defaultParallelism)
+    # spread the dual-parse kernels across cores
+    docs = _spread(
+        _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     )
     ab = extract_ab_stage(render_documents_stage(docs))
     return ab.select(
@@ -4655,7 +4653,7 @@ def _q_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DEDUP_CLEAN = r"""
 WITH norm AS (
-  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g')) AS t
+  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 hs AS (
@@ -5182,7 +5180,7 @@ _SQL_CMS = r"""
 WITH tok AS (
   SELECT lower(t) AS tok
   FROM documents,
-       unnest(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+       unnest(list_filter(string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
                           x -> x <> '')) AS u(t)
 ),
 h AS (
@@ -5204,7 +5202,7 @@ sk AS (
 cand AS (
   SELECT DISTINCT lower(t) AS term
   FROM documents,
-       unnest(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\v]+'),
+       unnest(list_filter(string_split_regex(trim(text, ' '), '[ \t\n\r\f\v]+'),
                           x -> x <> '')) AS u(t)
   WHERE doc_id < 20
 ),
@@ -5465,11 +5463,8 @@ def _q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map; micro-nat integer quantization keeps it engine-exact."""
     from docling_eval_spark.operators.text_analysis import char_entropy_col
 
-    # spread the per-char histogram HOFs across cores (single-file
-    # scan → 1 partition otherwise)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread the per-char histogram HOFs across cores
+    d = _spread(_t(spark, sf_dir, "documents"))
     return d.select("doc_id", char_entropy_col("text").alias("entropy"))
 
 
@@ -5552,14 +5547,15 @@ FROM scored JOIN stats ON scored.label = stats.label
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.dedup import minhash_dedup_pairs
 
-    # single-file table → 1 scan partition; spread the CPU-heavy
-    # shingling across cores (tiny shuffle). Repartition AFTER the
-    # twin union so the shingle kernel runs one core-count stage
-    # instead of 2× core-count concatenated partitions.
+    # spread the CPU-heavy shingling across cores AFTER the twin
+    # union, so the shingle kernel runs one core-count stage instead
+    # of 2× core-count concatenated partitions.
     d = _t(spark, sf_dir, "documents")
-    dup = d.select("doc_id", "text").unionByName(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    dup = _spread(
+        d.select("doc_id", "text").unionByName(
+            d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
+        )
+    )
     return minhash_dedup_pairs(dup, "doc_id", threshold=0.7).select(
         "id_l", "id_r", F.round("jaccard", 6).alias("jaccard")
     )
@@ -5576,9 +5572,11 @@ def _q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.web_ops import connected_components
 
     d = _t(spark, sf_dir, "documents")
-    dup = d.select("doc_id", "text").unionByName(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    dup = _spread(
+        d.select("doc_id", "text").unionByName(
+            d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
+        )
+    )
     pairs = minhash_dedup_pairs(dup, "doc_id", threshold=0.7)
     return connected_components(
         pairs, "id_l", "id_r", iterations=6
@@ -5599,11 +5597,13 @@ def _q_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.web_ops import connected_components
 
     d = _t(spark, sf_dir, "documents")
-    dup = d.select("doc_id", "text", "n_chars").unionByName(
-        d.select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text", "n_chars"
+    dup = _spread(
+        d.select("doc_id", "text", "n_chars").unionByName(
+            d.select(
+                (F.col("doc_id") + 100000).alias("doc_id"), "text", "n_chars"
+            )
         )
-    ).repartition(spark.sparkContext.defaultParallelism)
+    )
     pairs = minhash_dedup_pairs(dup, "doc_id", threshold=0.7)
     comp = connected_components(pairs, "id_l", "id_r", iterations=6)
     scores = dup.select(
@@ -5679,9 +5679,7 @@ def _q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_t(spark, sf_dir, "documents"))
     store = minhash_signatures(
         d.select(F.col("doc_id").alias("id"), "text"), "id"
     )
@@ -5706,7 +5704,7 @@ def _sql_minhash_incremental() -> str:
     )
     return rf"""
 WITH norm AS (
-  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g')) AS t
+  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 dup AS (
@@ -5789,7 +5787,7 @@ def _sql_minhash_pairs() -> str:
     )
     return rf"""
 WITH norm AS (
-  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g')) AS t
+  SELECT doc_id AS id, trim(regexp_replace(text, '[ \t\n\r\f\v]+', ' ', 'g'), ' ') AS t
   FROM documents
 ),
 dup AS (
@@ -6262,9 +6260,11 @@ def _q_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.dedup import lsh_quality_eval
 
     d = _t(spark, sf_dir, "documents")
-    dup = d.select("doc_id", "text").unionByName(
-        d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    dup = _spread(
+        d.select("doc_id", "text").unionByName(
+            d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
+        )
+    )
     return lsh_quality_eval(dup, "doc_id", threshold=0.7)
 
 
@@ -6629,10 +6629,7 @@ def _q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_eval_spark.operators.text_analysis import lang_id
 
     # spread the per-doc lang-ID scoring expressions across cores
-    # (single-file scan → 1 partition otherwise)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(_t(spark, sf_dir, "documents"))
     cm = (
         lang_id(d, "text")
         .groupBy("lang", "lang_pred")
@@ -6848,12 +6845,9 @@ def _q_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_near_dup_pairs,
     )
 
-    # spread the render+decode kernels across cores (single-file scan
-    # -> 1-2 partitions otherwise; same pattern as extract_match_stats)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    # spread the render+decode kernels across cores
+    docs = _spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
     base = docs.select(
         F.col("doc_id").alias("id"),
@@ -6920,10 +6914,8 @@ def _q_audio_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         tone_block_wav_stage,
     )
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
     base = docs.select(
         F.col("doc_id").alias("id"),
@@ -6960,10 +6952,8 @@ def _q_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_near_dup_pairs,
     )
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
     # 'v'-prefixed seeds: distinct hash values from the audio twin, so
     # the two modality gates are independent evidence
@@ -7570,14 +7560,8 @@ def _q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch is value-gated, not just the happy path."""
     from docling_eval_spark.operators.dedup import char_shingles, containment_pairs
 
-    # single-file table → few scan partitions; spread the CPU-heavy
-    # shingling across cores first (tiny shuffle — same rationale as
-    # minhash_pairs)
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # spread the CPU-heavy shingling across cores first
+    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     full = char_shingles("text", 5)
     base = d.select(
         "doc_id",
@@ -7807,13 +7791,9 @@ def _q_rouge_l(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer micros (F1 = 2·lcs/(m+n): no floats exist)."""
     from docling_eval_spark.evaluators.text_metrics import rouge_l_stage
 
-    # spread the numpy LCS DP kernel across cores (single-file scan →
-    # 1 partition otherwise; the self family pays a 512×512 DP/pair)
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # spread the numpy LCS DP kernel across cores (the self family
+    # pays a 512×512 DP/pair)
+    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = F.slice(
         F.filter(F.split(F.trim(F.col("text")), _WS), lambda x: x != ""),
         1,

@@ -17,19 +17,21 @@ defaults):
 
 Engine-exactness contract: every cross-partition aggregate AND the
 final score are BIGINTs. Per-(doc, n) multiset overlaps are exact
-integer counts from one explode + count shuffle; each order's
+integer counts from one Arrow-batched kernel; each order's
 precision/recall is quantized to integer micro units
 (round(1e6·tp/h)) BEFORE the per-doc sum, so the average over orders
 is an order-independent integer sum; the final score is emitted in
 micro units via exact integer division (5·sp·sr ≤ 5·36·10¹² fits a
 BIGINT) — no float round() anywhere, because round(x, 6) on a double
-differs between engines exactly on decimal-halfway quotients.
+differs between engines exactly on decimal-halfway quotients. The
+DuckDB oracle computes the same counts with an explode +
+(id, n, gram)-keyed count; tier-1 checks the two value-exact on the
+sf0.001 corpus plus edge rows.
 
-Scale shape: the ONLY shuffle is the (id, n, gram)-keyed count
-aggregate (map-side combinable); everything else is narrow. No UDF,
-no driver collect — at 10¹² pairs the gram explosion is bounded by
-``cap`` chars/side and partial aggregation collapses repeated grams
-before the exchange.
+Scale shape: the gram explosion (bounded by ``cap`` chars/side) never
+leaves the kernel's task; past a round-robin spread of the pair rows,
+the only shuffle is the tiny (id)-keyed micro aggregate. No driver
+collect.
 
 Pure-Python twin ``chrf_py`` replays the identical integer algebra
 for unit-level parity tests.
@@ -87,63 +89,15 @@ def _strip(col: str) -> F.Column:
     return F.substring(F.regexp_replace(F.col(col), _WS, ""), 1, 2000)
 
 
-def _per_order_counts_sql(
-    pairs: DataFrame, id_col: str, hyp_col: str, ref_col: str, max_n: int
-) -> DataFrame:
-    """(id, n, tp, h, r) per pair and order via the pure-expression
-    explode + (id, n, gram)-keyed count shuffle (the DuckDB-oracle
-    shape). A row exists iff either side has at least one order-n
-    gram."""
-    sides = pairs.select(
-        F.col(id_col).alias("__id"), F.lit("h").alias("__side"),
-        _strip(hyp_col).alias("__s"),
-    ).unionAll(
-        pairs.select(
-            F.col(id_col).alias("__id"), F.lit("r").alias("__side"),
-            _strip(ref_col).alias("__s"),
-        )
-    )
-
-    # one row per (pair, side, order): grams for orders longer than
-    # the string are an empty array (sequence() is DESCENDING when
-    # stop < start, hence the explicit guard)
-    by_n = sides.select(
-        "__id", "__side", "__s",
-        F.explode(F.array([F.lit(i) for i in range(1, max_n + 1)])).alias("__n"),
-    ).select(
-        "__id", "__side", "__n",
-        F.explode(
-            F.expr(
-                "CASE WHEN length(__s) >= __n THEN "
-                "transform(sequence(1, length(__s) - __n + 1), "
-                "          i -> substring(__s, i, __n)) "
-                "ELSE array() END"
-            )
-        ).alias("__g"),
-    )
-
-    per_gram = by_n.groupBy("__id", "__n", "__g").agg(
-        F.sum(F.when(F.col("__side") == "h", 1).otherwise(0))
-        .cast("bigint").alias("hc"),
-        F.sum(F.when(F.col("__side") == "r", 1).otherwise(0))
-        .cast("bigint").alias("rc"),
-    )
-
-    return per_gram.groupBy("__id", "__n").agg(
-        F.sum(F.least("hc", "rc")).cast("bigint").alias("tp"),
-        F.sum("hc").cast("bigint").alias("h"),
-        F.sum("rc").cast("bigint").alias("r"),
-    )
-
-
 def _per_order_counts_arrow(
     pairs: DataFrame, id_col: str, hyp_col: str, ref_col: str, max_n: int
 ) -> DataFrame:
     """(id, n, tp, h, r) per pair and order from ONE Arrow-batched
     kernel: exact multiset-overlap integers (Counter min-sum — the
-    identical math the exploded count shuffle performs), emitted only
-    for orders where either side has a gram (h > 0 or r > 0), which
-    reproduces the sql twin's group-existence semantics exactly.
+    identical math the oracle's exploded count shuffle performs),
+    emitted only for orders where either side has a gram (h > 0 or
+    r > 0), which reproduces the oracle's group-existence semantics
+    exactly.
 
     Stripping/capping stays a JVM projection upstream so character
     semantics (code-point substring, regex whitespace class) are the
@@ -225,7 +179,6 @@ def chrf_pairs(
     ref_col: str = "t_r",
     max_n: int = 6,
     beta: float = 2.0,
-    engine: str = "arrow",
 ) -> DataFrame:
     """chrF per (hyp, ref) pair →
     (id, chrf_prec_micro, chrf_rec_micro, chrf_micro) — BIGINT micro
@@ -238,30 +191,18 @@ def chrf_pairs(
     bound). β² must be an integer (β = 1, 2, 3 …) so the final
     division stays in exact integer arithmetic.
 
-    ``engine="arrow"`` (production): normalization stays JVM-side
-    (string semantics are the engine's), then ONE Arrow-batched kernel
-    computes the per-(pair, order) multiset-overlap counts
-    (tp, h, r) — exact BIGINTs, no rounding in Python — so the only
-    shuffle left is the tiny (id)-keyed micro aggregate. The gram
-    explosion (≤ 2·6·2000 rows per pair) never leaves the task, and
-    the rounding/division algebra downstream is the identical Spark
-    expression tree as the "sql" twin, so results are bit-identical.
-    ``engine="sql"``: the pure-expression explode + (id, n, gram)
-    count-shuffle shape the DuckDB oracle mirrors — kept as the
-    oracle-documented reference (differential-tested against arrow);
-    it shuffles every gram occurrence and was measured ~7× slower on
-    the bench corpus.
+    Normalization stays JVM-side (string semantics are the engine's),
+    then ONE Arrow-batched kernel computes the per-(pair, order)
+    multiset-overlap counts (tp, h, r) — exact BIGINTs, no rounding in
+    Python — so the only shuffle left is the tiny (id)-keyed micro
+    aggregate. The gram explosion (≤ 2·6·2000 rows per pair) never
+    leaves the task. Value-exact against the ``chrf_pairs`` DuckDB
+    oracle (the explode + (id, n, gram) count shape) on the sf0.001
+    corpus plus edge rows in tier-1 (``tests/conftest.py::
+    assert_matches_oracle``).
     """
     b2 = beta * beta
-
-    if engine == "arrow":
-        per_n = _per_order_counts_arrow(
-            pairs, id_col, hyp_col, ref_col, max_n
-        )
-    elif engine == "sql":
-        per_n = _per_order_counts_sql(pairs, id_col, hyp_col, ref_col, max_n)
-    else:
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
+    per_n = _per_order_counts_arrow(pairs, id_col, hyp_col, ref_col, max_n)
 
     # n_eff = number of orders with grams on either side: a per_n row
     # only exists when the (id, n) group had at least one gram row

@@ -16,16 +16,16 @@ Per merge iteration:
   the merge decision is inherently sequential, exactly as in
   single-node trainers);
 - the merge is applied to every word with a greedy leftmost
-  non-overlapping fold (a SQL higher-order ``aggregate`` over the
-  symbol list — pure column algebra, no Python), and the word table is
-  re-persisted so plans never nest across iterations.
+  non-overlapping pass over its symbol list (an Arrow kernel), and the
+  word table is re-persisted so plans never nest across iterations.
 
 Symbols are kept as a single ``\\x1f``-separated string column (the
 separator is a control char that the whitespace tokenizer can never
-emit inside a token), which makes the fold reproducible bit-for-bit in
-any engine — the DuckDB oracle replays every iteration including the
-tie-break (freq DESC, then pair lexicographic) and the ``</w>``
-end-of-word marker.
+emit inside a token), which makes the merge reproducible bit-for-bit
+in any engine — the DuckDB oracle replays every iteration as a string
+fold, including the tie-break (freq DESC, then pair lexicographic) and
+the ``</w>`` end-of-word marker. Tier-1 checks ``bpe_train`` and
+``bpe_encode`` against it on the sf0.001 corpus plus edge rows.
 
 Reference scope: DS4SD/docling-eval contains no tokenizer code (its
 tokenization is NLTK word_tokenize inside evaluators, e.g.
@@ -73,82 +73,59 @@ def word_symbol_table(
     return words.withColumn("s", s)
 
 
-def _syms(col):
-    return F.filter(F.split(col, SEP), lambda x: x != "")
-
-
-def _pair_counts(words: DataFrame, engine: str = "arrow") -> DataFrame:
+def _pair_counts(words: DataFrame) -> DataFrame:
     """(l, r, freq): adjacent-pair frequencies over the word table.
 
-    engine="arrow": the per-word pair expansion happens in an Arrow
-    kernel that emits PRE-COMBINED per-batch partial counts (a dict
-    per batch — the map-side combine the explode shape pays a full
-    exchange of raw pairs for); the keyed sum over partials is exact
-    integer arithmetic either way, so the counts are engine-equal.
-    Python's ``s.split(SEP)`` with empties dropped matches the
-    expression twin's ``filter(split(s, SEP), x != '')`` — SEP is a
-    regex-inert control char. engine="sql" keeps the expression shape
-    (the one the DuckDB oracle mirrors)."""
-    if engine == "arrow":
-        import pyspark.sql.types as T
+    The per-word pair expansion happens in an Arrow kernel that emits
+    PRE-COMBINED per-batch partial counts (a dict per batch — the
+    map-side combine an explode shape pays a full exchange of raw
+    pairs for); the keyed sum over partials is exact integer
+    arithmetic. Python's ``s.split(SEP)`` with empties dropped matches
+    the oracle's symbol split — SEP is a regex-inert control char."""
+    import pyspark.sql.types as T
 
-        out_schema = T.StructType(
-            [
-                T.StructField("l", T.StringType(), False),
-                T.StructField("r", T.StringType(), False),
-                T.StructField("freq", T.LongType(), False),
-            ]
-        )
-
-        def kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                acc: dict[tuple[str, str], int] = {}
-                for s, freq in zip(pdf["s"], pdf["freq"]):
-                    sy = [x for x in s.split(SEP) if x != ""]
-                    f = int(freq)
-                    for i in range(len(sy) - 1):
-                        key = (sy[i], sy[i + 1])
-                        acc[key] = acc.get(key, 0) + f
-                if acc:
-                    ks = list(acc.keys())
-                    yield pd.DataFrame(
-                        {
-                            "l": [k[0] for k in ks],
-                            "r": [k[1] for k in ks],
-                            "freq": [acc[k] for k in ks],
-                        }
-                    )
-
-        partial = words.select("s", "freq").mapInPandas(kernel, out_schema)
-        return partial.groupBy("l", "r").agg(
-            F.sum("freq").cast("long").alias("freq")
-        )
-    sy = _syms(F.col("s"))
-    # sequence(1, 0) DESCENDS in Spark — guard single-symbol words
-    idx = F.when(
-        F.size(sy) >= 2, F.sequence(F.lit(1), F.size(sy) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = F.transform(
-        idx,
-        lambda j: F.struct(
-            F.element_at(sy, j).alias("l"),
-            F.element_at(sy, j + 1).alias("r"),
-        ),
+    out_schema = T.StructType(
+        [
+            T.StructField("l", T.StringType(), False),
+            T.StructField("r", T.StringType(), False),
+            T.StructField("freq", T.LongType(), False),
+        ]
     )
-    return (
-        words.select(F.col("freq"), F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("freq").cast("long").alias("freq"))
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            acc: dict[tuple[str, str], int] = {}
+            for s, freq in zip(pdf["s"], pdf["freq"]):
+                sy = [x for x in s.split(SEP) if x != ""]
+                f = int(freq)
+                for i in range(len(sy) - 1):
+                    key = (sy[i], sy[i + 1])
+                    acc[key] = acc.get(key, 0) + f
+            if acc:
+                ks = list(acc.keys())
+                yield pd.DataFrame(
+                    {
+                        "l": [k[0] for k in ks],
+                        "r": [k[1] for k in ks],
+                        "freq": [acc[k] for k in ks],
+                    }
+                )
+
+    partial = words.select("s", "freq").mapInPandas(kernel, out_schema)
+    return partial.groupBy("l", "r").agg(
+        F.sum("freq").cast("long").alias("freq")
     )
 
 
 def _merge_syms(sy: list[str], left: str, right: str) -> list[str]:
     """Greedy leftmost non-overlapping (left, right) merge over a
-    symbol list — the kernel-side twin of the ``_apply_merge``
-    expression fold (a just-merged symbol never re-merges within the
-    pass, exactly like the fold's SEP+left suffix test)."""
+    symbol list — the list form of the oracle's string fold, which
+    appends the right symbol WITHOUT a separator when the accumulator
+    ends in SEP+left. A just-merged symbol never re-merges within the
+    pass, exactly like the fold's SEP+left suffix test (the
+    accumulator then ends in SEP+left+right)."""
     out: list[str] = []
     i, m = 0, len(sy)
     merged = left + right
@@ -162,50 +139,32 @@ def _merge_syms(sy: list[str], left: str, right: str) -> list[str]:
     return out
 
 
-def _apply_merge(
-    words: DataFrame, left: str, right: str, engine: str = "arrow"
-) -> DataFrame:
+def _apply_merge(words: DataFrame, left: str, right: str) -> DataFrame:
     """Greedy leftmost non-overlapping merge of (left, right) in every
-    word's symbol string — the exact single-node BPE apply step.
+    word's symbol string — the exact single-node BPE apply step, run
+    over symbol lists in a kernel (:func:`_merge_syms`). The rebuilt
+    column is ``SEP + SEP.join(syms)``, the same string the oracle's
+    fold builds: a just-merged symbol never re-merges within the
+    iteration."""
+    import pyspark.sql.types as T
 
-    engine="sql": a string fold — append the right symbol WITHOUT a
-    separator when the accumulator ends in SEP+left (symbol boundary
-    guaranteed: symbols never contain SEP), else append SEP+symbol. A
-    just-merged symbol can never re-merge within the iteration because
-    the accumulator then ends in SEP+left+right, not SEP+left.
+    schema = words.schema
 
-    engine="arrow": the same merge over symbol lists in a kernel; the
-    fold's output string is identically ``SEP + SEP.join(syms)``, so
-    the rebuilt column is byte-equal (differential-gated through
-    bpe_train's learned-rule equality)."""
-    if engine == "arrow":
-        import pyspark.sql.types as T
-
-        schema = words.schema
-
-        def kernel(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["s"] = [
-                    SEP
-                    + SEP.join(
-                        _merge_syms(
-                            [x for x in s.split(SEP) if x != ""], left, right
-                        )
+    def kernel(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["s"] = [
+                SEP
+                + SEP.join(
+                    _merge_syms(
+                        [x for x in s.split(SEP) if x != ""], left, right
                     )
-                    for s in pdf["s"]
-                ]
-                yield pdf
+                )
+                for s in pdf["s"]
+            ]
+            yield pdf
 
-        return words.mapInPandas(kernel, schema)
-    folded = F.aggregate(
-        _syms(F.col("s")),
-        F.lit(""),
-        lambda acc, x: F.when(
-            acc.endswith(SEP + left) & (x == F.lit(right)), F.concat(acc, x)
-        ).otherwise(F.concat(acc, F.lit(SEP), x)),
-    )
-    return words.withColumn("s", folded)
+    return words.mapInPandas(kernel, schema)
 
 
 def bpe_train(
@@ -214,7 +173,6 @@ def bpe_train(
     merges: int = 8,
     lowercase: bool = True,
     min_freq: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(rank, left, right, merged, freq): the first ``merges`` BPE
     merge rules learned from the corpus, in order. Ties broken
@@ -245,7 +203,7 @@ def bpe_train(
     try:
         for rank in range(1, merges + 1):
             top = (
-                _pair_counts(words, engine)
+                _pair_counts(words)
                 .orderBy(F.desc("freq"), F.asc("l"), F.asc("r"))
                 .limit(1)
                 .collect()
@@ -254,7 +212,7 @@ def bpe_train(
                 break
             l, r, freq = top[0].l, top[0].r, top[0].freq
             learned.append((rank, l, r, l + r, freq))
-            words = _apply_merge(words, l, r, engine).persist()
+            words = _apply_merge(words, l, r).persist()
             chain.append(words)
     finally:
         for fr in chain:
@@ -272,73 +230,22 @@ def bpe_encode(
     text_col: str = "text",
     lowercase: bool = True,
     out_col: str = "bpe_tokens",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Apply learned merge rules (in rank order) to every document,
     adding ``out_col`` as the array of BPE symbols per whitespace
     token (with ``</w>`` markers), flattened across the document.
 
-    engine="arrow" (production): tokenization + lowercasing stay
-    JVM-side; one Arrow-batched kernel replays the same greedy
-    leftmost non-overlapping merge per rule over symbol LISTS,
-    memoized per DISTINCT word within each batch — the classic encode
-    trick: a batch's vocabulary is far smaller than its token count,
-    so each distinct word pays the rule chain once instead of per
-    occurrence. Bit-identical to the ``engine="sql"`` fold chain
-    (differential-tested, including a left==right rule): Python list
-    iteration is per code point exactly like Spark's ``split('')``,
-    and symbol equality/concatenation are locale-free.
-
-    engine="sql": the expression twin — a chain of per-row folds, one
-    per rule (narrow map, no shuffle), whose per-symbol string-concat
-    lambdas are interpreted; kept as the oracle-documented shape. The
-    rule list is a plan literal either way (tokenizers are a few
-    thousand rules); for very long rule lists on the sql path prefer
-    re-chunking the chain with localCheckpoint at the caller."""
-    if engine == "arrow":
-        return _bpe_encode_arrow(
-            df, merge_rules, text_col, lowercase, out_col
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
-    word_syms = F.transform(
-        tokens_col(text_col) if not lowercase else F.transform(
-            tokens_col(text_col), lambda x: F.lower(x)
-        ),
-        lambda w: F.concat(
-            F.lit(SEP), F.array_join(F.split(w, ""), SEP), F.lit(SEP + EOW)
-        ),
-    )
-    def _merge_lambda(left: str, right: str):
-        def apply_one(s):
-            return F.aggregate(
-                F.filter(F.split(s, SEP), lambda x: x != ""),
-                F.lit(""),
-                lambda acc, x: F.when(
-                    acc.endswith(SEP + left) & (x == F.lit(right)),
-                    F.concat(acc, x),
-                ).otherwise(F.concat(acc, F.lit(SEP), x)),
-            )
-
-        return apply_one
-
-    col = word_syms
-    for left, right in merge_rules:
-        col = F.transform(col, _merge_lambda(left, right))
-    flat = F.flatten(
-        F.transform(col, lambda s: F.filter(F.split(s, SEP), lambda x: x != ""))
-    )
-    return df.withColumn(out_col, flat)
-
-
-def _bpe_encode_arrow(
-    df: DataFrame,
-    merge_rules: list[tuple[str, str]],
-    text_col: str,
-    lowercase: bool,
-    out_col: str,
-) -> DataFrame:
-    """Arrow kernel behind :func:`bpe_encode` (engine="arrow")."""
+    Tokenization + lowercasing stay JVM-side; one Arrow-batched kernel
+    replays the greedy leftmost non-overlapping merge per rule over
+    symbol LISTS, memoized per DISTINCT word within each batch — the
+    classic encode trick: a batch's vocabulary is far smaller than its
+    token count, so each distinct word pays the rule chain once
+    instead of per occurrence. Python list iteration is per code point
+    exactly like Spark's ``split('')``, and symbol equality and
+    concatenation are locale-free. The ``bpe_fertility`` DuckDB oracle
+    replays the encode fold per word; tier-1 checks it value-exact on
+    the sf0.001 corpus plus edge rows. The rule list rides as a
+    closure constant (tokenizers are a few thousand rules)."""
     import pyspark.sql.types as T
 
     toks = tokens_col(text_col)
@@ -346,8 +253,7 @@ def _bpe_encode_arrow(
         toks = F.transform(toks, lambda x: F.lower(x))
     schema = T.StructType(
         list(df.schema.fields)
-        # nullable: NULL text → NULL bpe_tokens (the sql twin's
-        # transform/flatten chain propagates the NULL)
+        # nullable: NULL text → NULL bpe_tokens
         + [T.StructField(out_col, T.ArrayType(T.StringType()), True)]
     )
     cols = list(df.columns)

@@ -12,11 +12,10 @@
   shingle → polynomial base hash over code points mod 2^31−1
   (*engine-portable*: the DuckDB oracle recomputes the identical
   integers) → per-permutation affine rehash (a_i·x+b_i mod p) → min
-  per permutation. The production front half (`shingle_sig_table`)
-  is one Arrow-batched numpy kernel, bit-identical to the
-  ``engine="sql"`` higher-order-function twin (the oracle-documented
-  shape — and ~20× slower interpreted, which is why it is not the
-  default); bands explode to (band_id, band_hash) keys and candidate
+  per permutation. The front half (`shingle_sig_table`) is one
+  Arrow-batched numpy kernel, checked against the DuckDB oracle in
+  tier-1 (an interpreted higher-order-function form measured ~20×
+  slower); bands explode to (band_id, band_hash) keys and candidate
   pairs come from an equi-self-join on the band key.
   No cross join ever materializes: complexity is per-bucket.
 - simhash            — 62-bit SimHash from token hashes; token
@@ -229,44 +228,6 @@ def _perm_coeffs(num_perm: int, seed: int = 1) -> list[tuple[int, int]]:
     return list(zip(a.tolist(), b.tolist()))
 
 
-def minhash_signatures_from_codes(
-    code_df: DataFrame, num_perm: int = 30, seed: int = 1
-) -> DataFrame:
-    """(id, shingles: array<long> in [0,p)) → (id, signature
-    array<long>[num_perm]), JVM-side. Permutation i: min over shingle
-    codes of (a_i·x + b_i) mod p; empty shingle set → all-p signature.
-
-    Shape matters: ONE ``aggregate`` over the base-hash array whose
-    accumulator is the running per-permutation minima (zip_with against
-    a literal coefficient array). The base array is the aggregate's
-    input, so shingling+hashing evaluates once per row — the naive
-    ``array(min(transform(base,...)) × num_perm)`` shape re-evaluated
-    the whole shingle pipeline per permutation (30-50× slower).
-    """
-    coeffs = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _perm_coeffs(num_perm, seed)
-        ]
-    )
-    sig = F.aggregate(
-        F.col("shingles"),
-        F.array_repeat(F.lit(_MERSENNE).cast("long"), num_perm),
-        lambda acc, x: F.zip_with(
-            acc,
-            coeffs,
-            lambda m, c: F.least(
-                m,
-                F.pmod(
-                    F.pmod(x * c["a"], F.lit(_MERSENNE)) + c["b"],
-                    F.lit(_MERSENNE),
-                ),
-            ),
-        ),
-    )
-    return code_df.select("id", sig.alias("signature"))
-
-
 def _codepoints_of_norm(norm: F.Column) -> F.Column:
     """Normalized text → array<long> of per-character code points,
     empty array for empty text (Spark's split("", "") yields [""] whose
@@ -290,53 +251,21 @@ def shingle_sig_table(
     k: int = 5,
     num_perm: int = 30,
     seed: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, shingles: array<long>, signature: array<long>[num_perm]) in
     ONE pass — the minhash front half that every LSH consumer persists.
 
-    engine="arrow" (production): normalization + code-point split stay
-    JVM-side (string semantics are the engine's), then one Arrow-batched
-    numpy kernel does the k-window polynomial hashing, first-occurrence
-    dedup, and the num_perm permutation minima. Bit-identical to the
-    "sql" twin (differential-tested): same fold order ``(acc·B + c) mod
-    p`` per window, same ``((x·a) mod p + b) mod p`` per permutation,
-    all in int64 (p = 2^31−1 keeps every product under 2^63).
-
-    engine="sql": the pure-expression shape the DuckDB oracle mirrors
-    (:func:`_shingle_codes_of_norm` + :func:`minhash_signatures_from_codes`).
-    Kept as the oracle-documented reference; it evaluates Catalyst
-    higher-order-function lambdas interpreted per element — measured
-    ~20× slower than the Arrow kernel on the bench corpus, which is why
-    it is not the default.
+    Normalization + code-point split stay JVM-side (string semantics
+    are the engine's), then one Arrow-batched numpy kernel does the
+    k-window polynomial hashing, first-occurrence dedup, and the
+    num_perm permutation minima: fold ``(acc·B + c) mod p`` per window
+    (the :func:`shingle_code_table` expression), ``((x·a) mod p + b)
+    mod p`` per permutation, all in int64 (p = 2^31−1 keeps every
+    product under 2^63). An empty text has no shingles and an all-p
+    signature. Tier-1 checks it value-exact against the
+    ``minhash_pairs`` and ``minhash_incremental`` DuckDB oracles on the
+    sf0.001 corpus plus edge rows.
     """
-    if engine == "sql":
-        code_df = shingle_code_table(df, id_col, text_col, k)
-        coeffs = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in _perm_coeffs(num_perm, seed)
-            ]
-        )
-        sig = F.aggregate(
-            F.col("shingles"),
-            F.array_repeat(F.lit(_MERSENNE).cast("long"), num_perm),
-            lambda acc, x: F.zip_with(
-                acc,
-                coeffs,
-                lambda m, c: F.least(
-                    m,
-                    F.pmod(
-                        F.pmod(x * c["a"], F.lit(_MERSENNE)) + c["b"],
-                        F.lit(_MERSENNE),
-                    ),
-                ),
-            ),
-        )
-        return code_df.select("id", "shingles", sig.alias("signature"))
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
-
     proj = df.select(
         F.col(id_col).alias("id"),
         _codepoints_of_norm(_norm(text_col)).alias("__codes"),
@@ -392,15 +321,10 @@ def minhash_signatures(
     k: int = 5,
     num_perm: int = 30,
     seed: int = 1,
-    engine: str = "arrow",
 ) -> DataFrame:
-    if engine == "sql":
-        return minhash_signatures_from_codes(
-            shingle_code_table(df, id_col, text_col, k), num_perm, seed
-        )
-    return shingle_sig_table(
-        df, id_col, text_col, k, num_perm, seed, engine
-    ).select("id", "signature")
+    return shingle_sig_table(df, id_col, text_col, k, num_perm, seed).select(
+        "id", "signature"
+    )
 
 
 def _banded(sig_df: DataFrame, bands: int) -> DataFrame:
@@ -490,7 +414,6 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     seed: int = 1,
     estimate_margin: float = 0.2,
-    engine: str = "arrow",
 ) -> DataFrame:
     """End-to-end near-dup pairs: LSH candidates → signature-estimate
     prefilter → exact Jaccard over distinct hashed shingles ≥ threshold
@@ -505,13 +428,11 @@ def minhash_dedup_pairs(
     estimate's σ ≈ 0.085 at s=0.7, so margin 0.2 ≈ 2.4σ — the extra
     miss probability on borderline pairs is <1% on top of the banding
     S-curve. The (shingles, signature) front half comes from ONE
-    persisted :func:`shingle_sig_table` pass (Arrow numpy kernel by
-    default, ``engine="sql"`` for the oracle-shaped expression twin);
-    it feeds four plan branches (at warehouse scale: a materialized
-    intermediate table).
+    persisted :func:`shingle_sig_table` pass; it feeds four plan
+    branches (at warehouse scale: a materialized intermediate table).
     """
     front = shingle_sig_table(
-        df, id_col, text_col, k, num_perm, seed, engine
+        df, id_col, text_col, k, num_perm, seed
     ).persist()
     with_sh = front.select("id", "shingles")
     sigs = front.select("id", "signature")

@@ -85,8 +85,9 @@ def bucket_col(vec_col: Column | str, planes: np.ndarray) -> Column:
     """Sign-bit LSH bucket id (int) for an embedding column; the dot
     products are unrolled into codegen arithmetic per plane.
 
-    This is the expression twin the DuckDB oracle mirrors. Its literal
-    tree (n_planes × dim constants, one interpreted fold per plane) is
+    This is the expression the DuckDB oracle mirrors; production uses
+    it only on the small query side of :func:`lsh_bucketed_topk`. Its
+    literal tree (n_planes × dim constants, one interpreted fold per plane) is
     exactly what :func:`bucket_assign` replaces in production: Catalyst
     analysis+codegen of the unrolled tree dominated the COLD wall of
     every bucketed query (measured 18 s of near_dup_pairs' 22 s cold at
@@ -109,13 +110,13 @@ def bucket_assign(
     vec_col: str,
     planes: np.ndarray,
     out_col: str = "bucket",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Append the sign-bit LSH bucket id of ``vec_col`` as ``out_col``.
 
-    engine="arrow" (production): one Arrow-batched numpy kernel.
-    Bit-identical to the ``bucket_col`` expression twin: the per-plane
-    dot product is an ELEMENTWISE product followed by ``np.cumsum``
+    One Arrow-batched numpy kernel, bit-identical to the
+    :func:`bucket_col` expression and the ``near_dup_pairs`` DuckDB
+    oracle (tier-1: ``test_bucket_assign_arrow_sql_bit_identical``):
+    the per-plane dot product is an ELEMENTWISE product followed by ``np.cumsum``
     along the vector axis (cumsum is a strict left-to-right partial-sum
     loop), i.e. the same ``fold(0.0, acc + x·y)`` float-addition order
     the expression and the DuckDB oracle use — float addition is not
@@ -123,12 +124,8 @@ def bucket_assign(
     reproduce the oracle's signs on knife-edge dots. The only residual
     difference is ``-0.0`` vs ``+0.0`` when a dot is exactly zero
     (fold starts at +0.0), and the sign test ``dot >= 0`` treats both
-    identically. engine="sql" keeps the unrolled expression tree.
+    identically.
     """
-    if engine == "sql":
-        return df.withColumn(out_col, bucket_col(vec_col, planes))
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
     pl = np.asarray(planes, dtype=np.float64)
     n_planes = pl.shape[0]
     schema = T.StructType(
@@ -177,32 +174,25 @@ def cosine_assign(
     a_col: str,
     b_col: str,
     out_col: str = "cosine",
-    engine: str = "arrow",
     keep: list[str] | None = None,
 ) -> DataFrame:
     """Append the cosine of two vector columns as ``out_col``.
 
-    engine="arrow" (production): one Arrow-batched numpy kernel,
-    bit-identical to the :func:`cosine_col` expression twin on every
-    pair: the dot and both squared norms are elementwise products
+    One Arrow-batched numpy kernel, bit-identical to the
+    :func:`cosine_col` expression on every pair
+    (``test_cosine_assign_arrow_sql_bit_identical``): the dot and both squared norms are elementwise products
     folded by ``np.cumsum`` (strict left-to-right partial sums — the
     same float-addition order as the expression's ``aggregate`` and
     the DuckDB oracle), ``sqrt`` and the final division are single
     IEEE ops on identical operands. Zero-norm guard matches: either
-    norm 0 → cosine 0.0. The expression twin's per-element lambdas
-    are interpreted per pair×dimension — the dominant cost of
-    cluster-confined pairwise scans like SemDeDup. engine="sql" keeps
-    the expression.
+    norm 0 → cosine 0.0. The expression's per-element lambdas are
+    interpreted per pair×dimension — the dominant cost of pairwise
+    scans — which is what the kernel replaces.
 
     ``keep``: output columns besides ``out_col`` (default: all input
     columns). Pair scans should keep only the id columns — returning
     the vectors through the Arrow boundary is pure copy cost.
     """
-    if engine == "sql":
-        out = df.withColumn(out_col, cosine_col(a_col, b_col))
-        return out.select(*keep, out_col) if keep is not None else out
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
     cols = keep if keep is not None else list(df.columns)
     schema = T.StructType(
         [df.schema[c] for c in cols]
@@ -464,7 +454,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     max_cluster: int = 100_000,
     snapshot: bool = True,
-    engine: str = "grouped",
     pair_block: int = 2048,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -489,16 +478,17 @@ def semantic_dedup(
     overflow frame (same refusal contract as minhash/near-dup LSH).
     The cluster assignment itself is a narrow map against the
     broadcast centroid matrix (see ``ivf.assign_centroids``); the
-    assigned frame is consumed by FOUR branches (sizes, both pair
-    sides, the final flag join), so ``snapshot=True`` (default) lazily
+    assigned frame is consumed by THREE branches (cluster sizes, the
+    clusters within ``max_cluster``, the oversized rest), so ``snapshot=True`` (default) lazily
     ``localCheckpoint``s it — the corpus is scanned and the kernel run
     ONCE, not once per branch. Disable for pure plan inspection.
 
-    ``engine="grouped"`` (default): per-cluster Arrow pairwise kernel
-    (vectors cross the boundary once per cluster). ``engine="join"``:
-    the centroid-keyed self-join + per-pair cosine shape (kept as the
-    distributed fallback when a single cluster's pairwise matrix
-    exceeds one task's memory — raise ``max_cluster`` only with it)."""
+    The pairwise step is a per-cluster Arrow kernel: each cluster's
+    vectors cross the boundary once, and ``pair_block`` bounds the
+    rows of one block of the cluster's pairwise matrix, so task memory
+    stays O(n · pair_block). Value-exact against the ``semantic_dedup``
+    DuckDB oracle (a centroid-keyed self-join with a per-pair cosine)
+    on the sf0.001 corpus in tier-1."""
     from docling_eval_spark.operators.ivf import assign_centroids
 
     a = assign_centroids(corpus, centroids, id_col, vec_col)
@@ -507,115 +497,92 @@ def semantic_dedup(
     sizes = a.groupBy("centroid").agg(F.count("*").alias("__n"))
     ok = sizes.filter(F.col("__n") <= max_cluster).select("centroid")
     joinable = a.join(F.broadcast(ok), "centroid")
-    if engine == "grouped":
-        # per-cluster pairwise kernel: each cluster's vectors cross
-        # the Arrow boundary ONCE (n rows), never once per pair — the
-        # self-join shape materialized every (a_vec, b_vec) pair row
-        # (~n²/2 vector copies per cluster through the exchange and
-        # the Python boundary; measured 5.2s -> 1.1s on the bench
-        # corpus). Work and memory per task are bounded by
-        # ``max_cluster`` (set it from executor memory — the SemDeDup
-        # paper's own regime: pick k so clusters fit); the shuffle is
-        # the same single centroid-keyed exchange the join path paid
-        # per side. Float order is replicated exactly: dots and
-        # squared norms accumulate dimension-sequentially (the same
-        # left-to-right IEEE adds as cosine_assign's cumsum and the
-        # SQL twin's aggregate fold), sqrt and the division are
-        # single ops on identical operands, zero-norm guard included
-        # — differential-tested against the join path.
-        id_field = joinable.schema[id_col]
-        cent_field = joinable.schema["centroid"]
-        out_schema = T.StructType(
+    # per-cluster pairwise kernel: each cluster's vectors cross the
+    # Arrow boundary ONCE (n rows), never once per pair — a self-join
+    # shape materializes every (a_vec, b_vec) pair row (~n²/2 vector
+    # copies per cluster through the exchange and the Python
+    # boundary; measured 5.2s -> 1.1s on the bench corpus). Work and
+    # memory per task are bounded by ``max_cluster`` (set it from
+    # executor memory — the SemDeDup paper's own regime: pick k so
+    # clusters fit); the shuffle is one centroid-keyed exchange.
+    # Float order is replicated exactly: dots and squared norms
+    # accumulate dimension-sequentially (the same left-to-right IEEE
+    # adds as cosine_assign's cumsum and the oracle's list fold),
+    # sqrt and the division are single ops on identical operands,
+    # zero-norm guard included.
+    id_field = joinable.schema[id_col]
+    cent_field = joinable.schema["centroid"]
+    out_schema = T.StructType(
+        [
+            id_field,
+            cent_field,
+            T.StructField("is_dup", T.BooleanType(), False),
+        ]
+    )
+    thr = threshold
+
+    def cluster_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col, kind="mergesort")
+        vecs = list(pdf[vec_col])
+        n = len(vecs)
+        dim = next(
+            (len(v) for v in vecs if v is not None), 1
+        )
+        m = np.stack(
             [
-                id_field,
-                cent_field,
-                T.StructField("is_dup", T.BooleanType(), False),
+                np.zeros(dim)
+                if v is None
+                else np.asarray(v, np.float64)
+                for v in vecs
             ]
         )
-        thr = threshold
-
-        def cluster_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            vecs = list(pdf[vec_col])
-            n = len(vecs)
-            dim = next(
-                (len(v) for v in vecs if v is not None), 1
-            )
-            m = np.stack(
-                [
-                    np.zeros(dim)
-                    if v is None
-                    else np.asarray(v, np.float64)
-                    for v in vecs
-                ]
-            )
-            # per-row squared norms, dimension-sequential (== the
-            # cumsum fold order of cosine_assign / the SQL twin)
-            nsq = np.zeros(n, dtype=np.float64)
-            for k in range(dim):
-                nsq += m[:, k] * m[:, k]
-            nrm = np.sqrt(nsq)
-            # b is a dup iff SOME strictly-lower-id a is within τ.
-            # Process candidate rows (the "b" side) in blocks so task
-            # memory stays O(n · block) however large the cluster —
-            # the total pairwise work is inherent, the n×n matrix is
-            # not.
-            is_dup = np.zeros(n, dtype=bool)
-            block = max(1, pair_block)
-            for b0 in range(1, n, block):
-                b1 = min(b0 + block, n)
-                sub = np.zeros((b1 - b0, n), dtype=np.float64)
-                for k in range(dim):  # dim-sequential accumulation
-                    sub += np.multiply.outer(m[b0:b1, k], m[:, k])
-                denom = np.multiply.outer(nrm[b0:b1], nrm)
-                okm = denom > 0
-                cos = np.zeros_like(sub)
-                cos[okm] = sub[okm] / denom[okm]
-                hit = cos >= thr
-                # only pairs with a-index < b-index count
-                for i in range(b1 - b0):
-                    if hit[i, : b0 + i].any():
-                        is_dup[b0 + i] = True
-            return pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "centroid": pdf["centroid"].to_numpy(),
-                    "is_dup": is_dup,
-                }
-            )
-
-        flagged = joinable.select(id_col, "centroid", vec_col).groupBy(
-            "centroid"
-        ).applyInPandas(cluster_kernel, out_schema)
-        oversized = (
-            a.join(
-                F.broadcast(
-                    sizes.filter(F.col("__n") > max_cluster).select(
-                        "centroid"
-                    )
-                ),
-                "centroid",
-            )
-            .select(id_col, "centroid", F.lit(False).alias("is_dup"))
+        # per-row squared norms, dimension-sequential (== the
+        # cumsum fold order of cosine_assign / the oracle)
+        nsq = np.zeros(n, dtype=np.float64)
+        for k in range(dim):
+            nsq += m[:, k] * m[:, k]
+        nrm = np.sqrt(nsq)
+        # b is a dup iff SOME strictly-lower-id a is within τ.
+        # Process candidate rows (the "b" side) in blocks so task
+        # memory stays O(n · block) however large the cluster —
+        # the total pairwise work is inherent, the n×n matrix is
+        # not.
+        is_dup = np.zeros(n, dtype=bool)
+        block = max(1, pair_block)
+        for b0 in range(1, n, block):
+            b1 = min(b0 + block, n)
+            sub = np.zeros((b1 - b0, n), dtype=np.float64)
+            for k in range(dim):  # dim-sequential accumulation
+                sub += np.multiply.outer(m[b0:b1, k], m[:, k])
+            denom = np.multiply.outer(nrm[b0:b1], nrm)
+            okm = denom > 0
+            cos = np.zeros_like(sub)
+            cos[okm] = sub[okm] / denom[okm]
+            hit = cos >= thr
+            # only pairs with a-index < b-index count
+            for i in range(b1 - b0):
+                if hit[i, : b0 + i].any():
+                    is_dup[b0 + i] = True
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col].to_numpy(),
+                "centroid": pdf["centroid"].to_numpy(),
+                "is_dup": is_dup,
+            }
         )
-        return flagged.unionByName(oversized)
-    if engine != "join":
-        raise ValueError(f"unknown engine {engine!r} (want 'grouped' or 'join')")
-    l = joinable.select(
-        "centroid", F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec")
+
+    flagged = joinable.select(id_col, "centroid", vec_col).groupBy(
+        "centroid"
+    ).applyInPandas(cluster_kernel, out_schema)
+    oversized = (
+        a.join(
+            F.broadcast(
+                sizes.filter(F.col("__n") > max_cluster).select(
+                    "centroid"
+                )
+            ),
+            "centroid",
+        )
+        .select(id_col, "centroid", F.lit(False).alias("is_dup"))
     )
-    r = joinable.select(
-        "centroid", F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec")
-    )
-    cand = l.join(r, "centroid").filter(F.col("a_id") < F.col("b_id"))
-    dup_ids = (
-        cosine_assign(cand, "a_vec", "b_vec", keep=["b_id"])
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("b_id").alias(id_col))
-        .distinct()
-    )
-    return a.select(id_col, "centroid").join(
-        dup_ids.withColumn("is_dup", F.lit(True)), id_col, "left"
-    ).select(
-        id_col, "centroid", F.coalesce("is_dup", F.lit(False)).alias("is_dup")
-    )
+    return flagged.unionByName(oversized)

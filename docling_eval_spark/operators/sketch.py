@@ -50,7 +50,6 @@ def cms_build(
     depth: int = 3,
     width: int = 1024,
     mod: int = _FP_MOD,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Build the sketch over lowercased whitespace tokens: returns
     ``(d, idx, c)`` with at most ``depth * width`` rows.
@@ -60,16 +59,17 @@ def cms_build(
     depth*width, so the partial agg saturates map-side and the exchange
     carries counters, never tokens.
 
-    ``engine="arrow"`` (production): the per-token Horner hash runs in
-    an Arrow kernel that first COUNTS each batch's distinct tokens
-    (Zipf: a batch's vocabulary is far smaller than its token count),
-    hashes each distinct token once, and emits pre-combined
-    (d, idx, c) partials — identical integer mod-p algebra to the
-    expression, exact counts, so the sketch is engine-equal
-    (differential-tested). The expression shape the DuckDB oracle
-    mirrors stays as ``engine="sql"``; its per-code-point lambdas are
-    interpreted per token occurrence — measured 3× the kernel on the
-    bench corpus."""
+    The per-token Horner hash runs in an Arrow kernel that first
+    COUNTS each batch's distinct tokens (Zipf: a batch's vocabulary is
+    far smaller than its token count), hashes each distinct token
+    once, and emits pre-combined (d, idx, c) partials — the same
+    integer mod-p algebra as :func:`cms_estimate`'s expression and
+    exact counts. The ``cms_heavy_hitters`` DuckDB oracle replays every
+    counter cell; tier-1 checks it value-exact on the sf0.001 corpus
+    plus edge rows."""
+    import pandas as pd
+    import pyspark.sql.types as T
+
     if not 1 <= depth <= MAX_DEPTH:
         raise ValueError(f"depth must be 1..{MAX_DEPTH}, got {depth}")
     toks = df.select(
@@ -77,72 +77,46 @@ def cms_build(
             F.transform(tokens_col(text_col), lambda x: F.lower(x))
         ).alias("tok")
     )
-    if engine == "arrow":
-        import pandas as pd
-        import pyspark.sql.types as T
-
-        out_schema = T.StructType(
-            [
-                T.StructField("d", T.IntegerType(), False),
-                T.StructField("idx", T.LongType(), False),
-                T.StructField("c", T.LongType(), False),
-            ]
-        )
-        a_row = CMS_A[:depth]
-        b_row = CMS_B[:depth]
-        base = _FP_BASE
-
-        def kernel(batches):
-            from collections import Counter
-
-            for pdf in batches:
-                tok_counts = Counter(
-                    t if isinstance(t, str) else "" for t in pdf["tok"]
-                )
-                acc: dict[tuple[int, int], int] = {}
-                for tok, n in tok_counts.items():
-                    h = 0
-                    for ch in tok:
-                        h = (h * base + ord(ch)) % mod
-                    for d in range(depth):
-                        idx = ((h * a_row[d] + b_row[d]) % mod) % width
-                        key = (d, idx)
-                        acc[key] = acc.get(key, 0) + n
-                if acc:
-                    ks = sorted(acc)
-                    yield pd.DataFrame(
-                        {
-                            "d": [k[0] for k in ks],
-                            "idx": [k[1] for k in ks],
-                            "c": [acc[k] for k in ks],
-                        }
-                    )
-
-        partial = toks.mapInPandas(kernel, out_schema)
-        return partial.groupBy("d", "idx").agg(
-            F.sum("c").cast("long").alias("c")
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
-    h = portable_char_hash(F.col("tok"), mod)
-    cells = toks.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cms_idx(h, d, width, mod).alias("idx"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("cell")
+    out_schema = T.StructType(
+        [
+            T.StructField("d", T.IntegerType(), False),
+            T.StructField("idx", T.LongType(), False),
+            T.StructField("c", T.LongType(), False),
+        ]
     )
-    return (
-        cells.groupBy(
-            F.col("cell.d").alias("d"), F.col("cell.idx").alias("idx")
-        )
-        .agg(F.count("*").alias("c"))
+    a_row = CMS_A[:depth]
+    b_row = CMS_B[:depth]
+    base = _FP_BASE
+
+    def kernel(batches):
+        from collections import Counter
+
+        for pdf in batches:
+            tok_counts = Counter(
+                t if isinstance(t, str) else "" for t in pdf["tok"]
+            )
+            acc: dict[tuple[int, int], int] = {}
+            for tok, n in tok_counts.items():
+                h = 0
+                for ch in tok:
+                    h = (h * base + ord(ch)) % mod
+                for d in range(depth):
+                    idx = ((h * a_row[d] + b_row[d]) % mod) % width
+                    key = (d, idx)
+                    acc[key] = acc.get(key, 0) + n
+            if acc:
+                ks = sorted(acc)
+                yield pd.DataFrame(
+                    {
+                        "d": [k[0] for k in ks],
+                        "idx": [k[1] for k in ks],
+                        "c": [acc[k] for k in ks],
+                    }
+                )
+
+    partial = toks.mapInPandas(kernel, out_schema)
+    return partial.groupBy("d", "idx").agg(
+        F.sum("c").cast("long").alias("c")
     )
 
 

@@ -275,9 +275,9 @@ def winnow_fingerprints(
 
 def _cdc_ends_arrow(base: DataFrame, k: int, divisor: int) -> DataFrame:
     """(id, __t) → (id, __t, __ends): chunk-boundary positions from a
-    vectorized rolling-hash kernel — the exact integer algebra of the
-    ``ends_of`` expression (Horner fold mod 2³¹−1 per k-window, cut at
-    h % divisor == 0 shifted by k−1, final boundary n appended)."""
+    vectorized rolling-hash kernel: Horner fold mod 2³¹−1 per
+    k-window, cut at h % divisor == 0 shifted by k−1 while it is below
+    n, final boundary n appended."""
     import numpy as np
     import pandas as pd
     import pyspark.sql.types as T
@@ -331,7 +331,6 @@ def cdc_chunk_table(
     text_col: str = "text",
     k: int = 16,
     divisor: int = 64,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Content-defined chunking (Muthitacharoen et al., LBFS SOSP
     2001 — the Rabin/Gear/FastCDC family): cut each document where
@@ -350,63 +349,20 @@ def cdc_chunk_table(
     chunk. Zero shuffle — a narrow map any downstream
     groupBy(chunk_md5) dedup can consume.
 
-    ``engine="arrow"`` (production): the boundary scan (every window's
-    rolling hash) runs in one numpy kernel — k vectorized
-    multiply-add-mod passes per document instead of length×k
-    interpreted HOF lambdas (the dominant cost: ~160M lambda evals on
-    the bench corpus, measured 3.5s → 1.1s). Integer arithmetic is
-    identical (same Horner fold, same int64 mod-p algebra as the
-    minhash kernel, differential-tested), and chunk slicing + md5
-    stay JVM expressions, so digests are bit-identical.
-    ``engine="sql"``: the pure higher-order-function shape the DuckDB
-    oracle recomputes bit-for-bit — kept as the oracle-documented
-    reference."""
+    The boundary scan (every window's rolling hash) runs in one numpy
+    kernel (:func:`_cdc_ends_arrow`) — k vectorized multiply-add-mod
+    passes per document instead of length×k interpreted HOF lambdas
+    (measured 3.5s → 1.1s on the bench corpus). Chunk slicing + md5
+    stay JVM expressions. Tier-1 checks it value-exact against the
+    ``cdc_chunks`` DuckDB oracle, which recomputes every boundary and
+    digest with the same integer rolling hash, on the sf0.001 corpus
+    plus edge rows."""
     t = F.col(text_col)
     norm_expr = F.trim(F.regexp_replace(t, _WS, " "))
-
-    def ends_of(nrm: Column) -> Column:
-        n = F.length(nrm)
-        codes = F.transform(
-            F.split(nrm, ""), lambda ch: F.ascii(ch).cast("long")
-        )
-
-        def over_codes(cds: Column) -> Column:
-            idxs = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-                F.sequence(F.lit(1), F.lit(1))
-            )
-            hs = F.transform(idxs, lambda i: horner_fold(F.slice(cds, i, k)))
-
-            def over_hashes(h: Column) -> Column:
-                cuts = F.filter(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(h)),
-                        lambda j: F.when(
-                            F.element_at(h, j) % divisor == 0,
-                            j + F.lit(k - 1),
-                        ),
-                    ),
-                    lambda x: x.isNotNull(),
-                )
-                # cuts are strictly increasing and < n after the
-                # filter, so appending n yields a duplicate-free,
-                # ordered boundary list without a distinct pass
-                return F.concat(
-                    F.filter(cuts, lambda e: e < n), F.array(n)
-                )
-
-            return let_col(hs, over_hashes)
-
-        return let_col(codes, over_codes)
-
     base = df.select(
         F.col(id_col).alias("id"), norm_expr.alias("__t")
     ).filter(F.length("__t") > 0)
-    if engine == "arrow":
-        withe = _cdc_ends_arrow(base, k, divisor)
-    elif engine == "sql":
-        withe = base.withColumn("__ends", ends_of(F.col("__t")))
-    else:
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
+    withe = _cdc_ends_arrow(base, k, divisor)
     spans = withe.select(
         "id",
         "__t",
@@ -464,92 +420,70 @@ def kgram_hash_positions(
     id_col: str,
     text_col: str = "text",
     k: int = 20,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, pos, h): every k-char shingle hash of the normalized text
     with its 0-based character position. Docs shorter than k emit
     nothing (no full k-gram exists). Same Karp-Rabin arithmetic as
     ``rolling_fingerprint_col`` so any engine can recompute it.
 
-    Default path is an Arrow-batched numpy kernel — a vectorized
-    k-pass Horner fold over a sliding-window view, O(n·k) in numpy
-    time vs the interpreted per-shingle HOF fold — producing
-    BIT-IDENTICAL hashes to the SQL path (same mod-2^31-1 arithmetic,
-    same code points), so the DuckDB oracle stays value-exact without
-    a portability flag. ``use_arrow=False`` keeps the pure-SQL-HOF
-    form (engine-portability witness; pytest asserts parity)."""
-    if use_arrow:
-        import re as _re
-        from collections.abc import Iterator as _It
+    An Arrow-batched numpy kernel — a vectorized k-pass Horner fold
+    over a sliding-window view, O(n·k) in numpy time vs an interpreted
+    per-shingle HOF fold — with the same mod-2^31-1 arithmetic over
+    the same code points as the ``duplicate_spans`` DuckDB oracle, so
+    the oracle stays value-exact without a portability flag. Tier-1
+    checks it against that oracle on the sf0.001 corpus plus edge rows
+    (NBSP, non-BMP, whitespace runs)."""
+    import re as _re
+    from collections.abc import Iterator as _It
 
-        import pandas as pd
-        import pyspark.sql.types as T
+    import pandas as pd
+    import pyspark.sql.types as T
 
-        ws_re = _re.compile(r"[ \t\n\r\f\v]+")
-        out_schema = T.StructType(
-            [
-                T.StructField("id", df.schema[id_col].dataType),
-                T.StructField("pos", T.IntegerType()),
-                T.StructField("h", T.LongType()),
-            ]
-        )
-
-        def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-            import numpy as np
-            from numpy.lib.stride_tricks import sliding_window_view
-
-            for pdf in batches:
-                ids, poss, hss = [], [], []
-                for did, t in zip(pdf[id_col], pdf[text_col]):
-                    # strip ASCII space ONLY: Spark F.trim / DuckDB
-                    # trim() leave NBSP etc. in place — Python's bare
-                    # .strip() would shift every position on such docs
-                    norm = ws_re.sub(" ", t or "").strip(" ")
-                    n = len(norm)
-                    if n < k:
-                        continue
-                    codes = np.frombuffer(
-                        norm.encode("utf-32-le"), dtype="<u4"
-                    ).astype(np.int64)
-                    win = sliding_window_view(codes, k)
-                    acc = np.zeros(n - k + 1, dtype=np.int64)
-                    for j in range(k):
-                        acc = (acc * _FP_BASE + win[:, j]) % _FP_MOD
-                    ids.append(np.full(n - k + 1, did))
-                    poss.append(np.arange(n - k + 1, dtype=np.int32))
-                    hss.append(acc)
-                if ids:
-                    yield pd.DataFrame(
-                        {
-                            "id": np.concatenate(ids),
-                            "pos": np.concatenate(poss),
-                            "h": np.concatenate(hss),
-                        }
-                    )
-                else:
-                    yield pd.DataFrame({"id": [], "pos": [], "h": []})
-
-        return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
-
-    t = F.trim(F.regexp_replace(F.col(text_col), _WS, " "))
-
-    def over_norm(nrm: Column) -> Column:
-        n = F.length(nrm)
-        codes = F.transform(F.split(nrm, ""), lambda ch: F.ascii(ch).cast("long"))
-
-        def over_codes(cds: Column) -> Column:
-            idxs = F.sequence(F.lit(1), n - (k - 1))
-            shingle_hash = lambda i: horner_fold(F.slice(cds, i, k))  # noqa: E731
-            return F.transform(idxs, shingle_hash)
-
-        return let_col(codes, over_codes)
-
-    hashes = F.when(
-        F.length(t) >= k, let_col(t, over_norm)
-    ).otherwise(F.array().cast("array<long>"))
-    return df.select(
-        F.col(id_col).alias("id"), F.posexplode(hashes).alias("pos", "h")
+    ws_re = _re.compile(r"[ \t\n\r\f\v]+")
+    out_schema = T.StructType(
+        [
+            T.StructField("id", df.schema[id_col].dataType),
+            T.StructField("pos", T.IntegerType()),
+            T.StructField("h", T.LongType()),
+        ]
     )
+
+    def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        import numpy as np
+        from numpy.lib.stride_tricks import sliding_window_view
+
+        for pdf in batches:
+            ids, poss, hss = [], [], []
+            for did, t in zip(pdf[id_col], pdf[text_col]):
+                # strip ASCII space ONLY: Spark F.trim / DuckDB
+                # trim(t, ' ') leave NBSP etc. in place — Python's
+                # bare .strip() would shift every position on such docs
+                norm = ws_re.sub(" ", t or "").strip(" ")
+                n = len(norm)
+                if n < k:
+                    continue
+                codes = np.frombuffer(
+                    norm.encode("utf-32-le"), dtype="<u4"
+                ).astype(np.int64)
+                win = sliding_window_view(codes, k)
+                acc = np.zeros(n - k + 1, dtype=np.int64)
+                for j in range(k):
+                    acc = (acc * _FP_BASE + win[:, j]) % _FP_MOD
+                ids.append(np.full(n - k + 1, did))
+                poss.append(np.arange(n - k + 1, dtype=np.int32))
+                hss.append(acc)
+            if ids:
+                yield pd.DataFrame(
+                    {
+                        "id": np.concatenate(ids),
+                        "pos": np.concatenate(poss),
+                        "h": np.concatenate(hss),
+                    }
+                )
+            else:
+                yield pd.DataFrame({"id": [], "pos": [], "h": []})
+
+    return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
 
 
 def tfidf_top_terms(
@@ -618,12 +552,18 @@ def tfidf_top_terms(
     )
 
 
-def token_ngram_hash_col(
-    text_col: str, n: int = 8, portable: bool = False
-) -> Column:
-    """Array of hashes of each ``n``-token window of the lowercased
-    whitespace tokens (with multiplicity, in order). Docs shorter
-    than ``n`` tokens have no windows (empty array).
+def token_ngram_hash_table(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    n: int = 8,
+    portable: bool = False,
+) -> DataFrame:
+    """(id, n_grams, grams: array<long>): the hashes of each
+    ``n``-token window of the lowercased whitespace tokens (with
+    multiplicity, in order), and the window count
+    ``max(0, tokens − n + 1)``. Docs shorter than ``n`` tokens, and
+    NULL text, have no windows (``n_grams`` 0, empty ``grams``).
 
     Two token-hash modes (the simhash precedent): the PRODUCTION
     default hashes each token with JVM ``xxhash64`` (one codegen'd
@@ -640,71 +580,19 @@ def token_ngram_hash_col(
     on the ~1 KB synthetic docs the two modes TIME equal (window fold
     + explode dominate; alternating 3-rep medians 4.8 s vs 5.3 s at
     sf0.1/8 cores) — the xxhash64 path pays off on long documents
-    where per-char folding is the O(chars) term."""
-    mod = _FP_MOD if portable else _NGRAM_PROD_MOD
-    toks = F.transform(tokens_col(text_col), lambda x: F.lower(x))
+    where per-char folding is the O(chars) term.
 
-    def over_tok_hashes(th: Column) -> Column:
-        sz = F.size(th)
-        idxs = F.when(
-            sz >= n, F.sequence(F.lit(1), sz - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        window_hash = lambda i: horner_fold(F.slice(th, i, n), mod)  # noqa: E731
-        return F.transform(idxs, window_hash)
-
-    if portable:
-        # single-arg lambda on purpose: F.transform feeds a two-arg
-        # callable (element, index) — the index would land in `mod`
-        tok_hashes = F.transform(toks, lambda t: portable_char_hash(t))
-    else:
-        # one JVM hash per token, folded into the LARGE prime field
-        # (not the 31-bit portable one — no cross-engine constraint
-        # on this path, and the bigger field keeps gram collisions
-        # negligible)
-        tok_hashes = F.transform(
-            toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_NGRAM_PROD_MOD))
-        )
-    return let_col(tok_hashes, over_tok_hashes)
-
-
-def token_ngram_hash_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 8,
-    portable: bool = False,
-    engine: str = "arrow",
-) -> DataFrame:
-    """(id, n_grams, grams: array<long>) — :func:`token_ngram_hash_col`
-    as a table, with the window count (``max(0, tokens − n + 1)``)
-    computed alongside so no caller re-evaluates the hash pipeline to
-    count windows.
-
-    engine="arrow" (production): tokenization + lowercasing (and on
-    the prod path the per-token ``xxhash64``) stay JVM-side — string
-    semantics are the engine's — then one Arrow-batched numpy kernel
-    does the portable per-code-point token folds and the n-token
-    window Horner folds. Bit-identical to the ``engine="sql"``
-    expression twin (differential-tested): same ``(acc·B + x) mod m``
-    fold order, int64 throughout (the ~2⁴³ prod field keeps
-    ``(m−1)·(B+1) < 2⁶³`` exactly as the expression path does). The
-    portable char fold consumes Python code points, which match
-    Spark's ``split('')``/``ascii`` per-code-point semantics
-    (differential-tested through non-BMP rows). The sql twin's
-    interpreted per-element HOF lambdas are what the kernel replaces —
-    the same cold-analysis + warm-interpretation cost profile measured
-    on the minhash front half."""
-    if engine == "sql":
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.greatest(
-                F.size(tokens_col(text_col)) - (n - 1), F.lit(0)
-            ).alias("n_grams"),
-            token_ngram_hash_col(text_col, n, portable).alias("grams"),
-        )
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
-
+    Tokenization + lowercasing (and on the prod path the per-token
+    ``xxhash64``) stay JVM-side — string semantics are the engine's —
+    then one Arrow-batched numpy kernel does the portable
+    per-code-point token folds and the n-token window Horner folds,
+    ``(acc·B + x) mod m`` in int64 throughout (the ~2⁴³ prod field
+    keeps ``(m−1)·(B+1) < 2⁶³``). The portable char fold consumes
+    Python code points, which match Spark's ``split('')``/``ascii``
+    per-code-point semantics. Tier-1 checks the portable path against
+    the ``dup_ngram_frac`` DuckDB oracle on the sf0.001 corpus plus
+    edge rows (non-BMP included), and the prod path's window fold
+    against a Python fold over Spark's ``xxhash64`` token hashes."""
     from collections.abc import Iterator as _It
 
     import numpy as np
@@ -749,9 +637,7 @@ def token_ngram_hash_table(
         return h
 
     def kernel(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        # NULL text → NULL tokens array → same (0, []) as a short doc:
-        # the twin's window-index `when` chain bottoms out on an
-        # empty-array LITERAL, so a NULL input still emits [] grams
+        # NULL text → NULL tokens array → same (0, []) as a short doc
         empty = np.zeros(0, dtype=np.int64)
         for pdf in batches:
             rows = list(pdf["__in"])
@@ -798,7 +684,6 @@ def contamination_check(
     n: int = 8,
     broadcast_bench: bool = True,
     portable: bool = False,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, n_grams, n_hits): per training document, how many of its
     ``n``-token windows appear anywhere in the benchmark set — the
@@ -824,7 +709,6 @@ def contamination_check(
             "__bt",
             n,
             portable,
-            engine,
         )
         .select(F.explode("grams").alias("g"))
         .distinct()
@@ -833,7 +717,7 @@ def contamination_check(
     if broadcast_bench:
         bench_set = F.broadcast(bench_set)
     rows = token_ngram_hash_table(
-        docs, id_col, text_col, n, portable, engine
+        docs, id_col, text_col, n, portable
     ).select("id", "n_grams", F.explode_outer("grams").alias("g"))
     return (
         rows.join(bench_set, "g", "left")
@@ -851,7 +735,6 @@ def dup_ngram_stats(
     text_col: str = "text",
     n: int = 8,
     portable: bool = False,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, n_grams, n_dup, dup_micro): per document, how many of its
     ``n``-token windows also occur in at least one OTHER document —
@@ -864,7 +747,7 @@ def dup_ngram_stats(
     not. ``dup_micro`` = ``1e6 · n_dup / n_grams`` integer-division
     (0 for docs shorter than ``n`` tokens).
 
-    Hash modes mirror :func:`token_ngram_hash_col` (the simhash /
+    Hash modes mirror :func:`token_ngram_hash_table` (the simhash /
     contamination precedent): prod = per-token ``xxhash64`` folded
     into the ~2⁴³ prime field; ``portable=True`` = the per-code-point
     polynomial the DuckDB oracle replays bit-for-bit.
@@ -880,7 +763,7 @@ def dup_ngram_stats(
     # docs with < n tokens get a single -1 sentinel window (hashes
     # live in [0, mod)) so the equi-joins below never see a NULL key
     # and every input id survives to the output with n_grams = 0
-    tbl = token_ngram_hash_table(docs, id_col, text_col, n, portable, engine)
+    tbl = token_ngram_hash_table(docs, id_col, text_col, n, portable)
     arr = F.when(F.size("grams") > 0, F.col("grams")).otherwise(
         F.array(F.lit(-1).cast("long"))
     )

@@ -380,7 +380,6 @@ def mlm_mask(
     vocab: list[str],
     text_col: str = "text",
     rate_pct: int = 15,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, n_tokens, n_selected, masked_text, labels): BERT-style
     masked-LM data prep (Devlin et al. 2018 §3.1, public) — select
@@ -395,108 +394,22 @@ def mlm_mask(
     vocab index from ``(h div 1000) mod |vocab|`` — so retried tasks
     regenerate byte-identical rows and the DuckDB oracle replays every
     choice. The vocab (a tokenizer's, thousands of entries) rides as a
-    plan literal (sql) or a closure constant (arrow); the operator is
-    a zero-shuffle narrow map either way.
+    closure constant; the operator is a zero-shuffle narrow map.
 
-    engine="arrow" (production): tokenization stays JVM-side; the
-    position-hash fold is vectorized by digit count (the ``"{id}:"``
-    prefix hash is one scalar per doc, positions sharing a digit count
-    fold their decimal digits in d numpy steps) and every decision is
-    the same exact int64 arithmetic (``floor(h/100)`` over an
-    exactly-representable double equals integer ``h div 100`` —
-    h < 2³¹ ≪ 2⁵³). Bit-exact vs the ``engine="sql"`` expression twin
-    (differential-tested): ids and positions render as ASCII digits,
-    so Python ``str()``/``ord`` match the engine's cast/``ascii``.
-    The sql twin (the shape the DuckDB oracle mirrors) pays an
-    interpreted per-position char-fold lambda."""
+    Tokenization stays JVM-side; the position-hash fold is vectorized
+    by digit count (the ``"{id}:"`` prefix hash is one scalar per doc,
+    positions sharing a digit count fold their decimal digits in d
+    numpy steps) and every decision is exact int64 arithmetic
+    (``floor(h/100)`` over an exactly-representable double equals
+    integer ``h div 100`` — h < 2³¹ ≪ 2⁵³). Ids and positions render
+    as ASCII digits, so Python ``str()``/``ord`` match the engine's
+    cast/``ascii``. Tier-1 checks it value-exact against the
+    ``mlm_mask`` oracle on the sf0.001 corpus plus edge rows."""
     if not vocab:
         raise ValueError("vocab must be non-empty")
     if not 0 < rate_pct <= 100:
         raise ValueError("rate_pct must be in (0, 100]")
-    if engine == "arrow":
-        return _mlm_mask_arrow(df, id_col, vocab, text_col, rate_pct)
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r} (want 'arrow' or 'sql')")
-    from docling_eval_spark.functions import let_col
-    from docling_eval_spark.operators.text_analysis import (
-        portable_char_hash,
-        tokens_col,
-    )
 
-    idc = F.col(id_col)
-    varr = F.array(*[F.lit(v) for v in vocab])
-
-    def over_toks(tk: Column) -> Column:
-        n = F.size(tk)
-        idxs = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-            F.array().cast("array<int>")
-        )
-
-        def pick(i: Column) -> Column:
-            h0 = portable_char_hash(
-                F.concat(idc.cast("string"), F.lit(":"), i.cast("string"))
-            )
-            # Horner hashes of consecutive positions are consecutive
-            # integers (only the last digit changes), which would turn
-            # `mod 100` selection into runs of adjacent masked tokens.
-            # One modular squaring breaks the affinity; h0 < 2^31 so
-            # h0*h0 fits a long exactly in both engines.
-            h = F.pmod(h0 * h0, F.lit((1 << 31) - 1))
-            tok = F.element_at(tk, i.cast("int"))
-            selected = F.pmod(h, F.lit(100)) < rate_pct
-            branch = F.pmod(F.floor(h / 100).cast("long"), F.lit(10))
-            repl = F.element_at(
-                varr,
-                (F.pmod(F.floor(h / 1000).cast("long"), F.lit(len(vocab)))
-                 + 1).cast("int"),
-            )
-            out = F.when(~selected, tok).otherwise(
-                F.when(branch < 8, F.lit("[MASK]"))
-                .when(branch == 8, repl)
-                .otherwise(tok)
-            )
-            label = F.when(
-                selected, F.concat(i.cast("string"), F.lit(":"), tok)
-            ).otherwise(F.lit(None).cast("string"))
-            return F.struct(out.alias("m"), label.alias("lb"))
-
-        made = F.transform(idxs, pick)
-        return F.struct(
-            n.cast("long").alias("n_tokens"),
-            F.array_join(
-                F.transform(made, lambda p: p["m"]), " "
-            ).alias("masked_text"),
-            F.array_join(
-                F.filter(
-                    F.transform(made, lambda p: p["lb"]), lambda x: x.isNotNull()
-                ),
-                " ",
-            ).alias("labels"),
-        )
-
-    out = df.select(
-        idc.alias("id"), let_col(tokens_col(text_col), over_toks).alias("r")
-    )
-    n_selected = F.when(
-        F.col("r.labels") == "", F.lit(0)
-    ).otherwise(F.size(F.split(F.col("r.labels"), " ")))
-    return out.select(
-        "id",
-        F.col("r.n_tokens").alias("n_tokens"),
-        n_selected.cast("long").alias("n_selected"),
-        F.col("r.masked_text").alias("masked_text"),
-        F.col("r.labels").alias("labels"),
-    )
-
-
-def _mlm_mask_arrow(
-    df: DataFrame,
-    id_col: str,
-    vocab: list[str],
-    text_col: str,
-    rate_pct: int,
-) -> DataFrame:
-    """Arrow kernel behind :func:`mlm_mask` (engine="arrow")."""
     import pyspark.sql.types as T
 
     from docling_eval_spark.operators.text_analysis import tokens_col
@@ -526,8 +439,7 @@ def _mlm_mask_arrow(
             nt_out, ns_out, mt_out, lb_out = [], [], [], []
             for sid, toks in zip(pdf["__id"], pdf["__toks"]):
                 if toks is None:
-                    # NULL text: twin's size(NULL) → NULL n_tokens,
-                    # empty joins
+                    # NULL text: NULL n_tokens, empty joins
                     nt_out.append(None)
                     ns_out.append(0)
                     mt_out.append("")
@@ -560,6 +472,11 @@ def _mlm_mask_arrow(
                     h0[lo - 1 : hi] = h
                     lo = 10**d
                     d += 1
+                # Horner hashes of consecutive positions are
+                # consecutive integers (only the last digit changes),
+                # which would turn `mod 100` selection into runs of
+                # adjacent masked tokens. One modular squaring breaks
+                # the affinity; h0 < 2^31 so h0*h0 fits an int64.
                 h = (h0 * h0) % p
                 selected = (h % 100) < rate_pct
                 branch = (h // 100) % 10

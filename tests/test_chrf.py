@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+from conftest import EDGE_ID0, assert_matches_oracle
+
 from docling_eval_spark.evaluators.chrf import (
     chrf_pairs,
     chrf_py,
@@ -94,46 +96,15 @@ def test_chrf_spark_empty_pair_emits_zero_row(spark):
     assert got == {1: 0, 2: 1_000_000}
 
 
-def test_chrf_arrow_engine_matches_sql_engine(spark):
+def test_chrf_arrow_engine_matches_sql_engine(spark, oracle_dir):
     """The Arrow per-(pair, order) count kernel must be bit-identical
-    to the exploded count-shuffle twin on every column, including
-    edge rows: empty-after-strip, shorter than max_n, unicode,
-    one-side-empty, repeated-gram multisets."""
-    import pyspark.sql.functions as F
-
-    edge = spark.createDataFrame(
-        [
-            (100, "", ""),
-            (101, " \t\n", "xyz"),
-            (102, "ab", "ab"),
-            (103, "aaaaaaa", "aabaaab"),
-            (104, "héllo wörld", "hello world"),
-            (105, "短い日本語の文", "短い日本語の文です"),
-            (106, "abcdefgh" * 300, "abcdefgh" * 299 + "zzzz"),
-            (107, "only hypothesis", ""),
-        ],
-        "id_l long, t_l string, t_r string",
-    )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = (
-        docs.select(F.col("doc_id").alias("id_l"), F.col("text").alias("t_l"))
-        .join(
-            docs.select(
-                (F.col("doc_id") - 1).alias("id_l"),
-                F.col("text").alias("t_r"),
-            ),
-            "id_l",
-        )
-        .limit(30)
-    )
-    for pairs in (edge, corpus):
-        sql_rows = sorted(
-            tuple(r) for r in chrf_pairs(pairs, engine="sql").collect()
-        )
-        arrow_rows = sorted(
-            tuple(r) for r in chrf_pairs(pairs, engine="arrow").collect()
-        )
-        assert arrow_rows == sql_rows
+    to the DuckDB oracle's exploded count SQL on every column, over
+    adjacent sf0.001 pairs plus the edge rows: empty-after-strip,
+    shorter than max_n, unicode, one-side-empty, past the 2000-char
+    cap, repeated-gram multisets."""
+    rows = assert_matches_oracle(spark, oracle_dir, "chrf_pairs")
+    by_id = {r[0]: r for r in rows}
+    assert by_id[EDGE_ID0][1:] == (0, 0, 0)  # "" vs "ab"
 
 
 def test_chrf_py_rounds_half_up_like_spark(spark):

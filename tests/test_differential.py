@@ -1,6 +1,12 @@
-"""Differential prod-vs-portable hash-path tests (VERDICT r4 #3).
+"""Differential tests: each Arrow kernel against its DuckDB oracle,
+and the prod-vs-portable hash paths against each other.
 
-``simhash`` and ``token_ngram_hash_col``/``contamination_check`` each
+The kernel tests run the registry query that exercises a kernel on
+Spark and its ``oracle_sql()`` entry on DuckDB over the sf0.001 tables
+plus hand edge rows (``conftest.assert_matches_oracle``), then pin the
+kernel's edge semantics with literal assertions.
+
+``simhash`` and ``token_ngram_hash_table``/``contamination_check`` each
 ship two token-hash modes: the PRODUCTION default (JVM ``xxhash64``)
 and a PORTABLE polynomial twin the DuckDB oracle can recompute
 bit-for-bit. The oracle gate only ever exercises the portable path;
@@ -27,6 +33,7 @@ What "agree" means differs by operator:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from conftest import EDGE_ID0, assert_matches_oracle
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -141,36 +148,26 @@ def test_dup_ngram_prod_portable_same_decisions(spark):
     assert any(r[2] > 0 for r in prod), "fixture has no duplicated 8-grams"
 
 
-def test_shingle_sig_arrow_sql_bit_identical(spark):
-    """The Arrow numpy minhash front half must reproduce the expression
-    twin (the oracle-documented shape) BIT-FOR-BIT: same window fold
+def test_shingle_sig_arrow_sql_bit_identical(spark, oracle_dir):
+    """The Arrow minhash front half must reproduce the DuckDB oracle's
+    SQL bit-for-bit through both minhash queries — same window fold
     ``(acc·B + c) mod p``, same first-occurrence shingle dedup, same
-    permutation minima — including the edge rows (empty text,
-    whitespace-only text, text shorter than k, non-ASCII code points).
-    """
+    permutation minima — over sf0.001 plus the edge rows (empty,
+    whitespace-only, shorter than k, non-BMP code points)."""
     from docling_eval_spark.operators.dedup import shingle_sig_table
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
+    assert_matches_oracle(spark, oracle_dir, "minhash_pairs")
+    assert_matches_oracle(spark, oracle_dir, "minhash_incremental")
     edge = spark.createDataFrame(
         [(90001, ""), (90002, "ab"), (90003, "   "), (90004, "é漢xé漢x test")],
         ["doc_id", "text"],
     )
-    docs = docs.unionByName(edge)
-    a = shingle_sig_table(docs, "doc_id", engine="arrow").orderBy("id").collect()
-    s = shingle_sig_table(docs, "doc_id", engine="sql").orderBy("id").collect()
-    assert len(a) == len(s) and len(a) > 0
-    for ra, rs in zip(a, s):
-        assert ra.id == rs.id
-        assert list(ra.shingles) == list(rs.shingles)
-        assert list(ra.signature) == list(rs.signature)
-    # edge semantics pinned: empty/short texts
-    by_id = {r.id: r for r in a}
+    by_id = {r.id: r for r in shingle_sig_table(edge, "doc_id").collect()}
     assert by_id[90001].shingles == [] and by_id[90003].shingles == []
     assert len(by_id[90002].shingles) == 1  # one clamped window
     p = (1 << 31) - 1
     assert by_id[90001].signature == [p] * 30  # empty → all-p signature
+    assert len(by_id[90004].shingles) > 1
 
 
 def test_bucket_assign_arrow_sql_bit_identical(spark):
@@ -206,58 +203,41 @@ def test_bucket_assign_arrow_sql_bit_identical(spark):
     assert len(set(a.values())) > 1  # buckets actually split the corpus
 
 
-def test_token_ngram_table_arrow_sql_bit_identical(spark):
-    """The Arrow token-n-gram kernel must reproduce the expression twin
-    bit-for-bit in BOTH hash modes — portable (per-code-point folds,
-    including non-BMP code points: Spark's split('')/ascii are
-    code-point semantics matching Python ord, probed 𝄞→119070) and
-    prod (JVM xxhash64 token hashes, window fold in the kernel) — plus
-    the short-doc (< n tokens) and empty-text edges."""
-    import pyspark.sql.functions as F
-
+def test_token_ngram_table_arrow_sql_bit_identical(spark, oracle_dir):
+    """The Arrow token-n-gram kernel, portable mode, must reproduce the
+    DuckDB oracle's SQL through ``dup_ngram_frac`` (per-code-point
+    folds including non-BMP code points: Spark's split('')/ascii are
+    code-point semantics matching Python ord, probed 𝄞→119070). Prod
+    mode (JVM xxhash64 token hashes) has no oracle, so its window fold
+    is replayed in Python over Spark's own token hashes. Short-doc
+    (< n tokens), empty and NULL texts have no windows."""
     from docling_eval_spark.operators.text_analysis import (
+        _FP_BASE,
+        _NGRAM_PROD_MOD,
         token_ngram_hash_table,
+        tokens_col,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    edge = spark.createDataFrame(
-        [
-            (90001, ""),
-            (90002, "one two three"),  # < n tokens
-            (90003, "a 𝄞clef😀 b c d e f g h astral token mix"),
-            (90004, "  padded   whitespace\tand\nnewlines " + "tok " * 12),
-            (90005, None),  # NULL text: twin emits (0, []) like a short doc
-        ],
-        ["doc_id", "text"],
-    )
-    docs = docs.unionByName(edge)
-    for portable in (True, False):
-        a = (
-            token_ngram_hash_table(docs, "doc_id", portable=portable)
-            .orderBy("id")
-            .collect()
-        )
-        s = (
-            token_ngram_hash_table(
-                docs, "doc_id", portable=portable, engine="sql"
-            )
-            .orderBy("id")
-            .collect()
-        )
-        assert len(a) == len(s) and len(a) > 0
-        for ra, rs in zip(a, s):
-            assert ra.id == rs.id
-            assert ra.n_grams == rs.n_grams
-            ga = None if ra.grams is None else list(ra.grams)
-            gs = None if rs.grams is None else list(rs.grams)
-            assert ga == gs, (portable, ra.id)
-    by_id = {r.id: r for r in a}
-    assert by_id[90001].n_grams == 0 and by_id[90001].grams == []
-    assert by_id[90002].n_grams == 0 and by_id[90002].grams == []
-    assert by_id[90003].n_grams > 0
-    assert by_id[90005].n_grams == 0 and by_id[90005].grams == []
+    assert_matches_oracle(spark, oracle_dir, "dup_ngram_frac")
+    docs = spark.read.parquet(f"{oracle_dir}/documents.parquet")
+    low = F.transform(tokens_col("text"), lambda x: F.lower(x))
+    th = F.transform(low, lambda t: F.pmod(F.xxhash64(t), F.lit(_NGRAM_PROD_MOD)))
+    want, n = {}, 8
+    for r in docs.select("doc_id", th.alias("th")).collect():
+        hs, grams = r.th or [], []
+        for i in range(len(hs) - n + 1):
+            g = 0
+            for x in hs[i : i + n]:
+                g = (g * _FP_BASE + x) % _NGRAM_PROD_MOD
+            grams.append(g)
+        want[r.doc_id] = (len(grams), grams)
+    prod = token_ngram_hash_table(docs, "doc_id").collect()
+    assert {r.id: (r.n_grams, list(r.grams)) for r in prod} == want
+    by_id = {r.id: r for r in prod}
+    for i in (0, 1, 2, 3):  # "", "ab", whitespace-only, NULL
+        assert by_id[EDGE_ID0 + i].n_grams == 0
+        assert by_id[EDGE_ID0 + i].grams == []
+    assert by_id[EDGE_ID0 + 4].n_grams > 0  # the non-BMP row
 
 
 def test_cosine_assign_arrow_sql_bit_identical(spark):
@@ -267,7 +247,7 @@ def test_cosine_assign_arrow_sql_bit_identical(spark):
     zero-norm guard."""
     import pyspark.sql.functions as F
 
-    from docling_eval_spark.operators.similarity import cosine_assign
+    from docling_eval_spark.operators.similarity import cosine_assign, cosine_col
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id",
@@ -296,8 +276,8 @@ def test_cosine_assign_arrow_sql_bit_identical(spark):
     }
     s = {
         (r.id_l, r.id_r): r.cosine
-        for r in cosine_assign(
-            pairs, "v_l", "v_r", engine="sql", keep=["id_l", "id_r"]
+        for r in pairs.select(
+            "id_l", "id_r", cosine_col("v_l", "v_r").alias("cosine")
         ).collect()
     }
     assert len(a) == len(s) > 0
@@ -307,18 +287,15 @@ def test_cosine_assign_arrow_sql_bit_identical(spark):
     assert zero_pairs and all(v == 0.0 for v in zero_pairs)
 
 
-def test_bpe_encode_arrow_sql_bit_identical(spark):
-    """The memoized Arrow BPE encoder must reproduce the expression
-    fold chain symbol-for-symbol — including a left==right rule over a
+def test_bpe_encode_arrow_sql_bit_identical(spark, oracle_dir):
+    """The memoized Arrow BPE encoder must reproduce the DuckDB oracle's
+    SQL encode fold through ``bpe_fertility`` over sf0.001 plus the
+    edge rows; and on hand rows, a left==right rule over a
     repeated-char run (non-overlapping leftmost semantics), multi-rule
     chains where an earlier merge feeds a later rule, and NULL text."""
-    import pyspark.sql.functions as F
-
     from docling_eval_spark.operators.bpe import bpe_encode
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
+    assert_matches_oracle(spark, oracle_dir, "bpe_fertility")
     edge = spark.createDataFrame(
         [
             (90001, "aaa aaaa baaab"),      # left==right runs
@@ -328,67 +305,33 @@ def test_bpe_encode_arrow_sql_bit_identical(spark):
         ],
         ["doc_id", "text"],
     )
-    docs = docs.unionByName(edge)
     rules = [("a", "a"), ("t", "h"), ("th", "e"), ("e", "</w>")]
-    a = (
-        bpe_encode(docs, rules, engine="arrow")
-        .select("doc_id", "bpe_tokens")
-        .orderBy("doc_id")
-        .collect()
-    )
-    s = (
-        bpe_encode(docs, rules, engine="sql")
-        .select("doc_id", "bpe_tokens")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert len(a) == len(s) > 0
-    for ra, rs in zip(a, s):
-        assert ra.doc_id == rs.doc_id
-        ta = None if ra.bpe_tokens is None else list(ra.bpe_tokens)
-        ts = None if rs.bpe_tokens is None else list(rs.bpe_tokens)
-        assert ta == ts, ra.doc_id
-    by_id = {r.doc_id: r for r in a}
-    assert list(by_id[90001].bpe_tokens)[:3] == ["aa", "a", "</w>"]
-    assert by_id[90004].bpe_tokens is None
+    by_id = {
+        r.doc_id: r.bpe_tokens
+        for r in bpe_encode(edge, rules).select("doc_id", "bpe_tokens").collect()
+    }
+    assert by_id[90001] == [
+        "aa", "a", "</w>", "aa", "aa", "</w>", "b", "aa", "a", "b", "</w>"
+    ]
+    assert by_id[90002][:2] == ["the", "</w>"]
+    assert by_id[90003] == [] and by_id[90004] is None
 
 
-def test_bpe_train_arrow_sql_identical_rules(spark):
+def test_bpe_train_arrow_sql_identical_rules(spark, oracle_dir):
     """BPE training must learn the IDENTICAL rule sequence (rank, pair,
-    merged symbol, frequency) under the Arrow pair-count/merge kernels
-    and the expression twins — the frequencies are exact integers and
-    the tie-break is total, so any divergence is a kernel bug."""
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("text")
-    from docling_eval_spark.operators.bpe import bpe_train
-
-    a = [tuple(r) for r in bpe_train(docs, merges=6, engine="arrow").collect()]
-    s = [tuple(r) for r in bpe_train(docs, merges=6, engine="sql").collect()]
-    assert a == s and len(a) == 6
+    merged symbol, frequency) as the DuckDB oracle's unrolled SQL
+    iterations — the frequencies are exact integers and the tie-break
+    is total, so any divergence is a kernel bug."""
+    rules = assert_matches_oracle(spark, oracle_dir, "bpe_merges")
+    assert [r[0] for r in rules] == list(range(1, 9))
 
 
-def test_mlm_mask_arrow_sql_bit_identical(spark):
+def test_mlm_mask_arrow_sql_bit_identical(spark, oracle_dir):
     """The Arrow MLM-mask kernel must reproduce every deterministic
-    hash decision of the expression twin — selection, 80/10/10 branch,
-    replacement vocab pick, label positions — byte-for-byte across the
-    real corpus plus empty/NULL-text edges."""
-    from docling_eval_spark.operators.training import mlm_mask
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    edge = spark.createDataFrame(
-        [(90001, ""), (90002, None), (90003, "one two three four five")],
-        ["doc_id", "text"],
-    )
-    docs = docs.unionByName(edge)
-    vocab = ["alpha", "beta", "gamma", "delta"]
-    a = mlm_mask(docs, "doc_id", vocab, engine="arrow").orderBy("id").collect()
-    s = mlm_mask(docs, "doc_id", vocab, engine="sql").orderBy("id").collect()
-    assert len(a) == len(s) > 0
-    for ra, rs in zip(a, s):
-        assert tuple(ra) == tuple(rs), (ra.id, tuple(ra), tuple(rs))
+    hash decision the DuckDB oracle's SQL replays — selection, 80/10/10
+    branch, replacement vocab pick, label positions — byte-for-byte
+    across sf0.001 plus the empty/NULL/edge rows."""
+    rows = assert_matches_oracle(spark, oracle_dir, "mlm_mask")
     # the masking is non-trivial on this corpus
-    assert any(r.n_selected > 0 for r in a)
-    assert any("[MASK]" in r.masked_text for r in a)
+    assert any(r[2] > 0 for r in rows)
+    assert any("[MASK]" in r[3] for r in rows)

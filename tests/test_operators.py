@@ -881,27 +881,15 @@ def test_bloom_prefilter(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_kgram_arrow_sql_parity(spark):
-    from docling_eval_spark.operators.text_analysis import kgram_hash_positions
+def test_kgram_arrow_sql_parity(spark, oracle_dir):
+    """The Arrow k-gram hash kernel must reproduce the DuckDB oracle's
+    SQL k-gram hashes and positions through ``duplicate_spans`` over
+    sf0.001 plus the edge rows (whitespace runs, non-BMP code points,
+    an NBSP-edged text present twice)."""
+    from conftest import EDGE_ID0, assert_matches_oracle
 
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog repeatedly"),
-        (1, "  whitespace   normalization\tmatters\nhere exactly  "),
-        (2, "ünïcødé cödé pöints múst hásh idèntically tôo"),
-        (3, "short"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fast = sorted(
-        map(tuple, kgram_hash_positions(df, "doc_id", k=20).collect())
-    )
-    sql = sorted(
-        map(
-            tuple,
-            kgram_hash_positions(df, "doc_id", k=20, use_arrow=False).collect(),
-        )
-    )
-    assert fast == sql and len(fast) > 0
+    rows = assert_matches_oracle(spark, oracle_dir, "duplicate_spans")
+    assert {EDGE_ID0 + 7, EDGE_ID0 + 8} <= {r[0] for r in rows}
 
 
 def test_bloom_prefilter_word_column_collision(spark):
@@ -921,18 +909,24 @@ def test_bloom_prefilter_word_column_collision(spark):
 
 
 def test_kgram_nbsp_edge_parity(spark):
-    from docling_eval_spark.operators.text_analysis import kgram_hash_positions
-
-    nbsp = " leading NBSP stays; interior too and trailing "
-    df = spark.createDataFrame([(0, nbsp)], "doc_id long, text string")
-    fast = sorted(map(tuple, kgram_hash_positions(df, "doc_id", k=20).collect()))
-    sql = sorted(
-        map(
-            tuple,
-            kgram_hash_positions(df, "doc_id", k=20, use_arrow=False).collect(),
-        )
+    """Normalization strips ASCII spaces only, like Spark's and
+    DuckDB's trim: NBSPs at either end stay, so every k-gram position
+    of the text is kept."""
+    from docling_eval_spark.operators.text_analysis import (
+        _FP_BASE,
+        _FP_MOD,
+        kgram_hash_positions,
     )
-    assert fast == sql and len(fast) > 0
+
+    nbsp = "\u00a0leading NBSP stays; interior\u00a0too and trailing\u00a0"
+    df = spark.createDataFrame([(0, nbsp)], "doc_id long, text string")
+    rows = sorted(r.pos for r in kgram_hash_positions(df, "doc_id", k=20).collect())
+    assert rows == list(range(len(nbsp) - 19))
+    h = 0
+    for ch in nbsp[:20]:
+        h = (h * _FP_BASE + ord(ch)) % _FP_MOD
+    first = kgram_hash_positions(df, "doc_id", k=20).filter("pos = 0").first()
+    assert first.h == h
 
 
 def test_duplicate_spans_postings_path(spark, tmp_path):
@@ -4105,45 +4099,24 @@ def test_lev_fast_identity_vs_plain_levenshtein(spark):
         assert r["fast"] == r["plain"], (a, b, r["fast"], r["plain"])
 
 
-def test_cdc_chunks_arrow_matches_sql_engine(spark):
-    """The vectorized boundary kernel must reproduce the HOF
-    expression's chunks exactly — boundaries, lengths and digests —
-    on real corpus text plus shorter-than-k and empty-ish edges."""
-    import pyspark.sql.functions as F
+def test_cdc_chunks_arrow_matches_sql_engine(spark, oracle_dir):
+    """The vectorized boundary kernel must reproduce the DuckDB
+    oracle's SQL chunks exactly — boundaries, lengths and digests — on
+    sf0.001 plus shorter-than-k, whitespace-only and empty edges."""
+    from conftest import EDGE_ID0, assert_matches_oracle
 
-    from docling_eval_spark.operators.text_analysis import cdc_chunk_table
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select(F.col("doc_id").alias("id"), "text").limit(60)
-    edge = spark.createDataFrame(
-        [(9001, "short"), (9002, "x" * 15), (9003, "y" * 16), (9004, " ")],
-        "id long, text string",
-    )
-    for df in (docs, edge):
-        a = sorted(
-            tuple(r) for r in cdc_chunk_table(df, "id", engine="arrow").collect()
-        )
-        b = sorted(
-            tuple(r) for r in cdc_chunk_table(df, "id", engine="sql").collect()
-        )
-        assert a == b
+    rows = assert_matches_oracle(spark, oracle_dir, "cdc_chunks")
+    ids = {r[0] for r in rows}
+    # "ab" is one chunk; "", whitespace-only and NULL are absent
+    assert [r[1:3] for r in rows if r[0] == EDGE_ID0 + 1] == [(0, 2)]
+    assert not ids & {EDGE_ID0, EDGE_ID0 + 2, EDGE_ID0 + 3}
 
 
-def test_cms_build_arrow_matches_sql_engine(spark):
-    """The batch-dedup hashing kernel must produce the identical
-    sketch (every counter cell) as the expression shape."""
-    from docling_eval_spark.operators.sketch import cms_build
+def test_cms_build_arrow_matches_sql_engine(spark, oracle_dir):
+    """The batch-dedup hashing kernel must produce the sketch the
+    DuckDB oracle's SQL builds — every counter cell, seen through the
+    ``cms_heavy_hitters`` estimates."""
+    from conftest import assert_matches_oracle
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("text")
-    a = sorted(
-        tuple(r)
-        for r in cms_build(docs, depth=3, width=512, engine="arrow").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in cms_build(docs, depth=3, width=512, engine="sql").collect()
-    )
-    assert a == b and len(a) > 0
+    rows = assert_matches_oracle(spark, oracle_dir, "cms_heavy_hitters")
+    assert all(r[1] >= 1 for r in rows)

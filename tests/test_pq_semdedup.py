@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from conftest import assert_matches_oracle
 
 from docling_eval_spark.operators.pq import (
     pq_codebooks,
@@ -236,38 +237,13 @@ def test_data_card_hand_case(spark):
     assert de["gopher_pass"] == 1
 
 
-def test_semantic_dedup_grouped_matches_join_engine(spark):
+def test_semantic_dedup_grouped_matches_join_engine(spark, oracle_dir):
     """The per-cluster pairwise kernel must be row-identical to the
-    self-join + cosine_assign shape — same clusters, same flags —
-    including borderline cosines (scaled twins sit exactly at 1.0)
-    and an oversized cluster kept unflagged by both."""
-    import pyspark.sql.functions as F
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    dup = e.unionByName(
-        e.select(
-            (F.col("vec_id") + 100000).alias("vec_id"),
-            F.transform("embedding", lambda x: x * 2.0).alias("embedding"),
-        )
-    )
-    cents = hyperplanes(64, 8, seed=11)
-    for thr, mc in ((0.999, 100_000), (0.8, 100_000), (0.9, 10)):
-        a = sorted(
-            tuple(r)
-            for r in semantic_dedup(
-                dup, cents, threshold=thr, max_cluster=mc, engine="grouped"
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in semantic_dedup(
-                dup, cents, threshold=thr, max_cluster=mc, engine="join"
-            ).collect()
-        )
-        assert a == b and len(a) == dup.count()
+    DuckDB oracle's centroid-keyed self-join SQL — same clusters, same
+    flags — including borderline cosines (the query's ×2-scaled twins
+    sit exactly at 1.0, so every twin flags)."""
+    rows = assert_matches_oracle(spark, oracle_dir, "semantic_dedup")
+    assert all(r[2] for r in rows if r[0] >= 100000)
 
 
 def test_semantic_dedup_grouped_block_boundaries(spark):
@@ -283,14 +259,14 @@ def test_semantic_dedup_grouped_block_boundaries(spark):
     ref = sorted(
         tuple(r)
         for r in semantic_dedup(
-            e, cents, threshold=0.9, engine="grouped", pair_block=2048
+            e, cents, threshold=0.9, pair_block=2048
         ).collect()
     )
     for blk in (1, 3, 7):
         got = sorted(
             tuple(r)
             for r in semantic_dedup(
-                e, cents, threshold=0.9, engine="grouped", pair_block=blk
+                e, cents, threshold=0.9, pair_block=blk
             ).collect()
         )
         assert got == ref, blk
