@@ -87,8 +87,8 @@ def bucket_col(vec_col: Column | str, planes: np.ndarray) -> Column:
 
     This is the expression the DuckDB oracle mirrors; production uses
     it only on the small query side of :func:`lsh_bucketed_topk`. Its
-    literal tree (n_planes × dim constants, one interpreted fold per plane) is
-    exactly what :func:`bucket_assign` replaces in production: Catalyst
+    literal tree (n_planes × dim constants, one interpreted fold per
+    plane) is exactly what :func:`bucket_assign` replaces: Catalyst
     analysis+codegen of the unrolled tree dominated the COLD wall of
     every bucketed query (measured 18 s of near_dup_pairs' 22 s cold at
     12×64), and the per-element lambdas are interpreted per row warm."""
@@ -115,16 +115,16 @@ def bucket_assign(
 
     One Arrow-batched numpy kernel, bit-identical to the
     :func:`bucket_col` expression and the ``near_dup_pairs`` DuckDB
-    oracle (tier-1: ``test_bucket_assign_arrow_sql_bit_identical``):
-    the per-plane dot product is an ELEMENTWISE product followed by ``np.cumsum``
-    along the vector axis (cumsum is a strict left-to-right partial-sum
-    loop), i.e. the same ``fold(0.0, acc + x·y)`` float-addition order
-    the expression and the DuckDB oracle use — float addition is not
-    associative, so a BLAS ``dot`` (SIMD/pairwise reordering) would NOT
-    reproduce the oracle's signs on knife-edge dots. The only residual
-    difference is ``-0.0`` vs ``+0.0`` when a dot is exactly zero
-    (fold starts at +0.0), and the sign test ``dot >= 0`` treats both
-    identically.
+    oracle (tier-1: ``test_bucket_assign_arrow_sql_bit_identical``): the
+    per-plane dot product is an ELEMENTWISE product followed by
+    ``np.cumsum`` along the vector axis (cumsum is a strict
+    left-to-right partial-sum loop), i.e. the same
+    ``fold(0.0, acc + x·y)`` float-addition order the expression and
+    the DuckDB oracle use — float addition is not associative, so a
+    BLAS ``dot`` (SIMD/pairwise reordering) would NOT reproduce the
+    oracle's signs on knife-edge dots. The only residual difference is
+    ``-0.0`` vs ``+0.0`` when a dot is exactly zero (fold starts at
+    +0.0), and the sign test ``dot >= 0`` treats both identically.
     """
     pl = np.asarray(planes, dtype=np.float64)
     n_planes = pl.shape[0]
@@ -139,7 +139,7 @@ def bucket_assign(
     def kernel(batches):
         for pdf in batches:
             vals = [
-                # NULL vector: the expression twin's NULL dots fail
+                # NULL vector: the expression's NULL dots fail
                 # every `dot >= 0` test → bucket 0; an all-zero stand-in
                 # reproduces that (+0.0 >= 0 is true for every plane —
                 # NOT the same!), so mask them out instead
@@ -180,14 +180,15 @@ def cosine_assign(
 
     One Arrow-batched numpy kernel, bit-identical to the
     :func:`cosine_col` expression on every pair
-    (``test_cosine_assign_arrow_sql_bit_identical``): the dot and both squared norms are elementwise products
-    folded by ``np.cumsum`` (strict left-to-right partial sums — the
-    same float-addition order as the expression's ``aggregate`` and
-    the DuckDB oracle), ``sqrt`` and the final division are single
-    IEEE ops on identical operands. Zero-norm guard matches: either
-    norm 0 → cosine 0.0. The expression's per-element lambdas are
-    interpreted per pair×dimension — the dominant cost of pairwise
-    scans — which is what the kernel replaces.
+    (``test_cosine_assign_arrow_sql_bit_identical``): the dot and both
+    squared norms are elementwise products folded by ``np.cumsum``
+    (strict left-to-right partial sums — the same float-addition order
+    as the expression's ``aggregate`` and the DuckDB oracle), ``sqrt``
+    and the final division are single IEEE ops on identical operands.
+    Zero-norm guard matches: either norm 0 → cosine 0.0. The
+    expression's per-element lambdas are interpreted per pair×dimension
+    — the dominant cost of pairwise scans — which is what the kernel
+    replaces.
 
     ``keep``: output columns besides ``out_col`` (default: all input
     columns). Pair scans should keep only the id columns — returning
@@ -260,8 +261,8 @@ def lsh_bucketed_topk(
     dim = len(queries.select(query_vec_col).first()[0])
     planes = hyperplanes(dim, n_planes, seed)
     cb = bucket_assign(corpus, vec_col, planes)
-    # query side is tiny (broadcast below): the expression twin avoids
-    # spinning a Python worker stage for a handful of rows
+    # query side is tiny (broadcast below): the bucket_col expression
+    # avoids spinning a Python worker stage for a handful of rows
     qb = queries.withColumn("bucket", bucket_col(query_vec_col, planes))
     if multiprobe:
         probes = F.array(
@@ -476,12 +477,13 @@ def semantic_dedup(
     pathology (e.g. a zero-vector lake): their rows are kept UNFLAGGED
     rather than joined quadratically, and surfaced via the companion
     overflow frame (same refusal contract as minhash/near-dup LSH).
-    The cluster assignment itself is a narrow map against the
-    broadcast centroid matrix (see ``ivf.assign_centroids``); the
-    assigned frame is consumed by THREE branches (cluster sizes, the
-    clusters within ``max_cluster``, the oversized rest), so ``snapshot=True`` (default) lazily
-    ``localCheckpoint``s it — the corpus is scanned and the kernel run
-    ONCE, not once per branch. Disable for pure plan inspection.
+    The cluster assignment itself is a narrow map against the broadcast
+    centroid matrix (see ``ivf.assign_centroids``); the assigned frame
+    is consumed by THREE branches (cluster sizes, the clusters within
+    ``max_cluster``, the oversized rest), so ``snapshot=True`` (default)
+    lazily ``localCheckpoint``s it — the corpus is scanned and the
+    kernel run ONCE, not once per branch. Disable for pure plan
+    inspection.
 
     The pairwise step is a per-cluster Arrow kernel: each cluster's
     vectors cross the boundary once, and ``pair_block`` bounds the

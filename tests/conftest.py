@@ -1,8 +1,9 @@
 from __future__ import annotations
 
-import os
 import re
+import shutil
 import uuid
+from pathlib import Path
 
 import pytest
 
@@ -97,9 +98,6 @@ EDGE_ID0 = 900
 def oracle_dir(tmp_path_factory):
     """The sf0.001 tables, with :data:`EDGE_DOCS` appended to
     ``documents``, as parquet files in one directory."""
-    import shutil
-    from pathlib import Path
-
     import duckdb
 
     out = tmp_path_factory.mktemp("oracle_sf0.001")
@@ -137,12 +135,10 @@ def assert_matches_oracle(spark, sf_dir: str, name: str) -> list[tuple]:
 
     sdf = entry.queries()[name](spark, sf_dir)
     con = duckdb.connect()
-    for f in sorted(os.listdir(sf_dir)):
-        if f.endswith(".parquet"):
-            con.execute(
-                f"CREATE VIEW {f[:-8]} AS "
-                f"SELECT * FROM read_parquet('{sf_dir}/{f}')"
-            )
+    for f in sorted(Path(sf_dir).glob("*.parquet")):
+        con.execute(
+            f"CREATE VIEW {f.stem} AS SELECT * FROM read_parquet('{f}')"
+        )
     cur = con.execute(entry.oracle_sql()[name])
     assert sdf.columns == [d[0] for d in cur.description]
     got = sorted((tuple(r) for r in sdf.collect()), key=repr)
