@@ -13,11 +13,7 @@ Spark pipeline:
   kernels.
 - ``operators``   — large-scale training-data-pipeline operators the
   reference lacks: dedup (exact / MinHash-LSH / SimHash / n-gram
-  Jaccard), similarity search, text analysis, multimodal plumbing.
-- ``plans``       — per-partition lineage + resume-by-anti-join
-  (the checkpoint/restart mechanism the reference lacks).
-- ``streaming``   — incremental (availableNow) processing of new page
-  shards.
+  Jaccard), similarity search, text analysis, media near-dup hashes.
 - ``datagen``     — deterministic synthetic Common-Crawl-style pages
   table ``(url, warc_ts, html, text, lang)`` for tests and benchmarks.
 

@@ -437,16 +437,6 @@ def ap_table_from_detections(rows: DataFrame, exact: bool = False) -> DataFrame:
     return grouped.groupBy("label", "iou_thr").applyInPandas(kernel, schema=AP_SCHEMA)
 
 
-def per_class_ap(ap_table: DataFrame) -> DataFrame:
-    """Per-class AP (averaged over IoU thresholds), sorted descending —
-    the reference's per-class table (`layout_evaluator.py:68-71,240-241`)."""
-    return (
-        ap_table.groupBy("label")
-        .agg(F.avg("ap").alias("ap"))
-        .orderBy(F.desc("ap"), "label")
-    )
-
-
 def corpus_map(
     df: DataFrame,
     gt_col: str = "gt_layout",

@@ -36,7 +36,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 N_BINS = 20
 BINS = [b / N_BINS for b in range(N_BINS + 1)]
@@ -184,40 +184,3 @@ def fold_counts(pairs: list[tuple[float, int]]) -> dict:
         std = math.sqrt(max((s2 - n * mean * mean) / (n - 1), 0.0))
     return {"total": n, "mean": mean, "median": (m1 + m2) / 2, "std": std,
             "hist": hist, "bins": list(BINS)}
-
-
-def histogram_table(stats_row_df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Explode a compute_stats row into the reference's cumulative
-    table (`stats.py:28-50`): one row per bin with prob / acc / 1-acc.
-
-    ``acc`` is the cum-sum of probabilities of STRICTLY EARLIER bins
-    (the reference adds the current bin after emitting the row).
-    """
-    group_cols = group_cols or []
-    e = stats_row_df.select(
-        *group_cols,
-        "total",
-        F.posexplode("hist").alias("bin", "count"),
-    )
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return e.select(
-        *group_cols,
-        "bin",
-        (F.col("bin") / N_BINS).alias("bin_lo"),
-        ((F.col("bin") + 1) / N_BINS).alias("bin_hi"),
-        F.col("count"),
-        (100.0 * F.col("count") / F.col("total")).alias("prob_pct"),
-        F.coalesce(
-            100.0 * F.sum(F.col("count") / F.col("total")).over(w), F.lit(0.0)
-        ).alias("acc_pct"),
-        (
-            100.0
-            - F.coalesce(
-                100.0 * F.sum(F.col("count") / F.col("total")).over(w), F.lit(0.0)
-            )
-        ).alias("inv_acc_pct"),
-    )

@@ -130,19 +130,9 @@ def levenshtein(a: list[str] | str, b: list[str] | str) -> int:
     return dist
 
 
-def token_edit_distance(true_txt: str, pred_txt: str) -> float:
-    return _edit_ratio(tokenize(true_txt), tokenize(pred_txt))
-
-
 def _edit_ratio(true_tokens: list[str], pred_tokens: list[str]) -> float:
     m = max(len(true_tokens), len(pred_tokens))
     return levenshtein(pred_tokens, true_tokens) / m if m else 0.0
-
-
-def set_f1(true_txt: str, pred_txt: str) -> tuple[float, float, float]:
-    """(f1, precision, recall) on token sets; None-free (0.0 when a
-    side is empty, vs NLTK's None)."""
-    return _set_f1_tokens(tokenize(true_txt), tokenize(pred_txt))
 
 
 def _set_f1_tokens(
@@ -182,11 +172,6 @@ def bleu_tokens(ref: list[str], hyp: list[str], max_n: int = 4) -> float:
         log_sum += 0.25 * math.log(overlap / total)
     bp = 1.0 if len(hyp) > len(ref) else math.exp(1 - len(ref) / max(len(hyp), 1))
     return bp * math.exp(log_sum)
-
-
-def meteor_exact(true_txt: str, pred_txt: str) -> float:
-    """METEOR with exact-match alignment (see module docstring)."""
-    return meteor_tokens(tokenize(true_txt), tokenize(pred_txt))
 
 
 def meteor_tokens(

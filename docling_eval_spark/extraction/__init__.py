@@ -18,7 +18,6 @@ from docling_eval_spark.extraction.kernel import (
 from docling_eval_spark.extraction.stage import (
     EXTRACTED_DOC_SCHEMA,
     extract_stage,
-    extract_text_stage,
 )
 
 __all__ = [
@@ -26,6 +25,5 @@ __all__ = [
     "extract_text",
     "normalize_ws",
     "extract_stage",
-    "extract_text_stage",
     "EXTRACTED_DOC_SCHEMA",
 ]

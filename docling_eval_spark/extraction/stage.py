@@ -22,7 +22,6 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
@@ -201,13 +200,6 @@ def extract_stage(
     )
 
 
-def extract_text_stage(pages_df: DataFrame) -> DataFrame:
-    """Text-only extraction: (url, extracted_text, text_md5, status)."""
-    return extract_stage(pages_df).select(
-        "url", "extracted_text", "text_md5", "status"
-    )
-
-
 _MATCH_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -249,40 +241,6 @@ def extract_match_stage(pages_df: DataFrame) -> DataFrame:
             )
 
     return src.mapInPandas(kernel, schema=_MATCH_SCHEMA)
-
-
-def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Uniform spread for a stateless map stage over skewed input.
-
-    Round-robin repartition: rows spread evenly regardless of key
-    distribution, so Zipf-heavy hosts cannot overload one task. MUST
-    NOT replace the hash shuffle feeding a per-url grouped stage
-    (those hash raw url). Bucketed-by-url output for co-located later
-    joins is `bucketed_by_url` below.
-    """
-    return df.repartition(num_partitions)
-
-
-def bucketed_by_url(df: DataFrame, num_buckets: int) -> DataFrame:
-    """Add the Iceberg-style `bucket = pmod(hash(url), P)` partition
-    column (FIXTURES.md §1 layout) so writes co-locate per-url work and
-    later scans partition-prune on it."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int")
-    )
-
-
-def single_prov_items(items_col, provs_field: str = "provs"):
-    """P5 multi-provenance filter: keep only items with exactly one
-    provenance entry. The reference SKIPS multi-prov elements in the
-    reading-order path (`base_readingorder_evaluator.py:312-316`) and
-    ASSERTS single-prov in the bbox-text path
-    (`bbox_text_evaluator.py:175`). Our own kernel emits one charspan
-    per item, so this is identity on kernel output — the filter exists
-    for externally-ingested documents (JSON GT / CVAT) whose items may
-    carry several provenance spans. Pure HOF, no UDF."""
-    col = F.col(items_col) if isinstance(items_col, str) else items_col
-    return F.filter(col, lambda it: F.size(it[provs_field]) == 1)
 
 
 _AB_SCHEMA = (

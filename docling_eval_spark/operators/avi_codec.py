@@ -1,20 +1,17 @@
 """Uncompressed AVI (RIFF) video codec — the real video pixel path.
 
 Same role as the WAV/PNG/GIF/JPEG codecs (`multimodal.py` K11 family):
-the container lacks ffmpeg/PIL, so video stages degrade to honest
-``fake=True`` rows — EXCEPT for RIFF AVI carrying uncompressed DIB
-frames (raw bottom-up BGR, no entropy codec — the WAV analogue) or
-MJPG frames (each a self-contained baseline JPEG, decoded by the
-in-repo T.81 codec). Parsing these from scratch gives the
-frame-sampling and motion-feature stages a REAL pixel path with
-deterministic fixtures.
+without ffmpeg/PIL, the video hash decodes RIFF AVI carrying
+uncompressed DIB frames (raw bottom-up BGR, no entropy codec — the WAV
+analogue) or MJPG frames (each a self-contained baseline JPEG, decoded
+by the in-repo T.81 codec), parsed here from scratch.
 
 Format per the public AVI RIFF specification (Microsoft "AVI RIFF File
 Reference"): RIFF('AVI ' LIST('hdrl' avih LIST('strl' strh strf))
 LIST('movi' '00db'…) [idx1]); frame chunks are BITMAPINFOHEADER
 ``BI_RGB`` 24-bit rows, bottom-up, each row padded to 4 bytes.
-Other fourccs (H264/VP8/…) raise ValueError and the caller
-falls back to the marked fake — never silent wrong pixels.
+Other fourccs (H264/VP8/…) raise ValueError and the video hash is
+NULL — never silent wrong pixels.
 """
 
 from __future__ import annotations
@@ -140,25 +137,6 @@ def avi_decode(data: bytes, indices: list[int] | None = None):
         else (1e6 / usec_per_frame if usec_per_frame else 0.0)
     )
     return out, fps
-
-
-def avi_frame_count(data: bytes) -> int:
-    """Number of frame chunks in the movi list (header walk only, no
-    pixel decode) — lets a sampler choose indices before decoding."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    n = 0
-
-    def walk_list(pos: int, end: int) -> None:
-        nonlocal n
-        for tag, start, ln in _walk_chunks(data, pos, end):
-            if tag == b"LIST":
-                walk_list(start + 4, start + ln)
-            elif tag in (b"00db", b"00dc"):
-                n += 1
-
-    walk_list(12, len(data))
-    return n
 
 
 def avi_encode(

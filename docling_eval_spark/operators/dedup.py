@@ -163,46 +163,6 @@ def char_shingles(text_col: str, k: int = 5) -> F.Column:
     return _shingles_of_norm(_norm(text_col), k)
 
 
-def _shingle_codes_of_norm(norm: F.Column, k: int) -> F.Column:
-    """Distinct k-gram *hash codes* (array<long>, each in [0, 2^31−1)):
-    polynomial hash of each k-char window's code points. Cheaper than
-    materializing substring shingles (int dedup instead of string
-    dedup) and bit-for-bit reproducible in DuckDB (the minhash oracle
-    recomputes these). Same windowing as `_shingles_of_norm`: texts
-    shorter than k hash the whole string (slice clamps at the end)."""
-
-    def over_norm(nrm: F.Column) -> F.Column:
-        n = F.length(nrm)
-        codes = F.transform(F.split(nrm, ""), lambda ch: F.ascii(ch).cast("long"))
-
-        def over_codes(cds: F.Column) -> F.Column:
-            idxs = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-                F.when(n > 0, F.sequence(F.lit(1), F.lit(1))).otherwise(
-                    F.array().cast("array<int>")
-                )
-            )
-            window_hash = lambda i: F.aggregate(  # noqa: E731
-                F.slice(cds, i, k),
-                F.lit(0).cast("long"),
-                lambda acc, x: F.pmod(acc * _POLY_BASE + x, F.lit(_MERSENNE)),
-            )
-            return F.array_distinct(F.transform(idxs, window_hash))
-
-        return let_col(codes, over_codes)
-
-    return let_col(norm, over_norm)
-
-
-def shingle_code_table(
-    df: DataFrame, id_col: str, text_col: str = "text", k: int = 5
-) -> DataFrame:
-    """(id, shingles: array<long>) hashed-shingle projection."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        _shingle_codes_of_norm(_norm(text_col), k).alias("shingles"),
-    )
-
-
 def ngram_jaccard(
     df_pairs: DataFrame,
     left_shingles: str = "shingles_l",

@@ -1,16 +1,12 @@
-"""Pure-Python GIF codec (decoder + minimal encoder).
+"""Pure-Python GIF decoder.
 
 GIF87a/89a is fully decodable with stdlib-only code: the container is
 a sequence of blocks and the pixel data is LZW with variable-width
-codes (public spec, CompuServe 1989/W3C). This gives the multimodal
-stages a second REAL pixel format beside PNG — JPEG stays an honest
-fake (a baseline-DCT decoder is out of scope here).
+codes (public spec, CompuServe 1989/W3C). This gives the image hash
+a real pixel path for GIF payloads beside PNG and JPEG.
 
 Supported: global/local color tables, interlaced and non-interlaced
-frames, 89a extensions (skipped), first frame decoded. The encoder
-writes literal LZW codes with periodic clear codes (the classic
-"uncompressed GIF" trick) — spec-valid output any decoder reads,
-existing purely so round-trip tests don't need a real compressor.
+frames, 89a extensions (skipped), first frame decoded.
 """
 
 from __future__ import annotations
@@ -118,55 +114,3 @@ def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> list[int]:
             if len(table) == (1 << code_size) and code_size < 12:
                 code_size += 1
     return out
-
-
-def gif_encode(arr: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 → GIF89a with a 256-entry palette built from the
-    image's distinct colors (must be ≤ 256) and literal LZW codes."""
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = np.stack([a] * 3, axis=2)
-    h, w, _ = a.shape
-    flat = a.reshape(-1, 3)
-    colors, idx = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError("gif_encode supports <= 256 distinct colors")
-    pal = np.zeros((256, 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | 0x07, 0, 0)  # GCT, 256 entries
-    out += pal.tobytes()
-    out += struct.pack("<BHHHHB", _IMAGE, 0, 0, w, h, 0)
-    min_code_size = 8
-    out.append(min_code_size)
-    clear, eoi = 256, 257
-    code_size = 9
-    acc = bits = 0
-    payload = bytearray()
-
-    def emit(code: int) -> None:
-        nonlocal acc, bits
-        acc |= code << bits
-        bits += code_size
-        while bits >= 8:
-            payload.append(acc & 0xFF)
-            acc >>= 8
-            bits -= 8
-
-    emit(clear)
-    for n, px in enumerate(idx.tolist()):
-        emit(int(px))
-        # re-clear before the (never-extended) table width would grow:
-        # each literal after a clear appends one table entry
-        if n % 250 == 249:
-            emit(clear)
-    emit(eoi)
-    if bits:
-        payload.append(acc & 0xFF)
-    for i in range(0, len(payload), 255):
-        chunk = payload[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    out.append(_TRAILER)
-    return bytes(out)

@@ -31,40 +31,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def train_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Deterministic k-means centroids (see module docstring)."""
-    seeds = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string").cast("binary")))
-        .limit(n_centroids)
-        .collect()
-    )
-    cents = np.array([list(r[vec_col]) for r in seeds], dtype=float)
-    for _ in range(iterations):
-        assigned = assign_centroids(corpus, cents, id_col, vec_col)
-        sums = (
-            assigned.select("centroid", F.posexplode(vec_col).alias("dim", "v"))
-            .groupBy("centroid", "dim")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new = cents.copy()
-        by_c: dict[int, dict[int, tuple[float, int]]] = {}
-        for r in sums:
-            by_c.setdefault(r["centroid"], {})[r["dim"]] = (r["s"], r["n"])
-        for c, dims in by_c.items():
-            for d, (s, n) in dims.items():
-                new[c, d] = s / n
-        cents = new
-    return cents
-
-
 def assign_centroids(
     corpus: DataFrame,
     centroids: np.ndarray,

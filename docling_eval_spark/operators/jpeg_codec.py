@@ -11,10 +11,9 @@ nearest-neighbor chroma upsampling) — plus DRI/RSTn restart markers
 progressive SOF2 (T.81 annex G: spectral selection + successive
 approximation, DC and AC scans, EOB runs, refinement correction
 bits). Anything else (lossless/arithmetic coding, 16-bit tables,
-baseline multi-scan) raises ValueError and the caller degrades to the
-honest fake path.
+baseline multi-scan) raises ValueError and the image hash is NULL.
 
-The encoder exists for round-trip tests and thumbnail re-encoding: it
+The encoder writes the MJPG frames of ``avi_codec.avi_encode``: it
 writes flat quantization tables and deliberately simple fixed-length
 canonical Huffman tables (every table is embedded in the stream, so
 no Annex-K recall is needed; the output is spec-valid, just not
@@ -258,144 +257,6 @@ def jpeg_encode(
     bw.flush()
     out += bw.out
     out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def jpeg_encode_progressive(
-    arr: np.ndarray, restart_interval: int = 0
-) -> bytes:
-    """(H, W) gray or (H, W, 3) RGB uint8 → PROGRESSIVE (SOF2) JPEG
-    bytes, 1×1 sampling, flat q=16 tables. Scan script exercises both
-    progressive dimensions: DC successive approximation (first pass at
-    Al=1, then a 1-bit refinement) and AC spectral selection (bands
-    1-5 then 6-63 per component, EOB-run coded). Used as the fixture
-    generator for the progressive decode path."""
-    a = np.asarray(arr, dtype=np.float64)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    planes = [a] if gray else list(np.moveaxis(_rgb_to_ycbcr(a), -1, 0))
-    ncomp = len(planes)
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    q = _Q_FLAT.reshape(8, 8)
-    nby, nbx = ph // 8, pw // 8
-    # all coefficients up front (zigzag order)
-    coefs = np.zeros((ncomp, nby, nbx, 64), dtype=np.int32)
-    for ci, p in enumerate(planes):
-        pp = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge") - 128.0
-        for by in range(nby):
-            for bx in range(nbx):
-                blockc = np.rint(
-                    (_D @ pp[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] @ _D.T) / q
-                ).astype(np.int32)
-                coefs[ci, by, bx] = [blockc[r, c] for r, c in _ZZ]
-
-    dc_bits, dc_syms, dc_codes = _canonical(_DC_SPEC)
-    ac_bits, ac_syms, ac_codes = _canonical(_AC_SPEC)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(
-        int(x) for x in _Q_FLAT
-    )
-    sof = struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        sof += bytes([cid, 0x11, 0])
-    out += b"\xff\xc2" + sof
-    for cls, (bits, syms) in ((0, (dc_bits, dc_syms)), (1, (ac_bits, ac_syms))):
-        body = bytes([cls << 4]) + bytes(bits) + bytes(syms)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    def sos_header(comp_ids: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        b = struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
-        for cid in comp_ids:
-            b += bytes([cid, 0x00])
-        return b"\xff\xda" + b + bytes([ss, se, (ah << 4) | al])
-
-    # ---- scan 1: DC first pass, interleaved, Al=1
-    out += sos_header(list(range(1, ncomp + 1)), 0, 0, 0, 1)
-    bw = _BitWriter()
-    preds = [0] * ncomp
-    n = 0
-    rst = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and n and n % restart_interval == 0:
-                bw.flush()
-                out += bw.out + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                bw = _BitWriter()
-                preds = [0] * ncomp
-            for ci in range(ncomp):
-                v = int(coefs[ci, by, bx, 0]) >> 1
-                diff = v - preds[ci]
-                preds[ci] = v
-                t = _category(diff)
-                code, ln = dc_codes[t]
-                bw.write(code, ln)
-                if t:
-                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-            n += 1
-    bw.flush()
-    out += bw.out
-    # ---- scan 2: DC refinement, Ah=1 Al=0 (one bit per block).
-    # DRI applies to EVERY scan after it (T.81 B.2.4.4), so restart
-    # markers must be emitted here and in the AC scans too.
-    out += sos_header(list(range(1, ncomp + 1)), 0, 0, 1, 0)
-    bw = _BitWriter()
-    n = 0
-    rst = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and n and n % restart_interval == 0:
-                bw.flush()
-                out += bw.out + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                bw = _BitWriter()
-            for ci in range(ncomp):
-                bw.write(int(coefs[ci, by, bx, 0]) & 1, 1)
-            n += 1
-    bw.flush()
-    out += bw.out
-    # ---- AC spectral-selection scans per component (Al=0)
-    for ci in range(ncomp):
-        for ss, se in ((1, 5), (6, 63)):
-            out += sos_header([ci + 1], ss, se, 0, 0)
-            bw = _BitWriter()
-            n = 0
-            rst = 0
-            for by in range(nby):
-                for bx in range(nbx):
-                    if restart_interval and n and n % restart_interval == 0:
-                        bw.flush()
-                        out += bw.out + bytes([0xFF, 0xD0 + rst])
-                        rst = (rst + 1) % 8
-                        bw = _BitWriter()
-                    n += 1
-                    band = coefs[ci, by, bx]
-                    run = 0
-                    emitted = False
-                    for k in range(ss, se + 1):
-                        v = int(band[k])
-                        if v == 0:
-                            run += 1
-                            continue
-                        while run >= 16:
-                            c, l = ac_codes[0xF0]
-                            bw.write(c, l)
-                            run -= 16
-                        s = _category(v)
-                        c, l = ac_codes[(run << 4) | s]
-                        bw.write(c, l)
-                        bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-                        run = 0
-                        emitted = True
-                    if run > 0 or not emitted:
-                        c, l = ac_codes[0x00]  # EOB covering this block
-                        bw.write(c, l)
-            bw.flush()
-            out += bw.out
-    out += b"\xff\xd9"
     return bytes(out)
 
 

@@ -19,13 +19,6 @@ from pyspark.sql import Column, DataFrame
 from docling_eval_spark.functions.let import let_col
 
 
-def link_rows(df: DataFrame, links_col: str = "links", key: str = "url") -> DataFrame:
-    """(key, links: array<struct<src,dst>>) → one row per link."""
-    return df.select(
-        F.col(key).alias("key"), F.explode(links_col).alias("l")
-    ).select("key", F.col("l.src").alias("src"), F.col("l.dst").alias("dst"))
-
-
 def kv_link_metrics(
     gt: DataFrame, pred: DataFrame, key: str = "key"
 ) -> DataFrame:

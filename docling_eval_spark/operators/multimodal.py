@@ -1,119 +1,30 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal near-duplicate hashing over binary media columns.
 
 The reference stores page renders and picture crops as image columns
 (`benchmarks/utils.py:48-65` Features schema with Sequence(Image),
 crop at `utils.py:406-436`). At web scale the engine treats media as
-``binary`` columns with a typed metadata struct, processed by
-Arrow-batched kernels over ``mapInPandas``.
+``binary`` columns processed by Arrow-batched kernels over
+``mapInPandas``.
 
-PNG, GIF, JPEG and uncompressed-AVI payloads get a REAL pixel path:
-``operators.png_codec`` (zlib + the five spec scanline filters),
-``operators.gif_codec`` (variable-width LZW), ``operators.jpeg_codec``
-(T.81 baseline + progressive, 4:4:4/4:2:2/4:2:0, DRI/RSTn) and
-``operators.avi_codec`` (RIFF DIB frames) are pure-Python+numpy
-codecs, so decode → numpy → resize → feature-extract genuinely runs
-on pixels. Compressed video (MJPG/H.264/…) and lossless/arithmetic
-JPEG still degrade to the
-clearly-marked deterministic fakes behind ``fake=True`` markers;
-``decode_image_meta`` still parses their real headers. The Spark-side
-contracts — schemas, batch iteration, partitioning — are identical on
-both paths.
+Each medium gets a 64-bit perceptual hash computed from real samples
+(image dHash, audio energy hash, video temporal hash) and a
+near-duplicate pair join on Hamming distance. Pixels come from the
+pure-Python+numpy codecs ``operators.png_codec`` (zlib + the five spec
+scanline filters), ``operators.gif_codec`` (variable-width LZW),
+``operators.jpeg_codec`` (T.81 baseline + progressive,
+4:4:4/4:2:2/4:2:0, DRI/RSTn) and ``operators.avi_codec`` (RIFF DIB and
+MJPG frames); WAV needs no codec. A payload no codec decodes hashes to
+NULL.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct as _struct
 from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("fake", T.BooleanType()),
-    ]
-)
-
-
-def decode_image_meta(data: bytes) -> dict:
-    """Parse PNG / JPEG / GIF headers for true dimensions (pure-bytes,
-    no codec); anything else → format=unknown with fake dims."""
-    meta = {
-        "format": "unknown",
-        "width": 0,
-        "height": 0,
-        "n_bytes": len(data),
-        "sha256": hashlib.sha256(data).hexdigest(),
-        "fake": False,
-    }
-    if data[:8] == b"\x89PNG\r\n\x1a\n" and len(data) >= 24:
-        w, h = _struct.unpack(">II", data[16:24])
-        meta.update(format="png", width=int(w), height=int(h))
-    elif data[:2] == b"\xff\xd8":
-        meta["format"] = "jpeg"
-        i = 2
-        while i + 9 < len(data):
-            if data[i] != 0xFF:
-                break
-            marker = data[i + 1]
-            seg_len = _struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if marker in (0xC0, 0xC1, 0xC2, 0xC3):
-                h, w = _struct.unpack(">HH", data[i + 5 : i + 9])
-                meta.update(width=int(w), height=int(h))
-                break
-            i += 2 + seg_len
-    elif data[:6] in (b"GIF87a", b"GIF89a") and len(data) >= 10:
-        w, h = _struct.unpack("<HH", data[6:10])
-        meta.update(format="gif", width=int(w), height=int(h))
-    else:
-        # STUB: deterministic fake dims derived from content hash —
-        # stands in for a real decoder (not installed here)
-        digest = hashlib.sha256(data).digest()
-        meta.update(
-            width=64 + digest[0] % 192, height=64 + digest[1] % 192, fake=True
-        )
-    return meta
-
-
-def image_meta_stage(df: DataFrame, binary_col: str = "media") -> DataFrame:
-    """Append a typed metadata struct for a binary media column."""
-    fields = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("media_meta", MEDIA_META_SCHEMA)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[fields].copy()
-            out["media_meta"] = [
-                tuple(decode_image_meta(b if b is not None else b"").values())
-                for b in pdf[binary_col]
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-_FEAT_DIM = 16
-
-FEATURES_SCHEMA = T.ArrayType(T.FloatType())
-
-
-def fake_image_features(data: bytes, dim: int = _FEAT_DIM) -> list[float]:
-    """STUB feature extractor: deterministic unit vector from the
-    sha256 stream (placeholder for a real vision encoder — the Spark
-    plumbing around it, including batch shape, is the real contract)."""
-    digest = hashlib.sha256(data).digest()
-    raw = [(digest[i % 32] / 255.0) - 0.5 for i in range(dim)]
-    norm = sum(x * x for x in raw) ** 0.5 or 1.0
-    return [x / norm for x in raw]
 
 
 def decode_pixels(data: bytes):
@@ -134,260 +45,7 @@ def decode_pixels(data: bytes):
     raise ValueError("no real codec for this payload")
 
 
-def image_features(data: bytes) -> list[float]:
-    """REAL pixel features for decodable payloads (per-channel mean/std
-    + luma histogram, same 16-dim shape as the fake); other formats
-    fall back to the hash fake."""
-    try:
-        from docling_eval_spark.operators.png_codec import image_stats_features
-
-        return [float(x) for x in image_stats_features(decode_pixels(data))]
-    except Exception:
-        return fake_image_features(data)
-
-
-def image_features_stage(
-    df: DataFrame, binary_col: str = "media", out_col: str = "features"
-) -> DataFrame:
-    fields = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, FEATURES_SCHEMA)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[fields].copy()
-            out[out_col] = [
-                image_features(b if b is not None else b"")
-                for b in pdf[binary_col]
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-def frame_sample_stage(
-    df: DataFrame,
-    binary_col: str = "media",
-    every_n_bytes: int = 4096,
-    max_frames: int = 16,
-) -> DataFrame:
-    """Video frame sampler: one row per sampled frame, preserving the
-    parent key. Uncompressed RIFF AVI payloads take the REAL pixel
-    path (``avi_codec``): up to ``max_frames`` frames sampled at a
-    uniform stride, each re-encoded as a real PNG with true
-    dimensions and ``fake=False``. Compressed/unknown containers
-    degrade to the marked fake (fixed-size byte slices standing in
-    for ffmpeg keyframes, ``fake=True``) — never silent wrong
-    pixels."""
-    src = df.select("url", binary_col)
-    out_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("frame_no", T.IntegerType()),
-            T.StructField("frame_bytes", T.BinaryType()),
-            T.StructField("frame_w", T.IntegerType()),
-            T.StructField("frame_h", T.IntegerType()),
-            T.StructField("fake", T.BooleanType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.operators.avi_codec import (
-            avi_decode,
-            avi_frame_count,
-        )
-        from docling_eval_spark.operators.png_codec import png_encode
-
-        cols = ["url", "frame_no", "frame_bytes", "frame_w", "frame_h", "fake"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, b in zip(pdf["url"], pdf[binary_col]):
-                b = bytes(b) if b is not None else b""
-                frames = None
-                if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    # degrade to the fake path on ANY decode problem
-                    # (incl. malformed headers) — never a task failure
-                    try:
-                        n = avi_frame_count(b)
-                        stride = max(1, -(-n // max_frames))  # ceil(n/max)
-                        idxs = list(range(0, n, stride))
-                        # decode ONLY the sampled frames — a long video
-                        # never materializes in full just to keep a few
-                        frames, _fps = avi_decode(b, indices=idxs)
-                    except Exception:
-                        frames = None
-                if frames is not None:
-                    for fno in range(frames.shape[0]):
-                        f = frames[fno]
-                        rows.append(
-                            (url, fno, png_encode(f), f.shape[1], f.shape[0], False)
-                        )
-                    continue
-                for fno in range(min(max_frames, max(1, len(b) // every_n_bytes))):
-                    rows.append(
-                        (
-                            url,
-                            fno,
-                            b[fno * every_n_bytes : (fno + 1) * every_n_bytes],
-                            None,
-                            None,
-                            True,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(kernel, schema=out_schema)
-
-
-VIDEO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("fps", T.DoubleType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_luma", T.DoubleType()),
-        T.StructField("motion", T.DoubleType()),
-        T.StructField("fake", T.BooleanType()),
-    ]
-)
-
-
-def video_features(data: bytes) -> tuple:
-    """REAL per-video features for uncompressed AVI payloads:
-    Rec. 601 mean luma over all frames and mean absolute luma delta
-    between consecutive frames (the classic motion proxy). Other
-    containers → deterministic hash fake, ``fake=True``."""
-    import numpy as np
-
-    try:
-        from docling_eval_spark.operators.avi_codec import avi_decode
-
-        frames, fps = avi_decode(data)
-    except Exception:
-        digest = hashlib.sha256(data or b"").digest()
-        return (
-            1 + digest[0] % 32,
-            float(1 + digest[1] % 30),
-            64 + digest[2] % 192,
-            64 + digest[3] % 192,
-            digest[4] / 255.0,
-            digest[5] / 255.0,
-            True,
-        )
-    luma = (
-        0.299 * frames[..., 0].astype(np.float64)
-        + 0.587 * frames[..., 1]
-        + 0.114 * frames[..., 2]
-    ) / 255.0
-    motion = (
-        float(np.abs(np.diff(luma, axis=0)).mean()) if luma.shape[0] > 1 else 0.0
-    )
-    return (
-        int(frames.shape[0]),
-        float(fps),
-        int(frames.shape[2]),
-        int(frames.shape[1]),
-        float(luma.mean()),
-        motion,
-        False,
-    )
-
-
-def video_features_stage(
-    df: DataFrame, binary_col: str = "media", out_col: str = "video_features"
-) -> DataFrame:
-    """Append real-or-fake video features for a binary media column —
-    same Arrow-batched narrow-kernel shape as ``audio_features_stage``
-    (no shuffle; scales with input partitions)."""
-    out_fields = df.schema.fields + [T.StructField(out_col, VIDEO_FEATURES_SCHEMA)]
-    schema = T.StructType(out_fields)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                video_features(bytes(b) if b is not None else b"")
-                for b in pdf[binary_col]
-            ]
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
-THUMBNAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("thumb", T.BinaryType()),
-        T.StructField("thumb_w", T.IntegerType()),
-        T.StructField("thumb_h", T.IntegerType()),
-        T.StructField("fake", T.BooleanType()),
-    ]
-)
-
-
-def thumbnail_stage(
-    df: DataFrame,
-    binary_col: str = "media",
-    max_side: int = 64,
-    out_col: str = "thumbnail",
-) -> DataFrame:
-    """Decode → nearest-neighbor downscale → re-encode PNG (real pixel
-    crop/scale, SURVEY K11; reference crops page renders in
-    `benchmarks/utils.py:406-436`). Non-PNG payloads come back as
-    fake=True rows carrying a 1x1 gray PNG so downstream schema/flow
-    is identical."""
-    import numpy as np
-
-    from docling_eval_spark.operators.png_codec import (
-        png_encode,
-        resize_nearest,
-    )
-
-    fields = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, THUMBNAIL_SCHEMA)]
-    )
-
-    def one(b: bytes) -> tuple:
-        try:
-            arr = decode_pixels(b)
-            h, w = arr.shape[:2]
-            scale = max(h, w) / max_side
-            if scale > 1:
-                arr = resize_nearest(
-                    arr, max(1, int(w / scale)), max(1, int(h / scale))
-                )
-            return (
-                png_encode(arr),
-                int(arr.shape[1]),
-                int(arr.shape[0]),
-                False,
-            )
-        except Exception:
-            return (png_encode(np.full((1, 1), 128, dtype=np.uint8)), 1, 1, True)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[fields].copy()
-            out[out_col] = [one(b if b is not None else b"") for b in pdf[binary_col]]
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
 # ------------------------------------------------------------------ audio
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("duration_sec", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-        T.StructField("zero_cross_rate", T.DoubleType()),
-        T.StructField("fake", T.BooleanType()),
-    ]
-)
 
 
 def wav_decode(data: bytes):
@@ -423,70 +81,6 @@ def wav_decode(data: bytes):
         arr = (np.frombuffer(samples, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
     n = (len(arr) // channels) * channels
     return arr[:n].reshape(-1, channels), rate
-
-
-def wav_encode(samples, rate: int = 16000) -> bytes:
-    """(n,) or (n, ch) float in [-1,1] → 16-bit PCM WAV (test fixture)."""
-    import struct as st
-
-    import numpy as np
-
-    a = np.asarray(samples, dtype=np.float64)
-    if a.ndim == 1:
-        a = a[:, None]
-    pcm = (np.clip(a, -1, 1) * 32767).astype("<i2").tobytes()
-    ch = a.shape[1]
-    hdr = st.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(pcm), b"WAVE", b"fmt ", 16, 1, ch, rate,
-        rate * ch * 2, ch * 2, 16, b"data", len(pcm),
-    )
-    return hdr + pcm
-
-
-def audio_features(data: bytes) -> tuple:
-    """Real features for PCM WAV payloads; deterministic fake
-    otherwise (the Spark plumbing is format-agnostic)."""
-    try:
-        arr, rate = wav_decode(data)
-        mono = arr.mean(axis=1)
-        rms = float((mono**2).mean() ** 0.5)
-        peak = float(abs(mono).max()) if len(mono) else 0.0
-        zc = (
-            float(((mono[:-1] * mono[1:]) < 0).mean()) if len(mono) > 1 else 0.0
-        )
-        return (
-            int(rate),
-            int(arr.shape[1]),
-            round(len(arr) / rate, 6),
-            round(rms, 6),
-            round(peak, 6),
-            round(zc, 6),
-            False,
-        )
-    except Exception:
-        digest = hashlib.sha256(data).digest()
-        return (16000, 1, 1.0, digest[0] / 255.0, digest[1] / 255.0, digest[2] / 255.0, True)
-
-
-def audio_features_stage(
-    df: DataFrame, binary_col: str = "media", out_col: str = "audio"
-) -> DataFrame:
-    """Append real-or-fake audio features for a binary media column."""
-    fields = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, AUDIO_FEATURES_SCHEMA)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[fields].copy()
-            out[out_col] = [
-                audio_features(b if b is not None else b"") for b in pdf[binary_col]
-            ]
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
 
 
 # ---------------------------------------------------------- perceptual hash

@@ -51,19 +51,6 @@ def _grams_of(norm: Column, k: int) -> Column:
     return let_col(norm, body)
 
 
-def trigram_model(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(gram, logp): ln(count(abc) / count(ab·)) for every trigram in
-    the corpus, logp pre-quantized to 6 decimals. The context count is
-    the sum of trigram counts sharing the 2-char prefix — derived from
-    the trigram table itself, not a second corpus pass. (Note the
-    derived c2 counts only windows with a following char, which IS the
-    conditional's denominator — documents' final bigrams never start a
-    trigram.)"""
-    return trigram_model_from_grams(
-        df.select(F.explode(_grams_of(_norm(text_col), 3)).alias("gram"))
-    )
-
-
 def trigram_model_from_grams(grams: DataFrame) -> DataFrame:
     """Same model, built from an already-exploded ``gram`` column —
     lets the self-trained scoring path reuse ONE persisted gram frame

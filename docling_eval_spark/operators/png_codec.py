@@ -3,14 +3,13 @@
 No raster libraries exist in this container, but PNG needs only zlib
 (stdlib) plus the five scanline filters of the public PNG spec
 (RFC 2083 / ISO 15948 §9): None, Sub, Up, Average, Paeth. That makes
-real pixel-level image ops (decode → numpy array → resize → feature
-extraction) implementable without PIL — this module is the real codec
-behind operators.multimodal's image kernels for PNG payloads; other
-formats still fall back to the clearly-marked fakes.
+real pixel-level image ops implementable without PIL: this module is
+the codec behind operators.multimodal's image hash for PNG payloads
+and behind the reports' PNG histograms.
 
 Supported: 8-bit depth, color types 0 (gray), 2 (RGB), 4 (gray+alpha),
-6 (RGBA), no interlacing. Anything else raises ValueError (the caller
-degrades to the fake path).
+6 (RGBA), no interlacing. Anything else raises ValueError (the image hash is
+then NULL).
 """
 
 from __future__ import annotations
@@ -156,29 +155,3 @@ def png_decode(data: bytes) -> np.ndarray:
         out[r] = cur
         prev = out[r]
     return out.reshape(height, width, ch)
-
-
-def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize (deterministic, integer index map)."""
-    h, w = arr.shape[:2]
-    rows = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    cols = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return arr[rows][:, cols]
-
-
-def image_stats_features(arr: np.ndarray, n_hist: int = 8) -> list[float]:
-    """Real pixel features: per-channel mean/std (scaled to [0,1]) +
-    an n_hist-bin luma histogram (mass-normalized). Deterministic,
-    codec-backed — replaces the hash fake for decodable payloads."""
-    a = arr.astype(np.float64)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    ch_means = [float(a[:, :, c].mean() / 255.0) for c in range(a.shape[2])]
-    ch_stds = [float(a[:, :, c].std() / 255.0) for c in range(a.shape[2])]
-    # pad/trim channels to 4 so the feature dim is fixed
-    ch_means = (ch_means + [0.0] * 4)[:4]
-    ch_stds = (ch_stds + [0.0] * 4)[:4]
-    luma = a[:, :, :3].mean(axis=2) if a.shape[2] >= 3 else a[:, :, 0]
-    hist, _ = np.histogram(luma, bins=n_hist, range=(0, 255))
-    total = hist.sum() or 1
-    return ch_means + ch_stds + [float(x) / total for x in hist]

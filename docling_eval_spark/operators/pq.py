@@ -155,140 +155,3 @@ def pq_topk(
     return top.select(
         query_id_col, F.col(id_col).alias("neighbor_id"), "rank", "score"
     )
-
-
-def pq_topk_adc(
-    corpus: DataFrame,
-    queries_pdf: pd.DataFrame,
-    codebooks: np.ndarray,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Production ADC fast path: per Arrow batch, build the
-    ``m × n_codes`` lookup table for every query once, then score each
-    encoded row with ``m`` indexed adds — no 64-wide multiply per
-    (query, doc) pair. Emits per-partition candidates; the exact
-    global top-k is a tiny driver-side-free window over
-    ``n_partitions · k`` rows per query. Ranking is pytest-asserted
-    identical to :func:`pq_topk` (float sum order differs, so scores
-    agree to ~1e-12, not bitwise — the fold path remains the
-    oracle-gated one). Caveat: EXACT score ties straddling the k-th
-    slot of a partition prune are kept by batch position, so a tied
-    lower-id row from another partition can displace differently than
-    the fold path's global (score, id) order — ties are measure-zero
-    on real embeddings but make the fold path the canonical one."""
-    from pyspark.sql import Window
-
-    cb = codebooks.astype(float)
-    m, n_codes, sub = cb.shape
-    qids = queries_pdf.iloc[:, 0].to_numpy()
-    qmat = np.array([list(v) for v in queries_pdf.iloc[:, 1]], dtype=float)
-    # (n_queries, m, n_codes) lookup tables
-    luts = np.einsum("qms,mcs->qmc", qmat.reshape(len(qmat), m, sub), cb)
-
-    enc = pq_encode(corpus, cb, id_col, vec_col).select(id_col, "codes")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "score": []}
-                )
-                continue
-            codes = np.array([list(c) for c in pdf["codes"]], dtype=int)
-            rows = np.arange(m)[None, :]
-            # (n_queries, batch): Σ_j LUT[q, j, code_j]
-            scores = np.stack(
-                [luts[qi][rows, codes].sum(axis=1) for qi in range(len(qids))]
-            )
-            ids = pdf[id_col].to_numpy()
-            # per-partition prune to k candidates per query
-            keep = min(len(ids), k)
-            idx = np.argsort(-scores, axis=1, kind="stable")[:, :keep]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, keep),
-                    "neighbor_id": ids[idx].reshape(-1),
-                    "score": np.take_along_axis(scores, idx, 1).reshape(-1),
-                }
-            )
-
-    cand = enc.mapInPandas(
-        kernel, schema="query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
-
-
-def pq_train_codebooks(
-    df: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
-) -> np.ndarray:
-    """Lloyd-refined PQ codebooks: start from the fixed seeded
-    gaussians and run ``iterations`` k-means steps per subspace over
-    the corpus. Each step is ONE narrow map (a kernel that encodes the
-    batch and emits per-``(subspace, code, dim)`` partial sums — the
-    map-side combine) plus one slim hash agg of ``m·n_codes·sub`` rows
-    per partition; the centroid matrix itself is the only driver-side
-    data. Empty cells keep their previous codeword (standard Lloyd
-    convention)."""
-    dim = len(df.select(vec_col).first()[0])
-    cb = pq_codebooks(dim, m, n_codes, seed)
-    sub = dim // m
-
-    for _ in range(iterations):
-        cur = cb.copy()
-        cc = np.einsum("mcs,mcs->mc", cur, cur)
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sums = np.zeros((m, n_codes, sub))
-            counts = np.zeros((m, n_codes), dtype=np.int64)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.array([list(v) for v in pdf[vec_col]], dtype=float)
-                segs = mat.reshape(len(mat), m, sub)
-                d = cc[None, :, :] - 2.0 * np.einsum("rms,mcs->rmc", segs, cur)
-                codes = np.argmin(d, axis=2)  # (rows, m)
-                for j in range(m):
-                    np.add.at(sums[j], codes[:, j], segs[:, j, :])
-                    np.add.at(counts[j], codes[:, j], 1)
-            js, cs, ds, ss, ns = [], [], [], [], []
-            for j in range(m):
-                for c in range(n_codes):
-                    if counts[j, c] == 0:
-                        continue
-                    for dd in range(sub):
-                        js.append(j)
-                        cs.append(c)
-                        ds.append(dd)
-                        ss.append(float(sums[j, c, dd]))
-                        ns.append(int(counts[j, c]))
-            yield pd.DataFrame(
-                {"j": js, "code": cs, "dim": ds, "s": ss, "n": ns}
-            )
-
-        parts = (
-            df.select(vec_col)
-            .mapInPandas(kernel, schema="j int, code int, dim int, s double, n long")
-            .groupBy("j", "code", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        nxt = cur.copy()
-        for r in parts:
-            nxt[r["j"], r["code"], r["dim"]] = r["s"] / r["n"]
-        cb = nxt
-    return cb

@@ -331,24 +331,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def near_dup_bucket_overflow(
-    corpus: DataFrame,
-    n_planes: int = 12,
-    seed: int = 7,
-    vec_col: str = "embedding",
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """(bucket, n) rows for buckets the near-dup join refuses to expand."""
-    return (
-        bucket_assign(
-            corpus, vec_col, hyperplanes_for(corpus, vec_col, n_planes, seed)
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > max_bucket)
-    )
-
-
 def hyperplanes_for(
     df: DataFrame, vec_col: str, n_planes: int, seed: int
 ) -> np.ndarray:

@@ -228,45 +228,6 @@ def hll_registers(
     )
 
 
-def hll_estimate(registers: DataFrame, key_cols: list[str], b: int = 6) -> DataFrame:
-    """(key..., est): bias-corrected harmonic-mean estimate with the
-    standard small-range (linear counting) AND large-range corrections.
-    Floating point — gated by pytest against exact COUNT(DISTINCT),
-    not by the DuckDB oracle (which gates the integer register table
-    instead).
-
-    Range: the hash field is the 31-bit portable-oracle space, so
-    hash collisions start eating distinct values as n approaches
-    2^31 (Flajolet's large-range correction, -P·ln(1 - E/P) with
-    P = 2^31, compensates the collision loss and is applied above
-    P/30 ≈ 7·10^7). Per-key cardinalities beyond ~10^9 exceed what any
-    31-bit-hash sketch can resolve — swap approx_count_distinct
-    (64-bit HLL++) there; this sketch's contract is ORACLE-REPLAYABLE
-    registers, which needs the portable hash family."""
-    m = 1 << b
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    p_space = float(1 << 31)
-    agg = registers.groupBy(*key_cols).agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rank"))).alias("hsum"),
-        F.count("*").alias("touched"),
-    )
-    zeros = F.lit(m) - F.col("touched")
-    raw = F.lit(alpha * m * m) / (F.col("hsum") + zeros.cast("double"))
-    est = (
-        F.when(
-            (raw <= 2.5 * m) & (zeros > 0),
-            F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
-        )
-        .when(
-            raw > p_space / 30.0,
-            -F.lit(p_space)
-            * F.log(F.greatest(F.lit(1e-12), F.lit(1.0) - raw / p_space)),
-        )
-        .otherwise(raw)
-    )
-    return agg.select(*key_cols, F.round(est).cast("long").alias("est"))
-
-
 # ---------------------------------------------------------------- qsketch
 #
 # Integer log-bucket quantile sketch: the mergeable-percentiles member

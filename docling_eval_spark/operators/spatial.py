@@ -16,7 +16,7 @@ equi-join on cell ids.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 
 def point_in_box_join(
@@ -52,39 +52,4 @@ def point_in_box_join(
         joined.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def iou_pair_join(
-    left: DataFrame,
-    right: DataFrame,
-    cutoff: float = 0.9,
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Box pairs with IoU > cutoff within each key group (page).
-    Column algebra IoU — no UDF."""
-    keys = keys or ["page_no"]
-    l = left.select(*keys, F.col("box_id").alias("id_l"),
-                    F.col("l").alias("l1"), F.col("t").alias("t1"),
-                    F.col("r").alias("r1"), F.col("b").alias("b1"))
-    r = right.select(*keys, F.col("box_id").alias("id_r"),
-                     F.col("l").alias("l2"), F.col("t").alias("t2"),
-                     F.col("r").alias("r2"), F.col("b").alias("b2"))
-    j = l.join(r, keys)
-    ix = F.greatest(F.lit(0.0), F.least("r1", "r2") - F.greatest("l1", "l2"))
-    iy = F.greatest(F.lit(0.0), F.least("b1", "b2") - F.greatest("t1", "t2"))
-    inter = ix * iy
-    union = (
-        (F.col("r1") - F.col("l1")) * (F.col("b1") - F.col("t1"))
-        + (F.col("r2") - F.col("l2")) * (F.col("b2") - F.col("t2"))
-        - inter
-    )
-    iou = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return j.withColumn("iou", iou).filter(F.col("iou") > cutoff)
-
-
-def grid_bucket_col(x: Column, y: Column, cell: float = 100.0) -> Column:
-    """Spatial grid cell id for equi-join bucketing of huge pages."""
-    return F.concat_ws(
-        ":", F.floor(x / cell).cast("long"), F.floor(y / cell).cast("long")
     )

@@ -45,53 +45,6 @@ def epoch_key_col(id_col: Column, epoch: int, mod: int = _FP_MOD) -> Column:
     )
 
 
-def epoch_shuffle(
-    df: DataFrame,
-    id_col: str,
-    epoch: int,
-    num_shards: int,
-    key_name: str = "shuffle_key",
-    shard_name: str = "shard",
-) -> DataFrame:
-    """Rows keyed, sharded and ordered for one training epoch.
-
-    Output carries ``key_name`` (the Horner epoch key) and
-    ``shard_name`` (key mod num_shards); partitioning is exactly one
-    hash exchange on the shard and each partition is locally sorted by
-    (key, id) — ties on colliding keys break deterministically on the
-    id. NO global sort: the plan must never contain a range exchange.
-    """
-    if num_shards < 1:
-        raise ValueError(f"num_shards must be >= 1, got {num_shards}")
-    key = epoch_key_col(F.col(id_col), epoch)
-    keyed = df.withColumn(key_name, key).withColumn(
-        shard_name, F.pmod(F.col(key_name), F.lit(num_shards)).cast("int")
-    )
-    # the shard column leads the local sort so a partitionBy writer's
-    # required ordering (partition cols first) is already satisfied —
-    # otherwise FileFormatWriter inserts its own sort on `shard` alone,
-    # which does not preserve the (key, id) training order
-    return keyed.repartition(num_shards, F.col(shard_name)).sortWithinPartitions(
-        shard_name, key_name, id_col
-    )
-
-
-def write_epoch_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    epoch: int,
-    num_shards: int,
-) -> None:
-    """Write one epoch as ``path/shard=<s>/part-*.parquet`` where the
-    parquet row order of each shard file is the training order. Because
-    the epoch shuffle leaves exactly one shard per task, partitionBy
-    emits one file per shard directory and preserves the local sort."""
-    epoch_shuffle(df, id_col, epoch, num_shards).write.mode(
-        "overwrite"
-    ).partitionBy("shard").parquet(path)
-
-
 def epoch_shard_stats(
     df: DataFrame,
     id_col: str,

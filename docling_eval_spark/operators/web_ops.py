@@ -448,45 +448,6 @@ def _scheme_and_authority(src: Column) -> tuple[Column, Column]:
     return scheme, authority
 
 
-def extract_links(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """(src, dst) outlink edges from raw HTML bytes — the web-graph
-    builder. Pure SQL regex over the decoded markup (one narrow map,
-    engine-portable); resolution semantics in :func:`_resolve_href`.
-    """
-    from docling_eval_spark.functions import let_col
-
-    src = F.col(url_col)
-    # case-insensitive attribute + scheme, both quote styles
-    hrefs = F.regexp_extract_all(
-        F.col(html_col).cast("string"),
-        F.lit("(?i)href\\s*=\\s*[\"']([^\"']*)[\"']"),
-        1,
-    )
-    scheme_expr, authority = _scheme_and_authority(src)
-
-    def over_scheme(scheme: Column) -> Column:
-        def over_origin(origin: Column) -> Column:
-            return F.transform(
-                hrefs, lambda h: _resolve_href(h, scheme, origin)
-            )
-
-        # let-bound: a lambda re-evaluates free references per href
-        # element (the Catalyst re-eval hazard functions/let.py exists
-        # for) — bind scheme and origin once per row
-        return let_col(
-            F.concat(scheme, F.lit("://"), authority), over_origin
-        )
-
-    resolved = let_col(scheme_expr, over_scheme)
-    return (
-        df.select(src.alias("src"), F.explode(resolved).alias("dst"))
-        .filter(F.col("dst").isNotNull())
-        .distinct()
-    )
-
-
 def extract_anchors(
     df: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -1465,7 +1426,6 @@ def template_rollup(
 def hits(
     edges: DataFrame,
     iterations: int = 4,
-    normalize: str = "final",
 ) -> DataFrame:
     """Fixed-iteration HITS hubs/authorities (Kleinberg 1999, public)
     over (src, dst) edges — PageRank's companion crawl-quality signal:
@@ -1478,17 +1438,14 @@ def hits(
     parallel edges contribute their multiplicity (A^T A on the
     multigraph, matching the adjacency-matrix form).
 
-    ``normalize="final"`` (default) skips per-iteration scaling: all
-    intermediate scores stay INTEGER-valued doubles (init 1, integer
-    sums — exact and order-independent below 2^53), and the single
-    final division by each vector's max is one float op per node on
-    identical operands in any engine, so the DuckDB oracle matches
-    bit-for-bit BEFORE rounding. Scores grow ~ (mean in-deg × mean
-    out-deg)^k; keep k small or degrees bounded (4 iterations on a
-    10^8-edge web graph with celebrity nodes of degree 10^6 can
-    exceed 2^53 — use ``normalize="l1"`` there, which rescales both
-    vectors to sum 1 every iteration at the cost of float determinism
-    across engines (values then agree only to rounding).
+    There is no per-iteration scaling: all intermediate scores stay
+    INTEGER-valued doubles (init 1, integer sums — exact and
+    order-independent below 2^53), and the single final division by
+    each vector's max is one float op per node on identical operands
+    in any engine, so the DuckDB oracle matches bit-for-bit BEFORE
+    rounding. Scores grow ~ (mean in-deg × mean out-deg)^k; keep k
+    small or degrees bounded (4 iterations on a 10^8-edge web graph
+    with celebrity nodes of degree 10^6 can exceed 2^53).
 
     Scale shape per iteration: TWO keyed equi-joins (edges⋈hubs on
     src, edges⋈auths on dst) + two map-side-combining sums — same
@@ -1510,30 +1467,16 @@ def hits(
     value-identical to folding every iteration, measured ~25% faster
     on the 600 k-edge bench graph (two node-frame joins per iteration
     removed)."""
-    if normalize not in ("final", "l1"):
-        raise ValueError("normalize must be 'final' or 'l1'")
     nodes = _node_frame(edges)
     ed = edges.select("src", "dst").persist()
     hubs0 = nodes.withColumn("hub", F.lit(1.0))
 
-    def scaled(v: DataFrame, col: str) -> DataFrame:
-        if normalize == "final":
-            return v
-        tot = v.agg(F.sum(col).alias("__tot"))
-        return v.crossJoin(F.broadcast(tot)).select(
-            "node",
-            F.when(F.col("__tot") > 0, F.col(col) / F.col("__tot"))
-            .otherwise(F.lit(0.0))
-            .alias(col),
-        )
-
     def hubs_of(auths: DataFrame) -> DataFrame:
-        return scaled(
+        return (
             ed.join(auths, ed["dst"] == auths["node"])
             .groupBy("src")
             .agg(F.sum("auth").alias("hub"))
-            .withColumnRenamed("src", "node"),
-            "hub",
+            .withColumnRenamed("src", "node")
         )
 
     def step(auths: DataFrame, it: int) -> DataFrame:
@@ -1547,11 +1490,9 @@ def hits(
 
     def fold(auths: DataFrame) -> DataFrame:
         hubs = hubs_of(auths) if iterations else hubs0
-        auths = scaled(auths, "auth")
         # max over the sparse frame equals max over the zero-filled full
         # frame: every sparse score is > 0 by induction (integer sums
-        # >= 1 in "final" mode, positive fractions in "l1" mode — both
-        # over nonempty in/out-edge sets), so the fold's 0.0 rows can
+        # >= 1 over nonempty in/out-edge sets), so the fold's 0.0 rows can
         # never be the max; an all-zero vector only happens with zero
         # edges, where both frames are empty either way
         maxes = hubs.agg(F.max("hub").alias("mh")).crossJoin(

@@ -4,7 +4,7 @@
 - **create**    — pages table → benchmark dataset: run the extraction
   kernel, keep ground truth + prediction side by side (the reference's
   GroundTruthDocument/PredictedDocument pre-join, SURVEY J1), write
-  sharded parquet (+ per-bucket lineage when requested).
+  sharded parquet.
 - **evaluate**  — dataset → per-document metric rows + dataset stats,
   one modality per call: markdown_text, table_structure (TEDS),
   layout (per-image + corpus mAP), reading_order (ARD), bbox_text.
@@ -267,31 +267,6 @@ def rows_markdown_text(ds: DataFrame) -> DataFrame:
     )
 
 
-def rollup_markdown_text(per_doc: DataFrame) -> DataFrame:
-    return _multi_metric_rollup(per_doc, "markdown_text")
-
-
-def evaluate_markdown_text(ds: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Per-doc text metrics (gt_text vs the prediction) + stats rows
-    (reference markdown_text_evaluator semantics; our extracted text IS
-    the markdown body for text-label docs)."""
-    per_doc = rows_markdown_text(ds)
-    return per_doc, rollup_markdown_text(per_doc)
-
-
-def evaluate_table_structure(
-    ds: DataFrame, gt_tables_col: str = "tables", pred_tables_col: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """TEDS per table + all/simple/complex stats
-    (`table_evaluator.py:150-172`). With a synthetic-identity dataset
-    the GT and pred table columns coincide; a model stage (K10 slot)
-    would populate a separate pred column."""
-    if pred_tables_col is None:
-        pred_tables_col = _pred_col(ds, "pred_tables", "tables")
-    per_table = rows_table_structure(ds, gt_tables_col, pred_tables_col)
-    return per_table, rollup_table_structure(per_table)
-
-
 def rows_table_structure(
     ds: DataFrame, gt_tables_col: str = "tables", pred_tables_col: str = "tables"
 ) -> DataFrame:
@@ -302,12 +277,6 @@ def rows_table_structure(
             F.col(pred_tables_col).alias("pred_tables"),
         ).filter(F.size(gt_tables_col) > 0)
     )
-
-
-def rollup_table_structure(per_table: DataFrame) -> DataFrame:
-    """all/simple/complex/struct splits in ONE aggregation over the
-    per-table TEDS rows. Round 1 ran the TEDS kernel 4× here."""
-    return _multi_metric_rollup(per_table, "table_structure")
 
 
 def evaluate_layout(

@@ -21,7 +21,7 @@ from typing import Any, NamedTuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from docling_eval_spark.evaluators.stats import N_BINS, collect_stats
+from docling_eval_spark.evaluators.stats import N_BINS
 
 
 def stats_to_table_text(stats_row: dict[str, Any], metric_name: str) -> str:
@@ -176,24 +176,6 @@ def histogram_png(stats_row: dict[str, Any], title: str = "") -> bytes:
     _raster_text(img, pad, 12, label)
     _raster_text(img, w // 2 - 15, h - 14, "score")
     return png_encode(img)
-
-
-def write_metric_report(
-    df: DataFrame, value_col: str, out_dir: str, metric_name: str
-) -> dict[str, Any]:
-    """Stats of ``value_col`` → {name}.json + {name}.md + {name}.svg +
-    {name}.png (the reference's evaluate/visualize sink pair,
-    `cli/main.py:252-310` + `70-112`; the .png matches the
-    reference's matplotlib figure format via the in-repo rasterizer).
-    Stats come from ``collect_stats`` (same contract as evaluate()'s
-    rollups): values rounded to 3 decimals are counted in one Spark
-    aggregation, bounded at ~2,001 rows whatever the row count, and
-    folded on the driver, so the report never buffers every per-doc
-    value in one task. To report several columns of one table, call
-    ``collect_stats`` once and :func:`render_metric_report` per row."""
-    return render_metric_report(
-        collect_stats(df, [value_col])[value_col], out_dir, metric_name
-    )
 
 
 def render_metric_report(

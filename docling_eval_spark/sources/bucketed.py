@@ -150,13 +150,3 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     """Catalog read — bucketing metadata rides along, so joins on the
     bucket key plan without exchanges."""
     return spark.table(table)
-
-
-def cobucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str]
-) -> DataFrame:
-    """Equi-join two co-bucketed catalog tables on their bucket key.
-    With matching bucket specs this plans WITHOUT any Exchange on
-    either side (asserted by the test suite) — the 100 TB shape where
-    the shuffle was paid once at write time."""
-    return read_table(spark, left_table).join(read_table(spark, right_table), on)

@@ -66,10 +66,3 @@ def read_gt_json(
         F.when(ok, F.lit("SUCCESS")).otherwise(F.lit("FAILURE")).alias("gt_status"),
         F.when(ok, F.lit("")).otherwise(F.col("value")).alias("error"),
     )
-
-
-def join_gt(docs: DataFrame, gt: DataFrame, key: str = "url") -> DataFrame:
-    """Attach GT columns to extracted docs; GT is usually the slim side
-    — broadcast when its size allows, else the equi-join shuffles on
-    the shared url hash."""
-    return docs.join(gt.filter(F.col("gt_status") == "SUCCESS"), key, "left")

@@ -22,7 +22,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # the repo-wide "is this on MY disk" rule — a private urlparse-based
 # variant treated file://nas01/p (remote authority) as a local path
@@ -77,16 +77,3 @@ def write_jsonl_shards(
         with open(os.path.join(local, "_manifest.json"), "w") as fh:
             json.dump(manifest, fh, indent=1, sort_keys=True)
     return manifest
-
-
-def read_jsonl_shards(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Read shards written by :func:`write_jsonl_shards`. Pass the
-    schema string for production reads (schema inference is a full
-    extra pass at 100 TB); JSON source splits by line so shards
-    parallelize regardless of their size."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(os.path.join(path, "part-*"))

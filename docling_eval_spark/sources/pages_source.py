@@ -18,27 +18,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
-def read_pages_split(spark: SparkSession, root: str, split: str) -> DataFrame:
-    """Reference split-directory convention
-    (`evaluators/layout_evaluator.py:99-106`): {root}/{split}/*.parquet."""
-    return spark.read.schema(PAGES_SCHEMA).parquet(f"{root}/{split}")
-
-
-# S4/S5: directory of raw binaries → (url, html) — binaryFile source
-def read_binaries(spark: SparkSession, glob: str) -> DataFrame:
-    return (
-        spark.read.format("binaryFile")
-        .load(glob)
-        .select(
-            F.col("path").alias("url"),
-            F.col("modificationTime").alias("warc_ts"),
-            F.col("content").alias("html"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-
-
 # S8: sharded sink — shard cadence via maxRecordsPerFile (the
 # reference writes SHARD_SIZE=1000-row shards, `utils.py:377-403`)
 def write_sharded(
@@ -67,19 +46,3 @@ def write_sharded(
         .partitionBy(*(["bucket"] if bucket_by_url is not None else []))
         .parquet(path)
     )
-
-
-# S9-analog: dataset info — row counts per split/bucket + schema
-def dataset_info(df: DataFrame, by: str | None = None) -> DataFrame:
-    if by:
-        return df.groupBy(by).agg(F.count("*").alias("num_rows"))
-    return df.agg(F.count("*").alias("num_rows"))
-
-
-def try_iceberg(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is actually usable in this session."""
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # type: ignore[attr-defined]
-        return True
-    except Exception:
-        return False

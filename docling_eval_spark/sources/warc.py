@@ -1,4 +1,4 @@
-"""WARC source/sink (ISO 28500, WARC/1.0 and WARC/1.1).
+"""WARC source (ISO 28500, WARC/1.0 and WARC/1.1).
 
 The north-star input is a Common-Crawl-style corpus; on disk Common
 Crawl ships WARC files — a sequence of records, each ``WARC/1.x`` +
@@ -44,7 +44,6 @@ from typing import Iterator
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _CRLF = b"\r\n"
@@ -110,16 +109,6 @@ def _split_gzip_members_tagged(data: bytes) -> Iterator[tuple[bytes, str | None]
             if nxt == -1:
                 break
             pos = nxt
-
-
-def split_gzip_members(data: bytes) -> Iterator[bytes]:
-    """Member chunks only (legacy surface): a corrupt member yields
-    what decompressed so far (possibly nothing), then resyncs at the
-    next gzip magic. Use :func:`_split_gzip_members_tagged` when the
-    caller must surface per-member failures."""
-    for chunk, err in _split_gzip_members_tagged(data):
-        if chunk or err is None:
-            yield chunk
 
 
 def _parse_headers(blob: bytes) -> dict:
@@ -252,11 +241,6 @@ def parse_http_response(block: bytes) -> tuple[bytes, str | None, int | None]:
     return body, charset, status
 
 
-def parse_http_payload(block: bytes) -> bytes:
-    """Body-only convenience wrapper around :func:`parse_http_response`."""
-    return parse_http_response(block)[0]
-
-
 def _parse_warc_date(value: str):
     """WARC-Date: ISO 8601 UTC, optional fractional seconds (1.1)."""
     v = value.strip()
@@ -367,444 +351,6 @@ def warc_to_pages(df: DataFrame, require_2xx: bool = True) -> DataFrame:
     return df.filter(cond).select("url", "warc_ts", "html", "text", "lang")
 
 
-# ---------------------------------------------------------------- sink
-
-def _gzip_member(data: bytes) -> bytes:
-    c = zlib.compressobj(6, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
-    return c.compress(data) + c.flush()
-
-
-def warc_record_bytes(
-    warc_type: str,
-    block: bytes,
-    headers: dict[str, str] | None = None,
-    version: str = "WARC/1.0",
-) -> bytes:
-    head = [f"{version}\r\n".encode()]
-    base = {"WARC-Type": warc_type, "Content-Length": str(len(block))}
-    base.update(headers or {})
-    for k, v in base.items():
-        head.append(f"{k}: {v}\r\n".encode())
-    head.append(_CRLF)
-    return b"".join(head) + block + _CRLF + _CRLF
-
-
-def _warcinfo_record() -> bytes:
-    return warc_record_bytes(
-        "warcinfo",
-        b"software: docling-eval-spark fixture writer\r\n",
-        {"Content-Type": "application/warc-fields"},
-    )
-
-
-def _response_record_bytes(
-    p: dict, http_wrap: bool = True, chunked: bool = False
-) -> bytes:
-    """ONE response record for a page dict (url, html, warc_ts, and
-    optional status/charset) — the single source both fixture writers
-    (plain WARC and WARC+CDX) build from, so they can never drift."""
-    body = p["html"] if p.get("html") is not None else b""
-    if http_wrap:
-        status_line = b"HTTP/1.1 %d X\r\n" % p.get("status", 200)
-        ct = b"text/html"
-        if p.get("charset"):
-            ct += b"; charset=" + p["charset"].encode()
-        if chunked:
-            mid = max(1, len(body) // 2)
-            wire = b""
-            for part in (body[:mid], body[mid:]):
-                if part:
-                    wire += b"%x\r\n" % len(part) + part + _CRLF
-            wire += b"0\r\n\r\n"
-            http_head = (
-                status_line + b"Content-Type: " + ct +
-                b"\r\nTransfer-Encoding: chunked\r\n\r\n"
-            )
-        else:
-            wire = body
-            http_head = (
-                status_line + b"Content-Type: " + ct +
-                b"\r\nContent-Length: %d\r\n\r\n" % len(body)
-            )
-        block = http_head + wire
-        ctype = "application/http; msgtype=response"
-    else:
-        block = body
-        ctype = "text/html"
-    ts = p.get("warc_ts")
-    ts_s = (
-        ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-        if ts is not None
-        else "2017-01-01T00:00:00Z"
-    )
-    return warc_record_bytes(
-        "response",
-        block,
-        {
-            "WARC-Target-URI": p["url"],
-            "WARC-Date": ts_s,
-            "Content-Type": ctype,
-        },
-    )
-
-
-def encode_warc(
-    pages: list[dict],
-    gzip_members: bool = True,
-    http_wrap: bool = True,
-    chunked: bool = False,
-) -> bytes:
-    """Fixture writer: pages rows → WARC bytes (warcinfo first, then
-    one response record per page), optionally gzip-per-member and with
-    the payload wrapped as a raw HTTP response (optionally chunked) so
-    tests exercise the real decode path."""
-    records = [_warcinfo_record()]
-    for p in pages:
-        records.append(
-            _response_record_bytes(p, http_wrap=http_wrap, chunked=chunked)
-        )
-    if gzip_members:
-        return b"".join(_gzip_member(r) for r in records)
-    return b"".join(records)
-
-
-# ---------------------------------------------------------------- WET
-
-def read_wet(spark: SparkSession, glob: str) -> DataFrame:
-    """Common-Crawl WET files (same WARC container; ``conversion``
-    records whose block is the already-extracted UTF-8 text) →
-    (url, warc_ts, text) rows. Same per-file parallelism as
-    :func:`read_warc`; the pages-schema twin carries text instead of
-    html so quality/dedup stages run without the extraction kernel."""
-    raw = spark.read.format("binaryFile").load(glob).select("path", "content")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_PAGES_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rec_no = 0
-                for rec in _iter_records(bytes(content)):
-                    rec_no += 1
-                    if rec.get("error"):
-                        rows.append(
-                            {
-                                "url": None, "warc_ts": None, "html": None,
-                                "text": None, "lang": None,
-                                "http_status": None, "http_charset": None,
-                                "warc_path": str(path), "record_no": rec_no,
-                                "warc_status": "FAILURE",
-                                "error": rec["error"],
-                            }
-                        )
-                        continue
-                    if rec["type"].lower() != "conversion":
-                        continue
-                    h = rec["headers"]
-                    url = h.get("warc-target-uri")
-                    if url is None:
-                        # same FAILURE-row convention as read_warc —
-                        # malformed records never vanish silently
-                        rows.append(
-                            {
-                                "url": None, "warc_ts": None, "html": None,
-                                "text": None, "lang": None,
-                                "http_status": None, "http_charset": None,
-                                "warc_path": str(path), "record_no": rec_no,
-                                "warc_status": "FAILURE",
-                                "error": "conversion record without "
-                                         "WARC-Target-URI",
-                            }
-                        )
-                        continue
-                    rows.append(
-                        {
-                            "url": url,
-                            "warc_ts": _parse_warc_date(h.get("warc-date", "")),
-                            "html": None,
-                            "text": rec["block"].decode("utf-8", errors="replace"),
-                            "lang": None,
-                            "http_status": None,
-                            "http_charset": None,
-                            "warc_path": str(path),
-                            "record_no": rec_no,
-                            "warc_status": "SUCCESS",
-                            "error": "",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, schema=WARC_PAGES_SCHEMA)
-
-
-def encode_wet(pages: list[dict], gzip_members: bool = True) -> bytes:
-    """Fixture writer: (url, warc_ts, text) → WET bytes (warcinfo +
-    one ``conversion`` record per page)."""
-    records = [
-        warc_record_bytes(
-            "warcinfo",
-            b"software: docling-eval-spark WET fixture writer\r\n",
-            {"Content-Type": "application/warc-fields"},
-        )
-    ]
-    for p in pages:
-        block = (p.get("text") or "").encode("utf-8")
-        ts = p.get("warc_ts")
-        ts_s = (
-            ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-            if ts is not None
-            else "2017-01-01T00:00:00Z"
-        )
-        records.append(
-            warc_record_bytes(
-                "conversion",
-                block,
-                {
-                    "WARC-Target-URI": p["url"],
-                    "WARC-Date": ts_s,
-                    "Content-Type": "text/plain",
-                },
-            )
-        )
-    if gzip_members:
-        return b"".join(_gzip_member(r) for r in records)
-    return b"".join(records)
-
-
-WET_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("n_records", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-
-def write_wet_shards(
-    df: DataFrame,
-    out_dir: str,
-    num_shards: int | None = None,
-    gzip_members: bool = True,
-) -> DataFrame:
-    """Distributed WET sink: a (url, warc_ts, text) DataFrame becomes
-    one ``part-NNNNN.warc.wet.gz`` per partition under ``out_dir`` —
-    the Common-Crawl export format for extracted text, so a corpus
-    cleaned here round-trips straight back through :func:`read_wet`
-    (or any other WET consumer). Executes EAGERLY (it is a sink) and
-    returns the shard manifest as a DataFrame
-    (shard, path, n_records, n_bytes) — the per-partition lineage row
-    the resumable-ingest side expects.
-
-    Determinism: with ``num_shards`` the frame is hash-repartitioned
-    on url, so every url lands in the same shard across runs, and each
-    shard's records are sorted by url before encoding — two runs over
-    the same input produce byte-identical files. Tasks write
-    tmp-then-``os.replace`` under the shard's final name, so a killed
-    or speculatively-duplicated task never leaves a half-shard visible
-    and retries are idempotent.
-
-    Scale shape: one optional hash exchange, then a narrow
-    mapInPandas; each task holds one shard's text in memory while
-    encoding — size shards accordingly (records_per_shard ≈
-    corpus_rows / num_shards; Common Crawl itself targets ~150 MB
-    compressed per WET file)."""
-    import os
-    import uuid
-
-    if num_shards is not None:
-        df = df.repartition(num_shards, "url")
-    slim = df.select("url", "warc_ts", "text")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        pages: list[dict] = []
-        for pdf in batches:
-            for url, ts, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["text"]
-            ):
-                if url is None or (isinstance(url, float) and pd.isna(url)):
-                    continue
-                pages.append(
-                    {
-                        "url": str(url),
-                        "warc_ts": None if pd.isna(ts) else ts.to_pydatetime(),
-                        "text": None if text is None else str(text),
-                    }
-                )
-        if not pages:
-            yield pd.DataFrame(
-                columns=["shard", "path", "n_records", "n_bytes"]
-            )
-            return
-        pages.sort(key=lambda p: p["url"])
-        blob = encode_wet(pages, gzip_members=gzip_members)
-        suffix = ".warc.wet.gz" if gzip_members else ".warc.wet"
-        final = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, final)
-        yield pd.DataFrame(
-            [
-                {
-                    "shard": pid,
-                    "path": final,
-                    "n_records": len(pages),
-                    "n_bytes": len(blob),
-                }
-            ]
-        )
-
-    spark = df.sparkSession
-    rows = slim.mapInPandas(kernel, schema=WET_MANIFEST_SCHEMA).collect()
-    return spark.createDataFrame(rows, WET_MANIFEST_SCHEMA)
-
-
-# ------------------------------------------------------- resumable ingest
-
-WARC_MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("warc_path", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("doc_count", T.LongType()),
-        T.StructField("ok_count", T.LongType()),
-        T.StructField("part", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("run_id", T.StringType()),
-        T.StructField("committed_at", T.TimestampType()),
-    ]
-)
-
-
-def _manifest_col(
-    spark: SparkSession, manifest_dir: str, col: str
-) -> set[str]:
-    """Distinct SUCCESS-row values of one manifest column; empty set
-    ONLY when the manifest doesn't exist yet. Any other read failure
-    propagates — treating a transient error as an empty manifest would
-    make clean_orphan_parts delete committed parts and re-ingest
-    everything."""
-    try:
-        lin = spark.read.schema(WARC_MANIFEST_SCHEMA).parquet(manifest_dir)
-        return {
-            r[col]
-            for r in lin.filter(F.col("status") == "SUCCESS")
-            .select(col)
-            .distinct()
-            .collect()
-        }
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return set()
-        raise
-
-
-def _manifest_done(spark: SparkSession, manifest_dir: str) -> set[str]:
-    return _manifest_col(spark, manifest_dir, "warc_path")
-
-
-def ingest_warc_resumable(
-    spark: SparkSession,
-    glob: str,
-    out_dir: str,
-    manifest_dir: str,
-    files_per_job: int = 64,
-    run_id: str = "run",
-    fail_after_groups: int | None = None,
-) -> list[str]:
-    """Parse .warc(.gz) files into pages parquet, resumable at FILE
-    granularity — the WARC twin of ``plans.lineage.run_resumable``
-    (north rule: "resumable from checkpoint with per-partition
-    lineage"). The unit of restart is the input file because a gzip
-    member stream is parsed whole by one task anyway.
-
-    Protocol (crash-safe, no duplicates):
-    - pending = listed files ANTI-JOIN manifest[status=SUCCESS];
-    - each group of ``files_per_job`` files parses in ONE Spark job and
-      commits to ``{out}/part=<digest-of-group>/`` with mode=overwrite
-      — a group that died mid-write is simply rewritten on restart,
-      and finished groups are never touched again;
-    - only after the group's parquet commits does one manifest row per
-      file (doc/ok counts from the WRITTEN data, no re-parse) append.
-    Readers scan ``out_dir`` (hive-partitioned by part) or, for a
-    consistent snapshot, only the parts listed in the manifest.
-
-    ``fail_after_groups`` is the failure-injection hook for the
-    kill/restart test. Returns the file paths processed this call."""
-    import hashlib as _hashlib
-    from datetime import datetime as _dt, timezone as _tz
-
-    listed = [
-        r["path"]
-        for r in spark.read.format("binaryFile")
-        .load(glob)
-        .select("path")
-        .collect()
-    ]
-    done = _manifest_done(spark, manifest_dir)
-    todo = sorted(p for p in listed if p not in done)
-    # a group that died mid-write left a part dir the manifest never
-    # recorded; its files regroup under a new digest on this run, so
-    # the partial dir must go or raw out_dir scans double-count
-    clean_orphan_parts(spark, out_dir, manifest_dir)
-    try:
-        prev = spark.read.schema(WARC_MANIFEST_SCHEMA).parquet(manifest_dir)
-        seq0 = prev.agg(F.max("seq").alias("m")).collect()[0]["m"] or 0
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        seq0 = 0
-    processed: list[str] = []
-    for g, i in enumerate(range(0, len(todo), files_per_job)):
-        if fail_after_groups is not None and g >= fail_after_groups:
-            raise RuntimeError(f"injected failure before group {g}")
-        group = todo[i : i + files_per_job]
-        part = _hashlib.sha256("\n".join(group).encode()).hexdigest()[:16]
-        part_dir = f"{out_dir}/part={part}"
-        parsed = (
-            spark.read.format("binaryFile")
-            .load(group)
-            .select("path", "content")
-            .mapInPandas(_warc_kernel, schema=WARC_PAGES_SCHEMA)
-        )
-        parsed.write.mode("overwrite").parquet(part_dir)
-        written = spark.read.schema(WARC_PAGES_SCHEMA).parquet(part_dir)
-        stats = {
-            r["warc_path"]: r
-            for r in written.groupBy("warc_path")
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.sum(
-                    F.when(F.col("warc_status") == "SUCCESS", 1).otherwise(0)
-                ).alias("ok_count"),
-            )
-            .collect()
-        }
-        now = _dt.now(_tz.utc)
-        rows = [
-            {
-                "warc_path": p,
-                "status": "SUCCESS",
-                "doc_count": int(stats[p]["doc_count"]) if p in stats else 0,
-                "ok_count": int(stats[p]["ok_count"]) if p in stats else 0,
-                "part": part,
-                "seq": seq0 + g + 1,
-                "run_id": run_id,
-                "committed_at": now,
-            }
-            for p in group
-        ]
-        spark.createDataFrame(rows, WARC_MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(manifest_dir)
-        processed.extend(group)
-    return processed
-
-
 def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [f.name for f in WARC_PAGES_SCHEMA.fields]
     for pdf in batches:
@@ -812,231 +358,3 @@ def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for path, content in zip(pdf["path"], pdf["content"]):
             rows.extend(warc_file_to_pages(bytes(content), str(path)))
         yield pd.DataFrame(rows, columns=cols)
-
-
-def _manifest_parts(spark: SparkSession, manifest_dir: str) -> set[str]:
-    return _manifest_col(spark, manifest_dir, "part")
-
-
-def clean_orphan_parts(
-    spark: SparkSession, out_dir: str, manifest_dir: str
-) -> list[str]:
-    """Delete ``part=`` dirs not listed in the manifest — the residue
-    of a group that died mid-write (its restart regrouping lands in a
-    DIFFERENT part digest, so the partial dir would otherwise sit in
-    ``out_dir`` forever and double-count rows for raw scans). Runs at
-    the start of every ingest; returns the deleted part names."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(out_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return []
-    keep = _manifest_parts(spark, manifest_dir)
-    removed: list[str] = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.startswith("part=") and name[len("part="):] not in keep:
-            fs.delete(st.getPath(), True)
-            removed.append(name)
-    return removed
-
-
-def read_ingested(
-    spark: SparkSession, out_dir: str, manifest_dir: str
-) -> DataFrame:
-    """Consistent-snapshot read of the ingest output: opens ONLY
-    manifest-listed part dirs (never globs ``out_dir``), so a reader
-    racing a live ingest sees exactly the committed files — the same
-    isolation rule as ``plans.lineage.read_as_of``. Returns exactly
-    WARC_PAGES_SCHEMA in BOTH branches — the discovered ``part``
-    partition column is dropped so the schema never flips with
-    pipeline state (empty vs first-commit)."""
-    parts = sorted(_manifest_parts(spark, manifest_dir))
-    if not parts:
-        return spark.createDataFrame([], WARC_PAGES_SCHEMA)
-    return (
-        spark.read.schema(WARC_PAGES_SCHEMA)
-        .option("basePath", out_dir)
-        .parquet(*[f"{out_dir}/part={p}" for p in parts])
-        .select(*[f.name for f in WARC_PAGES_SCHEMA.fields])
-    )
-
-
-# ---------------------------------------------------------------- CDX index
-
-CDX_SCHEMA = T.StructType(
-    [
-        T.StructField("surt", T.StringType()),
-        T.StructField("cdx_ts", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("filename", T.StringType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("status", T.IntegerType()),
-        T.StructField("mime", T.StringType()),
-    ]
-)
-
-_CDX_JSON = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("filename", T.StringType()),
-        T.StructField("offset", T.StringType()),
-        T.StructField("length", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("mime", T.StringType()),
-    ]
-)
-
-
-def read_cdxj(spark: SparkSession, glob: str) -> DataFrame:
-    """Common-Crawl CDXJ index lines (``surt ts {json}``, public IIPC
-    format) → typed rows. A plain splittable TEXT scan — the index is
-    the 100 TB access path: a selective fetch reads index lines (tiny)
-    and then only the byte ranges it needs, never whole WARC files.
-    Malformed lines yield null-url rows the caller can filter."""
-    raw = spark.read.text(glob)
-    parts = F.split(F.col("value"), " ", 3)
-    parsed = raw.select(
-        parts.getItem(0).alias("surt"),
-        parts.getItem(1).alias("cdx_ts"),
-        F.from_json(parts.getItem(2), _CDX_JSON).alias("j"),
-    )
-    return parsed.select(
-        "surt",
-        "cdx_ts",
-        F.col("j.url").alias("url"),
-        F.col("j.filename").alias("filename"),
-        F.col("j.offset").cast("long").alias("offset"),
-        F.col("j.length").cast("long").alias("length"),
-        F.col("j.status").cast("int").alias("status"),
-        F.col("j.mime").alias("mime"),
-    )
-
-
-def fetch_warc_records(
-    spark: SparkSession, cdx: DataFrame, base_dir: str
-) -> DataFrame:
-    """Point-fetch WARC records by (filename, offset, length) from a
-    CDX selection — the targeted-read path: at 10^12 documents you
-    never rescan the crawl for a subset, you read exactly the gzip
-    members the index names.
-
-    Plan: repartition by filename + sort by offset inside each
-    partition, so each task streams ONE file's ranges in ascending
-    order through a single handle (seek+read per record, no
-    whole-file materialization). Unreadable ranges become FAILURE
-    rows, never task failures."""
-    src = cdx.select("url", "filename", "offset", "length").repartition(
-        "filename"
-    ).sortWithinPartitions("filename", "offset")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_PAGES_SCHEMA.fields]
-        # input is sorted by (filename, offset): exactly ONE handle is
-        # live at a time — a task spanning hundreds of files (a CDX
-        # selection over ~100k WARCs) must not accumulate fds toward
-        # the ulimit
-        cur_path: str | None = None
-        cur_fh = None
-
-        def handle_for(path: str):
-            nonlocal cur_path, cur_fh
-            if path != cur_path:
-                if cur_fh is not None:
-                    cur_fh.close()
-                cur_fh, cur_path = None, None  # stay clean if open fails
-                cur_fh = open(path, "rb")
-                cur_path = path
-            return cur_fh
-
-        try:
-            for pdf in batches:
-                rows: list[dict] = []
-                for url, fname, off, ln in zip(
-                    pdf["url"], pdf["filename"], pdf["offset"], pdf["length"]
-                ):
-                    path = f"{base_dir}/{fname}"
-                    try:
-                        fh = handle_for(path)
-                        fh.seek(int(off))
-                        member = fh.read(int(ln))
-                        recs = warc_file_to_pages(member, path=path)
-                        ok = [
-                            r for r in recs if r["warc_status"] == "SUCCESS"
-                        ]
-                        if not ok:
-                            raise ValueError(
-                                recs[0]["error"]
-                                if recs
-                                else "no record in range"
-                            )
-                        r = ok[0]
-                        r["record_no"] = -1  # ordinal unknown on a point read
-                        rows.append(r)
-                    except Exception as exc:
-                        rows.append(
-                            {
-                                "url": url, "warc_ts": None, "html": None,
-                                "text": None, "lang": None,
-                                "http_status": None, "http_charset": None,
-                                "warc_path": path, "record_no": -1,
-                                "warc_status": "FAILURE",
-                                "error": f"{type(exc).__name__}: {exc}",
-                            }
-                        )
-                yield pd.DataFrame(rows, columns=cols)
-        finally:
-            if cur_fh is not None:
-                cur_fh.close()
-
-    return src.mapInPandas(kernel, schema=WARC_PAGES_SCHEMA)
-
-
-def encode_warc_with_cdx(
-    pages: list[dict], filename: str
-) -> tuple[bytes, list[str]]:
-    """Fixture twin of the Common-Crawl packaging: gzip-member WARC
-    bytes PLUS the CDXJ lines indexing each response record's
-    (offset, length) within the file."""
-    import json as _json
-
-    records = [_gzip_member(_warcinfo_record())]
-    cdx: list[str] = []
-    offset = len(records[0])
-    for p in pages:
-        ts = p.get("warc_ts")
-        ts_s = (
-            ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-            if ts is not None
-            else "2017-01-01T00:00:00Z"
-        )
-        member = _gzip_member(_response_record_bytes(p))
-        host_path = p["url"].split("://", 1)[-1]
-        host = host_path.split("/", 1)[0]
-        surt = ",".join(reversed(host.split("."))) + ")/" + (
-            host_path.split("/", 1)[1] if "/" in host_path else ""
-        )
-        cdx.append(
-            surt
-            + " "
-            + ts_s.replace("-", "").replace(":", "").replace("T", "").replace(
-                "Z", ""
-            )
-            + " "
-            + _json.dumps(
-                {
-                    "url": p["url"],
-                    "filename": filename,
-                    "offset": str(offset),
-                    "length": str(len(member)),
-                    "status": str(p.get("status", 200)),
-                    "mime": "text/html",
-                },
-                sort_keys=True,
-            )
-        )
-        records.append(member)
-        offset += len(member)
-    return b"".join(records), cdx

@@ -63,24 +63,25 @@ def main() -> int:
             print(f"rows  {name}: {len(srows)} rows (no oracle)")
             continue
         try:
-            ddf = con.execute(oracles[name]).fetch_df()
+            # fetchall keeps SQL NULL as None; a pandas frame would turn a
+            # NULL in a DOUBLE column into NaN
+            cur = con.execute(oracles[name])
+            drows = cur.fetchall()
         except Exception as exc:
             print(f"FAIL  {name}: duckdb error: {exc}")
             failed.append(name)
             continue
-        dcols = list(ddf.columns)
+        dcols = [d[0] for d in cur.description]
         if [c.lower() for c in scols] != [c.lower() for c in dcols]:
             print(f"FAIL  {name}: cols spark={scols} duckdb={dcols}")
             failed.append(name)
             continue
-        if len(srows) != len(ddf):
-            print(f"FAIL  {name}: rows spark={len(srows)} duckdb={len(ddf)}")
+        if len(srows) != len(drows):
+            print(f"FAIL  {name}: rows spark={len(srows)} duckdb={len(drows)}")
             failed.append(name)
             continue
         s_norm = normalize([r.asDict() for r in srows], scols)
-        d_norm = normalize(
-            [dict(zip(dcols, t)) for t in ddf.itertuples(index=False)], dcols
-        )
+        d_norm = normalize([dict(zip(dcols, t)) for t in drows], dcols)
         if s_norm != d_norm:
             diffs = [
                 (a, b) for a, b in zip(s_norm, d_norm) if a != b

@@ -1,4 +1,4 @@
-"""Uncompressed-AVI codec + real video frame/feature stages."""
+"""Uncompressed and MJPG AVI codec."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import numpy as np
 import pytest
 
 from docling_eval_spark.operators.avi_codec import avi_decode, avi_encode
-from docling_eval_spark.operators.multimodal import video_features
 
 
 def _fixture_frames(n=8, h=10, w=7, seed=3):
@@ -37,59 +36,10 @@ def test_avi_rejects_compressed_stream():
         avi_decode(bytes(data))
 
 
-def test_video_features_real_vs_fake():
-    still = np.full((4, 6, 6, 3), 128, dtype=np.uint8)
-    feats = video_features(avi_encode(still, fps=5.0))
-    n, fps, w, h, luma, motion, fake = feats
-    assert (n, w, h, fake) == (4, 6, 6, False)
-    assert abs(fps - 5.0) < 1e-6
-    assert abs(luma - 128 / 255) < 1e-2
-    assert motion == 0.0
-
-    moving = _fixture_frames(6)
-    real = video_features(avi_encode(moving))
-    assert real[5] > 0.0 and real[6] is False
-
-    fake_feats = video_features(b"\x00\x01" * 100)
-    assert fake_feats[6] is True
-
-
-@pytest.mark.spark
-def test_frame_sample_stage_real_avi(spark):
-    from docling_eval_spark.operators.multimodal import (
-        frame_sample_stage,
-        video_features_stage,
-    )
-    from docling_eval_spark.operators.png_codec import png_decode
-
-    frames = _fixture_frames(20, h=8, w=8)
-    avi = avi_encode(frames, fps=10.0)
-    blob = b"\x01\x02" * 5000
-    df = spark.createDataFrame(
-        [("vid", bytearray(avi)), ("junk", bytearray(blob))],
-        "url string, media binary",
-    )
-    out = frame_sample_stage(df, max_frames=4).collect()
-    vid = sorted(
-        (r for r in out if r["url"] == "vid"), key=lambda r: r["frame_no"]
-    )
-    junk = [r for r in out if r["url"] == "junk"]
-    # 20 frames, max 4 → stride 5 → frames 0,5,10,15
-    assert [r["frame_no"] for r in vid] == [0, 1, 2, 3]
-    assert all(not r["fake"] and r["frame_w"] == 8 for r in vid)
-    decoded = png_decode(bytes(vid[2]["frame_bytes"]))
-    assert np.array_equal(decoded, frames[10])
-    assert len(junk) == 2 and all(r["fake"] for r in junk)
-
-    vf = {r["url"]: r["video_features"] for r in video_features_stage(df).collect()}
-    assert vf["vid"]["fake"] is False and vf["vid"]["n_frames"] == 20
-    assert vf["junk"]["fake"] is True
-
-
 def test_avi_malformed_header_degrades_not_crashes(spark):
     import struct
 
-    from docling_eval_spark.operators.multimodal import frame_sample_stage
+    from docling_eval_spark.operators.multimodal import video_thash_stage
 
     frames = _fixture_frames(2, h=6, w=6)
     data = bytearray(avi_encode(frames))
@@ -102,12 +52,12 @@ def test_avi_malformed_header_degrades_not_crashes(spark):
     data[j + 4 : j + 12] = struct.pack("<ii", huge, huge)
     with pytest.raises(ValueError, match="implausible"):
         avi_decode(bytes(data))
-    # through the stage: fake rows, never a task failure
+    # through the hash stage: a NULL hash, never a task failure
     df = spark.createDataFrame(
         [("bad", bytearray(bytes(data)))], "url string, media binary"
     )
-    rows = frame_sample_stage(df).collect()
-    assert rows and all(r["fake"] for r in rows)
+    rows = video_thash_stage(df).collect()
+    assert rows and all(r["thash"] is None for r in rows)
 
 
 def test_avi_header_dimension_mismatch_rejected():
@@ -168,6 +118,3 @@ def test_avi_mjpg_real_decode():
     # selective decode works for MJPG too
     two, _ = avi_decode(data, indices=[1, 3])
     assert np.array_equal(two[0], got[1]) and np.array_equal(two[1], got[3])
-    # features flow real
-    feats = video_features(data)
-    assert feats[6] is False and feats[0] == 4

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from docling_eval_spark.sources.bucketed import (
-    cobucketed_join,
-    read_table,
-    write_bucketed,
-)
+from docling_eval_spark.sources.bucketed import read_table, write_bucketed
 
 
 def test_cobucketed_join_elides_both_exchanges(spark):
@@ -32,7 +28,7 @@ def _run_cobucketed_join_case(spark):
     )
     write_bucketed(left, "bkt_left", "k", n_buckets=8)
     write_bucketed(right, "bkt_right", "k", n_buckets=8)
-    joined = cobucketed_join(spark, "bkt_left", "bkt_right", "k")
+    joined = read_table(spark, "bkt_left").join(read_table(spark, "bkt_right"), "k")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     # the whole point: NO shuffle on either side — bucket i joins
     # bucket i map-side (broadcast would also be exchange-free but

@@ -96,7 +96,8 @@ def test_warc_http_charset_drives_extraction(spark, tmp_path):
     from datetime import datetime, timezone
 
     from docling_eval_spark.extraction.stage import extract_stage
-    from docling_eval_spark.sources.warc import encode_warc, read_warc
+    from docling_eval_spark.sources.warc import read_warc
+    from warc_fixtures import encode_warc
 
     phrase = "résumé naïve café"
     # NO meta charset — only the HTTP header knows it's cp1252

@@ -125,7 +125,7 @@ def test_perturbed_pipeline_metric_sensitivity(spark, tmp_path):
             ),
             "url",
         )
-        per_doc, _ = pipelines.evaluate_markdown_text(ds)
+        per_doc = pipelines.rows_markdown_text(ds)
         return per_doc.agg(F.avg("f1_score")).collect()[0][0]
 
     f_low, f_high = f1_at(0.05), f1_at(0.5)
@@ -181,11 +181,8 @@ def test_warc_ingest_to_dataset(spark, tmp_path):
     from datetime import datetime, timezone
 
     from docling_eval_spark.datagen.pages import gen_page
-    from docling_eval_spark.sources.warc import (
-        encode_warc,
-        read_warc,
-        warc_to_pages,
-    )
+    from docling_eval_spark.sources.warc import read_warc, warc_to_pages
+    from warc_fixtures import encode_warc
 
     ts = datetime(2017, 1, 1, tzinfo=timezone.utc)
     pages = [
@@ -237,7 +234,7 @@ def test_cli_warc_create_with_gt(tmp_path, monkeypatch):
     # the shared fixture session — neutralize stop for this test
     monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
     from docling_eval_spark.datagen.pages import gen_page
-    from docling_eval_spark.sources.warc import encode_warc
+    from warc_fixtures import encode_warc
 
     ts = datetime(2017, 1, 1, tzinfo=timezone.utc)
     gens = [gen_page(i, seed=33) for i in range(20)]

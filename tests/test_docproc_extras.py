@@ -1,5 +1,5 @@
-"""Serializers (K7/K8), bbox-text evaluator (J4), spatial joins (J6/J7),
-report sinks (S10-S12)."""
+"""Bbox-text evaluator (J4), spatial join (J6), report sinks (S10-S12),
+OTSL and key-value links."""
 
 from __future__ import annotations
 
@@ -9,68 +9,6 @@ from docling_eval_spark.datagen.pages import gen_page
 from docling_eval_spark.evaluators.bbox_text import evaluate_document, match_bboxes
 from docling_eval_spark.evaluators.text_metrics import tokenize
 from docling_eval_spark.extraction.kernel import extract_document
-from docling_eval_spark.extraction.serializers import (
-    doc_to_markdown,
-    table_to_html,
-)
-from docling_eval_spark.extraction.tables import parse_table
-
-
-def test_markdown_export_labels():
-    items = [
-        {"label": "title", "text": "My Title"},
-        {"label": "text", "text": "Hello world."},
-        {"label": "section_header", "text": "Part 1"},
-        {"label": "list_item", "text": "first"},
-        {"label": "unknown_label", "text": "dropped"},
-    ]
-    md = doc_to_markdown(items)
-    assert md == "# My Title\n\nHello world.\n\n## Part 1\n\n- first"
-
-
-def test_markdown_roundtrip_from_extraction():
-    doc = extract_document(gen_page(0)["html"])
-    md = doc_to_markdown(doc["items"])
-    # every content block's text must appear in the markdown
-    for it in doc["items"]:
-        assert it["text"] in md
-
-
-def test_table_html_roundtrip():
-    """table → HTML → parse → same grid (K4 ↔ K8 are inverses)."""
-    grid = {
-        "num_rows": 3,
-        "num_cols": 3,
-        "cells": [
-            dict(text="a", row_span=1, col_span=2, start_row_offset_idx=0,
-                 end_row_offset_idx=1, start_col_offset_idx=0,
-                 end_col_offset_idx=2, col_header=True, row_header=False),
-            dict(text="b", row_span=1, col_span=1, start_row_offset_idx=0,
-                 end_row_offset_idx=1, start_col_offset_idx=2,
-                 end_col_offset_idx=3, col_header=True, row_header=False),
-            dict(text="c & d", row_span=2, col_span=1, start_row_offset_idx=1,
-                 end_row_offset_idx=3, start_col_offset_idx=0,
-                 end_col_offset_idx=1, col_header=False, row_header=False),
-            dict(text="e", row_span=1, col_span=2, start_row_offset_idx=1,
-                 end_row_offset_idx=2, start_col_offset_idx=1,
-                 end_col_offset_idx=3, col_header=False, row_header=False),
-            dict(text="f", row_span=1, col_span=2, start_row_offset_idx=2,
-                 end_row_offset_idx=3, start_col_offset_idx=1,
-                 end_col_offset_idx=3, col_header=False, row_header=False),
-        ],
-    }
-    html = table_to_html(grid)
-    parsed = parse_table(html.replace("<table>", "").replace("</table>", ""))
-    assert parsed.num_rows == 3 and parsed.num_cols == 3
-    got = {
-        (c.start_row_offset_idx, c.start_col_offset_idx): (
-            c.text, c.row_span, c.col_span
-        )
-        for c in parsed.cells
-    }
-    assert got[(0, 0)] == ("a", 1, 2)
-    assert got[(1, 0)] == ("c & d", 2, 1)
-    assert got[(2, 1)] == ("f", 1, 2)
 
 
 # ------------------------------------------------------------- bbox text
@@ -141,7 +79,7 @@ def test_bbox_stage(spark):
 
 
 def test_point_in_box_join(spark):
-    from docling_eval_spark.operators.spatial import iou_pair_join, point_in_box_join
+    from docling_eval_spark.operators.spatial import point_in_box_join
 
     boxes = spark.createDataFrame(
         [
@@ -163,22 +101,21 @@ def test_point_in_box_join(spark):
     got = {r["point_id"]: r["box_id"] for r in point_in_box_join(points, boxes).collect()}
     assert got == {100: 11, 101: 10, 102: None, 103: 12}
 
-    pairs = iou_pair_join(boxes, boxes, cutoff=0.9).collect()
-    assert {(r["id_l"], r["id_r"]) for r in pairs} == {(10, 10), (11, 11), (12, 12)}
-
 
 # ------------------------------------------------------------- reports
 
 
 def test_reports(spark, tmp_path):
+    from docling_eval_spark.evaluators.stats import collect_stats
     from docling_eval_spark.reporting.reports import (
+        render_metric_report,
         save_comparison_html,
         stats_to_table_text,
-        write_metric_report,
     )
 
     df = spark.createDataFrame([(v / 10.0,) for v in range(10)], "score double")
-    row = write_metric_report(df, "score", str(tmp_path), "score")
+    stats = collect_stats(df, ["score"])["score"]
+    row = render_metric_report(stats, str(tmp_path), "score")
     assert row["total"] == 10
     md = (tmp_path / "score.md").read_text()
     assert md.count("\n") == 21  # header + separator + 20 bins
@@ -267,108 +204,3 @@ def test_kv_link_metrics(spark):
 # ------------------------------------------------------------- cvat xml
 
 
-def test_cvat_xml_source(spark, tmp_path):
-    from docling_eval_spark.sources.cvat_xml import read_cvat_annotations
-
-    xml = """<?xml version="1.0"?>
-<annotations>
-  <image id="0" name="page_1.png" width="612" height="792">
-    <box label="table" xtl="10.5" ytl="20" xbr="100" ybr="200"/>
-    <box label="text" xtl="5" ytl="210" xbr="300" ybr="260"/>
-    <polyline label="reading_order" points="10,10;50,40;90,20"/>
-  </image>
-  <image id="1" name="page_2.png" width="612" height="792"/>
-</annotations>"""
-    (tmp_path / "ann1.xml").write_text(xml)
-    (tmp_path / "bad.xml").write_text("<not-closed")
-    df = read_cvat_annotations(spark, str(tmp_path / "*.xml"))
-    rows = df.collect()
-    assert len(rows) == 3  # 2 boxes + 1 polyline bbox; bad file → 0
-    by_label = {r["label"]: r for r in rows}
-    assert by_label["table"]["l"] == 10.5
-    assert by_label["reading_order"]["l"] == 10.0
-    assert by_label["reading_order"]["r"] == 90.0
-    assert all(r["image_name"] == "page_1.png" for r in rows)
-
-    # plugs into the spatial join (J6) directly
-    from docling_eval_spark.operators.spatial import point_in_box_join
-    import pyspark.sql.functions as SF
-
-    boxes = df.select(
-        SF.lit(1).alias("page_no"), "box_id", "l", "t", "r", "b"
-    )
-    points = spark.createDataFrame(
-        [(1, 0, 50.0, 100.0)], "page_no int, point_id long, x double, y double"
-    )
-    got = point_in_box_join(points, boxes).collect()
-    assert got[0]["box_id"] == 0  # inside the table box
-
-
-def test_cvat_reading_order_walk(spark, tmp_path):
-    """VERDICT-r2 next-round #8: reference-shaped annotation (boxes +
-    reading_order polyline + merge polyline) yields the reference's
-    item order — min-area point→box mapping, already_added skip, merge
-    boxes folded into their primary item and never re-emitted
-    (`cvat_annotation/create.py:514-800` semantics)."""
-    from docling_eval_spark.sources.cvat_xml import (
-        parse_cvat_ground_truth,
-        read_cvat_ground_truth,
-    )
-
-    # 4 boxes; box 3 is a small box nested inside box 0 (min-area rule
-    # must pick box 3 for a point in the overlap). reading_order walks
-    # boxes 1 -> 3 -> 0 -> 2 and revisits 1 (skipped); merge folds box
-    # 2 into box 1, so 2 must NOT re-emit on its own.
-    xml = """<?xml version="1.0"?>
-<annotations>
-  <image id="0" name="p1.png" width="600" height="800">
-    <box label="text"    xtl="0"   ytl="0"   xbr="200" ybr="200"/>
-    <box label="title"   xtl="0"   ytl="300" xbr="200" ybr="400"/>
-    <box label="text"    xtl="300" ytl="300" xbr="500" ybr="400"/>
-    <box label="caption" xtl="50"  ytl="50"  xbr="100" ybr="100"/>
-    <polyline label="reading_order"
-              points="100,350;75,75;150,150;400,350;100,350"/>
-    <polyline label="merge" points="100,350;400,350"/>
-  </image>
-</annotations>"""
-    rows = parse_cvat_ground_truth(xml.encode(), file="f")
-    assert [r["box_id"] for r in rows] == [1, 3, 0]
-    assert [r["order_idx"] for r in rows] == [0, 1, 2]
-    assert rows[0]["merged_box_ids"] == [1, 2]  # merge folded box 2 in
-    assert rows[0]["label"] == "title"
-    assert rows[1]["label"] == "caption"  # min-area beat the big box
-
-    # same result through the distributed source
-    (tmp_path / "gt.xml").write_text(xml)
-    df = read_cvat_ground_truth(spark, str(tmp_path / "*.xml"))
-    got = sorted(
-        (r["order_idx"], r["box_id"], list(r["merged_box_ids"]))
-        for r in df.collect()
-    )
-    assert got == [(0, 1, [1, 2]), (1, 3, [3]), (2, 0, [0])]
-
-
-def test_cvat_merge_never_double_counts():
-    """A box belongs to exactly ONE GT item: a merge tail already
-    emitted earlier in reading order is not folded again, and repeated
-    polyline points don't duplicate ids inside merged_box_ids."""
-    from docling_eval_spark.sources.cvat_xml import parse_cvat_ground_truth
-
-    # reading order visits box1 (0-indexed: second box) THEN box0;
-    # merge [0, 1] would fold box1 into box0 — but box1 already stands
-    # alone, so it must not be folded. The merge polyline also has two
-    # points inside box0 (duplicate head id).
-    xml = """<?xml version="1.0"?>
-<annotations>
-  <image id="0" name="p1.png" width="600" height="800">
-    <box label="a" xtl="0"   ytl="0"   xbr="100" ybr="100"/>
-    <box label="b" xtl="200" ytl="0"   xbr="300" ybr="100"/>
-    <polyline label="reading_order" points="250,50;50,50"/>
-    <polyline label="merge" points="50,50;60,60;250,50"/>
-  </image>
-</annotations>"""
-    rows = parse_cvat_ground_truth(xml.encode())
-    assert [(r["box_id"], r["merged_box_ids"]) for r in rows] == [
-        (1, [1]),
-        (0, [0]),
-    ]

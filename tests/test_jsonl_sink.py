@@ -4,7 +4,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from docling_eval_spark.sources.jsonl_sink import read_jsonl_shards, write_jsonl_shards
+from docling_eval_spark.sources.jsonl_sink import write_jsonl_shards
 
 
 def test_jsonl_roundtrip_and_manifest(spark, tmp_path):
@@ -25,7 +25,9 @@ def test_jsonl_roundtrip_and_manifest(spark, tmp_path):
     on_disk = json.load(open(os.path.join(out, "_manifest.json")))
     assert on_disk == manifest
 
-    back = read_jsonl_shards(spark, out, schema="id long, text string, lang string")
+    back = spark.read.schema("id long, text string, lang string").json(
+        os.path.join(out, "part-*")
+    )
     assert back.count() == 250
     orig = sorted(tuple(r) for r in df.collect())
     got = sorted(tuple(r) for r in back.select("id", "text", "lang").collect())

@@ -18,13 +18,17 @@ from docling_eval_spark.evaluators.reading_order import ard_norm_py
 from docling_eval_spark.evaluators.teds import is_complex_grid, teds_score
 from docling_eval_spark.evaluators.text_metrics import (
     bleu,
+    _edit_ratio,
+    _set_f1_tokens,
     levenshtein,
-    meteor_exact,
-    set_f1,
+    meteor_tokens,
     text_metrics,
-    token_edit_distance,
     tokenize,
 )
+
+
+def meteor_exact(true_txt, pred_txt):
+    return meteor_tokens(tokenize(true_txt), tokenize(pred_txt))
 
 # ---------------------------------------------------------------- fixtures
 
@@ -145,13 +149,13 @@ def test_tokenize_treebank_style():
 def test_levenshtein_and_token_edit_distance():
     assert levenshtein("kitten", "sitting") == 3
     assert levenshtein([], ["a"]) == 1
-    assert token_edit_distance("a b c", "a b c") == 0.0
-    assert token_edit_distance("a b c", "a x c") == 1 / 3
+    assert _edit_ratio(tokenize("a b c"), tokenize("a b c")) == 0.0
+    assert _edit_ratio(tokenize("a b c"), tokenize("a x c")) == 1 / 3
 
 
 def test_set_f1_hand_counts():
     # true {a,b,c}, pred {b,c,d}: inter 2 → P=2/3, R=2/3
-    f1, p, r = set_f1("a b c", "b c d")
+    f1, p, r = _set_f1_tokens(tokenize("a b c"), tokenize("b c d"))
     assert p == pytest.approx(2 / 3)
     assert r == pytest.approx(2 / 3)
     assert f1 == pytest.approx(2 / 3)

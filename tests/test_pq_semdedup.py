@@ -3,15 +3,12 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from conftest import assert_matches_oracle
 
 from docling_eval_spark.operators.pq import (
     pq_codebooks,
     pq_encode,
-    pq_topk,
-    pq_topk_adc,
 )
 from docling_eval_spark.operators.similarity import hyperplanes, semantic_dedup
 
@@ -53,67 +50,6 @@ def test_pq_encode_codes_and_recon(spark):
     for j in range(8):
         d = ((cb[j] - segs[j][None, :]) ** 2).sum(axis=1)
         assert row["codes"][j] == int(np.argmin(d))
-
-
-def test_pq_adc_matches_fold_path(spark):
-    """The LUT fast path and the fold (oracle-gated) path must rank
-    identically; scores agree to float-sum-reorder tolerance."""
-    e = _embeddings(spark)
-    cb = pq_codebooks(64, m=8, n_codes=16, seed=13)
-    q = e.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    fold = pq_topk(e, q, cb, k=5).collect()
-    qpdf = pd.DataFrame(
-        [(r["query_id"], list(r["query_vec"])) for r in q.collect()],
-        columns=["query_id", "query_vec"],
-    )
-    adc = pq_topk_adc(e, qpdf, cb, k=5).collect()
-    fold_rank = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in fold}
-    adc_rank = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in adc}
-    assert fold_rank == adc_rank
-    fold_score = {(r["query_id"], r["neighbor_id"]): r["score"] for r in fold}
-    for r in adc:
-        assert abs(fold_score[(r["query_id"], r["neighbor_id"])] - r["score"]) < 1e-9
-
-
-def test_pq_trained_beats_seed_and_approximates_brute(spark):
-    """Lloyd-trained codebooks must (a) cut quantization error vs the
-    seed gaussians and (b) put the exact top-1 neighbor in the PQ
-    top-5 for most queries (lossy, but far beyond chance)."""
-    from docling_eval_spark.operators.pq import pq_train_codebooks
-    from docling_eval_spark.operators.similarity import brute_force_topk
-
-    e = _embeddings(spark)
-    cb0 = pq_codebooks(64, m=8, n_codes=16, seed=13)
-    cb = pq_train_codebooks(e, m=8, n_codes=16, iterations=3, seed=13)
-
-    def mse(books):
-        rows = pq_encode(e, books).select("vec_id", "recon").collect()
-        vecs = {r["vec_id"]: np.array(r["embedding"]) for r in e.collect()}
-        return float(
-            np.mean(
-                [
-                    ((vecs[r["vec_id"]] - np.array(r["recon"])) ** 2).sum()
-                    for r in rows
-                ]
-            )
-        )
-
-    assert mse(cb) < 0.5 * mse(cb0)
-
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    brute1 = {
-        r["query_id"]: r["neighbor_id"]
-        for r in brute_force_topk(e, q, k=1).collect()
-    }
-    pq5 = {}
-    for r in pq_topk(e, q, cb, k=5).collect():
-        pq5.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hits = sum(1 for qid, nid in brute1.items() if nid in pq5.get(qid, set()))
-    assert hits >= len(brute1) // 2
 
 
 def test_semantic_dedup_flags_planted_twins(spark):

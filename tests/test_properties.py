@@ -240,7 +240,8 @@ def test_warc_roundtrip_property(pages, gz, chunked):
     WARC headers), in all four gzip×chunked packagings."""
     from datetime import datetime, timezone
 
-    from docling_eval_spark.sources.warc import encode_warc, warc_file_to_pages
+    from docling_eval_spark.sources.warc import warc_file_to_pages
+    from warc_fixtures import encode_warc
 
     ts = datetime(2017, 3, 22, 17, 43, 4, tzinfo=timezone.utc)
     fixture = [
@@ -271,10 +272,11 @@ def test_warc_parser_never_raises(junk):
 @given(st.binary(max_size=2000))
 @settings(max_examples=60, deadline=None)
 def test_gzip_member_splitter_never_raises(junk):
-    from docling_eval_spark.sources.warc import split_gzip_members
+    from docling_eval_spark.sources.warc import _split_gzip_members_tagged
 
-    for member in split_gzip_members(b"\x1f\x8b" + junk):
+    for member, err in _split_gzip_members_tagged(b"\x1f\x8b" + junk):
         assert isinstance(member, bytes)
+        assert err is None or isinstance(err, str)
 
 
 @settings(max_examples=150, deadline=None)

@@ -17,7 +17,6 @@ from docling_eval_spark.evaluators.stats import (
     collect_counted_stats,
     collect_stats,
     compute_stats,
-    histogram_table,
 )
 from docling_eval_spark.evaluators.teds import teds_score, teds_stage
 from docling_eval_spark.evaluators.text_metrics import (
@@ -178,7 +177,10 @@ def test_collect_stats_jobs_do_not_grow_with_columns(spark):
 def test_lazy_rollup_has_a_row_per_split(spark):
     """The lazy exact rollup keeps the reference's per-split rows: an
     empty split (or an empty table) yields the sentinel row."""
-    from docling_eval_spark.pipelines import rollup_table_structure
+    from docling_eval_spark.pipelines import _multi_metric_rollup
+
+    def rollup_table_structure(per_table):
+        return _multi_metric_rollup(per_table, "table_structure")
 
     schema = "teds double, teds_struct double, is_complex boolean"
     per_table = spark.createDataFrame([(0.5, 0.6, False), (0.9, 1.0, None)], schema)
@@ -191,17 +193,6 @@ def test_lazy_rollup_has_a_row_per_split(spark):
         assert (r["total"], r["mean"], r["median"], r["std"]) == (0, -1.0, -1.0, -1.0)
         assert r["hist"] == [0] * 20
     assert rollup_table_structure(empty).count() == 4
-
-
-def test_histogram_table_cumsum(spark):
-    df = spark.createDataFrame([(v / 10.0,) for v in range(10)], "v double")
-    tbl = histogram_table(compute_stats(df, "v")).orderBy("bin").collect()
-    assert len(tbl) == 20
-    assert tbl[0]["acc_pct"] == 0.0  # strictly-earlier-bins semantics
-    # values 0.0..0.9 land in even bins 0..18; at bin 10, earlier bins
-    # hold 0.0-0.4 → acc 50%
-    assert tbl[10]["acc_pct"] == pytest.approx(50.0)
-    assert tbl[19]["inv_acc_pct"] == pytest.approx(0.0, abs=1e-9)
 
 
 def test_ard_stage_matches_oracle(spark):

@@ -1,10 +1,11 @@
-"""Stateful streaming sessionization vs the batch window oracle."""
+"""Gap sessionization and a registry operator's window expression under
+Structured Streaming."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from docling_eval_spark.streaming.stateful import sessionize_batch, sessionize_stream
+from docling_eval_spark.operators.temporal import sessionize_batch
 
 
 def test_batch_sessionization_semantics(spark):
@@ -17,7 +18,7 @@ def test_batch_sessionization_semantics(spark):
     df = spark.createDataFrame(rows, "user_id long, ts string, value double").withColumn(
         "ts", F.to_timestamp("ts")
     )
-    got = sessionize_batch(df, "30 minutes").collect()
+    got = sessionize_batch(df, gap_sec=1800).collect()
     by_user = {}
     for r in got:
         by_user.setdefault(r["user_id"], []).append(r)
@@ -26,251 +27,12 @@ def test_batch_sessionization_semantics(spark):
     assert len(by_user[2]) == 1
 
 
-def test_stream_sessionization_matches_batch(spark, tmp_path):
-    events = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .filter(F.col("user_id") < 10)
-        .select("user_id", "ts", "value")
-    )
-    src_dir = str(tmp_path / "events")
-    events.write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .parquet(src_dir)
-    )
-    sessions = sessionize_stream(stream, gap="30 minutes")
-    name = "sess_out"
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql(
-        f"SELECT user_id, session_start, n_events, round(sum_value, 6) AS sum_value FROM {name}"
-    ).collect()
-    oracle = sessionize_batch(events, "30 minutes").collect()
-
-    # availableNow emits only CLOSED sessions; each user's final
-    # (still-open) session stays in state. Compare the closed ones.
-    def key(r):
-        return (r["user_id"], r["session_start"], r["n_events"], r["sum_value"])
-
-    got_set = {key(r) for r in got}
-    oracle_by_user: dict[int, list] = {}
-    for r in oracle:
-        oracle_by_user.setdefault(r["user_id"], []).append(r)
-    # every emitted session must exist in the oracle with identical
-    # boundaries and aggregates
-    oracle_set = {
-        (r["user_id"], r["session_start"], r["n_events"], round(r["sum_value"], 6))
-        for r in oracle
-    }
-    assert got_set <= oracle_set
-    # and all but (at most) the trailing session per user was emitted
-    for uid, rows in oracle_by_user.items():
-        emitted = [r for r in got if r["user_id"] == uid]
-        assert len(emitted) >= len(rows) - 1
-
-
-def test_stream_dedup_across_microbatches(spark, tmp_path):
-    """Streaming exact-dedup: a page duplicated WITHIN a batch emits
-    once; a page duplicated ACROSS two availableNow runs (same
-    checkpoint → persisted state) is suppressed on the second run."""
-    from docling_eval_spark.streaming.dedup_stream import dedup_stream
-
-    src = tmp_path / "pages"
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    schema = "url string, text string"
-    seen_ids: set[str] = set()
-
-    def run():
-        # durable parquet sink: the memory sink can't recover from a
-        # checkpoint, and cross-batch state needs run 2 to resume it
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
-            dedup_stream(stream, "url", "text")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = [
-            r for r in spark.read.parquet(out).collect()
-            if r["id"] not in seen_ids
-        ]
-        seen_ids.update(r["id"] for r in rows)
-        return rows
-
-    batch1 = [
-        ("u1", "alpha page body text"),
-        ("u2", "alpha page body text"),   # within-batch dup of u1
-        ("u3", "beta page body text"),
-    ]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    got1 = run()
-    texts1 = sorted(r["text"] for r in got1)
-    assert texts1 == ["alpha page body text", "beta page body text"]
-    assert all(r["id"] in ("u1", "u2", "u3") for r in got1)
-
-    batch2 = [
-        ("u4", "alpha page body text"),   # CROSS-batch dup → suppressed
-        ("u5", "gamma new page body"),
-    ]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    got2 = run()
-    # only the genuinely new digest appears; the cross-batch dup never
-    # re-emits (state survived via the checkpoint)
-    assert [r["text"] for r in got2] == ["gamma new page body"]
-    assert got2[0]["id"] == "u5"
-
-
-def test_stream_dedup_multichunk_group(spark, tmp_path):
-    """The kernel streams its Arrow chunks (hot-digest skew safety):
-    force multi-chunk groups via a tiny maxRecordsPerBatch and assert
-    the winner/count semantics are unchanged."""
-    from docling_eval_spark.streaming.dedup_stream import dedup_stream
-
-    src = tmp_path / "pages"
-    schema = "url string, text string"
-    # 64 copies of one digest + 1 of another, 1 file → with
-    # maxRecordsPerBatch=7 the hot group arrives in ≥9 chunks
-    rows = [(f"u{i:03d}", "hot boilerplate text") for i in range(64)]
-    rows.append(("z00", "unique cold text"))
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        name = "dedup_chunked"
-        q = (
-            dedup_stream(stream, "url", "text")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r["id"], r["text"]) for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-        # exactly one survivor per digest; the hot digest's winner is
-        # the first-arrived row of the coalesced single-file batch
-        assert got == [("u000", "hot boilerplate text"), ("z00", "unique cold text")]
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        else:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-
-
-def test_stream_dedup_state_ttl(spark, tmp_path):
-    """Opt-in state TTL (continuous-crawl mode, processing-time
-    trigger — availableNow never terminates with pending timeouts,
-    see dedup_stream docstring): a digest unseen for longer than the
-    TTL is forgotten, so its next sighting re-emits; a digest seen
-    within the TTL stays suppressed. Margins are wide (TTL 5 s vs
-    ~1 s of scheduling slop) to keep the wall-clock assertions
-    honest."""
-    import time
-
-    from docling_eval_spark.streaming.dedup_stream import dedup_stream
-
-    src = tmp_path / "pages"
-    schema = "url string, text string"
-
-    def append(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            str(src)
-        )
-
-    append([("u1", "ttl page alpha")])
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    name = "ttl_sink"
-    q = (
-        dedup_stream(stream, "url", "text", state_ttl_ms=5000)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    try:
-
-        def sink():
-            return sorted(
-                (r["id"], r["text"])
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-            )
-
-        def wait_for(n, secs=45):
-            t0 = time.time()
-            while time.time() - t0 < secs:
-                s = sink()
-                if len(s) >= n:
-                    return s
-                time.sleep(0.3)
-            return sink()
-
-        assert wait_for(1) == [("u1", "ttl page alpha")]
-
-        # let alpha's state expire (empty 300 ms batches keep firing
-        # pending timeouts), then admit a fresh digest
-        time.sleep(8)
-        append([("u2", "ttl page beta")])
-        assert wait_for(2) == [
-            ("u1", "ttl page alpha"),
-            ("u2", "ttl page beta"),
-        ]
-
-        # alpha expired → re-emits; beta ~1 s old (TTL 5 s) → suppressed
-        # — UNLESS the host stalls the micro-batch past beta's TTL
-        # (loaded CI). Measure the actual batch latency and only hold
-        # the suppression assertion when beta was provably in-window.
-        t_beta_seen = time.time()  # beta's state (re)armed by now
-        time.sleep(1.0)
-        append([("u3", "ttl page alpha"), ("u4", "ttl page beta")])
-        wait_for(3)
-        time.sleep(1.5)  # let any (incorrect) 4th row land too
-        got = sink()
-        batch_lag = time.time() - t_beta_seen
-        assert got[:3] == [
-            ("u1", "ttl page alpha"),
-            ("u2", "ttl page beta"),
-            ("u3", "ttl page alpha"),
-        ]
-        if batch_lag < 4.0:  # comfortably inside beta's 5 s TTL
-            assert len(got) == 3, got
-        else:  # stall ate the TTL: u4 re-emitting is then CORRECT
-            assert len(got) in (3, 4), got
-    finally:
-        q.stop()
-
-
 def test_crawl_rate_streaming_matches_batch(spark, tmp_path):
     """crawl_rate's F.window expression really does run under
     Structured Streaming: the same expression over a parquet stream
     with a watermark, availableNow-triggered, emits the identical
     (host, window, n_fetches) rollup as the batch call (closed windows
     — availableNow drains the source, so all windows close)."""
-    import pyspark.sql.functions as F
-
     from docling_eval_spark.operators.temporal import crawl_rate
 
     ev = (

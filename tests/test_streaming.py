@@ -1,46 +1,6 @@
-"""Incremental processing via Structured Streaming availableNow +
-checkpoint (SURVEY §2.10)."""
+"""Incremental dedup over an appended signature store."""
 
 from __future__ import annotations
-
-from docling_eval_spark.datagen.pages import pages_dataframe
-from docling_eval_spark.streaming.incremental import (
-    incremental_extract,
-    windowed_match_rate,
-)
-
-
-def test_incremental_extract_processes_only_new_files(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    pages_dataframe(spark, 60, partitions=2).write.mode("append").parquet(pages_dir)
-    n1 = incremental_extract(spark, pages_dir, out, ckpt)
-    assert n1 == 60
-    assert spark.read.parquet(out).count() == 60
-
-    # second increment: only the new shard is processed
-    pages_dataframe(spark, 40, seed=43, partitions=2).write.mode("append").parquet(
-        pages_dir
-    )
-    n2 = incremental_extract(spark, pages_dir, out, ckpt)
-    assert n2 == 40
-    assert spark.read.parquet(out).count() == 100
-
-    # third: nothing new
-    assert incremental_extract(spark, pages_dir, out, ckpt) == 0
-
-
-def test_windowed_match_rate(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    ckpt = str(tmp_path / "ckpt2")
-    pages_dataframe(spark, 50, partitions=2).write.mode("append").parquet(pages_dir)
-    res = windowed_match_rate(spark, pages_dir, ckpt, window="1 hour")
-    rows = res.collect()
-    assert len(rows) > 0
-    assert sum(r["docs"] for r in rows) == 50
-    assert all(r["match_rate"] == 1.0 for r in rows)
 
 
 def test_incremental_dedup_flow(spark, tmp_path):

@@ -5,21 +5,20 @@ from __future__ import annotations
 
 import zlib
 
-import pyspark.sql.functions as F
 from datetime import datetime, timezone
 
 import pytest
 
 from docling_eval_spark.datagen.pages import gen_page, pages_dataframe
-from docling_eval_spark.extraction.stage import extract_text_stage
+from docling_eval_spark.extraction.stage import extract_stage
 from docling_eval_spark.sources.warc import (
-    encode_warc,
-    parse_http_payload,
+    parse_http_response,
     parse_warc_records,
     read_warc,
     warc_file_to_pages,
     warc_to_pages,
 )
+from warc_fixtures import encode_warc, gzip_member, warc_record_bytes
 
 _TS = datetime(2017, 3, 22, 17, 43, 4, tzinfo=timezone.utc)
 
@@ -61,7 +60,7 @@ def test_warc_content_encoding_gzip_body():
         b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
         b"Content-Encoding: gzip\r\nContent-Length: %d\r\n\r\n" % len(wire)
     ) + wire
-    assert parse_http_payload(block) == body
+    assert parse_http_response(block)[0] == body
 
 
 def test_warc_non_response_records_skipped():
@@ -75,11 +74,10 @@ def test_warc_non_response_records_skipped():
 
 
 def test_warc_corrupt_member_resyncs():
-    from docling_eval_spark.sources.warc import _gzip_member, warc_record_bytes
 
     pages = _fixture_pages(4)
     members = [
-        _gzip_member(
+        gzip_member(
             warc_record_bytes(
                 "response",
                 p["html"],
@@ -180,11 +178,11 @@ def test_read_warc_byte_identity_vs_parquet_path(spark, tmp_path):
     via_warc = warc_to_pages(warc_df)
     t1 = {
         r["url"]: r["extracted_text"]
-        for r in extract_text_stage(direct).collect()
+        for r in extract_stage(direct).collect()
     }
     t2 = {
         r["url"]: r["extracted_text"]
-        for r in extract_text_stage(via_warc).collect()
+        for r in extract_stage(via_warc).collect()
     }
     assert set(t1) == set(t2)
     assert all(t1[u] == t2[u] for u in t1)
@@ -224,225 +222,13 @@ def test_warc_to_pages_drops_non_2xx(spark, tmp_path):
     assert sorted(all_rows) == ["http://moved.example/", "http://ok.example/"]
 
 
-@pytest.mark.spark
-def test_wet_roundtrip_and_quality_flow(spark, tmp_path):
-    from docling_eval_spark.operators.quality_rules import gopher_flags
-    from docling_eval_spark.sources.warc import encode_wet, read_wet
-
-    texts = [
-        ("http://a.example/", "the quick brown fox jumps over the lazy dog " * 12),
-        ("http://b.example/", "short"),
-        ("http://c.example/", "ünïcødé text wïth nön-àscii survives utf-8 " * 8),
-    ]
-    pages = [{"url": u, "warc_ts": _TS, "text": t} for u, t in texts]
-    (tmp_path / "x.warc.wet.gz").write_bytes(encode_wet(pages))
-    wet = read_wet(spark, str(tmp_path))
-    rows = {r["url"]: r for r in wet.collect()}
-    assert len(rows) == 3
-    for u, t in texts:
-        assert rows[u]["text"] == t and rows[u]["html"] is None
-        assert rows[u]["warc_status"] == "SUCCESS"
-    # text-only rows flow straight into quality stages (no extraction)
-    flags = gopher_flags(
-        wet.selectExpr("url AS doc_id", "text")
-    ).collect()
-    assert len(flags) == 3
-
-
-@pytest.mark.spark
-def test_warc_resumable_ingest_kill_restart(spark, tmp_path):
-    from docling_eval_spark.sources.warc import (
-        WARC_MANIFEST_SCHEMA,
-        ingest_warc_resumable,
-    )
-
-    n_files, per_file = 6, 5
-    pages = _fixture_pages(n_files * per_file, seed=3)
-    warc_dir = tmp_path / "in"
-    warc_dir.mkdir()
-    for f in range(n_files):
-        chunk = pages[f * per_file : (f + 1) * per_file]
-        (warc_dir / f"c-{f}.warc.gz").write_bytes(encode_warc(chunk))
-    out = str(tmp_path / "out")
-    man = str(tmp_path / "manifest")
-
-    # first run dies after 1 group (2 files per group → 2 files done)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_warc_resumable(
-            spark, str(warc_dir), out, man,
-            files_per_job=2, fail_after_groups=1,
-        )
-    lin = spark.read.schema(WARC_MANIFEST_SCHEMA).parquet(man)
-    assert lin.filter("status = 'SUCCESS'").count() == 2
-
-    # restart completes WITHOUT re-processing finished files
-    done2 = ingest_warc_resumable(
-        spark, str(warc_dir), out, man, files_per_job=2,
-    )
-    assert len(done2) == 4  # only the remaining files
-    lin = spark.read.schema(WARC_MANIFEST_SCHEMA).parquet(man)
-    rows = lin.filter("status = 'SUCCESS'").collect()
-    assert len(rows) == n_files
-    # every file exactly once, with correct per-file counts — expected
-    # paths come from the same binaryFile listing the ingest uses, so
-    # the URI scheme can never silently diverge from the assertion
-    listed = sorted(
-        r["path"]
-        for r in spark.read.format("binaryFile")
-        .load(str(warc_dir)).select("path").collect()
-    )
-    assert sorted(r["warc_path"] for r in rows) == listed
-    assert all(r["doc_count"] == per_file == r["ok_count"] for r in rows)
-
-    # output is complete and duplicate-free
-    got = spark.read.parquet(out)
-    urls = [r["url"] for r in got.filter("warc_status = 'SUCCESS'").collect()]
-    assert sorted(urls) == sorted(p["url"] for p in pages)
-
-    # idempotent: nothing pending on a third call
-    assert ingest_warc_resumable(
-        spark, str(warc_dir), out, man, files_per_job=2
-    ) == []
-
-
-@pytest.mark.spark
-def test_warc_ingest_orphan_part_cleanup(spark, tmp_path):
-    """A group that died mid-parquet-write leaves an unmanifested part
-    dir; the next ingest must remove it so raw out_dir scans never
-    double-count, and read_ingested must never have seen it."""
-    from docling_eval_spark.sources.warc import (
-        clean_orphan_parts,
-        ingest_warc_resumable,
-        read_ingested,
-    )
-
-    pages = _fixture_pages(8, seed=9)
-    warc_dir = tmp_path / "in"
-    warc_dir.mkdir()
-    for f in range(4):
-        (warc_dir / f"c-{f}.warc.gz").write_bytes(
-            encode_warc(pages[f * 2 : (f + 1) * 2])
-        )
-    out = str(tmp_path / "out")
-    man = str(tmp_path / "manifest")
-
-    # fabricate a crashed group: partial rows in an unmanifested part
-    stray = spark.createDataFrame(
-        [(pages[0]["url"], None, None, None, None, None, None,
-          "stray", 1, "SUCCESS", "")],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, http_status int, http_charset string, "
-        "warc_path string, record_no int, warc_status string, error string",
-    )
-    stray.write.parquet(f"{out}/part=deadbeefdeadbeef")
-
-    # snapshot reader with an empty manifest sees nothing
-    assert read_ingested(spark, out, man).count() == 0
-
-    done = ingest_warc_resumable(
-        spark, str(warc_dir), out, man, files_per_job=2
-    )
-    assert len(done) == 4
-    # the orphan is gone from disk; raw scan equals snapshot read
-    import os
-
-    assert not os.path.exists(f"{out}/part=deadbeefdeadbeef")
-    raw_urls = sorted(
-        r["url"] for r in spark.read.parquet(out)
-        .filter("warc_status = 'SUCCESS'").collect()
-    )
-    snap_urls = sorted(
-        r["url"] for r in read_ingested(spark, out, man)
-        .filter("warc_status = 'SUCCESS'").collect()
-    )
-    assert raw_urls == snap_urls == sorted(p["url"] for p in pages)
-    # idempotent cleanup on a healthy tree removes nothing
-    assert clean_orphan_parts(spark, out, man) == []
-
-
-@pytest.mark.spark
-def test_wet_missing_uri_failure_row(spark, tmp_path):
-    from docling_eval_spark.sources.warc import (
-        _gzip_member,
-        read_wet,
-        warc_record_bytes,
-    )
-
-    good = warc_record_bytes(
-        "conversion", b"good text here",
-        {"WARC-Target-URI": "http://a.example/", "WARC-Date": "2017-01-01T00:00:00Z"},
-    )
-    no_uri = warc_record_bytes(
-        "conversion", b"orphan text",
-        {"WARC-Date": "2017-01-01T00:00:00Z"},
-    )
-    (tmp_path / "w.warc.wet.gz").write_bytes(
-        _gzip_member(good) + _gzip_member(no_uri)
-    )
-    rows = read_wet(spark, str(tmp_path)).collect()
-    by_status = {}
-    for r in rows:
-        by_status.setdefault(r["warc_status"], []).append(r)
-    assert len(by_status["SUCCESS"]) == 1
-    assert by_status["SUCCESS"][0]["text"] == "good text here"
-    assert len(by_status["FAILURE"]) == 1
-    assert "WARC-Target-URI" in by_status["FAILURE"][0]["error"]
-
-
-@pytest.mark.spark
-def test_cdx_index_point_fetch(spark, tmp_path):
-    """CDXJ index → targeted byte-range fetch: reads exactly the gzip
-    members the index names, never whole files."""
-    from docling_eval_spark.sources.warc import (
-        encode_warc_with_cdx,
-        fetch_warc_records,
-        read_cdxj,
-    )
-
-    pages = _fixture_pages(12, seed=17)
-    wdir = tmp_path / "warc"
-    wdir.mkdir()
-    cdx_lines = []
-    for f in range(3):
-        chunk = pages[f * 4 : (f + 1) * 4]
-        fname = f"crawl-{f}.warc.gz"
-        data, lines = encode_warc_with_cdx(chunk, fname)
-        (wdir / fname).write_bytes(data)
-        cdx_lines.extend(lines)
-    (tmp_path / "index.cdxj").write_text("\n".join(cdx_lines) + "\n")
-
-    cdx = read_cdxj(spark, str(tmp_path / "index.cdxj"))
-    assert cdx.count() == 12
-    rows = cdx.collect()
-    assert all(r["status"] == 200 and r["offset"] > 0 for r in rows)
-
-    # selective fetch: 5 of the 12 urls
-    wanted = sorted(p["url"] for p in pages)[:5]
-    sel = cdx.filter(F.col("url").isin(wanted))
-    got = fetch_warc_records(spark, sel, str(wdir)).collect()
-    assert sorted(r["url"] for r in got) == wanted
-    by_url = {p["url"]: p["html"] for p in pages}
-    for r in got:
-        assert r["warc_status"] == "SUCCESS"
-        assert bytes(r["html"]) == by_url[r["url"]]
-
-    # a bogus range yields a FAILURE row, not a task failure
-    bad = spark.createDataFrame(
-        [("http://x.example/", "crawl-0.warc.gz", 999999, 100)],
-        "url string, filename string, offset long, length long",
-    )
-    frow = fetch_warc_records(spark, bad, str(wdir)).collect()[0]
-    assert frow["warc_status"] == "FAILURE" and frow["url"] == "http://x.example/"
-
-
 def test_warc_truncated_gzip_member_failure_row():
     """A .warc.gz cut off mid-member (no zlib error — truncation does
     not raise) must still surface as a FAILURE row, not vanish."""
-    from docling_eval_spark.sources.warc import _gzip_member, warc_record_bytes
 
     pages = _fixture_pages(2)
     members = [
-        _gzip_member(
+        gzip_member(
             warc_record_bytes(
                 "response",
                 p["html"],
@@ -462,60 +248,3 @@ def test_warc_truncated_gzip_member_failure_row():
     assert any("truncated gzip member" in r["error"] for r in bad)
 
 
-def test_write_wet_shards_roundtrip(spark, tmp_path):
-    import datetime as dt
-    import hashlib
-
-    from docling_eval_spark.sources.warc import read_wet, write_wet_shards
-
-    rows = [
-        (
-            f"https://example.org/p{i}",
-            dt.datetime(2017, 3, 22, 17, 43, i % 60),
-            f"page {i} body é中文",
-        )
-        for i in range(100)
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, text string"
-    )
-    out1 = str(tmp_path / "wet1")
-    manifest = write_wet_shards(df, out1, num_shards=4)
-    m = manifest.collect()
-    assert sum(r["n_records"] for r in m) == 100
-    assert all(r["n_bytes"] > 0 for r in m)
-    # the sink is eager: files exist before any action on the manifest
-    back = read_wet(spark, out1 + "/*.warc.wet.gz")
-    got = {(r["url"], r["text"]) for r in back.collect()}
-    assert got == {(u, t) for (u, _, t) in rows}
-    assert back.filter("warc_status != 'SUCCESS'").count() == 0
-    # byte-determinism: same input -> byte-identical shard files
-    # (hash-partitioned on url + per-shard url sort)
-    out2 = str(tmp_path / "wet2")
-    write_wet_shards(df.repartition(13), out2, num_shards=4)
-
-    def _hashes(d):
-        import os
-
-        return {
-            f: hashlib.md5(open(os.path.join(d, f), "rb").read()).hexdigest()
-            for f in sorted(os.listdir(d))
-            if f.endswith(".warc.wet.gz")
-        }
-
-    assert _hashes(out1) == _hashes(out2)
-
-
-def test_write_wet_shards_null_text_and_ts(spark, tmp_path):
-    from docling_eval_spark.sources.warc import read_wet, write_wet_shards
-
-    df = spark.createDataFrame(
-        [("https://a.example/x", None, None)],
-        "url string, warc_ts timestamp, text string",
-    )
-    out = str(tmp_path / "wet")
-    m = write_wet_shards(df, out, num_shards=1).collect()
-    assert sum(r["n_records"] for r in m) == 1
-    r = read_wet(spark, out + "/*.warc.wet.gz").collect()[0]
-    assert r["url"] == "https://a.example/x"
-    assert r["text"] == ""  # null text -> empty conversion block
