@@ -7,14 +7,14 @@ non-starter — the tokenizer here is a self-contained Treebank-style
 implementation):
 
 - ``tokenize``            — Treebank-style word tokenizer
-- ``token_edit_distance`` — Levenshtein on token sequences / max len
+- ``_edit_ratio``         — Levenshtein on token sequences / max len
   (`markdown_text_evaluator.py:213-215`)
-- ``set_f1``              — NLTK-style precision/recall/F on token
+- ``_set_f1_tokens``      — NLTK-style precision/recall/F on token
   SETS: P = |∩|/|pred|, R = |∩|/|true| (`:205-212`)
 - ``bleu``                — BLEU-4, uniform 0.25 weights, brevity
   penalty, tokenizer_13a, no smoothing (HF `evaluate` "bleu" default,
   `markdown_text_evaluator.py:52,189-197`)
-- ``meteor_exact``        — METEOR (alpha=.9, beta=3, gamma=.5) with
+- ``meteor_tokens``       — METEOR (alpha=.9, beta=3, gamma=.5) with
   staged exact → Porter-stem alignment (our from-scratch stemmer,
   evaluators/porter.py, matches the published algorithm). Remaining
   deviation vs the reference's NLTK meteor: the WordNet-synonym stage

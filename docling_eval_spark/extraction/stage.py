@@ -9,12 +9,7 @@ per-document converter loop (`benchmarks/dpbench/create.py:266-342`).
 Scale notes (100 TB / 10^12 rows):
 - the stage is a pure map — no shuffle; partition count is inherited
   from the scan, so `spark.sql.files.maxPartitionBytes` bounds task
-  memory regardless of table size;
-- `salted_repartition` is for when upstream produced few/skewed
-  partitions (e.g. per-host input files with Zipf-heavy hosts): it
-  spreads rows uniformly WITHOUT keying on url, so later per-url
-  groupings still hash raw url (SURVEY §7 risk: salt only stateless
-  map stages).
+  memory regardless of table size.
 """
 
 from __future__ import annotations

@@ -218,8 +218,8 @@ def shingle_sig_table(
     Normalization + code-point split stay JVM-side (string semantics
     are the engine's), then one Arrow-batched numpy kernel does the
     k-window polynomial hashing, first-occurrence dedup, and the
-    num_perm permutation minima: fold ``(acc·B + c) mod p`` per window
-    (the :func:`shingle_code_table` expression), ``((x·a) mod p + b)
+    num_perm permutation minima: fold ``(acc·B + c) mod p`` per window,
+    ``((x·a) mod p + b)
     mod p`` per permutation, all in int64 (p = 2^31−1 keeps every
     product under 2^63). An empty text has no shingles and an all-p
     signature. Tier-1 checks it value-exact against the

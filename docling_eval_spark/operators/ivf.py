@@ -2,13 +2,7 @@
 scale path for embedding search (alongside the hyperplane LSH in
 similarity.py).
 
-Classic IVF structure, Spark-first:
-- **train**: deterministic k-means — seeds = the ``n_centroids``
-  vectors with smallest md5(vec_id) (engine-portable, seedless
-  determinism), then a few Lloyd iterations computed as DataFrame
-  aggregations (posexplode to (centroid, dim) partial sums — one
-  shuffle per iteration, no driver-side data beyond the centroid
-  matrix itself);
+Classic IVF structure, Spark-first, over a given centroid matrix:
 - **assign**: nearest centroid per vector via a vectorized NumPy
   kernel (one matmul per Arrow batch against the broadcast centroid
   matrix);

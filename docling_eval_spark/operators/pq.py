@@ -15,9 +15,7 @@ IVF in ``similarity.py`` / ``ivf.py``) with the compressed tier.
 
 Determinism & verification contract (same discipline as the IVF gate):
 the oracle gate runs against FIXED seeded-gaussian codebooks — the
-assign/score path is what it verifies; :func:`pq_train_codebooks`
-refines them with distributed per-subspace Lloyd steps (recall quality
-is pytest-gated against brute force with the trained books). Encoding
+assign/score path is what it verifies. Encoding
 assigns each subvector the codeword minimizing
 ``||s - c||² = c·c − 2·s·c`` (the ``s·s`` term is constant per row and
 dropped IDENTICALLY on both engines), lowest code index on ties.
@@ -28,10 +26,6 @@ Scoring uses the asymmetric distance computation (ADC) identity
 evaluated as ONE sequential 64-element fold over the reconstruction,
 so Spark's ``F.aggregate`` and DuckDB's ``list_inner_product`` see the
 same doubles in the same order — rank and score replay bit-for-bit.
-The table-lookup formulation of ADC (build an ``m × n_codes`` LUT per
-query, score = ``Σ_j LUT[j][code_j]``) is the production fast path —
-:func:`pq_topk_adc` implements it as a vectorized kernel and a pytest
-asserts it ranks identically to the fold path.
 
 Scale shape: encoding is a NARROW MAP (one Arrow batch matmul per
 partition against the broadcast ``m·n_codes·sub`` codebook — a few KB).

@@ -298,8 +298,7 @@ def embedding_near_dup_pairs(
     Buckets larger than ``max_bucket`` (degenerate clusters, e.g.
     all-zero embeddings landing in one hyperplane cell) are DROPPED
     rather than joined — a quadratic bucket at corpus scale is an
-    error, not work (same guard as minhash_lsh_pairs). Inspect the
-    overflow with ``near_dup_bucket_overflow``.
+    error, not work (same guard as minhash_lsh_pairs).
 
     The bucketed frame is persisted for the plan's duration: it feeds
     the size census and both self-join sides, and each branch would

@@ -166,9 +166,7 @@ def cms_estimate(
 # (numeric ids hash small under a plain Horner fold) still spread over
 # the full 31-bit word. Everything up to the register table is exact
 # integer arithmetic — bit shifts and a CASE chain for the leading-one
-# rank — so a DuckDB oracle replays registers bit-for-bit; only the
-# final harmonic-mean estimate is floating point, and that is gated by
-# pytest against exact COUNT(DISTINCT) instead.
+# rank — so a DuckDB oracle replays registers bit-for-bit.
 #
 # Why this is the 100 TB shape: COUNT(DISTINCT url) per host over a
 # crawl is a full shuffle of every distinct value; the register table
@@ -202,8 +200,8 @@ def hll_registers(
 
     ``reg`` = low ``b`` bits of the mixed hash; ``max_rank`` = max over
     values of the leading-one rank of the remaining ``31 - b`` bits.
-    Untouched registers are NOT emitted (estimate treats them as rank
-    0); the table is a mergeable sketch — union two crawls' tables and
+    Untouched registers are NOT emitted (they have rank 0); the table
+    is a mergeable sketch — union two crawls' tables and
     re-aggregate ``max(max_rank)`` to sketch the union.
 
     ONE shuffle, key space |keys| * 2^b, map-side combine saturates

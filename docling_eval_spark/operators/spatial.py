@@ -1,16 +1,12 @@
-"""Spatial join operators (SURVEY J6/J7).
+"""Spatial join operators (SURVEY J6).
 
 - point_in_box_join — point → smallest enclosing box (range-predicate
   join + min-area tie-break), reference semantics of the CVAT
   polyline-point lookup (`cvat_annotation/create.py:58-90`).
-- iou_pair_join    — per-page box↔box pairs with IoU ≥ cutoff
-  (`cvat_annotation/create.py:332-359` table-recovery join).
 
-Scale shape: both join on a coarse equi-key first (page/document id →
-partition-pruned hash join); the range/θ predicate only filters within
-key groups. For corpora where one page holds millions of boxes, the
-grid-bucket variant (`grid_bucket_col`) turns the range join into an
-equi-join on cell ids.
+Scale shape: it joins on a coarse equi-key first (page/document id →
+partition-pruned hash join); the range predicate only filters within
+key groups.
 """
 
 from __future__ import annotations

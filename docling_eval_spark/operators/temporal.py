@@ -22,10 +22,7 @@ snapshot deltas.
 - ``sessionize_batch`` — gap-based sessions (new session when the gap
   since the previous event of the same key exceeds ``gap_sec``): the
   classic lag + cumulative-sum window pair, parameterized by
-  key/ts/gap. NOTE: streaming/stateful.py keeps its own small
-  sessionize_batch as the stream test's oracle (0-based session ids,
-  sum_value payload) — that one mirrors sessionize_stream's output
-  shape; this one is the general operator (1-based ids, duration).
+  key/ts/gap (1-based session ids, duration).
 
 Scale: both are one hash-shuffle on the key; window state is a single
 running value (no growing buffers).

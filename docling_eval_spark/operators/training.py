@@ -1,5 +1,4 @@
-"""Deterministic per-epoch corpus shuffling and sharded training-order
-output.
+"""Deterministic per-epoch corpus shuffle keys and their order digest.
 
 A training run wants each epoch to visit the corpus in a different —
 but reproducible — order, materialized as N shard files whose row order
@@ -7,7 +6,7 @@ IS the training order. The classic failure mode at 100 TB is a global
 ``orderBy(rand())``: a full range-partitioned sort of every byte, with
 a nondeterministic key that breaks retry/resume semantics.
 
-This module does it with ONE hash shuffle and zero global sorts:
+The shape this module keys: ONE hash shuffle and zero global sorts.
 
 - shuffle key = portable Horner hash of ``"{id}:{epoch}"`` — the
   repo-wide :func:`~docling_eval_spark.operators.text_analysis
@@ -17,9 +16,8 @@ This module does it with ONE hash shuffle and zero global sorts:
 - shard = key mod num_shards; ``repartition(num_shards, shard)`` is the
   single exchange, then ``sortWithinPartitions(key, id)`` orders each
   shard locally — per-shard sorts, never a cluster-wide range sort.
-- the writer emits one file per shard whose parquet row order is the
-  training order; readers stream shards in file order, no further
-  shuffling.
+- ``epoch_shard_stats`` digests each shard's order (the registry's
+  ``epoch_shards`` query, gated by its DuckDB oracle).
 
 Reference scope: DS4SD/docling-eval has no training-order or sharded
 writer code (its dataset builders write pandas batches single-process,

@@ -10,7 +10,7 @@ All engine-portable (the DuckDB gate recomputes each value):
   corpus has a deliberately skewed host distribution, and a plain
   hash aggregation (partial map-side combine) handles it — skew only
   bites aggregations whose per-key STATE grows with rows (collect_*)
-  or joins, which is what `salted_repartition` exists for.
+  or joins (see `skew.salted_equi_join`).
 - ``line_dedup`` — C4's line-level dedup (Raffel et al. 2020 §2.2
   "we discarded all but one of any three-sentence span occurring more
   than once"): here at line granularity — every line keeps only its
@@ -424,9 +424,7 @@ def robots_filter_stage(
 # ---------------------------------------------------------------- web graph
 
 def _resolve_href(h: Column, scheme: Column, origin: Column) -> Column:
-    """Crawl-graph href resolution, shared by :func:`extract_links`
-    and :func:`extract_anchors` (one source of truth so the edge list
-    and the anchor rollup can never disagree on what a link targets):
+    """Crawl-graph href resolution for :func:`extract_anchors`:
     absolute http(s) hrefs pass through; '//' protocol-relative
     inherit the source scheme; '/'-rooted resolve against the source
     origin; everything else (relative paths, fragments, javascript:)
@@ -461,7 +459,7 @@ def extract_anchors(
     stay UNdecoded (raw markup minus tags) — entity semantics belong
     to the extraction kernel; this is the link-graph view. Anchors
     without an href, and hrefs :func:`_resolve_href` rejects, are
-    dropped. Unlike :func:`extract_links` the edge list is NOT
+    dropped. The edge list is NOT
     deduplicated: the same (src, dst) with two different anchor texts
     is two signals.
 

@@ -181,8 +181,11 @@ def histogram_png(stats_row: dict[str, Any], title: str = "") -> bytes:
 def render_metric_report(
     row: dict[str, Any], out_dir: str, metric_name: str
 ) -> dict[str, Any]:
-    """Write the report files of one stats row (see
-    :func:`write_metric_report`); no Spark job runs."""
+    """Write one stats row (an ``evaluators.stats.collect_stats`` row)
+    as {name}.json + {name}.md + {name}.svg + {name}.png — the
+    reference's evaluate/visualize sink pair (`cli/main.py:252-310` +
+    `70-112`; the .png matches the reference's matplotlib figure format
+    via the in-repo rasterizer). No Spark job runs."""
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     (out / f"{metric_name}.json").write_text(json.dumps(row))

@@ -37,7 +37,8 @@ REACH_PLACES = [
     ROOT / "perfbench",
 ]
 
-# name -> the test that compares a kernel against this reference.
+# name -> the test that compares a kernel against this reference (for
+# chrf_reference_py, the unquantized formula, the kernel's twin chrf_py)
 REFERENCE_IMPLEMENTATIONS = {
     "cdc_chunks_py": "tests/test_operators.py::test_cdc_spark_matches_py_twin",
     "chrf_py": "tests/test_chrf.py::test_chrf_spark_matches_python_twin",
