@@ -8,6 +8,7 @@ Usage: python3 scripts/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from decimal import Decimal
 from pathlib import Path
 
 import duckdb
@@ -81,7 +82,14 @@ def main() -> int:
             failed.append(name)
             continue
         s_norm = normalize([r.asDict() for r in srows], scols)
-        d_norm = normalize([dict(zip(dcols, t)) for t in drows], dcols)
+        # DuckDB's DECIMAL compares as a double, as it did through pandas
+        d_norm = normalize(
+            [
+                {c: float(v) if isinstance(v, Decimal) else v for c, v in zip(dcols, t)}
+                for t in drows
+            ],
+            dcols,
+        )
         if s_norm != d_norm:
             diffs = [
                 (a, b) for a, b in zip(s_norm, d_norm) if a != b
