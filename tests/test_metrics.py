@@ -30,6 +30,7 @@ from docling_eval_spark.evaluators.text_metrics import (
 def meteor_exact(true_txt, pred_txt):
     return meteor_tokens(tokenize(true_txt), tokenize(pred_txt))
 
+
 # ---------------------------------------------------------------- fixtures
 
 
