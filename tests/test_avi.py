@@ -36,6 +36,21 @@ def test_avi_rejects_compressed_stream():
         avi_decode(bytes(data))
 
 
+def test_video_features_real_vs_fake():
+    """The temporal hash reads decoded frames: a still clip has no
+    energy drop between frame groups (hash 0), a clip that darkens
+    every frame sets all 64 bits, and bytes that are no AVI hash None."""
+    from docling_eval_spark.operators.multimodal import video_thash
+
+    still = np.full((65, 6, 6, 3), 128, dtype=np.uint8)
+    assert video_thash(avi_encode(still, fps=5.0)) == 0
+    fading = np.stack(
+        [np.full((6, 6, 3), 200 - 2 * i, dtype=np.uint8) for i in range(65)]
+    )
+    assert video_thash(avi_encode(fading)) == -1  # all 64 bits, signed i64
+    assert video_thash(b"\x00\x01" * 100) is None
+
+
 def test_avi_malformed_header_degrades_not_crashes(spark):
     import struct
 

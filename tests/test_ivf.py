@@ -43,3 +43,27 @@ def test_ivf_recall_vs_brute(spark):
     assert all((q, q) in approx for q in range(8))  # self always found
 
 
+def test_ivf_determinism(spark):
+    """Fixed centroids: list assignment and the probed top-k do not
+    depend on how the corpus is partitioned."""
+    e = _embeddings(spark)
+    cents = hyperplanes(64, 8, seed=11)
+
+    def lists(df):
+        return sorted(
+            (r["vec_id"], r["centroid"]) for r in assign_centroids(df, cents).collect()
+        )
+
+    assert lists(e) == lists(e.repartition(7))
+
+    queries = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+    def top(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["neighbor_id"])
+            for r in ivf_topk(df, queries, cents, k=3, n_probe=2).collect()
+        )
+
+    assert top(e) == top(e.repartition(7))

@@ -238,6 +238,31 @@ def test_top_bigram_fraction(spark):
     assert got[1]["top_count"] == 1 and got[1]["n_bigrams"] == 3
 
 
+def test_png_real_pixel_path(spark):
+    """K11: a Paeth-filtered PNG decodes to its exact pixels and hashes
+    through the Spark dHash stage as its unfiltered encoding does; a
+    payload that is no image hashes NULL, never a task failure."""
+    from docling_eval_spark.operators.multimodal import (
+        decode_pixels,
+        image_dhash,
+        image_dhash_stage,
+    )
+    from docling_eval_spark.operators.png_codec import png_encode
+
+    rng = np.random.RandomState(3)
+    img = rng.randint(0, 256, (96, 128, 3), dtype=np.uint8)
+    png = png_encode(img, filter_type=4)  # exercises Paeth unfiltering
+    assert np.array_equal(decode_pixels(png), img)
+    df = spark.createDataFrame(
+        [("u1", bytearray(png)), ("u2", bytearray(b"not an image"))],
+        "url string, media binary",
+    )
+    rows = {r["url"]: r["dhash"] for r in image_dhash_stage(df).collect()}
+    want = image_dhash(png_encode(img))
+    assert want is not None and rows["u1"] == want
+    assert rows["u2"] is None
+
+
 def test_canonical_url_and_host(spark):
     from docling_eval_spark.operators.web_ops import canonical_url_col, host_col
 
@@ -2088,6 +2113,29 @@ def test_hll_registers_merge_and_estimate(spark):
     whole = {(r.grp, r.reg): r.max_rank for r in regs.collect()}
     via_merge = {(r.grp, r.reg): r.max_rank for r in merged.collect()}
     assert whole == via_merge
+
+
+def test_hll_small_range_linear_counting(spark):
+    """20 distinct values in 64 registers sit in HLL's small range
+    (raw harmonic-mean estimate <= 2.5·m), where linear counting
+    m·ln(m/zeros) over the register table's occupancy applies. The
+    deterministic Lehmer-mixed hash spreads sequential ids nearly
+    collision-free, so the estimate lands within ±30% of truth."""
+    import math
+
+    import pyspark.sql.functions as F
+    from docling_eval_spark.operators.sketch import hll_registers
+
+    df = spark.range(20).select(F.lit("k").alias("grp"), F.col("id").alias("v"))
+    ranks = [r.max_rank for r in hll_registers(df, ["grp"], "v", b=6).collect()]
+    touched = len(ranks)
+    assert touched <= 20  # at most one register per value
+    m = 64
+    zeros = m - touched
+    raw = (0.7213 / (1.0 + 1.079 / m)) * m * m / (sum(2.0**-r for r in ranks) + zeros)
+    assert raw <= 2.5 * m and zeros > 0  # the linear-counting branch
+    est = round(m * math.log(m / zeros))
+    assert abs(est - 20) <= 6, est  # ±30% at 31% occupancy
 
 
 def test_hll_register_table_is_one_bounded_shuffle(spark):

@@ -9,6 +9,7 @@ from conftest import assert_matches_oracle
 from docling_eval_spark.operators.pq import (
     pq_codebooks,
     pq_encode,
+    pq_topk,
 )
 from docling_eval_spark.operators.similarity import hyperplanes, semantic_dedup
 
@@ -50,6 +51,34 @@ def test_pq_encode_codes_and_recon(spark):
     for j in range(8):
         d = ((cb[j] - segs[j][None, :]) ** 2).sum(axis=1)
         assert row["codes"][j] == int(np.argmin(d))
+
+
+def test_pq_adc_matches_fold_path(spark):
+    """ADC (asymmetric distance computation) reference: a per-query
+    table of segment-codeword inner products, summed over each row's
+    codes, must rank the corpus as pq_topk's fold over the
+    reconstruction does; scores agree to float-sum-reorder tolerance."""
+    e = _embeddings(spark)
+    cb = pq_codebooks(64, m=8, n_codes=16, seed=13)
+    q = e.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    fold = pq_topk(e, q, cb, k=5).collect()
+    enc = {r["vec_id"]: r["codes"] for r in pq_encode(e, cb).collect()}
+    ids = sorted(enc)
+    codes = np.array([enc[i] for i in ids])
+    for qr in q.collect():
+        lut = np.einsum("ms,mcs->mc", np.array(qr["query_vec"]).reshape(8, 8), cb)
+        scores = lut[np.arange(8)[None, :], codes].sum(axis=1)
+        adc = sorted(range(len(ids)), key=lambda i: (-scores[i], ids[i]))[:5]
+        got = sorted(
+            (r["rank"], r["neighbor_id"], r["score"])
+            for r in fold
+            if r["query_id"] == qr["query_id"]
+        )
+        assert [n for _, n, _ in got] == [ids[i] for i in adc]
+        for (_, _, score), i in zip(got, adc):
+            assert abs(score - scores[i]) < 1e-9
 
 
 def test_semantic_dedup_flags_planted_twins(spark):
