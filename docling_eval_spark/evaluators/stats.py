@@ -27,8 +27,9 @@ Two paths produce the same row shape:
   :func:`collect_counted_stats` also counts the rows in that same
   aggregation.
 
-The cumulative to_table (reference `stats.py:28-50`) is a window
-cum-sum over the 20-row bins frame.
+The cumulative to_table (reference `stats.py:28-50`) is
+``reports.stats_to_table_text``: a running sum over the stats row's
+bins, in Python on the driver.
 """
 
 from __future__ import annotations

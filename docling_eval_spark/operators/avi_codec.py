@@ -40,7 +40,7 @@ def _walk_chunks(data: bytes, pos: int, end: int):
 _MAX_FRAME_PIXELS = 64_000_000  # ~8k × 8k
 
 
-def avi_decode(data: bytes, indices: list[int] | None = None):
+def avi_decode(data: bytes):
     """AVI bytes → (frames, fps) with frames an (n, h, w, 3) uint8 RGB
     array. Uncompressed 24-bit BI_RGB and MJPG streams are supported —
     anything else raises ValueError (caller degrades to fake).
@@ -49,10 +49,6 @@ def avi_decode(data: bytes, indices: list[int] | None = None):
     (``biWidth``/``biHeight``, negative biHeight = top-down DIB) and
     are cross-checked against the avih header — a mismatch is a
     malformed file, ValueError, never silently-garbled pixels.
-
-    ``indices`` decodes only the selected frame ordinals (still
-    returning them in the given order) — the sampler's path, so a
-    long video never materializes every frame just to keep a few.
     """
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI")
@@ -99,14 +95,9 @@ def avi_decode(data: bytes, indices: list[int] | None = None):
         )
     if width <= 0 or height <= 0 or width * height > _MAX_FRAME_PIXELS:
         raise ValueError(f"implausible frame dimensions {width}x{height}")
-    if indices is None:
-        indices = list(range(len(frames_raw)))
-    elif any(i < 0 or i >= len(frames_raw) for i in indices):
-        raise ValueError("frame index out of range")
     row_bytes = (width * 3 + 3) & ~3
-    out = np.empty((len(indices), height, width, 3), dtype=np.uint8)
-    for slot, i in enumerate(indices):
-        raw = frames_raw[i]
+    out = np.empty((len(frames_raw), height, width, 3), dtype=np.uint8)
+    for i, raw in enumerate(frames_raw):
         if is_mjpg:
             # each 00dc chunk is a self-contained JPEG; the in-repo
             # T.81 decoder handles it (MJPEG streams that omit DHT
@@ -121,7 +112,7 @@ def avi_decode(data: bytes, indices: list[int] | None = None):
                     f"MJPG frame {i} is {img.shape[1]}x{img.shape[0]}, "
                     f"header says {width}x{height}"
                 )
-            out[slot] = img
+            out[i] = img
             continue
         if len(raw) < row_bytes * height:
             raise ValueError("truncated frame %d" % i)
@@ -130,7 +121,7 @@ def avi_decode(data: bytes, indices: list[int] | None = None):
         bgr = rows.reshape(height, width, 3)
         if not top_down:
             bgr = bgr[::-1]  # bottom-up DIB → top-down
-        out[slot] = bgr[:, :, ::-1]  # BGR → RGB
+        out[i] = bgr[:, :, ::-1]  # BGR → RGB
     fps = (
         rate / scale
         if scale

@@ -48,20 +48,17 @@ EOW = "</w>"
 def word_symbol_table(
     df: DataFrame,
     text_col: str = "text",
-    lowercase: bool = True,
     min_freq: int = 1,
 ) -> DataFrame:
-    """(word, freq, s): the word-frequency table with each word's
-    initial symbol string — its characters joined by SEP, with the
+    """(word, freq, s): the lowercased word-frequency table with each
+    word's initial symbol string — its characters joined by SEP, with the
     ``</w>`` end-of-word marker as the final symbol.
 
     This is the only corpus-scale pass: explode + one counting shuffle
     (map-side combine). ``min_freq`` prunes hapax noise at scale
     (documented deviation from classic BPE when > 1)."""
     tok = F.explode(tokens_col(text_col)).alias("word")
-    words = df.select(tok)
-    if lowercase:
-        words = words.select(F.lower(F.col("word")).alias("word"))
+    words = df.select(tok).select(F.lower(F.col("word")).alias("word"))
     words = words.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
     if min_freq > 1:
         words = words.filter(F.col("freq") >= min_freq)
@@ -171,11 +168,10 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     merges: int = 8,
-    lowercase: bool = True,
     min_freq: int = 1,
 ) -> DataFrame:
     """(rank, left, right, merged, freq): the first ``merges`` BPE
-    merge rules learned from the corpus, in order. Ties broken
+    merge rules learned from the lowercased corpus, in order. Ties broken
     deterministically: highest freq, then (left, right) lexicographic
     — identical under any partitioning and replayable by the oracle.
 
@@ -191,7 +187,7 @@ def bpe_train(
     # inside the NEXT iteration's pair-count collect (ONE job per
     # merge; the old eager count-then-unpersist spent two). The chain
     # holds `merges` vocab-sized frames — small next to any corpus.
-    chain = [word_symbol_table(df, text_col, lowercase, min_freq).persist()]
+    chain = [word_symbol_table(df, text_col, min_freq).persist()]
     # The corpus-scale count leaves the vocab-sized word table spread
     # over corpus-scale shuffle partitions; every one of the `merges`
     # iterations then pays that task count twice (pair-count kernel +
@@ -228,7 +224,6 @@ def bpe_encode(
     df: DataFrame,
     merge_rules: list[tuple[str, str]],
     text_col: str = "text",
-    lowercase: bool = True,
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Apply learned merge rules (in rank order) to every document,
@@ -248,9 +243,7 @@ def bpe_encode(
     closure constant (tokenizers are a few thousand rules)."""
     import pyspark.sql.types as T
 
-    toks = tokens_col(text_col)
-    if lowercase:
-        toks = F.transform(toks, lambda x: F.lower(x))
+    toks = F.transform(tokens_col(text_col), lambda x: F.lower(x))
     schema = T.StructType(
         list(df.schema.fields)
         # nullable: NULL text → NULL bpe_tokens

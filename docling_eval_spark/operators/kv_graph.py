@@ -4,11 +4,8 @@ The reference builds GraphData {cells, links} per document
 (`benchmarks/funsd/create.py:256-279,437-439`: question/answer cells,
 directed links on cell ids). The evaluation-side primitive is link-set
 agreement: precision/recall/F1 of predicted (src,dst) pairs against
-ground truth — pure relational algebra (two hash joins on the pair
-key), no UDF.
-
-Scale: links explode to slim (doc, src, dst) rows; one shuffle per
-side on the composite key; per-doc rollup is a hash agg.
+ground truth — per-row array algebra over each document's two link
+sets, no UDF and no shuffle of its own.
 """
 
 from __future__ import annotations
@@ -17,45 +14,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from docling_eval_spark.functions.let import let_col
-
-
-def kv_link_metrics(
-    gt: DataFrame, pred: DataFrame, key: str = "key"
-) -> DataFrame:
-    """Per-key link precision/recall/F1 from two (key, src, dst) sets.
-
-    P = |∩|/|pred|, R = |∩|/|gt| — the same set-metric convention as
-    the token metrics (SURVEY U1). Inner join on the full link triple
-    counts the intersection; distinct applied to both sides first.
-    """
-    g = gt.select(key, "src", "dst").distinct()
-    p = pred.select(key, "src", "dst").distinct()
-    inter = g.join(p, [key, "src", "dst"]).groupBy(key).agg(
-        F.count("*").alias("n_inter")
-    )
-    g_n = g.groupBy(key).agg(F.count("*").alias("n_gt"))
-    p_n = p.groupBy(key).agg(F.count("*").alias("n_pred"))
-    out = (
-        g_n.join(p_n, key, "full")
-        .join(inter, key, "left")
-        .fillna(0, ["n_inter", "n_gt", "n_pred"])
-    )
-    prec = F.when(F.col("n_pred") > 0, F.col("n_inter") / F.col("n_pred")).otherwise(
-        F.lit(0.0)
-    )
-    rec = F.when(F.col("n_gt") > 0, F.col("n_inter") / F.col("n_gt")).otherwise(
-        F.lit(0.0)
-    )
-    f1 = F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(F.lit(0.0))
-    return out.select(
-        key,
-        F.col("n_gt").cast("bigint").alias("n_gt"),
-        F.col("n_pred").cast("bigint").alias("n_pred"),
-        F.col("n_inter").cast("bigint").alias("n_inter"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
-    )
 
 
 def consecutive_links(ids: Column) -> Column:
@@ -81,9 +39,7 @@ def kv_link_metrics_arrays(
     """Per-row link P/R/F1 when BOTH link sets already sit on the row
     as arrays (the per-document KV-graph case, where graphs are
     bounded): pure array algebra, ZERO shuffles of its own — the
-    caller's per-doc aggregation is the only exchange. This is the
-    single-pass twin of ``kv_link_metrics``, which keeps the fully
-    relational shape for unbounded link sets."""
+    caller's per-doc aggregation is the only exchange."""
     # NULL link arrays count as empty sets (F.size(NULL) is -1, which
     # would otherwise emit corrupt negative counts)
     stage1 = df.select(

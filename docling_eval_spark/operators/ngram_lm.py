@@ -52,10 +52,10 @@ def _grams_of(norm: Column, k: int) -> Column:
 
 
 def trigram_model_from_grams(grams: DataFrame) -> DataFrame:
-    """Same model, built from an already-exploded ``gram`` column —
-    lets the self-trained scoring path reuse ONE persisted gram frame
-    for both the model aggregation and the scoring join instead of
-    exploding the corpus twice."""
+    """The trigram model ``(gram, logp)``, built from an already-exploded
+    ``gram`` column — lets the scoring path reuse ONE persisted gram
+    frame for both the model aggregation and the scoring join instead
+    of exploding the corpus twice."""
     tri = grams.groupBy("gram").agg(F.count("*").alias("c3"))
     ctx = (
         tri.groupBy(F.substring("gram", 1, 2).alias("ctx"))
@@ -77,15 +77,13 @@ def ngram_lm_score(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    model: DataFrame | None = None,
     floor_logp: float = -20.0,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(id, n_grams, lm_micro_sum, lm_score): trigram conditional
-    log-prob stats per document under ``model`` (default: a model
-    trained on ``df`` itself — the CCNet in-domain setup). Trigrams
-    absent from the model score ``floor_logp`` (unseen-event floor;
-    never fires when scoring the training corpus). Docs shorter than 3
+    log-prob stats per document under a model trained on ``df``
+    itself — the CCNet in-domain setup. Trigrams absent from the model
+    score ``floor_logp`` (unseen-event floor; every trigram of ``df``
+    is in its own model, so it never fires). Docs shorter than 3
     normalized chars have no trigrams → lm_score NULL, n_grams 0.
 
     ``lm_micro_sum`` is the BIGINT sum of the 6-decimal-quantized
@@ -96,24 +94,17 @@ def ngram_lm_score(
     log-prob (raw double; final-digit rounding of a .5-tie quotient is
     engine-dependent, so it stays unrounded).
 
-    ``broadcast_model`` (default True) force-broadcasts the model —
-    right whenever the trigram vocab is small relative to the corpus
-    (ASCII-dominant text: ≤ a few million rows). For unbounded
-    charsets (CJK-heavy crawls approach charset³ distinct trigrams)
-    pass False and let Spark's size-based planning pick a shuffle
-    join instead of collecting an oversized model to the driver."""
+    The model is force-broadcast — right whenever the trigram vocab is
+    small relative to the corpus (ASCII-dominant text: ≤ a few million
+    rows); CJK-heavy crawls approach charset³ distinct trigrams."""
     grams = df.select(
         F.col(id_col).alias("id"),
         F.explode(_grams_of(_norm(text_col), 3)).alias("gram"),
     )
-    if model is None:
-        # self-trained: ONE persisted explode feeds both the model
-        # aggregation and the scoring join (previously two full
-        # corpus explodes)
-        grams = grams.persist()
-        model = trigram_model_from_grams(grams)
-    if broadcast_model:
-        model = F.broadcast(model)
+    # ONE persisted explode feeds both the model aggregation and the
+    # scoring join, so the corpus is exploded once
+    grams = grams.persist()
+    model = F.broadcast(trigram_model_from_grams(grams))
     scored = grams.join(model, "gram", "left").select(
         "id",
         F.coalesce(

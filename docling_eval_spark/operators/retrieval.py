@@ -86,14 +86,13 @@ def inverted_index(
     id_col: str,
     text_col: str = "text",
     k_postings: int = 1000,
-    lowercase: bool = True,
     n_salt: int = 16,
 ) -> DataFrame:
     """``(term, doc_count, id, tf, rank)``: impact-ordered champion-
-    list postings (IIR §7.1.3) — per term, the ``k_postings`` highest-
-    tf documents, rank 1 = highest impact, ties broken ``(tf desc,
-    id asc)``. ``doc_count`` is the EXACT document frequency over the
-    FULL corpus, computed before the cap — capping trims the posting
+    list postings (IIR §7.1.3) of the lowercased terms — per term, the
+    ``k_postings`` highest-tf documents, rank 1 = highest impact, ties
+    broken ``(tf desc, id asc)``. ``doc_count`` is the EXACT document
+    frequency over the FULL corpus, computed before the cap — capping trims the posting
     tail, never the collection statistics, so idf computed from this
     index equals idf over the uncapped corpus.
 
@@ -107,9 +106,7 @@ def inverted_index(
     """
     from docling_eval_spark.operators.text_analysis import tokens_col
 
-    toks = tokens_col(text_col)
-    if lowercase:
-        toks = F.transform(toks, lambda x: F.lower(x))
+    toks = F.transform(tokens_col(text_col), lambda x: F.lower(x))
     terms = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
     tf = terms.groupBy("term", "id").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("doc_count"))

@@ -251,25 +251,23 @@ def lsh_bucketed_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: exact cosine only within matching buckets.
 
     Recall knob: fewer planes → bigger buckets → higher recall/cost.
-    ``multiprobe`` additionally probes all buckets at Hamming
-    distance 1 from the query's bucket (flip each bit once)."""
+    Each query probes its own bucket and every bucket at Hamming
+    distance 1 from it (flip each bit once)."""
     dim = len(queries.select(query_vec_col).first()[0])
     planes = hyperplanes(dim, n_planes, seed)
     cb = bucket_assign(corpus, vec_col, planes)
     # query side is tiny (broadcast below): the bucket_col expression
     # avoids spinning a Python worker stage for a handful of rows
     qb = queries.withColumn("bucket", bucket_col(query_vec_col, planes))
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-        )
-        qb = qb.withColumn("bucket", F.explode(probes))
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
+    )
+    qb = qb.withColumn("bucket", F.explode(probes))
     joined = cb.join(F.broadcast(qb), "bucket").withColumn(
         "cosine", cosine_col(vec_col, query_vec_col)
     )
@@ -435,7 +433,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 100_000,
-    snapshot: bool = True,
     pair_block: int = 2048,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -461,10 +458,9 @@ def semantic_dedup(
     The cluster assignment itself is a narrow map against the broadcast
     centroid matrix (see ``ivf.assign_centroids``); the assigned frame
     is consumed by THREE branches (cluster sizes, the clusters within
-    ``max_cluster``, the oversized rest), so ``snapshot=True`` (default)
-    lazily ``localCheckpoint``s it — the corpus is scanned and the
-    kernel run ONCE, not once per branch. Disable for pure plan
-    inspection.
+    ``max_cluster``, the oversized rest), so it is lazily
+    ``localCheckpoint``-ed — the corpus is scanned and the kernel run
+    ONCE, not once per branch.
 
     The pairwise step is a per-cluster Arrow kernel: each cluster's
     vectors cross the boundary once, and ``pair_block`` bounds the
@@ -474,9 +470,9 @@ def semantic_dedup(
     on the sf0.001 corpus in tier-1."""
     from docling_eval_spark.operators.ivf import assign_centroids
 
-    a = assign_centroids(corpus, centroids, id_col, vec_col)
-    if snapshot:
-        a = a.localCheckpoint(eager=False)
+    a = assign_centroids(corpus, centroids, id_col, vec_col).localCheckpoint(
+        eager=False
+    )
     sizes = a.groupBy("centroid").agg(F.count("*").alias("__n"))
     ok = sizes.filter(F.col("__n") <= max_cluster).select("centroid")
     joinable = a.join(F.broadcast(ok), "centroid")

@@ -8,11 +8,11 @@ explicit fix: replicate the small(er) side S ways and scatter the big
 side's hot rows across the S replicas, turning one hot reducer into S
 warm ones at the cost of S× the small side's shuffle volume.
 
-- ``salted_equi_join`` — result-identical to ``big.join(small, on)``
-  (inner/left), plan-verifiably joined on ``(key, salt)``. The salt on
-  the big side is ``pmod(xxhash64(id), S)``: deterministic per row, so
-  retries and re-runs produce identical partitioning; the small side
-  explodes each row S ways.
+- ``salted_equi_join`` — result-identical to the inner
+  ``big.join(small, on)``, plan-verifiably joined on ``(key, salt)``.
+  The salt on the big side is ``pmod(xxhash64(id), S)``: deterministic
+  per row, so retries and re-runs produce identical partitioning; the
+  small side explodes each row S ways.
 - ``skew_report`` — the measurement half: per-key counts (one map-side
   combining shuffle), rolled into the integer quantile sketch over
   counts plus the exact top-N hot keys with ppm shares. Run it BEFORE
@@ -36,7 +36,6 @@ def salted_equi_join(
     on: str,
     big_id: str,
     num_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join ``big ⋈ small`` on ``on`` with the big side's rows
     scattered over ``num_salts`` replicas of the small side.
@@ -44,15 +43,12 @@ def salted_equi_join(
     ``big_id`` names any column that varies within a hot key (a row id,
     url, timestamp — uniqueness not required, only spread); the salt is
     ``pmod(xxhash64(big_id), num_salts)`` — deterministic, so task
-    retries rebuild identical partitions. Supports ``inner`` and
-    ``left`` (the shapes whose semantics replication preserves
-    verbatim; a right/full join would multiply unmatched small rows).
+    retries rebuild identical partitions. Inner join only: a right or
+    full join would multiply unmatched small rows.
 
     Cost model: small side's shuffle volume × num_salts buys the hot
     key's reduce work ÷ num_salts. Output columns = big's then small's
-    non-key columns, exactly like ``big.join(small, on, how)``."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted join supports inner/left, got {how!r}")
+    non-key columns, exactly like ``big.join(small, on)``."""
     if num_salts < 1:
         raise ValueError(f"num_salts must be >= 1, got {num_salts}")
     salt = F.pmod(F.xxhash64(F.col(big_id)), F.lit(num_salts)).cast("int")
@@ -60,7 +56,7 @@ def salted_equi_join(
     s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
     )
-    return b.join(s, [on, "__salt"], how).drop("__salt")
+    return b.join(s, [on, "__salt"]).drop("__salt")
 
 
 def key_counts(df: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -283,38 +283,24 @@ def crawl_rate(
     ts: str = "crawl_ts",
     url_col: str = "url",
     window: str = "1 day",
-    exact_urls: bool = True,
 ) -> DataFrame:
     """Tumbling-window fetch rate per key: ``(key, window_start,
     window_end, n_fetches, n_urls)`` — the politeness/monitoring
     rollup (is a host being hammered? did a recrawl wave land?).
-    Built on ``F.window`` so the SAME expression works under
-    Structured Streaming with a watermark (streaming-parity pytest
-    gates it); epoch-aligned buckets (a '1 day' window in a UTC
-    session equals date_trunc('day')). One hash agg on (key, window);
-    the exact distinct-url count adds Spark's standard two-phase
-    distinct expansion — pass ``exact_urls=False`` for
-    approx_count_distinct (HLL++, ±~2%) at 10^12 rows, and ALWAYS
-    under streaming, where distinct aggregation is unsupported.
-
-    The timestamp column is cast only when it isn't one already: a
-    redundant cast would sever watermark propagation (the watermark
-    attaches to the column, not to expressions derived from it) and
-    fail streaming append mode."""
+    Built on ``F.window``: epoch-aligned buckets (a '1 day' window in
+    a UTC session equals date_trunc('day')). One hash agg on (key,
+    window); the exact distinct-url count adds Spark's standard
+    two-phase distinct expansion. The timestamp column is cast only
+    when it isn't one already."""
     ts_col = F.col(ts)
     if dict(df.dtypes).get(ts) != "timestamp":
         ts_col = ts_col.cast("timestamp")
     w = F.window(ts_col, window)
-    n_urls = (
-        F.countDistinct(url_col)
-        if exact_urls
-        else F.approx_count_distinct(url_col)
-    )
     return (
         df.groupBy(F.col(key), w.alias("w"))
         .agg(
             F.count("*").alias("n_fetches"),
-            n_urls.alias("n_urls"),
+            F.countDistinct(url_col).alias("n_urls"),
         )
         .select(
             key,

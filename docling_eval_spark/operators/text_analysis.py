@@ -491,7 +491,6 @@ def tfidf_top_terms(
     id_col: str,
     text_col: str = "text",
     k: int = 3,
-    lowercase: bool = True,
     broadcast_df: bool = False,
 ) -> DataFrame:
     """(id, term, rank, score_micro): each document's top-``k`` terms
@@ -518,9 +517,7 @@ def tfidf_top_terms(
     small."""
     from pyspark.sql import Window
 
-    toks = tokens_col(text_col)
-    if lowercase:
-        toks = F.transform(toks, lambda x: F.lower(x))
+    toks = F.transform(tokens_col(text_col), lambda x: F.lower(x))
     terms = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
     tf = terms.groupBy("id", "term").agg(F.count("*").alias("tf"))
     # N counts every document (empty-text docs too), so it scans the
@@ -682,7 +679,6 @@ def contamination_check(
     text_col: str = "text",
     bench_text_col: str | None = None,
     n: int = 8,
-    broadcast_bench: bool = True,
     portable: bool = False,
 ) -> DataFrame:
     """(id, n_grams, n_hits): per training document, how many of its
@@ -692,9 +688,8 @@ def contamination_check(
     style dedup, Brown et al. 2020 Appendix C — public method).
 
     Scale shape: the benchmark side collapses to a DISTINCT gram-hash
-    set (benchmark suites are tiny next to the corpus → broadcast by
-    default; pass ``broadcast_bench=False`` for oversized benchmark
-    sets); the corpus side is ONE pass — the expensive two-level
+    set (benchmark suites are tiny next to the corpus → broadcast);
+    the corpus side is ONE pass — the expensive two-level
     hashing evaluates exactly once per document (``n_grams`` comes
     from the cheap token count, not a second hash evaluation), then
     explode_outer → broadcast left join → one per-id aggregation.
@@ -714,13 +709,11 @@ def contamination_check(
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    if broadcast_bench:
-        bench_set = F.broadcast(bench_set)
     rows = token_ngram_hash_table(
         docs, id_col, text_col, n, portable
     ).select("id", "n_grams", F.explode_outer("grams").alias("g"))
     return (
-        rows.join(bench_set, "g", "left")
+        rows.join(F.broadcast(bench_set), "g", "left")
         .groupBy("id")
         .agg(
             F.first("n_grams").cast("long").alias("n_grams"),
@@ -1001,8 +994,8 @@ def _register_scratch_dump(base: str) -> None:
             f"duplicate_spans has auto-materialized {_SCRATCH_DUMP_WARN} "
             "postings dumps this session (each ~20x the corpus text "
             "bytes; reclaimed only at interpreter exit). Long-lived "
-            "drivers should pass postings_path=<path> and manage it, "
-            "or postings_path=False to recompute.",
+            "drivers should run it in a session without a checkpoint "
+            "dir, where it recomputes instead of writing dumps.",
             ResourceWarning,
             stacklevel=3,
         )
@@ -1014,7 +1007,6 @@ def duplicate_spans(
     text_col: str = "text",
     k: int = 20,
     min_len: int | None = None,
-    postings_path: str | None | bool = None,
 ) -> DataFrame:
     """Exact duplicated-substring spans across a corpus (the substring
     dedup of Lee et al. 2021, "Deduplicating Training Data Makes
@@ -1039,14 +1031,11 @@ def duplicate_spans(
 
     Cost note: ``posted`` feeds both the dup-hash aggregation and the
     join probe; with a lazy plan the hashing kernel runs TWICE
-    (recompute — no executor storage pressure). Materialization
-    policy: an explicit ``postings_path`` string writes postings
-    parquet there and reads them back for both sides (halves kernel
-    CPU); with the default ``None``, the operator materializes
-    AUTOMATICALLY under the session's checkpoint dir when one is
-    configured (``sc.setCheckpointDir`` — the pipeline's stated
-    scratch space) and falls back to recompute otherwise; pass
-    ``False`` to force recompute even with a checkpoint dir.
+    (recompute — no executor storage pressure). When the session has
+    a checkpoint dir (``sc.setCheckpointDir`` — the pipeline's stated
+    scratch space), the operator writes the postings as parquet there
+    and reads them back for both sides (halves kernel CPU); without
+    one it recomputes.
 
     Auto-materialization notes: (a) building the returned frame runs
     an EAGER write job (the postings dump, ~20x the text bytes) —
@@ -1055,24 +1044,17 @@ def duplicate_spans(
     never touches a sibling's — an earlier call's returned frame stays
     valid (it lazily re-reads its own dump). Dumps this process wrote
     to a local/file: checkpoint dir are removed at interpreter exit
-    (atexit); remote scratch and explicit ``postings_path``s are the
-    caller's to manage. Long-lived driver processes making many calls
-    should pass explicit paths (or ``False``) to bound scratch volume
-    before exit.
+    (atexit); remote scratch is the caller's to manage.
     """
     if min_len is None:
         min_len = k
     posted = kgram_hash_positions(df, id_col, text_col, k)
-    if postings_path is None:
-        ckpt = df.sparkSession.sparkContext.getCheckpointDir()
-        if ckpt:
-            import uuid
+    ckpt = df.sparkSession.sparkContext.getCheckpointDir()
+    if ckpt:
+        import uuid
 
-            postings_path = (
-                f"{ckpt}/duplicate_spans_postings/{uuid.uuid4().hex}"
-            )
-            _register_scratch_dump(postings_path)
-    if postings_path:
+        postings_path = f"{ckpt}/duplicate_spans_postings/{uuid.uuid4().hex}"
+        _register_scratch_dump(postings_path)
         posted.write.mode("overwrite").parquet(postings_path)
         posted = df.sparkSession.read.parquet(postings_path)
     # ">=2 distinct docs" as min(id) != max(id): plain min/max combine

@@ -132,50 +132,15 @@ def cap_per_key(
     key_col: str,
     id_col: str,
     n: int,
-    scale_mode: bool = False,
 ) -> DataFrame:
     """Keep at most ``n`` rows per key — the per-host cap every crawl
     corpus applies so mega-hosts don't dominate training data.
 
-    Default (exact): deterministic md5-of-id order, ``row_number <= n``
-    per key. Engine-portable (the DuckDB oracle replicates the md5
-    ranking bit-for-bit) and exactly n. The window sorts each key's
-    rows in one task — fine up to large hosts, but a single
-    pathological key with 10^9 rows lands on one reducer; that is what
-    ``scale_mode`` is for.
-
-    ``scale_mode=True``: hash-threshold sampling — keep a row iff
-    ``xxhash64(id) mod count(key) < n``. The count agg is map-side-
-    combining, and the join back is SALTED: the big side joins on
-    ``(key, xxhash64(id) mod S)`` against the slim count table
-    exploded ×S, so even a 10^9-row pathological key spreads over S
-    partitions — no per-key sort, no single-reducer concentration.
-    Deterministic for a fixed input set, but keeps n only in
-    expectation (binomial around n for huge keys, exact when
-    count <= n). The honest 10^12-row default."""
-    if scale_mode:
-        S = 16  # salt fan-out bounding any one key to 1/S per task
-        counts = (
-            df.groupBy(key_col)
-            .agg(F.count("*").alias("__cnt"))
-            .withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.lit(S - 1)))
-            )
-        )
-        salted = df.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(S)).cast("int")
-        )
-        return (
-            salted.join(counts, [key_col, "__salt"])
-            .where(
-                (F.col("__cnt") <= n)
-                | (
-                    F.pmod(F.xxhash64(F.col(id_col)), F.col("__cnt"))
-                    < F.lit(n)
-                )
-            )
-            .drop("__cnt", "__salt")
-        )
+    Deterministic md5-of-id order, ``row_number <= n`` per key.
+    Engine-portable (the DuckDB oracle replicates the md5 ranking
+    bit-for-bit) and exactly n. The window sorts each key's rows in
+    one task — fine up to large hosts, but a single pathological key
+    with 10^9 rows lands on one reducer."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy(
@@ -269,19 +234,6 @@ def parse_robots_rules(
     ]
 
 
-def robots_allowed(robots_txt: str, path: str, agent: str = "*") -> bool:
-    """Pure-Python decision (the oracle for the Spark stage)."""
-    import re as _re
-
-    best = None  # (pattern_len, allow)
-    for allow, rx, plen in parse_robots_rules(robots_txt, agent):
-        if _re.search(rx, path):
-            cand = (plen, allow)
-            if best is None or cand > best:
-                best = cand
-    return True if best is None else best[1]
-
-
 def _url_path_col(url: Column) -> Column:
     """URL → path(+query) for robots matching, as a pure column
     expression (the SQL twin of the old Python slicing): strip the
@@ -313,7 +265,6 @@ def robots_filter_stage(
     agent: str = "*",
     url_col: str = "url",
     out_col: str = "robots_allowed",
-    snapshot: bool = False,
 ) -> DataFrame:
     """Append a ``robots_allowed`` flag by joining per-host robots.txt
     and deciding per URL (RFC 9309 longest-match, allow wins ties).
@@ -335,13 +286,8 @@ def robots_filter_stage(
     url column pruned, two scans are far cheaper than one scan that
     routes every row through Python — but the two scans MUST observe
     the same rows. If the upstream is non-deterministic (sampling,
-    uuid ids, a re-listed object store), pass ``snapshot=True``: the
-    joined frame is ``localCheckpoint``-ed eagerly so both branches
-    provably read one materialized snapshot (costs one write of the
-    full payload to executor-local storage). For an expensive but
-    deterministic upstream, ``.persist()`` before calling remains the
-    cheaper option (cache lifetime stays under the caller's
-    control)."""
+    uuid ids, a re-listed object store), ``.persist()`` or
+    ``localCheckpoint()`` it before calling."""
     from collections.abc import Iterator as _It
 
     import numpy as np
@@ -363,8 +309,6 @@ def robots_filter_stage(
     joined = pages.withColumn("__host", host_col(F.col(url_col))).join(
         F.broadcast(dim), "__host", "left"
     )
-    if snapshot:  # pin ONE evaluation for the fast/slow branch pair
-        joined = joined.localCheckpoint(eager=True)
     keep = [f.name for f in joined.schema.fields if not f.name.startswith("__")]
     schema = T.StructType(
         [f for f in joined.schema.fields if not f.name.startswith("__")]
@@ -573,9 +517,8 @@ _PSL_LITE = frozenset(
 def registered_domain_col(
     url: Column | str,
     suffixes: frozenset[str] | set[str] = _PSL_LITE,
-    is_host: bool = False,
 ) -> Column:
-    """eTLD+1 (registered domain) of a URL/host — THE correct key for
+    """eTLD+1 (registered domain) of a URL's host — THE correct key for
     per-site caps and rollups at crawl scale (per-HOST keys overcount:
     every *.blogspot-style subdomain looks like a distinct site, while
     shop.example.co.uk and www.example.co.uk are one registrant).
@@ -586,7 +529,7 @@ def registered_domain_col(
     set becomes a literal in the plan (no join, no broadcast, no
     Python) — at ~200 entries that is the right trade; a full 9k-rule
     PSL would switch to a broadcast map without changing callers."""
-    host = (F.col(url) if isinstance(url, str) else url) if is_host else host_col(url)
+    host = host_col(url)
     parts = F.split(host, r"\.")
     n = F.size(parts)
     last2 = F.concat_ws(".", F.slice(parts, n - 1, 2))
@@ -913,7 +856,6 @@ def cap_per_key_budget(
     key_col: str,
     id_col: str,
     budget_col: str = "budget",
-    scale_mode: bool = False,
 ) -> DataFrame:
     """VARIABLE per-key cap — :func:`cap_per_key` with the limit
     coming from a per-key ``budgets`` frame instead of one scalar:
@@ -922,40 +864,14 @@ def cap_per_key_budget(
     drops the key entirely). ``budgets`` is one row per key —
     millions of hosts at most — so it broadcasts.
 
-    Same two modes as the scalar cap: exact (md5-of-id
-    ``row_number <= budget`` per key — deterministic and exactly the
-    budget, single-reducer per pathological key) and ``scale_mode``
-    (salted hash-threshold — keeps the budget in expectation, no
-    per-key sort, the honest 10^12-row default)."""
+    Same ranking as the scalar cap: md5-of-id ``row_number <= budget``
+    per key — deterministic and exactly the budget, single-reducer per
+    pathological key."""
     b = F.broadcast(
         budgets.select(
             F.col(key_col), F.col(budget_col).alias("__budget")
         )
     )
-    if scale_mode:
-        S = 16
-        counts = (
-            df.groupBy(key_col)
-            .agg(F.count("*").alias("__cnt"))
-            .join(b, key_col)
-            .withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.lit(S - 1)))
-            )
-        )
-        salted = df.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(S)).cast("int")
-        )
-        return (
-            salted.join(counts, [key_col, "__salt"])
-            .where(
-                (F.col("__cnt") <= F.col("__budget"))
-                | (
-                    F.pmod(F.xxhash64(F.col(id_col)), F.col("__cnt"))
-                    < F.col("__budget")
-                )
-            )
-            .drop("__cnt", "__salt", "__budget")
-        )
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy(
@@ -1313,28 +1229,17 @@ def token_budget_sample(
     source_col: str = "source",
     id_col: str = "doc_id",
     tokens_col_name: str = "n_tokens",
-    scale_mode: bool = False,
 ) -> DataFrame:
     """Select documents per source up to a TOKEN budget — the mixing
     step that turns per-source weights into an actual training set
     (Pile/Dolma-style: "200B tokens of web, 30B of code, ..."). Rows
     from sources absent from ``budgets`` are dropped.
 
-    Default (exact): deterministic md5-of-id order per source, keep
-    while the running token sum stays within budget — reproducible
-    across engines (the oracle replays the ranking) and runs/reruns.
-    The window sorts each source's rows in one task; with a handful of
-    sources and 10^12 rows that single reducer IS the bottleneck,
-    hence:
-
-    ``scale_mode=True``: token-weighted hash thresholding — keep a doc
-    iff ``xxhash64(id) mod total_tokens(source) < budget``. One
-    map-side-combining sum agg for per-source token totals (tiny:
-    one row per source, broadcast back), zero sorts, zero skew
-    concentration; selects the budget in EXPECTATION (each doc kept
-    with probability budget/total weighted by nothing — doc-count
-    binomial; large corpora concentrate tightly). Exact when the
-    source's total fits the budget (everything kept).
+    Deterministic md5-of-id order per source, keep while the running
+    token sum stays within budget — reproducible across engines (the
+    oracle replays the ranking) and runs/reruns. The window sorts each
+    source's rows in one task; with a handful of sources and 10^12
+    rows that single reducer is the bottleneck.
     """
     items = sorted(budgets.items())
     bmap = F.create_map(
@@ -1343,21 +1248,6 @@ def token_budget_sample(
     budgeted = df.withColumn("__budget", bmap[F.col(source_col)]).where(
         F.col("__budget").isNotNull()
     )
-    if scale_mode:
-        totals = budgeted.groupBy(source_col).agg(
-            F.sum(tokens_col_name).alias("__total")
-        )
-        return (
-            budgeted.join(F.broadcast(totals), source_col)
-            .where(
-                (F.col("__total") <= F.col("__budget"))
-                | (
-                    F.pmod(F.xxhash64(F.col(id_col)), F.col("__total"))
-                    < F.col("__budget")
-                )
-            )
-            .drop("__budget", "__total")
-        )
     from pyspark.sql import Window
 
     w = (

@@ -569,37 +569,11 @@ def visualize(
         # rows): the report reads the written parquet — the detection
         # kernel never re-runs in the visualize phase (matches the
         # reference flow where visualize consumes the evaluation JSON,
-        # never the dataset, cli/main.py:318-453). Older evaluation
-        # dirs without the table fall back to recomputing it.
-        # probe via the Spark reader, not the driver's local
-        # filesystem: evaluation_dir may be a remote URI (hdfs/s3a)
-        # where Path.exists() is always False and would silently
-        # re-trigger the detection-kernel recompute
-        ap_table_path = f"{evaluation_dir}/evaluation_{modality}_ap_table"
-        from pyspark.errors import AnalysisException
-
-        try:
-            ap_table = spark.read.schema(AP_SCHEMA).parquet(ap_table_path)
-        except AnalysisException as exc:
-            # only a MISSING table (older evaluation dir) may fall back
-            # to recomputing; any other read failure (corrupt footer,
-            # auth, permissions) must surface, not silently re-run the
-            # detection kernel
-            if "PATH_NOT_FOUND" not in str(exc) and "does not exist" not in str(exc):
-                raise
-            from docling_eval_spark.evaluators.layout import corpus_ap_table
-
-            ds_full = read_dataset(spark, dataset_dir)
-            pc = _pred_col(ds_full, "pred_layout", "layout")
-            ap_table = corpus_ap_table(
-                ds_full.select(
-                    "url",
-                    F.col("layout").alias("gt_layout"),
-                    F.col(pc).alias("pred_layout"),
-                ).filter(F.size("gt_layout") > 0),
-                "gt_layout",
-                "pred_layout",
-            )
+        # never the dataset, cli/main.py:318-453). A missing table
+        # raises Spark's PATH_NOT_FOUND.
+        ap_table = spark.read.schema(AP_SCHEMA).parquet(
+            f"{evaluation_dir}/evaluation_{modality}_ap_table"
+        )
         per_class_ap_report(ap_table, str(out / "per_class_ap.md"))
         save_layout_html(read_dataset(spark, dataset_dir), str(out))
 

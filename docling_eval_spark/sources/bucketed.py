@@ -95,11 +95,10 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a catalog table bucketed (and optionally
-    sorted) by ``bucket_col``. Idempotent under ``overwrite`` even
+    """Persist ``df`` as a catalog table bucketed and sorted by
+    ``bucket_col``. Idempotent under ``overwrite`` even
     after a crashed prior write: a managed-table LOCATION can outlive
     its catalog entry (LOCATION_ALREADY_EXISTS), so overwrite drops
     the entry AND clears an orphaned local location first.
@@ -140,10 +139,13 @@ def write_bucketed(
                 and not _path_owned_by_live_table(spark, db, loc)
             ):
                 shutil.rmtree(loc, ignore_errors=True)
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+    (
+        df.write.format("parquet")
+        .mode(mode)
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
+    )
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:

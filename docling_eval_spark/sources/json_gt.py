@@ -43,10 +43,9 @@ GT_JSON_SCHEMA = T.StructType(
 )
 
 
-def read_gt_json(
-    spark: SparkSession, path: str, multi_line: bool = False
-) -> DataFrame:
-    """JSON / JSON-lines ground-truth files → typed DataFrame.
+def read_gt_json(spark: SparkSession, path: str) -> DataFrame:
+    """JSON-lines ground-truth files (one record per line) → typed
+    DataFrame.
 
     Reads as text + ``from_json`` rather than ``spark.read.json``: the
     JSON source forbids plans that touch only ``_corrupt_record``
@@ -54,7 +53,7 @@ def read_gt_json(
     scan with clean null-on-corrupt semantics. Malformed records come
     back as ``gt_status='FAILURE'`` rows with the raw payload in
     ``error`` — never a task failure."""
-    raw = spark.read.text(path, wholetext=multi_line)
+    raw = spark.read.text(path)
     parsed = raw.select(
         F.from_json(F.col("value"), GT_JSON_SCHEMA).alias("r"), "value"
     ).filter(F.trim("value") != "")

@@ -208,7 +208,7 @@ def parse_http_response(block: bytes) -> tuple[bytes, str | None, int | None]:
     all (raw payload — legitimately has no status); ``-1`` means the
     block claims to be HTTP but its status line / header block is
     unparseable. The distinction matters downstream:
-    ``warc_to_pages(require_2xx=True)`` lets NULL-status raw records
+    ``warc_to_pages`` lets NULL-status raw records
     through but must not let malformed-status pages ride that branch."""
     if not block.startswith(b"HTTP/"):
         return block, None, None
@@ -332,22 +332,19 @@ def read_warc(spark: SparkSession, glob: str) -> DataFrame:
     return raw.mapInPandas(_warc_kernel, schema=WARC_PAGES_SCHEMA)
 
 
-def warc_to_pages(df: DataFrame, require_2xx: bool = True) -> DataFrame:
+def warc_to_pages(df: DataFrame) -> DataFrame:
     """Project successful WARC rows onto the canonical PAGES_SCHEMA.
 
-    ``require_2xx`` (default) drops redirect/error responses —
-    3xx Location stubs and 404 pages are boilerplate, not documents.
+    Drops redirect/error responses — 3xx Location stubs and 404 pages
+    are boilerplate, not documents.
     Raw (non-HTTP-wrapped) records have no status (NULL) and always
     pass; HTTP blocks whose status line failed to parse carry the
     ``-1`` sentinel and are DROPPED (they are malformed pages, not
     raw payloads). This filter sits directly on the parse stage,
     before any shuffle."""
-    cond = F.col("warc_status") == "SUCCESS"
-    if require_2xx:
-        cond = cond & (
-            F.col("http_status").isNull()
-            | F.col("http_status").between(200, 299)
-        )
+    cond = (F.col("warc_status") == "SUCCESS") & (
+        F.col("http_status").isNull() | F.col("http_status").between(200, 299)
+    )
     return df.filter(cond).select("url", "warc_ts", "html", "text", "lang")
 
 

@@ -92,21 +92,15 @@ def test_avi_top_down_dib_and_selective_decode():
 
     frames = _fixture_frames(5, h=4, w=4)
     data = bytearray(avi_encode(frames))
-    # flip to top-down DIB: negate biHeight AND pre-flip stored rows
-    # (encoder wrote bottom-up) — build by hand instead: decode indices
-    got, _ = avi_decode(bytes(data), indices=[0, 3])
-    assert got.shape[0] == 2
-    assert np.array_equal(got[0], frames[0])
-    assert np.array_equal(got[1], frames[3])
-    with pytest.raises(ValueError, match="out of range"):
-        avi_decode(bytes(data), indices=[5])
+    got, _ = avi_decode(bytes(data))
+    assert np.array_equal(got, frames)
     # top-down: negate biHeight; stored rows are bottom-up so the
-    # decoded frame should now be vertically flipped
+    # decoded frames should now be vertically flipped
     j = data.find(b"strf") + 8
     (h,) = struct.unpack("<i", data[j + 8 : j + 12])
     data[j + 8 : j + 12] = struct.pack("<i", -h)
-    flipped, _ = avi_decode(bytes(data), indices=[0])
-    assert np.array_equal(flipped[0], frames[0][::-1])
+    flipped, _ = avi_decode(bytes(data))
+    assert np.array_equal(flipped, frames[:, ::-1])
 
 
 def test_avi_mjpg_real_decode():
@@ -130,6 +124,3 @@ def test_avi_mjpg_real_decode():
     assert got.shape == frames.shape and abs(fps - 6.0) < 1e-6
     err = np.abs(got.astype(int) - frames.astype(int)).mean()
     assert err < 12.0  # lossy but clearly the same pixels
-    # selective decode works for MJPG too
-    two, _ = avi_decode(data, indices=[1, 3])
-    assert np.array_equal(two[0], got[1]) and np.array_equal(two[1], got[3])

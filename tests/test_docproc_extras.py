@@ -187,15 +187,17 @@ def test_otsl_spans_and_headers():
 
 
 def test_kv_link_metrics(spark):
-    from docling_eval_spark.operators.kv_graph import kv_link_metrics
+    from docling_eval_spark.operators.kv_graph import kv_link_metrics_arrays
 
-    gt = spark.createDataFrame(
-        [("d1", 1, 2), ("d1", 2, 3), ("d2", 1, 2)], "key string, src int, dst int"
+    links = spark.createDataFrame(
+        [
+            ("d1", [(1, 2), (2, 3)], [(1, 2), (3, 4)]),
+            ("d2", [(1, 2)], [(9, 9)]),
+        ],
+        "key string, gt_links array<struct<src:int,dst:int>>, "
+        "pred_links array<struct<src:int,dst:int>>",
     )
-    pred = spark.createDataFrame(
-        [("d1", 1, 2), ("d1", 3, 4), ("d2", 9, 9)], "key string, src int, dst int"
-    )
-    got = {r["key"]: r for r in kv_link_metrics(gt, pred).collect()}
+    got = {r["key"]: r for r in kv_link_metrics_arrays(links).collect()}
     assert got["d1"]["n_inter"] == 1
     assert got["d1"]["precision"] == 0.5 and got["d1"]["recall"] == 0.5
     assert got["d2"]["f1"] == 0.0

@@ -860,32 +860,10 @@ def test_kgram_nbsp_edge_parity(spark):
     assert hs[0] == h
 
 
-def test_duplicate_spans_postings_path(spark, tmp_path):
-    from docling_eval_spark.operators.text_analysis import duplicate_spans
-
-    shared = "this exact sentence is repeated verbatim across documents"
-    rows = [
-        (0, f"alpha prefix here. {shared} omega suffix."),
-        (1, f"other doc opening. {shared} other ending."),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, duplicate_spans(df, "doc_id", k=20).collect()))
-    b = sorted(
-        map(
-            tuple,
-            duplicate_spans(
-                df, "doc_id", k=20, postings_path=str(tmp_path / "p")
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) == 2
-
-
 def test_duplicate_spans_auto_materialize_with_checkpoint_dir(spark, tmp_path):
     """With a session checkpoint dir configured (the scratch-space
-    signal), duplicate_spans materializes postings there by default;
-    postings_path=False forces recompute. Results identical either
-    way."""
+    signal), duplicate_spans materializes postings there; without one
+    it recomputes. Results identical either way."""
     import os
 
     from docling_eval_spark.operators.text_analysis import duplicate_spans
@@ -897,17 +875,10 @@ def test_duplicate_spans_auto_materialize_with_checkpoint_dir(spark, tmp_path):
     )
     sc = spark.sparkContext
     old = sc.getCheckpointDir()
+    lazy = sorted(map(tuple, duplicate_spans(df, "doc_id", k=20).collect()))
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         auto = sorted(map(tuple, duplicate_spans(df, "doc_id", k=20).collect()))
-        lazy = sorted(
-            map(
-                tuple,
-                duplicate_spans(
-                    df, "doc_id", k=20, postings_path=False
-                ).collect(),
-            )
-        )
         assert auto == lazy and len(auto) == 2
         # the postings parquet actually landed under the checkpoint dir
         # (getCheckpointDir returns file:<base>/<context-uuid>, so walk)
@@ -997,28 +968,34 @@ def test_cap_per_key(spark):
         for r in cap_per_key(df.repartition(13), "host", "event_id", 20).collect()
     )
     assert a == b
-    # small keys unaffected in both modes
+    # small keys unaffected
     small = spark.range(0, 30).selectExpr(
         "id AS event_id", "CAST(id % 10 AS STRING) AS host"
     )
     assert cap_per_key(small, "host", "event_id", 5).count() == 30
-    assert cap_per_key(small, "host", "event_id", 5, scale_mode=True).count() == 30
-    # scale mode: ~n per key (binomial), deterministic, no sort
-    sm = cap_per_key(df, "host", "event_id", 20, scale_mode=True)
-    cnts = [r["count"] for r in sm.groupBy("host").count().collect()]
-    assert all(5 <= c <= 45 for c in cnts)  # loose binomial bounds
-    sm2 = sorted(r["event_id"] for r in sm.collect())
-    assert sm2 == sorted(
-        r["event_id"]
-        for r in cap_per_key(
-            df.repartition(3), "host", "event_id", 20, scale_mode=True
-        ).collect()
+
+
+def _robots_allowed(spark, cases, agent="*"):
+    """robots_filter_stage's verdict for each (robots_txt, path) case,
+    one host per distinct robots.txt."""
+    from docling_eval_spark.operators.web_ops import robots_filter_stage
+
+    host = {t: f"h{i}.example" for i, t in enumerate(sorted({t for t, _ in cases}))}
+    pages = spark.createDataFrame(
+        [(f"http://{host[t]}{p}", i) for i, (t, p) in enumerate(cases)],
+        "url string, case int",
     )
+    robots = spark.createDataFrame(
+        [(h, t) for t, h in host.items()], "host string, robots_txt string"
+    )
+    got = {
+        r["case"]: r["robots_allowed"]
+        for r in robots_filter_stage(pages, robots, agent=agent).collect()
+    }
+    return [got[i] for i in range(len(cases))]
 
 
-def test_robots_rules_rfc9309():
-    from docling_eval_spark.operators.web_ops import robots_allowed
-
+def test_robots_rules_rfc9309(spark):
     txt = """
 # comment
 User-agent: googlebot
@@ -1030,25 +1007,29 @@ Disallow: /tmp/
 Disallow: /fish*.php
 Allow: /tmp/ok/
 """
-    # fallback group for unknown agents
-    assert robots_allowed(txt, "/anything") is True
-    assert robots_allowed(txt, "/tmp/x") is False
-    # longest match wins: /tmp/ok/ allow beats /tmp/ disallow
-    assert robots_allowed(txt, "/tmp/ok/page") is True
-    # wildcard
-    assert robots_allowed(txt, "/fishheads/catfish.php?p=1") is False
-    assert robots_allowed(txt, "/fish.html") is True
-    # specific agent group: most-specific UA token wins
-    assert robots_allowed(txt, "/private/x", agent="googlebot") is False
-    assert robots_allowed(txt, "/private/public", agent="googlebot") is True
-    assert robots_allowed(txt, "/private/publicity", agent="googlebot") is False
-    # $ anchor: exact end only
-    assert robots_allowed(txt, "/tmp/x", agent="googlebot") is True
-    # empty Disallow = allow all
-    assert robots_allowed("User-agent: *\nDisallow:", "/x") is True
-    # allow wins ties at equal pattern length
     tie = "User-agent: *\nDisallow: /page\nAllow: /page"
-    assert robots_allowed(tie, "/page") is True
+    assert _robots_allowed(spark, [
+        # fallback group for unknown agents
+        (txt, "/anything"),
+        (txt, "/tmp/x"),
+        # longest match wins: /tmp/ok/ allow beats /tmp/ disallow
+        (txt, "/tmp/ok/page"),
+        # wildcard
+        (txt, "/fishheads/catfish.php?p=1"),
+        (txt, "/fish.html"),
+        # empty Disallow = allow all
+        ("User-agent: *\nDisallow:", "/x"),
+        # allow wins ties at equal pattern length
+        (tie, "/page"),
+    ]) == [True, False, True, False, True, True, True]
+    # specific agent group: most-specific UA token wins
+    assert _robots_allowed(spark, [
+        (txt, "/private/x"),
+        (txt, "/private/public"),
+        (txt, "/private/publicity"),
+        # $ anchor: exact end only
+        (txt, "/tmp/x"),
+    ], agent="googlebot") == [False, True, False, True]
 
 
 def test_robots_filter_stage(spark):
@@ -1108,23 +1089,24 @@ def test_robots_fast_path_skips_python(spark):
     assert "isnull(__robots" in plan.split("MapInPandas", 1)[0]
 
 
-def test_robots_rfc9309_group_merge_and_orphans():
-    from docling_eval_spark.operators.web_ops import robots_allowed
-
+def test_robots_rfc9309_group_merge_and_orphans(spark):
     # RFC 9309 §2.2.1: multiple matching groups COMBINE
     two_star = "User-agent: *\nDisallow: /a\n\nUser-agent: *\nDisallow: /b"
-    assert robots_allowed(two_star, "/a") is False
-    assert robots_allowed(two_star, "/b") is False
-    assert robots_allowed(two_star, "/c") is True
     # rules before any User-agent line are invalid → ignored
     orphan = "Disallow: /secret\nUser-agent: *\nAllow: /"
-    assert robots_allowed(orphan, "/secret/x") is True
+    assert _robots_allowed(spark, [
+        (two_star, "/a"),
+        (two_star, "/b"),
+        (two_star, "/c"),
+        (orphan, "/secret/x"),
+    ]) == [False, False, True, True]
     # equal-length specific tokens also merge
     dup_agent = (
         "User-agent: bot\nDisallow: /x\n\nUser-agent: bot\nDisallow: /y"
     )
-    assert robots_allowed(dup_agent, "/x", agent="bot") is False
-    assert robots_allowed(dup_agent, "/y", agent="bot") is False
+    assert _robots_allowed(
+        spark, [(dup_agent, "/x"), (dup_agent, "/y")], agent="bot"
+    ) == [False, False]
 
 
 def test_robots_filter_query_only_url(spark):
@@ -1146,58 +1128,6 @@ def test_robots_filter_query_only_url(spark):
             for r in robots_filter_stage(pages, robots).collect()}
     # query-only url is path '/', not '/x' — must stay allowed
     assert rows == {1: True, 2: False, 3: False}
-
-
-def test_robots_filter_snapshot_nondeterministic_upstream(spark):
-    """snapshot=True pins ONE evaluation of a non-deterministic
-    upstream across the fast/slow branch pair: every input row must
-    come out exactly once, with a self-consistent (url, flag) pair —
-    without the snapshot the two complementary scans could each draw
-    DIFFERENT rows (duplicating or losing urls between branches)."""
-    from docling_eval_spark.operators.web_ops import robots_filter_stage
-
-    base = spark.range(0, 400).selectExpr(
-        "id",
-        # rand() makes the url column non-deterministic: each scan of
-        # this frame re-draws which host (rule-bearing b.example or
-        # robots-less a.example) a row lands on
-        "concat('http://', CASE WHEN rand() < 0.5 THEN 'a' ELSE 'b' END,"
-        " '.example/p', CAST(id AS STRING)) AS url",
-    )
-    robots = spark.createDataFrame(
-        [("b.example", "User-agent: *\nDisallow: /p1")],
-        "host string, robots_txt string",
-    )
-    out = robots_filter_stage(base, robots, snapshot=True).collect()
-    assert len(out) == 400
-    assert len({r["id"] for r in out}) == 400  # no dup/loss across branches
-    for r in out:  # flag agrees with the url the snapshot fixed
-        expected = not (
-            "b.example" in r["url"] and r["url"].split(".example")[1].startswith("/p1")
-        )
-        assert r["robots_allowed"] is expected, (r["url"], r["robots_allowed"])
-
-
-def test_cap_per_key_scale_mode_salted_plan(spark):
-    from docling_eval_spark.operators.web_ops import cap_per_key
-
-    df = spark.range(0, 400).selectExpr(
-        "id AS event_id", "CAST(id % 3 AS STRING) AS host"
-    )
-    out = cap_per_key(df, "host", "event_id", 10, scale_mode=True)
-    # salted join: the exchange keys on (host, salt), so the physical
-    # plan partitions on BOTH columns — the hot-key defence
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan
-    # still deterministic and ~n per key
-    a = sorted(r["event_id"] for r in out.collect())
-    b = sorted(
-        r["event_id"]
-        for r in cap_per_key(
-            df.repartition(7), "host", "event_id", 10, scale_mode=True
-        ).collect()
-    )
-    assert a == b
 
 
 def test_script_profile(spark):
@@ -1578,11 +1508,6 @@ def test_contamination_check(spark):
     got = {r["id"]: (r["n_grams"], r["n_hits"])
            for r in contamination_check(docs, bench, "doc_id").collect()}
     assert got == {0: (3, 1), 1: (1, 1), 2: (3, 0), 3: (0, 0), 4: (1, 1)}
-    # broadcast off → same answer through a shuffle join
-    got2 = {r["id"]: (r["n_grams"], r["n_hits"])
-            for r in contamination_check(
-                docs, bench, "doc_id", broadcast_bench=False).collect()}
-    assert got2 == got
 
 
 def test_chunk_documents(spark):
@@ -2075,22 +2000,6 @@ def test_token_budget_sample_exact_mode(spark):
     assert a == b
 
 
-def test_token_budget_sample_scale_mode(spark):
-    import pyspark.sql.functions as F
-    from docling_eval_spark.operators.web_ops import token_budget_sample
-
-    rows = [(i, "a", 10) for i in range(2000)] + [(10_000 + i, "b", 10) for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, n_tokens long")
-    out = token_budget_sample(df, {"a": 5000, "b": 1000}, scale_mode=True)
-    by = {r.source: r.t for r in out.groupBy("source").agg(F.sum("n_tokens").alias("t")).collect()}
-    # b: total 50 <= budget -> kept exactly
-    assert by["b"] == 50
-    # a: 20000 total vs 5000 budget -> ~25% in expectation, binomial tail-safe bounds
-    assert 3000 < by["a"] < 7000, by["a"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan  # scale mode never sorts per key
-
-
 def test_hll_registers_merge_and_estimate(spark):
     """Registers are a mergeable sketch: sketching two halves and
     re-aggregating max(max_rank) equals sketching the whole."""
@@ -2430,9 +2339,9 @@ def test_lsh_quality_eval_hand_corpus(spark):
 
 
 def test_salted_equi_join_matches_plain_join(spark):
-    """Salted join is result-identical to the plain join for inner and
-    left (including unmatched left rows), with the join keyed on
-    (key, salt) in the plan and no salt column in the output."""
+    """Salted join is result-identical to the plain inner join, with
+    the join keyed on (key, salt) in the plan and no salt column in the
+    output."""
     import pyspark.sql.functions as F
     from docling_eval_spark.operators.skew import salted_equi_join
 
@@ -2449,33 +2358,14 @@ def test_salted_equi_join_matches_plain_join(spark):
         [("hot", 1), ("cold", 2), ("cool", 3), ("unused", 9)],
         "k string, v int",
     )
-    for how in ("inner", "left"):
-        plain = big.join(small, "k", how)
-        salted = salted_equi_join(big, small, "k", "rid", 16, how)
-        assert salted.columns == plain.columns
-        a = sorted(tuple(r) for r in plain.collect())
-        b = sorted(tuple(r) for r in salted.collect())
-        assert a == b, how
-    plan = (
-        salted_equi_join(big, small, "k", "rid", 16)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plain = big.join(small, "k")
+    salted = salted_equi_join(big, small, "k", "rid", 16)
+    assert salted.columns == plain.columns
+    a = sorted(tuple(r) for r in plain.collect())
+    b = sorted(tuple(r) for r in salted.collect())
+    assert a == b
+    plan = salted._jdf.queryExecution().executedPlan().toString()
     assert "__salt" in plan  # join really keys on (k, __salt)
-
-
-def test_salted_join_rejects_unsupported_how(spark):
-    import pyspark.sql.functions as F
-    import pytest as _pytest
-
-    from docling_eval_spark.operators.skew import salted_equi_join
-
-    df = spark.range(1).select(
-        F.lit("a").alias("k"), F.lit(1).alias("rid")
-    )
-    with _pytest.raises(ValueError):
-        salted_equi_join(df, df, "k", "rid", 4, how="full")
 
 
 def test_skew_report_hand_case(spark):
@@ -3646,7 +3536,7 @@ def test_cap_per_key_budget(spark):
     by = {}
     for r in out:
         by.setdefault(r["host"], []).append(r["url"])
-    # exact mode: exactly the budget (or all rows if fewer)
+    # exactly the budget (or all rows if fewer)
     assert len(by["a"]) == 3
     assert "b" not in by  # budget 0 drops the key entirely
     assert len(by["c"]) == 10
@@ -3655,15 +3545,6 @@ def test_cap_per_key_budget(spark):
         df.repartition(7), budgets, "host", "url"
     ).collect()
     assert {r["url"] for r in out2} == {r["url"] for r in out}
-    # scale mode: never exceeds budget for small keys (cnt<=budget
-    # keeps all), and budget-0 keys still drop
-    sm = cap_per_key_budget(
-        df, budgets, "host", "url", scale_mode=True
-    ).collect()
-    by2 = {}
-    for r in sm:
-        by2.setdefault(r["host"], []).append(r["url"])
-    assert "b" not in by2 and len(by2["c"]) == 10
 
 
 def test_cdc_chunk_table(spark):

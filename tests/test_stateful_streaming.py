@@ -1,5 +1,4 @@
-"""Gap sessionization and a registry operator's window expression under
-Structured Streaming."""
+"""Gap sessionization of an event stream, on a batch frame."""
 
 from __future__ import annotations
 
@@ -25,62 +24,3 @@ def test_batch_sessionization_semantics(spark):
     assert len(by_user[1]) == 2
     assert sorted(r["n_events"] for r in by_user[1]) == [1, 2]
     assert len(by_user[2]) == 1
-
-
-def test_crawl_rate_streaming_matches_batch(spark, tmp_path):
-    """crawl_rate's F.window expression really does run under
-    Structured Streaming: the same expression over a parquet stream
-    with a watermark, availableNow-triggered, emits the identical
-    (host, window, n_fetches) rollup as the batch call (closed windows
-    — availableNow drains the source, so all windows close)."""
-    from docling_eval_spark.operators.temporal import crawl_rate
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .limit(2000)
-        .select(
-            F.concat(F.lit("h"), (F.col("event_id") % 7).cast("string")).alias(
-                "host"
-            ),
-            F.col("ts").alias("crawl_ts"),
-            F.concat(F.lit("u"), (F.col("event_id") % 400).cast("string")).alias(
-                "url"
-            ),
-        )
-    )
-    src = str(tmp_path / "fetches")
-    ev.write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "host string, crawl_ts timestamp, url string"
-    ).parquet(src)
-    # exact_urls=False: distinct aggregation is unsupported in
-    # streaming; approx HLL++ is deterministic, so batch matches
-    rate = crawl_rate(
-        stream.withWatermark("crawl_ts", "1 day"), exact_urls=False
-    )
-    q = (
-        rate.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("rate_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        tuple(r) for r in spark.sql("SELECT * FROM rate_out").collect()
-    )
-    batch = {tuple(r)[:3]: tuple(r) for r in crawl_rate(ev, exact_urls=False).collect()}
-    # append mode emits only CLOSED windows (window_end <= final
-    # watermark = max event time - 1 day): every emitted row must match
-    # the batch rollup exactly, and the only batch rows NOT emitted are
-    # the still-open tail windows near the stream's max event time
-    assert len(got) > 0
-    import datetime
-
-    max_end = max(k[2] for k in batch)
-    for row in got:
-        assert batch[row[:3]] == row
-    missing = set(batch) - {row[:3] for row in got}
-    assert all(end > max_end - datetime.timedelta(days=2) for *_, end in missing)
